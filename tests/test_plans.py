@@ -19,7 +19,17 @@ import re
 
 import pytest
 
-from event_driven_data_pipeline_for_e_commerce_spark.plans.corpus import QUERIES
+from event_driven_data_pipeline_for_e_commerce_spark.plans.corpus import ORACLES, QUERIES
+
+from .corpus_pin import ORACLE_SHA256, PLAN_SHA256, oracle_digest, plan_digest
+from .corpus_pin import corpus_plans as build_corpus_plans
+
+
+@pytest.fixture(scope="module")
+def corpus_plans(spark, sf_dir):
+    """One construction pass over the whole corpus, shared by the
+    corpus-wide guards: ``{name: (simpleString, optimizedPlan)}``."""
+    return build_corpus_plans(spark, sf_dir)
 
 
 def formatted_plan(spark, df) -> str:
@@ -87,6 +97,21 @@ def test_hot_path_is_whole_stage_codegen(spark, sf_dir):
     final = df._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in final, final
     assert re.search(r"\*\(\d+\)", final), final
+
+
+def test_corpus_oracle_pin():
+    """Oracle text and registration order are pinned (tests/corpus_pin.py):
+    a refactor of the corpus must not change what the oracles say."""
+    assert oracle_digest(ORACLES) == ORACLE_SHA256
+
+
+def test_corpus_plan_pin(corpus_plans):
+    """Every query's sf0.001 physical-operator multiset is pinned
+    (tests/corpus_pin.py): a refactor of the corpus must not change any
+    plan's shape. ``python -m tests.corpus_pin --dump`` at two commits
+    and a diff of the dumps names the query that moved."""
+    simple = {name: s for name, (s, _) in corpus_plans.items()}
+    assert plan_digest(simple) == PLAN_SHA256
 
 
 def test_no_python_eval_in_public_corpus(spark, sf_dir):
