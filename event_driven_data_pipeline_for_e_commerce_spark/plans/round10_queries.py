@@ -19,16 +19,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
+from ..functions.money import O_CENTS, o_cents
 from ..operators.partitioning import ensure_parallelism
 from ..operators.pinning import pin
 from .corpus import ORACLES, QUERIES, query  # noqa: F401
 from .tables import load_tables
-
-O_CENTS = "CAST(ROUND(o_totalprice * 100) AS BIGINT)"
-
-
-def _o_cents():
-    return F.round(F.col("o_totalprice") * 100).cast("long")
 
 
 # --------------------------------------------------------------------------
@@ -54,7 +49,7 @@ def q_doc_dedup_family_agreement_survivors(spark, sf_dir):
     run-to-run noise of the audit form (single-session A/B: keeper
     aggregation adds no measurable cost; the detectors dominate).
     MEASURED under 40% injected byte-dup mass
-    (scripts/ab_family_agreement_dupmass.py): in round 10 the
+    (docs/AB_RECORDS.md, "under byte-dup mass"): in round 10 the
     pair-ENUMERATING audit form paid 8.180s vs 4.901s for this form
     (1.67x — the quadratic-in-class-size SimHash pair term). The r11
     count-grain rewrite removed that term from BOTH forms (pair
@@ -256,7 +251,7 @@ def q_monthly_revenue_theilsen_trend(spark, sf_dir):
     d = F.col("o_orderdate").cast("date")
     m = t["orders"].groupBy(
         (F.year(d) * 12 + F.month(d)).cast("long").alias("idx")
-    ).agg(F.sum(_o_cents()).alias("cents"))
+    ).agg(F.sum(o_cents()).alias("cents"))
     a = m.select(F.col("idx").alias("ia"), F.col("cents").alias("ca"))
     b = m.select(F.col("idx").alias("ib"), F.col("cents").alias("cb"))
     s = a.join(F.broadcast(b), F.col("ia") < F.col("ib")).select(
@@ -358,7 +353,7 @@ def q_daily_revenue_mann_kendall(spark, sf_dir):
     t = load_tables(spark, sf_dir)
     d = t["orders"].groupBy(
         F.col("o_orderdate").cast("date").alias("day")
-    ).agg(F.sum(_o_cents()).alias("cents"))
+    ).agg(F.sum(o_cents()).alias("cents"))
     a = d.select(F.col("day").alias("da"), F.col("cents").alias("ca"))
     b = d.select(F.col("day").alias("db"), F.col("cents").alias("cb"))
     s = a.join(F.broadcast(b), F.col("da") < F.col("db")).agg(
@@ -501,7 +496,7 @@ def q_order_value_priority_kruskal_wallis(spark, sf_dir):
 
     t = load_tables(spark, sf_dir)
     base = t["orders"].select(
-        F.col("o_orderpriority").alias("pri"), _o_cents().alias("cents")
+        F.col("o_orderpriority").alias("pri"), o_cents().alias("cents")
     )
     v = base.groupBy("cents").agg(
         *[
@@ -705,8 +700,8 @@ def q_customer_order_value_lag1_autocorr(spark, sf_dir):
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     seq = t["orders"].select(
         "o_custkey",
-        _o_cents().alias("cents"),
-        F.lag(_o_cents()).over(w).alias("prev"),
+        o_cents().alias("cents"),
+        F.lag(o_cents()).over(w).alias("prev"),
     )
     p = seq.filter(F.col("prev").isNotNull()).select(
         "o_custkey", F.col("prev").alias("x"), F.col("cents").alias("y")

@@ -25,22 +25,10 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
+from ..functions.money import L_REV_CENTS, O_CENTS, l_rev_cents, o_cents
 from ..operators.partitioning import ensure_parallelism
 from .corpus import ORACLES, QUERIES, query  # noqa: F401
 from .tables import load_tables
-
-O_CENTS = "CAST(ROUND(o_totalprice * 100) AS BIGINT)"
-L_REV_CENTS = "CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)"
-
-
-def _o_cents():
-    return F.round(F.col("o_totalprice") * 100).cast("long")
-
-
-def _l_rev_cents():
-    return F.round(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-    ).cast("long")
 
 
 # --------------------------------------------------------------------------
@@ -103,7 +91,7 @@ def q_daily_revenue_runs_test(spark, sf_dir):
     t = load_tables(spark, sf_dir)
     d = t["orders"].groupBy(
         F.col("o_orderdate").cast("date").alias("day")
-    ).agg(F.sum(_o_cents()).alias("cents"))
+    ).agg(F.sum(o_cents()).alias("cents"))
     med = d.agg(F.expr("percentile(cents, 0.5)").alias("m"))
     s = (
         d.crossJoin(F.broadcast(med))
@@ -994,7 +982,7 @@ def q_late_shipment_value_welch_ttest(spark, sf_dir):
         t["orders"],
         t["lineitem"]["l_orderkey"] == t["orders"]["o_orderkey"],
     ).select(
-        _l_rev_cents().alias("cents"),
+        l_rev_cents().alias("cents"),
         F.when(
             F.datediff(
                 F.col("l_shipdate").cast("date"),

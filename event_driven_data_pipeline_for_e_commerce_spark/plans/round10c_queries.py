@@ -22,17 +22,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
+from ..functions.money import O_CENTS, o_cents
 from ..operators.cumulative import running_sum_ranged
 from ..operators.pinning import pin
 from .corpus import ORACLES, QUERIES, query  # noqa: F401
 from .tables import load_tables
-
-O_CENTS = "CAST(ROUND(o_totalprice * 100) AS BIGINT)"
-L_REV_CENTS = "CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)"
-
-
-def _o_cents():
-    return F.round(F.col("o_totalprice") * 100).cast("long")
 
 
 # Exact changepoint argmax (ADVICE-r10): the split objective
@@ -152,7 +146,7 @@ def q_daily_revenue_best_split(spark, sf_dir):
     dec = "decimal(38,0)"
     d = t["orders"].groupBy(
         F.col("o_orderdate").cast("date").alias("day")
-    ).agg(F.sum(_o_cents()).alias("cents"))
+    ).agg(F.sum(o_cents()).alias("cents"))
     tot = d.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("cents").cast(dec)).alias("s"),

@@ -24,16 +24,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
+from ..functions.money import O_CENTS, o_cents
 from ..operators.partitioning import ensure_parallelism
 from ..operators.pinning import pin
 from .corpus import ORACLES, QUERIES, query  # noqa: F401
 from .tables import load_tables
-
-O_CENTS = "CAST(ROUND(o_totalprice * 100) AS BIGINT)"
-
-
-def _o_cents():
-    return F.round(F.col("o_totalprice") * 100).cast("long")
 
 
 # --------------------------------------------------------------------------
@@ -100,7 +95,7 @@ def q_daily_revenue_ordercount_spearman(spark, sf_dir):
     d = t["orders"].groupBy(
         F.col("o_orderdate").cast("date").alias("day")
     ).agg(
-        F.sum(_o_cents()).alias("cents"),
+        F.sum(o_cents()).alias("cents"),
         F.count(F.lit(1)).alias("n_orders"),
     )
     r = d.select(
@@ -191,7 +186,7 @@ def q_order_priority_value_gamma(spark, sf_dir):
         t["orders"]
         .groupBy(
             F.substring("o_orderpriority", 1, 1).cast("int").alias("pri"),
-            F.length(_o_cents().cast("string")).alias("band"),
+            F.length(o_cents().cast("string")).alias("band"),
         )
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -316,7 +311,7 @@ def q_orders_poisson_bootstrap_ci(spark, sf_dir):
         t["orders"]
         .select(
             "o_orderkey",
-            _o_cents().alias("cents"),
+            o_cents().alias("cents"),
             F.explode(F.sequence(F.lit(0), F.lit(_BOOT_B - 1))).alias("b"),
         )
         .withColumn("u", u)
@@ -415,7 +410,7 @@ def q_daily_revenue_periodogram(spark, sf_dir):
     dec = "decimal(38,0)"
     d = t["orders"].groupBy(
         F.col("o_orderdate").cast("date").alias("day")
-    ).agg(F.sum(_o_cents()).alias("cents"))
+    ).agg(F.sum(o_cents()).alias("cents"))
     ti = d.select(
         "cents", F.row_number().over(Window.orderBy("day")).alias("t")
     )

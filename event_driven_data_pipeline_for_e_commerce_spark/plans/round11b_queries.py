@@ -24,16 +24,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
+from ..functions.money import O_CENTS, o_cents
 from ..operators.partitioning import ensure_parallelism
 from ..operators.pinning import pin
 from .corpus import ORACLES, QUERIES, query  # noqa: F401
 from .tables import load_tables
-
-O_CENTS = "CAST(ROUND(o_totalprice * 100) AS BIGINT)"
-
-
-def _o_cents():
-    return F.round(F.col("o_totalprice") * 100).cast("long")
 
 
 # --------------------------------------------------------------------------
@@ -144,7 +139,7 @@ def q_daily_revenue_hurst_rs(spark, sf_dir):
     dec = "decimal(38,0)"
     d = t["orders"].groupBy(
         F.col("o_orderdate").cast("date").alias("day")
-    ).agg(F.sum(_o_cents()).alias("cents"))
+    ).agg(F.sum(o_cents()).alias("cents"))
     # pinned: the indexed day frame feeds the block unfold, block
     # stats, deviations, AND the n_days output — ONE fact rollup
     ti = pin(
@@ -613,7 +608,7 @@ def q_daily_revenue_ljung_box(spark, sf_dir):
     dec = "decimal(38,0)"
     d = t["orders"].groupBy(
         F.col("o_orderdate").cast("date").alias("day")
-    ).agg(F.sum(_o_cents()).alias("cents"))
+    ).agg(F.sum(o_cents()).alias("cents"))
     wfull = Window.partitionBy()
     wday = Window.orderBy("t")
     ti = d.select(

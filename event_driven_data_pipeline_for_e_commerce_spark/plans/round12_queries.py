@@ -35,18 +35,12 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
+from ..functions.money import L_REV_CENTS, O_CENTS, o_cents
 from ..llmdata.text import tokens_col
 from ..operators.partitioning import ensure_parallelism
 from ..operators.pinning import pin
 from .corpus import ORACLES, QUERIES, query  # noqa: F401
 from .tables import load_tables
-
-O_CENTS = "CAST(ROUND(o_totalprice * 100) AS BIGINT)"
-L_REV_CENTS = "CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)"
-
-
-def _o_cents():
-    return F.round(F.col("o_totalprice") * 100).cast("long")
 
 
 # --------------------------------------------------------------------------
@@ -339,7 +333,7 @@ def q_daily_revenue_jarque_bera(spark, sf_dir):
     d = pin(
         t["orders"].groupBy(
             F.col("o_orderdate").cast("date").alias("day")
-        ).agg(F.sum(_o_cents()).alias("cents"))
+        ).agg(F.sum(o_cents()).alias("cents"))
     )
     tot = d.agg(
         F.count(F.lit(1)).alias("n"),
@@ -553,10 +547,10 @@ def q_customer_spend_cuped(spark, sf_dir):
         .join(
             t["orders"].select(
                 F.col("o_custkey").alias("c_custkey"),
-                F.when(F.col("o_orderdate") < split, _o_cents()).alias(
+                F.when(F.col("o_orderdate") < split, o_cents()).alias(
                     "pre"
                 ),
-                F.when(F.col("o_orderdate") >= split, _o_cents()).alias(
+                F.when(F.col("o_orderdate") >= split, o_cents()).alias(
                     "post"
                 ),
             ),
@@ -668,7 +662,7 @@ def q_daily_revenue_permutation_entropy(spark, sf_dir):
     t = load_tables(spark, sf_dir)
     d = t["orders"].groupBy(
         F.col("o_orderdate").cast("date").alias("day")
-    ).agg(F.sum(_o_cents()).alias("cents"))
+    ).agg(F.sum(o_cents()).alias("cents"))
     w = Window.orderBy("day")
     led = d.select(
         F.col("cents").alias("a"),
@@ -771,7 +765,7 @@ def q_order_total_lineitem_ccc(spark, sf_dir):
     ).cast("long")
     per_order = (
         ensure_parallelism(t["orders"])
-        .select(F.col("o_orderkey"), _o_cents().alias("oc"))
+        .select(F.col("o_orderkey"), o_cents().alias("oc"))
         .join(
             t["lineitem"].select(
                 F.col("l_orderkey").alias("o_orderkey"), l_rev.alias("lc")
@@ -913,7 +907,7 @@ def q_nation_revenue_morans_i(spark, sf_dir):
         )
         .join(
             t["orders"].select(
-                F.col("o_custkey").alias("ck"), _o_cents().alias("oc")
+                F.col("o_custkey").alias("ck"), o_cents().alias("oc")
             ),
             "ck",
             "left",

@@ -16,15 +16,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
+from ..functions.money import L_CENTS, O_CENTS, cents
 from .corpus import query
 from .tables import load_tables
-
-CENTS = "CAST(ROUND(o_totalprice * 100) AS BIGINT)"
-L_CENTS = "CAST(ROUND(l_extendedprice * 100) AS BIGINT)"
-
-
-def _cents(col: str):
-    return F.round(F.col(col) * 100).cast("long")
 
 
 # --------------------------------------------------------------------------
@@ -36,7 +30,7 @@ def _cents(col: str):
     oracle=f"""
     WITH spend AS (
         SELECT c.c_mktsegment AS segment, c.c_custkey,
-               CAST(SUM({CENTS}) AS BIGINT) AS spend_cents
+               CAST(SUM({O_CENTS}) AS BIGINT) AS spend_cents
         FROM customer c JOIN orders o ON o.o_custkey = c.c_custkey
         GROUP BY 1, 2
     ),
@@ -68,7 +62,7 @@ def q_customer_spend_quartile_bands(spark, sf_dir):
         t["customer"]
         .join(t["orders"], F.col("o_custkey") == F.col("c_custkey"))
         .groupBy(F.col("c_mktsegment").alias("segment"), "c_custkey")
-        .agg(F.sum(_cents("o_totalprice")).alias("spend_cents"))
+        .agg(F.sum(cents("o_totalprice")).alias("spend_cents"))
     )
     w = Window.partitionBy("segment").orderBy("spend_cents", "c_custkey")
     return (
@@ -88,7 +82,7 @@ def q_customer_spend_quartile_bands(spark, sf_dir):
     WITH rev AS (
         SELECT c.c_nationkey AS nationkey,
                EXTRACT(YEAR FROM o.o_orderdate) AS yr,
-               CAST(SUM({CENTS}) AS BIGINT) AS cents
+               CAST(SUM({O_CENTS}) AS BIGINT) AS cents
         FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
         GROUP BY 1, 2
     ),
@@ -125,7 +119,7 @@ def q_nation_revenue_rank_stability(spark, sf_dir):
             F.col("c_nationkey").alias("nationkey"),
             F.year("o_orderdate").alias("yr"),
         )
-        .agg(F.sum(_cents("o_totalprice")).alias("cents"))
+        .agg(F.sum(cents("o_totalprice")).alias("cents"))
     )
     w = Window.partitionBy("yr").orderBy(F.desc("cents"), F.asc("nationkey"))
     ranked = rev.withColumn("rnk", F.rank().over(w))
@@ -156,7 +150,7 @@ def q_nation_revenue_rank_stability(spark, sf_dir):
     oracle=f"""
     WITH weekly AS (
         SELECT CAST(DATE_TRUNC('week', o_orderdate) AS DATE) AS week,
-               CAST(SUM({CENTS}) AS BIGINT) AS cents
+               CAST(SUM({O_CENTS}) AS BIGINT) AS cents
         FROM orders GROUP BY 1
     )
     SELECT w.week, w.cents,
@@ -191,7 +185,7 @@ def q_weekly_revenue_wow_delta(spark, sf_dir):
     weekly = (
         t["orders"]
         .groupBy(F.date_trunc("week", "o_orderdate").cast("date").alias("week"))
-        .agg(F.sum(_cents("o_totalprice")).alias("cents"))
+        .agg(F.sum(cents("o_totalprice")).alias("cents"))
     )
     prev = weekly.select(
         F.col("week").alias("prev_week"), F.col("cents").alias("prev_cents")
@@ -223,13 +217,13 @@ def q_weekly_revenue_wow_delta(spark, sf_dir):
     WITH stats AS (
         SELECT o_orderpriority AS priority,
                COUNT(*) AS n,
-               SUM({CENTS}) AS s1,
-               SUM(CAST({CENTS} AS DECIMAL(38, 0)) * {CENTS}) AS s2
+               SUM({O_CENTS}) AS s1,
+               SUM(CAST({O_CENTS} AS DECIMAL(38, 0)) * {O_CENTS}) AS s2
         FROM orders GROUP BY 1
     ),
     scored AS (
         SELECT o.o_orderkey, s.priority,
-               ({CENTS} - s.s1 / CAST(s.n AS DOUBLE))
+               ({O_CENTS} - s.s1 / CAST(s.n AS DOUBLE))
                / sqrt(CAST(s.s2 AS DOUBLE) / s.n
                       - (s.s1 / CAST(s.n AS DOUBLE))
                         * (s.s1 / CAST(s.n AS DOUBLE))) AS z
@@ -253,15 +247,15 @@ def q_orders_price_zscore_outliers(spark, sf_dir):
     grain, broadcast back over the fact scan — two passes, no window,
     no skew sensitivity."""
     t = load_tables(spark, sf_dir)
-    cents = _cents("o_totalprice")
+    amt = cents("o_totalprice")
     stats = (
         t["orders"]
         .groupBy(F.col("o_orderpriority").alias("priority"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(cents).alias("s1"),
+            F.sum(amt).alias("s1"),
             F.sum(
-                cents.cast("decimal(38,0)") * cents
+                amt.cast("decimal(38,0)") * amt
             ).alias("s2"),
         )
     )
@@ -274,7 +268,7 @@ def q_orders_price_zscore_outliers(spark, sf_dir):
         .withColumn(
             "z",
             (
-                cents - F.col("s1") / F.col("n").cast("double")
+                amt - F.col("s1") / F.col("n").cast("double")
             )
             / F.sqrt(
                 F.col("s2").cast("double") / F.col("n")
@@ -391,11 +385,11 @@ def q_brand_price_variance_decomposition(spark, sf_dir):
     then a 25-row re-aggregate — two map-side-combined passes, no
     window, no data motion beyond the brand grain."""
     t = load_tables(spark, sf_dir)
-    cents = _cents("p_retailprice")
+    amt = cents("p_retailprice")
     c = t["part"].groupBy("p_brand").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(cents).alias("s1"),
-        F.sum(cents.cast("decimal(38,0)") * cents).alias("s2"),
+        F.sum(amt).alias("s1"),
+        F.sum(amt.cast("decimal(38,0)") * amt).alias("s2"),
     )
     tot = c.agg(
         F.sum("n").alias("tn"),
@@ -431,7 +425,7 @@ def q_brand_price_variance_decomposition(spark, sf_dir):
     oracle=f"""
     WITH d AS (
         SELECT (CAST(o_orderdate AS DATE) - DATE '1970-01-05') % 7 AS dow,
-               {CENTS} AS cents
+               {O_CENTS} AS cents
         FROM orders
     )
     SELECT CAST(dow AS BIGINT) AS dow, COUNT(*) AS n_orders,
@@ -455,7 +449,7 @@ def q_orders_weekday_seasonality(spark, sf_dir):
         (
             F.datediff(F.to_date("o_orderdate"), F.lit("1970-01-05")) % 7
         ).alias("dow"),
-        _cents("o_totalprice").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     total = d.agg(F.sum("cents")).collect()[0][0]
     return (
@@ -519,7 +513,7 @@ def q_event_type_share_by_hour(spark, sf_dir):
                         >= CAST(DATE_TRUNC('quarter', o_orderdate)
                                 + INTERVAL 3 MONTH AS DATE) - 7
                     THEN 1 ELSE 0 END AS last7,
-               {CENTS} AS cents
+               {O_CENTS} AS cents
         FROM orders
     )
     SELECT quarter,
@@ -547,7 +541,7 @@ def q_quarter_end_load_share(spark, sf_dir):
         F.when(
             F.to_date("o_orderdate") >= F.date_sub(qend, 7), 1
         ).otherwise(0).alias("last7"),
-        _cents("o_totalprice").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     return (
         q.groupBy("quarter")
@@ -600,7 +594,7 @@ def q_returned_rate_by_brand(spark, sf_dir):
             F.count(F.lit(1)).alias("n_lines"),
             F.count_if(ret).alias("n_returned"),
             F.sum(
-                F.when(ret, _cents("l_extendedprice")).otherwise(0)
+                F.when(ret, cents("l_extendedprice")).otherwise(0)
             ).alias("returned_cents"),
         )
         .select(
@@ -1469,6 +1463,6 @@ def q_tax_discount_joint_histogram(spark, sf_dir):
         )
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
-            F.sum(_cents("l_extendedprice")).alias("cents"),
+            F.sum(cents("l_extendedprice")).alias("cents"),
         )
     )

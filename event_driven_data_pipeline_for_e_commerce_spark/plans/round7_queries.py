@@ -33,10 +33,9 @@ from event_driven_data_pipeline_for_e_commerce_spark.operators.partitioning impo
 )
 from event_driven_data_pipeline_for_e_commerce_spark.operators.pinning import pin
 
+from ..functions.money import O_CENTS
 from .corpus import query
 from .tables import load_tables
-
-CENTS = "CAST(ROUND(o_totalprice * 100) AS BIGINT)"
 
 
 # --------------------------------------------------------------------------
@@ -385,7 +384,7 @@ def q_brand_price_elasticity(spark, sf_dir):
                CASE WHEN year(f.f) * 10 + quarter(f.f)
                          < year(o.o_orderdate) * 10 + quarter(o.o_orderdate)
                     THEN 1 ELSE 0 END AS is_repeat,
-               {CENTS} AS cents
+               {O_CENTS} AS cents
         FROM orders o JOIN firsts f ON f.o_custkey = o.o_custkey
     )
     SELECT CAST(yq AS BIGINT) AS yq,

@@ -22,14 +22,9 @@ from event_driven_data_pipeline_for_e_commerce_spark.operators.partitioning impo
 )
 from event_driven_data_pipeline_for_e_commerce_spark.operators.pinning import pin
 
+from ..functions.money import O_CENTS, cents
 from .corpus import ORACLES, QUERIES, query
 from .tables import load_tables
-
-CENTS = "CAST(ROUND(o_totalprice * 100) AS BIGINT)"
-
-
-def _cents(col: str) -> F.Column:
-    return F.round(F.col(col) * 100).cast("bigint")
 
 
 # --------------------------------------------------------------------------
@@ -81,7 +76,7 @@ def q_nation_balance_spend_corr(spark, sf_dir):
     spend = (
         t["orders"]
         .groupBy("o_custkey")
-        .agg(F.sum(_cents("o_totalprice")).alias("cents"))
+        .agg(F.sum(cents("o_totalprice")).alias("cents"))
     )
     return (
         t["customer"]
@@ -308,7 +303,7 @@ def q_order_linecount_value_regression(spark, sf_dir):
     oracle=f"""
     WITH d AS (
         SELECT year(o_orderdate) * 10 + quarter(o_orderdate) AS yq,
-               {CENTS} AS cents,
+               {O_CENTS} AS cents,
                CASE WHEN CAST(CAST(last_day(CAST(o_orderdate AS DATE))
                                     AS DATE)
                               - CAST(o_orderdate AS DATE) AS BIGINT) <= 2
@@ -337,7 +332,7 @@ def q_month_end_revenue_share(spark, sf_dir):
     od = F.col("o_orderdate").cast("date")
     d = t["orders"].select(
         (F.year("o_orderdate") * 10 + F.quarter("o_orderdate")).alias("yq"),
-        _cents("o_totalprice").alias("cents"),
+        cents("o_totalprice").alias("cents"),
         F.when(
             F.datediff(F.last_day(od), od) <= 2, 1
         ).otherwise(0).alias("is_month_end"),
@@ -577,8 +572,8 @@ def q_customer_spend_half_life(spark, sf_dir):
     o = t["orders"].select(
         "o_custkey",
         F.col("o_orderdate").cast("date").alias("d"),
-        F.sum(_cents("o_totalprice")).over(wr).alias("run"),
-        F.sum(_cents("o_totalprice")).over(wp).alias("total"),
+        F.sum(cents("o_totalprice")).over(wr).alias("run"),
+        F.sum(cents("o_totalprice")).over(wp).alias("total"),
         F.min(F.col("o_orderdate").cast("date")).over(wp).alias("d0"),
     )
     hl = (
@@ -617,7 +612,7 @@ def q_customer_spend_half_life(spark, sf_dir):
     oracle=f"""
     WITH daily AS (
         SELECT CAST(o_orderdate AS DATE) AS day,
-               CAST(SUM({CENTS}) AS BIGINT) AS cents
+               CAST(SUM({O_CENTS}) AS BIGINT) AS cents
         FROM orders GROUP BY 1
     ),
     roll AS (
@@ -680,7 +675,7 @@ def q_daily_revenue_volatility_regimes(spark, sf_dir):
     daily = (
         t["orders"]
         .groupBy(F.col("o_orderdate").cast("date").alias("day"))
-        .agg(F.sum(_cents("o_totalprice")).alias("cents"))
+        .agg(F.sum(cents("o_totalprice")).alias("cents"))
     )
     w = Window.orderBy("day").rowsBetween(-29, Window.currentRow)
     sq = F.col("cents").cast("decimal(19,0)")
@@ -1090,7 +1085,7 @@ def q_doc_dedup_family_agreement(spark, sf_dir):
     join — just to count it; this form's heaviest frame is the 44k
     MinHash candidate set. Value-equal at sf0.001/0.01/0.1 against
     the pair-grain form and the unchanged oracle. Under 40% injected
-    byte-dup mass (scripts/ab_family_agreement_dupmass.py) the former
+    byte-dup mass (docs/AB_RECORDS.md, "under byte-dup mass") the former
     pair-enumerating form paid 8.180s vs the survivor form's 4.901s;
     the count-grain rewrite removes the quadratic enumeration term
     and the re-run shows 2.197s — parity with survivors (0.98x).

@@ -21,10 +21,9 @@ from event_driven_data_pipeline_for_e_commerce_spark.operators.partitioning impo
 )
 from event_driven_data_pipeline_for_e_commerce_spark.operators.pinning import pin
 
+from ..functions.money import O_CENTS
 from .corpus import ORACLES, QUERIES, query
 from .tables import load_tables
-
-CENTS = "CAST(ROUND(o_totalprice * 100) AS BIGINT)"
 
 
 @query(
@@ -108,7 +107,7 @@ def q_part_price_dispersion_topk(spark, sf_dir):
     oracle=f"""
     WITH q AS (
         SELECT year(o_orderdate) * 10 + quarter(o_orderdate) AS yq,
-               o_custkey, SUM({CENTS}) AS cents
+               o_custkey, SUM({O_CENTS}) AS cents
         FROM orders GROUP BY 1, 2
     ),
     r AS (
@@ -369,7 +368,7 @@ def q_events_duplicate_profile(spark, sf_dir):
     "order_value_band_migration",
     oracle=f"""
     WITH o AS (
-        SELECT o_custkey, o_orderkey, o_orderdate, {CENTS} AS cents,
+        SELECT o_custkey, o_orderkey, o_orderdate, {O_CENTS} AS cents,
                ROW_NUMBER() OVER (PARTITION BY o_custkey
                                   ORDER BY o_orderdate, o_orderkey) AS rn
         FROM orders
@@ -868,7 +867,7 @@ def q_copurchase_kcore_peel3(spark, sf_dir):
         SELECT n.n_name AS nation,
                (year(o.o_orderdate) - 1995) * 4 + quarter(o.o_orderdate)
                    - 1 AS qidx,
-               SUM({CENTS}) AS cents
+               SUM({O_CENTS}) AS cents
         FROM orders o
         JOIN customer c ON c.c_custkey = o.o_custkey
         JOIN nation n ON n.n_nationkey = c.c_nationkey

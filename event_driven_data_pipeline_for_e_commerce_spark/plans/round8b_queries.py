@@ -21,14 +21,9 @@ from event_driven_data_pipeline_for_e_commerce_spark.operators.partitioning impo
     ensure_parallelism,
 )
 
+from ..functions.money import O_CENTS, cents
 from .corpus import ORACLES, QUERIES, query
 from .tables import load_tables
-
-CENTS = "CAST(ROUND(o_totalprice * 100) AS BIGINT)"
-
-
-def _cents(col: str):
-    return F.round(F.col(col) * 100).cast("long")
 
 
 # --------------------------------------------------------------------------
@@ -94,7 +89,7 @@ def q_order_total_reconciliation(spark, sf_dir):
         line, F.col("l_orderkey") == F.col("o_orderkey")
     ).select(
         F.col("o_orderstatus").alias("status"),
-        _cents("o_totalprice").alias("order_cents"),
+        cents("o_totalprice").alias("order_cents"),
         "line_cents",
     )
     diff = F.col("order_cents") - F.col("line_cents")
@@ -209,7 +204,7 @@ _DECILE_PS = [i / 10.0 for i in range(1, 10)]
         FROM c, cuts k
     ),
     spend AS (
-        SELECT o_custkey, SUM({CENTS}) AS spend_cents
+        SELECT o_custkey, SUM({O_CENTS}) AS spend_cents
         FROM orders GROUP BY o_custkey
     )
     SELECT CAST(b.decile AS BIGINT) AS decile,
@@ -234,7 +229,7 @@ def q_acctbal_decile_profile(spark, sf_dir):
     spend side is a customer-grain rollup joined at customer grain."""
     t = load_tables(spark, sf_dir)
     c = t["customer"].select(
-        "c_custkey", _cents("c_acctbal").alias("bal_cents")
+        "c_custkey", cents("c_acctbal").alias("bal_cents")
     )
     cuts = c.agg(
         *[
@@ -251,7 +246,7 @@ def q_acctbal_decile_profile(spark, sf_dir):
         "c_custkey", "bal_cents", decile.alias("decile")
     )
     spend = t["orders"].groupBy("o_custkey").agg(
-        F.sum(_cents("o_totalprice")).alias("spend_cents")
+        F.sum(cents("o_totalprice")).alias("spend_cents")
     )
     return (
         banded.join(spend, F.col("o_custkey") == F.col("c_custkey"), "left")
@@ -583,11 +578,11 @@ def q_nation_actor_census(spark, sf_dir):
     t = load_tables(spark, sf_dir)
     c = t["customer"].groupBy(F.col("c_nationkey").alias("nk")).agg(
         F.count(F.lit(1)).alias("n_customers"),
-        F.sum(_cents("c_acctbal")).alias("cust_bal_cents"),
+        F.sum(cents("c_acctbal")).alias("cust_bal_cents"),
     )
     s = t["supplier"].groupBy(F.col("s_nationkey").alias("nk2")).agg(
         F.count(F.lit(1)).alias("n_suppliers"),
-        F.sum(_cents("s_acctbal")).alias("supp_bal_cents"),
+        F.sum(cents("s_acctbal")).alias("supp_bal_cents"),
     )
     return (
         t["nation"]
@@ -1740,7 +1735,7 @@ def q_emb_int8_saturation_audit(spark, sf_dir):
     WITH y AS (
         SELECT year(o_orderdate) AS yr,
                COUNT(*) AS n_orders,
-               CAST(SUM({CENTS}) AS BIGINT) AS cents
+               CAST(SUM({O_CENTS}) AS BIGINT) AS cents
         FROM orders GROUP BY 1
     ),
     g AS (
@@ -1771,7 +1766,7 @@ def q_revenue_growth_decomposition(spark, sf_dir):
     t = load_tables(spark, sf_dir)
     y = t["orders"].groupBy(F.year("o_orderdate").alias("yr")).agg(
         F.count(F.lit(1)).alias("n_orders"),
-        F.sum(_cents("o_totalprice")).alias("cents"),
+        F.sum(cents("o_totalprice")).alias("cents"),
     )
     w = Window.orderBy("yr")
     g = y.select(
@@ -1797,7 +1792,7 @@ def q_revenue_growth_decomposition(spark, sf_dir):
     "high_value_order_share_by_nation",
     oracle=f"""
     WITH o AS (
-        SELECT o_custkey, {CENTS} AS cents FROM orders
+        SELECT o_custkey, {O_CENTS} AS cents FROM orders
     ),
     cut AS (
         SELECT percentile_cont(0.9) WITHIN GROUP (ORDER BY cents) AS p90
@@ -1830,7 +1825,7 @@ def q_high_value_order_share_by_nation(spark, sf_dir):
     bounded 25-row nation rollup."""
     t = load_tables(spark, sf_dir)
     o = t["orders"].select(
-        "o_custkey", _cents("o_totalprice").alias("cents")
+        "o_custkey", cents("o_totalprice").alias("cents")
     )
     cut = o.agg(F.expr("percentile(cents, 0.9)").alias("p90"))
     j = (
@@ -1910,7 +1905,7 @@ def q_part_type_finish_premium(spark, sf_dir):
         F.when(pos > 0, F.col("p_type").substr(F.lit(1), pos - 1))
         .otherwise(F.col("p_type"))
         .alias("finish"),
-        _cents("p_retailprice").alias("price_cents"),
+        cents("p_retailprice").alias("price_cents"),
     )
     g = p.groupBy("finish").agg(
         F.count(F.lit(1)).alias("n_parts"),

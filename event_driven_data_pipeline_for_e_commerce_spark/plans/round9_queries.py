@@ -19,14 +19,9 @@ from event_driven_data_pipeline_for_e_commerce_spark.operators.partitioning impo
     ensure_parallelism,
 )
 
+from ..functions.money import O_CENTS, cents
 from .corpus import ORACLES, QUERIES, query  # noqa: F401
 from .tables import load_tables
-
-CENTS = "CAST(ROUND(o_totalprice * 100) AS BIGINT)"
-
-
-def _cents(col: str):
-    return F.round(F.col(col) * 100).cast("long")
 
 
 @query(
@@ -202,7 +197,7 @@ def q_weekend_order_share_by_segment(spark, sf_dir):
         .select(
             F.col("c_mktsegment").alias("segment"),
             wk.alias("wk"),
-            _cents("o_totalprice").alias("cents"),
+            cents("o_totalprice").alias("cents"),
         )
     )
     wcents = F.sum(F.when(F.col("wk") == 1, F.col("cents")).otherwise(0))
@@ -262,7 +257,7 @@ def q_segment_value_trend_slope(spark, sf_dir):
                 F.col("o_orderdate").cast("date"),
                 F.lit("1992-01-01").cast("date"),
             ).cast("long").alias("x_days"),
-            _cents("o_totalprice").alias("cents"),
+            cents("o_totalprice").alias("cents"),
         )
     )
     return (
@@ -376,7 +371,7 @@ def q_customer_balance_sign_mix(spark, sf_dir):
     )
     spend = t["orders"].groupBy("o_custkey").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        F.sum(_cents("o_totalprice")).alias("cents"),
+        F.sum(cents("o_totalprice")).alias("cents"),
     )
     return (
         c.join(spend, F.col("o_custkey") == F.col("c_custkey"), "left")
@@ -799,7 +794,7 @@ def q_supplier_acctbal_quartiles_by_nation(spark, sf_dir):
         F.col("n_nationkey") == F.col("s_nationkey"),
     ).select(
         F.col("n_name").alias("nation"),
-        _cents("s_acctbal").alias("bal_cents"),
+        cents("s_acctbal").alias("bal_cents"),
     )
     return (
         s.groupBy("nation")
@@ -823,7 +818,7 @@ def q_supplier_acctbal_quartiles_by_nation(spark, sf_dir):
     "order_priority_value_quantiles",
     oracle=f"""
     WITH o AS (
-        SELECT o_orderpriority AS priority, {CENTS} AS cents FROM orders
+        SELECT o_orderpriority AS priority, {O_CENTS} AS cents FROM orders
     )
     SELECT priority,
            COUNT(*) AS n_orders,
@@ -847,7 +842,7 @@ def q_order_priority_value_quantiles(spark, sf_dir):
     t = load_tables(spark, sf_dir)
     o = t["orders"].select(
         F.col("o_orderpriority").alias("priority"),
-        _cents("o_totalprice").alias("cents"),
+        cents("o_totalprice").alias("cents"),
     )
     return (
         o.groupBy("priority")

@@ -12,14 +12,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
+from ..functions.money import O_CENTS, cents
 from .corpus import ORACLES, QUERIES, query  # noqa: F401
 from .tables import load_tables
-
-CENTS = "CAST(ROUND(o_totalprice * 100) AS BIGINT)"
-
-
-def _cents(col: str):
-    return F.round(F.col(col) * 100).cast("long")
 
 
 @query(
@@ -70,7 +65,7 @@ def q_supplier_brand_reach(spark, sf_dir):
     "customer_order_value_cv",
     oracle=f"""
     WITH o AS (
-        SELECT o_custkey, {CENTS} AS cents FROM orders
+        SELECT o_custkey, {O_CENTS} AS cents FROM orders
     ),
     per AS (
         SELECT o_custkey,
@@ -105,7 +100,7 @@ def q_customer_order_value_cv(spark, sf_dir):
     t = load_tables(spark, sf_dir)
     per = (
         t["orders"]
-        .select("o_custkey", _cents("o_totalprice").alias("cents"))
+        .select("o_custkey", cents("o_totalprice").alias("cents"))
         .groupBy("o_custkey")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -245,7 +240,7 @@ def q_order_linecount_by_priority(spark, sf_dir):
     oracle=f"""
     WITH y AS (
         SELECT n.n_name AS nation, year(o.o_orderdate) AS yr,
-               CAST(SUM({CENTS}) AS BIGINT) AS cents
+               CAST(SUM({O_CENTS}) AS BIGINT) AS cents
         FROM orders o
         JOIN customer c ON c.c_custkey = o.o_custkey
         JOIN nation n ON n.n_nationkey = c.c_nationkey
@@ -296,7 +291,7 @@ def q_nation_revenue_cagr(spark, sf_dir):
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").alias("yr"),
         )
-        .agg(F.sum(_cents("o_totalprice")).alias("cents"))
+        .agg(F.sum(cents("o_totalprice")).alias("cents"))
     )
     span = y.agg(F.min("yr").alias("y0"), F.max("yr").alias("y1"))
     fl = (

@@ -22,22 +22,10 @@ import hashlib
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
+from ..functions.money import L_REV_CENTS, O_CENTS, l_rev_cents, o_cents
 from ..operators.partitioning import ensure_parallelism
 from .corpus import ORACLES, QUERIES, query  # noqa: F401
 from .tables import load_tables
-
-O_CENTS = "CAST(ROUND(o_totalprice * 100) AS BIGINT)"
-L_REV_CENTS = "CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)"
-
-
-def _o_cents():
-    return F.round(F.col("o_totalprice") * 100).cast("long")
-
-
-def _l_rev_cents():
-    return F.round(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-    ).cast("long")
 
 
 # --------------------------------------------------------------------------
@@ -148,9 +136,9 @@ def q_order_value_increasing_runs(spark, sf_dir):
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     seq = t["orders"].select(
         "o_custkey",
-        _o_cents().alias("cents"),
+        o_cents().alias("cents"),
         F.row_number().over(w).alias("rn"),
-        F.lag(_o_cents()).over(w).alias("prev"),
+        F.lag(o_cents()).over(w).alias("prev"),
     )
     brk = seq.select(
         "o_custkey",
@@ -378,7 +366,7 @@ def q_supplier_quarter_share_volatility(spark, sf_dir):
     r = t["lineitem"].select(
         "l_suppkey",
         (F.year("l_shipdate") * 10 + F.quarter("l_shipdate")).alias("yq"),
-        _l_rev_cents().alias("cents"),
+        l_rev_cents().alias("cents"),
     )
     sq = r.groupBy("l_suppkey", "yq").agg(F.sum("cents").alias("cents"))
     qt = sq.groupBy("yq").agg(F.sum("cents").alias("total"))
@@ -451,7 +439,7 @@ def q_lineitem_linenumber_profile(spark, sf_dir):
     lines = t["lineitem"].select(
         "l_linenumber",
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("price_cents"),
-        _l_rev_cents().alias("rev_cents"),
+        l_rev_cents().alias("rev_cents"),
         F.round(F.col("l_quantity") * 100).cast("long").alias("qty_cents"),
     )
     agg = lines.groupBy("l_linenumber").agg(
@@ -530,7 +518,7 @@ def q_daily_revenue_median_streaks(spark, sf_dir):
     d = (
         t["orders"]
         .groupBy(F.col("o_orderdate").cast("date").alias("day"))
-        .agg(F.sum(_o_cents()).alias("cents"))
+        .agg(F.sum(o_cents()).alias("cents"))
     )
     med = d.agg(F.expr("percentile(cents, 0.5)").alias("m"))
     flag = d.crossJoin(F.broadcast(med)).select(
@@ -606,7 +594,7 @@ def q_customer_first_last_value_shift(spark, sf_dir):
     segment dim, 5-row output."""
     t = load_tables(spark, sf_dir)
     base = t["orders"].select(
-        "o_custkey", "o_orderdate", "o_orderkey", _o_cents().alias("cents")
+        "o_custkey", "o_orderdate", "o_orderkey", o_cents().alias("cents")
     )
     w_a = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     w_d = Window.partitionBy("o_custkey").orderBy(

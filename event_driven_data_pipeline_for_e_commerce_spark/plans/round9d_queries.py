@@ -16,15 +16,10 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
+from ..functions.money import O_CENTS, o_cents
 from ..operators.partitioning import ensure_parallelism
 from .corpus import ORACLES, QUERIES, query  # noqa: F401
 from .tables import load_tables
-
-O_CENTS = "CAST(ROUND(o_totalprice * 100) AS BIGINT)"
-
-
-def _o_cents():
-    return F.round(F.col("o_totalprice") * 100).cast("long")
 
 
 @query(
@@ -107,7 +102,7 @@ def q_order_value_weekend_mannwhitney(spark, sf_dir):
         % 7
     )
     base = t["orders"].select(
-        _o_cents().alias("cents"),
+        o_cents().alias("cents"),
         F.when(dow.isin(5, 6), 1).otherwise(0).alias("wk"),
     )
     v = base.groupBy("cents").agg(
@@ -195,7 +190,7 @@ def q_customer_peak90d_spend_digits(spark, sf_dir):
             .cast("long")
             .alias("dn"),
         )
-        .agg(F.sum(_o_cents()).alias("cents"))
+        .agg(F.sum(o_cents()).alias("cents"))
     )
     w = (
         Window.partitionBy("o_custkey")

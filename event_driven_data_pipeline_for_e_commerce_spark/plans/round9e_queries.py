@@ -17,10 +17,10 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
+from ..functions.money import O_CENTS
 from .corpus import ORACLES, QUERIES, query  # noqa: F401
 from .tables import load_tables
 
-O_CENTS = "CAST(ROUND(o_totalprice * 100) AS BIGINT)"
 _LAMBDA = 0.7
 
 
