@@ -3,15 +3,29 @@
 ``entry(spark)`` runs the flagship funnel query on sf0.001;
 ``queries()``/``oracle_sql()`` expose the engine's full corpus
 (event_driven_data_pipeline_for_e_commerce_spark.plans.corpus).
+
+The driver checks the first 50 queries in this order each round, so
+the order is the correctness window. It is derived from the committed
+``CORRECTNESS_r*.json`` reports by ``window``: the ``PRIORITY`` names
+first, then every query never green in a report (registration order),
+then the rest, stalest last-green round first (registration order
+within a round).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+from collections.abc import Callable, Iterable, Sequence
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
 from event_driven_data_pipeline_for_e_commerce_spark.plans import corpus
+
+# Queries whose code or oracle changed since the last committed report.
+PRIORITY: tuple[str, ...] = ()
+
+_CHECKS = ("rows_match", "schema_match", "hash_match")
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -19,588 +33,35 @@ def entry(spark: SparkSession) -> DataFrame:
     return corpus.QUERIES["funnel"](spark, "/root/testdata/sf0.001")
 
 
-# The driver checks exactly the first 50 registered queries per round.
-# Cumulative driver-green after round 11: 447/447 — every registered
-# query has a green driver row (CORRECTNESS_r01 ∪ … ∪ r11, zero red
-# ever; see VERDICT r11).
-#
-# ROUND-12 WINDOW (VERDICT-r11 task 1 — the correctness-evidence gate
-# for round 11's rewrites):
-# (a) positions 1-9 (_PRIORITY): the seven round-11 rewrites whose
-# driver-oracle check the r11 staleness rotation crowded out
-# (doc_simhash_near_dup and its fingerprint-grain consumers
-# doc_dedup_family_agreement / _survivors, part_copurchase_pagerank
-# [edge build REVERTED to the orderkey self-join this round on sf0.5
-# A/B evidence — OPTIMIZATION_r12.md #3], copurchase_triangle_census,
-# session_event_type_affinity, events_watermark_drop_sweep), plus
-# doc_dedup_detector_kappa (r11-green, kept warm per VERDICT) and
-# emb_ann_recall_contract (r12 rewrite: shared pinned truth
-# projection, OPTIMIZATION_r12.md #2). Every one strict-value-checked
-# at sf0.001 + sf0.01 + sf0.1 under final r12 code.
-# (b) positions 10-50: staleness re-checks, stalest-first — the 3
-# round-1-cohort leftovers the r11 window could not fit
-# (view_click_pairs_2h, approx_distinct_contract,
-# customers_with_orders_semi), then the full round-2 cohort (30) and
-# the head of the round-3 cohort (8, including doc_minhash_near_dup —
-# examined-not-changed this round, OPTIMIZATION_r12.md).
-# The 50 queries green in CORRECTNESS_r11 (old priority trio + the 8
-# round-11 registrations + 39 r1-stale re-checks) moved to the tail
-# as the round-11 cohort; _ordered's dict merge collapses the
-# duplicate entries for the new priority names (first insertion
-# wins), so the window is exactly the 50 above.
-#
-# ROUND-11 WINDOW (VERDICT-r10 tasks 1+3+7):
-# (a) positions 1-3 (_PRIORITY): the three ADVICE-r10
-# code/oracle-touched re-checks —
-#   * daily_revenue_best_split: the argmax is now an EXACT integer
-#     pairwise-rational comparison (12-significant-digit descale via
-#     portable LPAD/SUBSTR string truncation, cross-multiplied
-#     DECIMAL(38,0) — no double anywhere in the ranking; the r10
-#     ROUND(q) key was the identity above 2^53),
-#   * emb_intrinsic_dimension_2nn: the 2-NN ranking key is
-#     e9-integerized (ROW_NUMBER over CAST(ROUND(d2*1e9) AS BIGINT),
-#     b_id) on both engines,
-#   * event_markov_stationary: chain closure iterated to FIXPOINT
-#     (8 unrolled semi-join steps — exact for up to 9 event types)
-#     so renormalized rows each sum to exactly 1 and no probability
-#     mass can silently leak.
-# Each re-strict-checked twice at sf0.01 + once at sf0.1 AFTER the
-# change; the two portable ones re-ran their parity pins green.
-# (b) positions 4-11: the eight ROUND-11 NEW registrations
-# (plans/round12_queries.py): doc_vocab_chao1_richness,
-# doc_dedup_detector_kappa, daily_revenue_jarque_bera,
-# part_name_blocked_edit_pairs, customer_spend_cuped,
-# daily_revenue_permutation_entropy, order_total_lineitem_ccc,
-# nation_revenue_morans_i — eight new capability classes
-# (unseen-species estimation, chance-corrected rater agreement,
-# normality testing, blocked edit-distance ER, experimentation
-# variance reduction, ordinal-pattern complexity, continuous
-# concordance, network autocorrelation), each strict-checked green
-# twice at sf0.01 + once at sf0.1 at birth, the 6 portable oracles
-# parity-pinned at birth, the 2 non-portable tagged in the same
-# commit, and EVERY one backed by an independent numpy/pandas
-# reference test (tests/test_stat_references.py).
-# (c) positions 12-50: staleness re-checks drawn stalest-first —
-# _PRIOR_GREEN below is now ordered by LAST DRIVER-GREEN ROUND
-# ascending (registration order within a cohort), so the window's
-# 39 remaining slots re-verify 39 of the 42 queries last checked in
-# ROUND 1 (nine rounds of code evolution ago — VERDICT-r10 gap 1).
-# The 3 r1-cohort leftovers (tail positions 40-42) lead the r12
-# window.
-#
-# ROUND-11 FULL-CORPUS SWEEP: after the ADVICE-r10 fixes, the 8 new
-# registrations, and the orders_quality_checks portability rewrite
-# landed, the whole corpus was strict-checked in ONE sf0.01 sweep
-# (scripts/strict_driver_check.py, exact cell-value compare):
-# 447/447 ok, zero errors — the r8/r9/r10 bonus-sweep pattern, so
-# every registered query has a same-session exact-compare pass under
-# final round-11 code.
-#
-# PARITY PARTITION: the ENFORCED counts live in
-# tests/test_sql_api_parity.py (316 analyzable / 314 row-equal /
-# 268 pinned / 131 NONPORTABLE of 447) — kept exact both ways by
-# test_nonportable_inventory_is_exact and restated in the README
-# parity paragraph in the same commits.
-_PRIORITY = (
-    # round-11 rewrites awaiting their first driver-oracle row +
-    # round-12-touched queries (window rationale above)
-    "doc_simhash_near_dup",
-    "doc_dedup_family_agreement",
-    "doc_dedup_family_agreement_survivors",
-    "part_copurchase_pagerank",
-    "copurchase_triangle_census",
-    "session_event_type_affinity",
-    "events_watermark_drop_sweep",
-    "doc_dedup_detector_kappa",
-    "emb_ann_recall_contract",
-)
+def correctness_reports(root: Path = Path(__file__).resolve().parent) -> list[dict]:
+    """The committed driver reports, oldest round first."""
+    paths = sorted(root.glob("CORRECTNESS_r*.json"), key=lambda p: int(p.stem.split("_r")[-1]))
+    return [json.loads(p.read_text()) for p in paths]
 
 
-# Every query with a green driver row in rounds 1-10, ordered by the
-# round of its MOST RECENT green driver row (stalest first, original
-# registration order within a cohort): the driver window's staleness
-# budget always lands on the longest-unverified queries first.
-_PRIOR_GREEN = (
-    # last driver-green in round 1 (the 3 re-checks the r11 window
-    # could not fit; the other 39 r1-cohort queries were re-verified
-    # green in CORRECTNESS_r11 and now live in the round-11 cohort at
-    # the tail)
-    "view_click_pairs_2h",
-    "approx_distinct_contract",
-    "customers_with_orders_semi",
-    # last driver-green in round 2
-    "tolerant_extract_cast",
-    "props_json_stats",
-    "purchase_attribution",
-    "customers_without_orders_anti",
-    "nations_both_sides_intersect",
-    "nations_customers_only_except",
-    "status_measures_unpivot",
-    "pricing_summary",
-    "user_event_transitions",
-    "customer_order_ranks",
-    "order_value_distribution",
-    "user_event_paths",
-    "order_price_histogram",
-    "customer_geo_nearest",
-    "doc_token_stats",
-    "doc_quality_scores",
-    "doc_language_id",
-    "doc_fingerprints",
-    "doc_ngram_jaccard_pairs",
-    "emb_label_centroids",
-    "doc_chunks",
-    "doc_stratified_sample",
-    "doc_quality_filter",
-    "q3_shipping_priority",
-    "q4_priority_semi_exists",
-    "q5_local_supplier_volume",
-    "q7_nation_trade_volume",
-    "q17_small_quantity_revenue",
-    "q22_prospective_customers",
-    "q19_disjunctive_predicates",
-    # last driver-green in round 3
-    "funnel",
-    "doc_exact_dedup",
-    "doc_minhash_near_dup",
-    "doc_dup_clusters",
-    "emb_cosine_near_dup",
-    "doc_segment_dedup",
-    "doc_bigram_lm_score",
-    "doc_clean_normalize",
-    "emb_exact_dedup",
-    "emb_int8_quantize",
-    "doc_vocab_encode",
-    "audio_pcm_stats",
-    "doc_source_mixing",
-    "doc_near_dup_consensus",
-    "q6_forecast_revenue",
-    "q10_returned_items",
-    "q13_order_count_distribution",
-    "q14_promo_revenue_share",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q2_min_cost_supplier",
-    "q11_important_parts",
-    "q12_priority_shipping",
-    "q20_excess_shipments",
-    "q21_waiting_suppliers",
-    "cohort_retention",
-    "basket_part_pairs",
-    "daily_revenue_gapfill_ma7",
-    "customer_name_fuzzy_pairs",
-    "segment_event_revenue",
-    "daily_conversion_rates",
-    "order_value_quantile_bands",
-    "referential_integrity_audit",
-    "weekly_active_users",
-    "funnel_by_segment",
-    "snapshot_diff_reconciliation",
-    "winsorized_order_values",
-    "supplier_scorecard",
-    "cart_abandonment_daily",
-    "discount_quantity_stats",
-    # last driver-green in round 4
-    "doc_pmi_collocations",
-    "doc_dedup_survivors",
-    "doc_keyword_search",
-    "emb_dim_stats",
-    "event_volume_anomalies",
-    "emb_pq_codes",
-    "doc_dedup_rate_by_source",
-    "orders_quality_checks",
-    "lineitem_suppkey_skew",
-    "pit_status_at_ship",
-    "ordered_funnel_conversions",
-    "cms_heavy_hitters",
-    "supplier_ship_cumulative",
-    "conversion_latency_histogram",
-    "priority_mix_drift",
-    "doc_ngram_novelty",
-    "user_value_twap",
-    "doc_zipf_slope",
-    "emb_top_principal_component",
-    "user_event_entropy",
-    "source_vocab_overlap",
-    "copurchase_triangle_census",
-    "selfjoin_size_estimate",
-    "emb_pairwise_sim_histogram",
-    "monthly_seasonal_index",
-    "supplier_momentum_ewm",
-    "weekly_conversion_sla",
-    "metric_cube_quarter_segment",
-    "metric_cube_region_priority",
-    "metric_events_type_segment",
-    "corpus_quality_report",
-    "benford_first_digit_audit",
-    "part_recommendations",
-    "media_exact_dedup",
-    "minhash_precision_stats",
-    "user_peak_event_rate",
-    "daily_revenue_autocorr",
-    "functional_dependency_audit",
-    "customer_entity_clusters",
-    # last driver-green in round 5
-    "doc_simhash",
-    "doc_simhash_near_dup",
-    "doc_heaps_law_fit",
-    "emb_lsh_bucket_label_purity",
-    "doc_sentence_stats",
-    "part_type_supplier_hhi",
-    "lsh_candidate_volume_forecast",
-    "region_quarter_revenue_yoy",
-    "source_char_class_profile",
-    "emb_norm_histogram",
-    "hourly_load_percentiles",
-    "part_size_price_regression",
-    "doc_dedup_threshold_sweep",
-    "segment_clv_projection",
-    "nation_order_coverage",
-    "bloom_prefilter_audit",
-    "basket_association_rules",
-    "event_disorder_profile",
-    "doc_incremental_dedup",
-    "multi_touch_attribution",
-    "revenue_motif_search",
-    "customer_spend_quartile_bands",
-    "nation_revenue_rank_stability",
-    "orders_price_zscore_outliers",
-    "brand_price_iqr_outliers",
-    "brand_price_variance_decomposition",
-    "orders_weekday_seasonality",
-    "event_type_share_by_hour",
-    "quarter_end_load_share",
-    "returned_rate_by_brand",
-    "doc_shingle_df_skew",
-    "doc_dup_cluster_size_histogram",
-    "emb_kmeans_inertia",
-    "emb_int8_quant_error_by_label",
-    "doc_prefix_dup_rate",
-    "doc_vocab_growth_by_source",
-    "events_dedup_rate_by_day",
-    "copurchase_jaccard_similar_parts",
-    "customer_type_concentration",
-    "ship_delay_p95_by_month",
-    "discount_band_margin",
-    "emb_norm_extremes",
-    "doc_lang_source_confusion",
-    "tax_discount_joint_histogram",
-    # last driver-green in round 6
-    "scd2_merge_orders",
-    "media_feature_extract",
-    "orders_column_profile",
-    "part_copurchase_pagerank",
-    "customer_pareto_abc",
-    "part_revenue_gini",
-    "emb_label_knn_accuracy",
-    "doc_perplexity_by_source",
-    "doc_contamination_by_split",
-    "customer_value_migration",
-    "orders_backlog_aging",
-    "nation_trade_balance",
-    "order_priority_sla_attainment",
-    "emb_pca_reconstruction_error",
-    "order_linecount_histogram",
-    "doc_token_budget_curve",
-    "doc_hapax_rate",
-    "supplier_revenue_lorenz",
-    "emb_quantile_clip_bounds",
-    "emb_centroid_split_drift",
-    "doc_bigram_cond_entropy",
-    "doc_near_dup_cross_source",
-    "session_conversion_stats",
-    "doc_shard_balance",
-    "order_completion_mix",
-    "customer_reorder_affinity",
-    "doc_dedup_keeper_quality_delta",
-    "session_entry_conversion",
-    "event_hourly_dispersion",
-    "emb_dim_correlation_pairs",
-    "supplier_lead_time_consistency",
-    "same_nation_trade_lift",
-    "part_size_price_frontier",
-    "event_segment_chisq",
-    "nation_revenue_theil",
-    "emb_silhouette_proxy",
-    "markov_next_event_accuracy",
-    "doc_weighted_sample",
-    "doc_containment_pairs",
-    "emb_int8_recall_contract",
-    "doc_curriculum_phases",
-    "doc_source_kl_divergence",
-    "supplier_backlog_peak",
-    "brand_weighted_median_price",
-    "ab_test_conversion_lift",
-    "purchase_path_topk",
-    "doc_winnow_fingerprint_matches",
-    "daily_revenue_cusum_drift",
-    # last driver-green in round 7
-    "event_id_dedup",
-    "priority_status_pivot",
-    "emb_ivf_topk",
-    "rfm_segments",
-    "doc_length_percentiles",
-    "repeat_purchase_intervals",
-    "lead_time_trend_by_nation",
-    "customer_churn_risk",
-    "emb_pq_topk",
-    "zorder_locality_audit",
-    "activity_heatmap",
-    "emb_ann_recall_contract",
-    "emb_ivf_nprobe_sweep",
-    "minhash_recall_stats",
-    "weekly_revenue_wow_delta",
-    "emb_ivf_list_balance",
-    "customer_order_span_stats",
-    "event_type_psi_drift",
-    "daily_revenue_stl_decomposition",
-    "doc_gopher_quality_flags",
-    "doc_minhash_band_planner",
-    "customer_survival_km",
-    "brand_price_elasticity",
-    "repeat_customer_share_by_quarter",
-    "doc_stopword_coverage_by_source",
-    "doc_bpe_pair_merges",
-    "events_hill_tail_index",
-    "doc_vocab_coverage_curve",
-    "emb_assignment_margin",
-    "nation_balance_spend_corr",
-    "customer_winback_stats",
-    "part_brand_price_ladder",
-    "order_linecount_value_regression",
-    "month_end_revenue_share",
-    "multi_supplier_parts_premium",
-    "lineitem_quantity_mode_by_brand",
-    "return_rate_monthly_trend",
-    "customer_spend_half_life",
-    "doc_punct_density_quantiles",
-    "doc_dup_rate_vs_length_band",
-    "doc_truncation_loss_curve",
-    "doc_word_len_histogram",
-    "emb_pq_subspace_distortion",
-    "emb_cluster_size_gini",
-    "emb_l2_vs_cosine_rank_agreement",
-    "emb_norm_vs_label_anova",
-    # last driver-green in round 8
-    "emb_semdedup_prune",
-    "daily_revenue_volatility_regimes",
-    "events_watermark_drop_sweep",
-    "doc_dedup_family_agreement",
-    "part_price_dispersion_topk",
-    "quarterly_top_customer_share",
-    "order_gap_burstiness",
-    "brand_seasonal_amplitude",
-    "events_duplicate_profile",
-    "order_value_band_migration",
-    "doc_prefix_cluster_sizes",
-    "region_brand_affinity_lift",
-    "doc_sentence_dedup_rate",
-    "emb_pq_rank_displacement",
-    "copurchase_kcore_peel3",
-    "nation_revenue_forecast_linreg",
-    "doc_letter_entropy_by_source",
-    "order_priority_dow_chisq",
-    "emb_ivf_probe_cost_curve",
-    "doc_quality_vs_dup_class",
-    "order_total_reconciliation",
-    "brand_revenue_share_trend",
-    "acctbal_decile_profile",
-    "late_revenue_at_risk",
-    "segment_nation_mix_share",
-    "trade_degree_distribution",
-    "order_ship_span_histogram",
-    "nation_actor_census",
-    "event_value_percentiles_by_type",
-    "sessions_per_user_histogram",
-    "event_interarrival_by_type",
-    "user_stickiness_dau_wau",
-    "event_minute_spike_audit",
-    "error_share_by_hour",
-    "doc_line_stats_by_source",
-    "doc_digit_density_by_lang",
-    "doc_padding_waste_curve",
-    "doc_id_continuity_audit",
-    "doc_token_mass_gini_by_source",
-    "doc_boilerplate_sentences",
-    "emb_pq_code_entropy",
-    "emb_ivf_residual_norms",
-    "emb_knn_label_confusion",
-    "emb_label_centroid_separation",
-    "emb_int8_saturation_audit",
-    "revenue_growth_decomposition",
-    "high_value_order_share_by_nation",
-    "part_type_finish_premium",
-    "customer_name_key_consistency",
-    "event_type_user_overlap",
-    # last driver-green in round 9
-    "brand_return_value_share",
-    "nation_order_priority_entropy",
-    "weekend_order_share_by_segment",
-    "segment_value_trend_slope",
-    "lineitem_quantity_entropy_by_returnflag",
-    "customer_balance_sign_mix",
-    "part_name_word_count_stats",
-    "session_depth_conversion_curve",
-    "doc_source_length_psi",
-    "doc_casefold_dup_gain",
-    "emb_subvector_norm_share",
-    "supplier_acctbal_quartiles_by_nation",
-    "order_priority_value_quantiles",
-    "user_event_type_diversity",
-    "supplier_brand_reach",
-    "customer_order_value_cv",
-    "events_value_by_weekday",
-    "order_linecount_by_priority",
-    "nation_revenue_cagr",
-    "events_hourly_autocorr24",
-    "order_priority_escalation_matrix",
-    "order_value_increasing_runs",
-    "session_bounce_rate_by_hour",
-    "user_value_quartile_concentration",
-    "supplier_quarter_share_volatility",
-    "lineitem_linenumber_profile",
-    "daily_revenue_median_streaks",
-    "customer_first_last_value_shift",
-    "doc_term_burstiness_topk",
-    "emb_knn_reciprocity",
-    "emb_random_projection_distortion",
-    "order_value_weekend_mannwhitney",
-    "customer_peak90d_spend_digits",
-    "session_event_type_affinity",
-    "supplier_shared_part_jaccard_topk",
-    "emb_dim_energy_concentration",
-    "doc_zipf_abbreviation_curve",
-    "emb_mmr_diversified_topk",
-    "session_duration_bands_by_entry_type",
-    "doc_simhash_bit_balance",
-    "order_value_priority_weekend_anova2",
-    "customer_first_order_size_cohorts",
-    "part_active_span_revenue_rate",
-    "doc_dedup_family_agreement_survivors",
-    "monthly_revenue_theilsen_trend",
-    "daily_revenue_mann_kendall",
-    "order_value_priority_kruskal_wallis",
-    "doc_dedup_source_mixture_shift",
-    "customer_order_value_lag1_autocorr",
-    "emb_knn_hubness_histogram",
-    # last driver-green in round 10
-    "salted_join_revenue",
-    "asof_last_click",
-    "grouping_sets_revenue",
-    "emb_cosine_topk",
-    "emb_lsh_topk",
-    "session_windows",
-    "doc_train_split",
-    "doc_tfidf_top_terms",
-    "video_frame_grid",
-    "doc_pii_redact",
-    "doc_repetition_ratio",
-    "doc_contamination_overlap",
-    "emb_kmeans_assign",
-    "doc_sequence_pack",
-    "q8_market_share",
-    "q9_product_type_profit",
-    "q18_large_volume_customers",
-    "hll_rollup_contract",
-    "qsketch_price_quantiles",
-    "doc_compressibility_proxy",
-    "daily_revenue_runs_test",
-    "order_linecount_dispersion",
-    "doc_bytes_per_token_by_lang",
-    "doc_char_ngram_entropy_curve",
-    "session_gap_threshold_sweep",
-    "supplier_part_degree_assortativity",
-    "customer_order_dow_habit_strength",
-    "quantity_discount_mutual_information",
-    "emb_kmeans_k_sweep_inertia",
-    "late_shipment_value_welch_ttest",
-    "doc_token_position_entropy",
-    "part_price_laspeyres_index",
-    "customer_churn_logrank_by_segment",
-    "doc_quality_dup_auc",
-    "repeat_gap_ks_exponential",
-    "daily_revenue_ordercount_spearman",
-    "order_priority_value_gamma",
-    "orders_poisson_bootstrap_ci",
-    "daily_revenue_periodogram",
-    "quantity_discount_cramers_v",
-    "emb_triplet_margin_stats",
-    "supplier_graph_nation_modularity",
-    "doc_train_test_js_divergence",
-    "event_hour_circular_stats",
-    "daily_revenue_hurst_rs",
-    "repeat_gap_weibull_fit",
-    "daily_revenue_ljung_box",
-    # last driver-green in round 11 (the full r11 window: the
-    # ADVICE-r10 priority trio, the 8 round-11 registrations, and the
-    # 39 r1-cohort staleness re-checks — all 50/50 in CORRECTNESS_r11)
-    "daily_revenue_best_split",
-    "emb_intrinsic_dimension_2nn",
-    "event_markov_stationary",
-    "doc_vocab_chao1_richness",
-    "doc_dedup_detector_kappa",
-    "daily_revenue_jarque_bera",
-    "part_name_blocked_edit_pairs",
-    "customer_spend_cuped",
-    "daily_revenue_permutation_entropy",
-    "order_total_lineitem_ccc",
-    "nation_revenue_morans_i",
-    "filter_status_revenue",
-    "late_shipments",
-    "dedup_full_rows",
-    "dedup_keyed_ordered",
-    "empty_relation",
-    "defensive_default_column",
-    "filter_header_rows",
-    "masked_ship_kpis",
-    "deterministic_segments",
-    "render_timestamps",
-    "orders_last_event",
-    "revenue_by_region",
-    "cross_join_matrix",
-    "brand_performance",
-    "date_sk_rollup",
-    "dim_date_build",
-    "rollup_revenue",
-    "cube_counts",
-    "monthly_revenue",
-    "monthly_revenue_by_status",
-    "avg_acctbal_by_segment",
-    "global_kpis",
-    "top_customer_by_revenue",
-    "mode_event_type",
-    "median_acctbal_by_nation",
-    "conditional_counts",
-    "status_value_counts",
-    "surrogate_keys_dense",
-    "topk_orders",
-    "bottomk_customers",
-    "limit_preview",
-    "union_entities",
-    "ship_delay_days",
-    "row_hash_customers",
-    "null_fill_policy",
-    "display_truncate",
-    "sk_continuation",
-    "tumbling_daily_revenue",
-    "sliding_weekly_revenue",
-)
+def window(names: Sequence[str], reports: Iterable[dict], priority: Sequence[str] = ()) -> list[str]:
+    """``names`` in driver order (see the module docstring)."""
+    last_green = {}
+    for rnd, report in enumerate(reports):
+        for name, row in report.items():
+            if row.get("err") is None and all(row.get(k) is True for k in _CHECKS):
+                last_green[name] = rnd
+    pos = {name: i for i, name in enumerate(names)}
+    head = [name for name in dict.fromkeys(priority) if name in pos]
+    chosen = set(head)
+    rest = [name for name in names if name not in chosen]
+    never = [name for name in rest if name not in last_green]
+    seen = sorted((n for n in rest if n in last_green), key=lambda n: (last_green[n], pos[n]))
+    return head + never + seen
 
 
-def _ordered(mapping: dict) -> dict:
-    head = {k: mapping[k] for k in _PRIORITY if k in mapping}
-    mid = {
-        k: v
-        for k, v in mapping.items()
-        if k not in head and k not in _PRIOR_GREEN
-    }
-    tail = {k: mapping[k] for k in _PRIOR_GREEN if k in mapping}
-    return {**head, **mid, **tail}
+def _order() -> tuple[str, ...]:
+    return tuple(window(list(corpus.QUERIES), correctness_reports(), PRIORITY))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return _ordered(dict(corpus.QUERIES))
+    return {name: corpus.QUERIES[name] for name in _order()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return _ordered(dict(corpus.ORACLES))
+    return {name: corpus.ORACLES[name] for name in _order() if name in corpus.ORACLES}

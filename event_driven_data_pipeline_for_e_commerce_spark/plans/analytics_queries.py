@@ -547,8 +547,8 @@ def q_part_copurchase_pagerank(spark, sf_dir):
     the r11 basket-collect rewrite, VERDICT-r11 task 8): the r11
     same-session A/B favored the collect unfold at sf0.1 (1.81s vs
     2.04s medians) but the driver's official record showed 0.84x and
-    the r12 re-A/B at the tiled sf0.5 (scripts/ab_graph_edges_r12.py,
-    interleaved, 4 reps) INVERTED it — collect 4.05s vs join 3.44s
+    the r12 re-A/B at the tiled sf0.5 (docs/AB_RECORDS.md, "pagerank
+    edge build"; interleaved, 4 reps) INVERTED it — collect 4.05s vs join 3.44s
     medians (sf0.1: collect 2.32 vs join 2.71) — so the join form is
     the 100 TB choice. Contrast copurchase_triangle_census, whose
     wedge-collect re-A/B reproduced at BOTH SFs and stays.

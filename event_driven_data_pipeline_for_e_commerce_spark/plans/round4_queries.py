@@ -124,7 +124,7 @@ def q_emb_ann_recall_contract(spark, sf_dir):
     SEARCH pipelines (ivf/lsh/pq build different projections — sign
     sketches, probe lists, codes — so a shared pin would only add
     persist passes; each is consumed once). A standalone A/B
-    (scripts/ab_ann_recall.py protocol) for the r7 one-pin form
+    (docs/AB_RECORDS.md, "pin forms") for the r7 one-pin form
     measured ~3.1s vs ~3.4s for the five-pin form at sf0.1."""
     t = load_tables(spark, sf_dir)
     from ..llmdata.similarity import _as_double, dot

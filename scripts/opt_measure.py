@@ -1,7 +1,7 @@
 """Optimization measurement harness (guide §1).
 
 For each named corpus query: capture `.explain("formatted")` to
-$OPT_PLANS_DIR/<query>_<tag>.txt (default plans/r12) and time N
+$OPT_PLANS_DIR/<query>_<tag>.txt (default .opt_plans, gitignored) and time N
 noop-sink runs (guide §1.4) with the job labelled (§1.5). Prints
 per-query median/min seconds.
 
@@ -33,7 +33,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     queries = entry.queries()
     spark = get_spark("opt-measure")
-    plans_dir = os.environ.get("OPT_PLANS_DIR", "plans/r12")
+    plans_dir = os.environ.get("OPT_PLANS_DIR", ".opt_plans")
     os.makedirs(plans_dir, exist_ok=True)
 
     # fixed-work probe bracketing the session (hypervisor drift guard)
