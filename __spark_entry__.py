@@ -4,12 +4,12 @@
 ``queries()``/``oracle_sql()`` expose the engine's full corpus
 (event_driven_data_pipeline_for_e_commerce_spark.plans.corpus).
 
-The driver checks the first 50 queries in this order each round, so
-the order is the correctness window. It is derived from the committed
-``CORRECTNESS_r*.json`` reports by ``window``: the ``PRIORITY`` names
-first, then every query never green in a report (registration order),
-then the rest, stalest last-green round first (registration order
-within a round).
+The correctness check runs the first 50 queries in this order each
+round, so the order is the correctness window. ``window`` derives it
+from the committed ``CORRECTNESS_r*.json`` reports: the ``PRIORITY``
+names first, then every query never green in a report (registration
+order), then the rest, stalest last-green round first (registration
+order within a round).
 """
 
 from __future__ import annotations
@@ -33,14 +33,15 @@ def entry(spark: SparkSession) -> DataFrame:
     return corpus.QUERIES["funnel"](spark, "/root/testdata/sf0.001")
 
 
-def correctness_reports(root: Path = Path(__file__).resolve().parent) -> list[dict]:
-    """The committed driver reports, oldest round first."""
-    paths = sorted(root.glob("CORRECTNESS_r*.json"), key=lambda p: int(p.stem.split("_r")[-1]))
+def correctness_reports() -> list[dict]:
+    """The committed correctness reports, oldest round first."""
+    paths = Path(__file__).resolve().parent.glob("CORRECTNESS_r*.json")
+    paths = sorted(paths, key=lambda p: int(p.stem.split("_r")[-1]))
     return [json.loads(p.read_text()) for p in paths]
 
 
-def window(names: Sequence[str], reports: Iterable[dict], priority: Sequence[str] = ()) -> list[str]:
-    """``names`` in driver order (see the module docstring)."""
+def window(names: Sequence[str], reports: Iterable[dict], priority: Sequence[str]) -> list[str]:
+    """``names`` in window order (see the module docstring)."""
     last_green = {}
     for rnd, report in enumerate(reports):
         for name, row in report.items():
@@ -55,8 +56,8 @@ def window(names: Sequence[str], reports: Iterable[dict], priority: Sequence[str
     return head + never + seen
 
 
-def _order() -> tuple[str, ...]:
-    return tuple(window(list(corpus.QUERIES), correctness_reports(), PRIORITY))
+def _order() -> list[str]:
+    return window(list(corpus.QUERIES), correctness_reports(), PRIORITY)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

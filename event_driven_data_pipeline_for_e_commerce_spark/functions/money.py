@@ -1,6 +1,6 @@
 """Money as integer cents: the one definition of the cent casts the
 query corpus shares, as SQL text for the DuckDB oracles and as Spark
-columns for the builders. Both sides round the double to the nearest
+columns for the query code. Both sides round the double to the nearest
 cent and cast to a 64-bit integer, so every later sum, difference and
 ratio over cents is integer arithmetic on both engines."""
 

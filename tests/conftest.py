@@ -22,3 +22,16 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """Say how many ``slow`` tests the default ``-m "not slow"`` left out."""
+    slow = [
+        item
+        for item in terminalreporter.stats.get("deselected", [])
+        if item.get_closest_marker("slow")
+    ]
+    if slow:
+        terminalreporter.write_line(
+            f'{len(slow)} slow tests deselected; run with -m "" for the full suite.'
+        )

@@ -19,9 +19,15 @@ print both digests (and optionally write each query's multiset as JSON).
 
 from __future__ import annotations
 
+import argparse
 import hashlib
+import json
 import re
 from collections import Counter
+
+from event_driven_data_pipeline_for_e_commerce_spark.operators.pinning import release_pinned
+from event_driven_data_pipeline_for_e_commerce_spark.plans.corpus import ORACLES, QUERIES
+from event_driven_data_pipeline_for_e_commerce_spark.session import get_spark
 
 ORACLE_SHA256 = "d350e4e6f1408266ec2fa11d38e772769953ca691aa154f397a2f6fbd5957888"
 PLAN_SHA256 = "0eec5e8836748dc08a6757d9bf3e5157d7a0d8a5ff294dd4c07aa621c2968567"
@@ -32,11 +38,6 @@ _OPERATOR = re.compile(r"^[\s:|+\-]*(?:\*\(\d+\)\s+)?([A-Za-z]\w*)")
 def corpus_plans(spark, sf_dir: str) -> dict[str, tuple[str, str]]:
     """``{name: (simpleString, optimizedPlan)}`` for every registered
     query, in registration order."""
-    from event_driven_data_pipeline_for_e_commerce_spark.operators.pinning import (
-        release_pinned,
-    )
-    from event_driven_data_pipeline_for_e_commerce_spark.plans.corpus import QUERIES
-
     plans = {}
     spark.catalog.clearCache()
     for name, fn in QUERIES.items():
@@ -75,15 +76,6 @@ def plan_digest(simple_plans: dict[str, str]) -> str:
 
 
 def main() -> None:
-    import argparse
-    import json
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from event_driven_data_pipeline_for_e_commerce_spark.plans.corpus import ORACLES
-    from event_driven_data_pipeline_for_e_commerce_spark.session import get_spark
-
     from tests.conftest import SF_DIR
 
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])

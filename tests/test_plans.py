@@ -7,8 +7,10 @@ joins broadcast (never shuffled), whole-stage codegen on the hot path,
 and zero Python row-at-a-time evaluation anywhere in the public corpus
 (SURVEY.md §2.J design rule: "zero Python UDFs on the hot path").
 
-Plan-only: nothing here executes a query, so the whole module is
-cheap. Explain strings come from the optimized physical plan via
+Plan-only: nothing here executes a query beyond what the query
+functions themselves force. The corpus-wide guards and the plan pin read one
+shared construction pass (the ``corpus_plans`` fixture). Explain
+strings come from the optimized physical plan via
 ``queryExecution().explainString`` (same text as
 ``df.explain('formatted')``).
 """
@@ -114,28 +116,27 @@ def test_corpus_plan_pin(corpus_plans):
     assert plan_digest(simple) == PLAN_SHA256
 
 
-def test_no_python_eval_in_public_corpus(spark, sf_dir):
+def test_no_python_eval_in_public_corpus(corpus_plans):
     """SURVEY §2.J design rule: every public query compiles to pure
     JVM operators — no BatchEvalPython / ArrowEvalPython /
     FlatMapGroupsInPandas anywhere (Python evaluation caps throughput
     at the Python worker, which is exactly what this engine exists to
     avoid; mapInPandas lives only in the stubbed multimodal module)."""
-    offenders = {}
-    for name, fn in QUERIES.items():
-        plan = simple_plan(fn(spark, sf_dir))
-        if re.search(r"BatchEvalPython|ArrowEvalPython|FlatMapGroupsInPandas|PythonUDF", plan):
-            offenders[name] = plan
+    offenders = [
+        name
+        for name, (plan, _) in corpus_plans.items()
+        if re.search(r"BatchEvalPython|ArrowEvalPython|FlatMapGroupsInPandas|PythonUDF", plan)
+    ]
     assert not offenders, f"Python eval in: {sorted(offenders)}"
 
 
-def test_no_accidental_cartesian_products(spark, sf_dir):
+def test_no_accidental_cartesian_products(corpus_plans):
     """J4 is the only deliberate cross join; every other query must be
     free of CartesianProduct / nested-loop fanout (an accidental cross
     join at 100 TB is a non-terminating job)."""
-    for name, fn in QUERIES.items():
+    for name, (plan, _) in corpus_plans.items():
         if name == "cross_join_matrix":
             continue
-        plan = simple_plan(fn(spark, sf_dir))
         assert "CartesianProduct" not in plan, f"{name}:\n{plan}"
 
 
@@ -451,15 +452,14 @@ _UNPARTITIONED_WINDOW_OK = {
 }
 
 
-def test_no_unpartitioned_windows_outside_allowlist(spark, sf_dir):
+def test_no_unpartitioned_windows_outside_allowlist(corpus_plans):
     """Corpus-wide 100 TB window audit: every windowspecdefinition in
     every registered query's optimized plan must either carry a
     partition key or belong to a query whose unpartitioned window runs
     over a documented BOUNDED frame (calendar/bin/vocab grain). A new
     query that sorts an unbounded frame through one task fails here."""
     offenders = {}
-    for name, fn in QUERIES.items():
-        plan = fn(spark, sf_dir)._jdf.queryExecution().optimizedPlan().toString()
+    for name, (_, plan) in corpus_plans.items():
         specs = re.findall(r"windowspecdefinition\([^)]*\)", plan)
         bad = [
             s for s in specs

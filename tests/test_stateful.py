@@ -4,6 +4,8 @@ replayed to completion (Trigger.AvailableNow)."""
 
 from __future__ import annotations
 
+import time
+
 from event_driven_data_pipeline_for_e_commerce_spark.plans.tables import load_tables
 from event_driven_data_pipeline_for_e_commerce_spark.streaming.stateful import (
     purchase_attribution_batch,
@@ -42,9 +44,20 @@ def test_stream_matches_batch(spark, sf_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    try:
+        # The query never terminates by itself: its processing-time
+        # timeout keeps scheduling no-data batches, so neither
+        # awaitTermination nor processAllAvailable returns. A no-data
+        # batch runs only after every file has been read and committed.
+        deadline = time.monotonic() + 300
+        while not any(p.numInputRows == 0 for p in q.recentProgress):
+            assert q.isActive, q.exception()
+            assert time.monotonic() < deadline, "no batch after the data batch in 300 s"
+            time.sleep(0.2)
+        got = _rows(spark.sql("SELECT * FROM attribution"))
+    finally:
+        q.stop()
 
-    got = _rows(spark.sql("SELECT * FROM attribution"))
     want = _rows(purchase_attribution_batch(events))
     assert got == want
     assert len(got) > 0

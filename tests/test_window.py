@@ -1,4 +1,4 @@
-"""The driver's correctness window is a function of the committed
+"""The correctness window is a function of the committed
 ``CORRECTNESS_r*.json`` reports (``__spark_entry__.window``). Fed the
 reports and priority names each past round had, it must reproduce
 that round's window exactly."""
