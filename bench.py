@@ -135,6 +135,24 @@ HEADLINE = [
 ]
 
 
+def load_baseline(out_path: str, default_out: str, sf: float | None) -> tuple[dict, str]:
+    """The prior payload to compare a run against, and its file name.
+
+    A destination that does not exist yet has no prior payload of its
+    own, so the committed ``default_out`` stands in. A payload at
+    another sf is no baseline: then ``({}, "none")``.
+    """
+    path = out_path if os.path.exists(out_path) else default_out
+    try:
+        with open(path) as fh:
+            prev = json.load(fh)
+    except (OSError, ValueError):
+        return {}, "none"
+    if prev.get("sf") != sf:
+        return {}, "none"
+    return prev, os.path.basename(path)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -143,20 +161,14 @@ def main() -> None:
     # .json — the driver-comparison baseline). Overridable so the
     # committed sf0.5 scale record (VERDICT-r11 task 2b) can land in
     # its own file without clobbering the sf0.1 baseline.
-    out_path = os.environ.get(
-        "SPARK_GRAFT_BENCH_OUT", os.path.join(REPO, "BENCH_FULL_LATEST.json")
-    )
+    default_out = os.path.join(REPO, "BENCH_FULL_LATEST.json")
+    out_path = os.environ.get("SPARK_GRAFT_BENCH_OUT", default_out)
 
     # Load the PRIOR committed full payload BEFORE this run overwrites
     # it — the machine-flagged regression baseline (VERDICT-r10 task
     # 6: print raw + probe-normalized round-over-round ratios instead
     # of leaving the judge to recompute them).
-    prev: dict = {}
-    try:
-        with open(out_path) as fh:
-            prev = json.load(fh)
-    except Exception:
-        prev = {}
+    prev, baseline = load_baseline(out_path, default_out, sf)
 
     import importlib.util
 
@@ -271,6 +283,7 @@ def main() -> None:
         "cpu_probe_s_pre": probe_pre,
         "stream_events_per_sec": 0.0,
         "stream_foreachbatch_rows_per_sec": 0.0,
+        "baseline": baseline,
     }
     if failed:
         payload["failed_queries"] = failed
@@ -282,7 +295,7 @@ def main() -> None:
     # plan regression, not hypervisor noise).
     prev_q = prev.get("queries") or {}
     common = [k for k in timings if k in prev_q and prev_q[k] > 0]
-    if common and prev.get("sf") == sf:
+    if common:
         cur_sum = sum(timings[k] for k in common)
         prev_sum = sum(prev_q[k] for k in common)
         raw = cur_sum / prev_sum if prev_sum else None

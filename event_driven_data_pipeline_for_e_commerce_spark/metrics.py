@@ -21,6 +21,7 @@ Compilation rules (the 100 TB shape):
 
 from __future__ import annotations
 
+from collections.abc import Mapping
 from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
@@ -86,7 +87,7 @@ ORDERS_DIMENSIONS = {
 
 
 def _compile(
-    tables: dict[str, DataFrame],
+    tables: Mapping[str, DataFrame],
     fact: str,
     joins: dict[str, tuple[str, str]],
     measures_reg: dict[str, Measure],
