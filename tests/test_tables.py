@@ -5,6 +5,8 @@ files change, and behaves as a read-only mapping."""
 from __future__ import annotations
 
 import itertools
+import sys
+import threading
 from contextlib import contextmanager
 
 import pytest
@@ -91,3 +93,27 @@ def test_new_session_gets_its_own_frames(spark, sf_dir):
     assert theirs.sparkSession is other
     assert mine.sparkSession is spark
     assert theirs.count() == mine.count()
+
+
+def test_concurrent_first_lookups_open_the_table_once(spark, tmp_path):
+    write_rows(spark, str(tmp_path / "nation.parquet"), 4)
+    t = load_tables(spark, str(tmp_path))
+    got: list[DataFrame] = []
+    start = threading.Barrier(8)
+
+    def lookup() -> None:
+        start.wait(timeout=60)
+        got.append(t["nation"])
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=lookup) for _ in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert len(got) == 8 and all(df is got[0] for df in got)
