@@ -25,9 +25,7 @@ from collections.abc import Mapping
 from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
-
-from .plans.tables import load_tables
+from pyspark.sql import DataFrame
 
 
 @dataclass(frozen=True)
@@ -128,17 +126,17 @@ def _compile(
 
 
 def compile_metrics(
-    spark: SparkSession,
-    sf_dir: str,
+    tables: Mapping[str, DataFrame],
     measures: list[str],
     dimensions: list[str],
     where: str | None = None,
 ) -> DataFrame:
     """Compile a metric request into one aggregation pass over the
-    orders star. Output columns: the dimensions (by name, request
-    order) then the measures (by name, request order)."""
+    orders star in ``tables``, the table catalog (``plans.tables``) a
+    registered query receives. Output columns: the dimensions (by
+    name, request order) then the measures (by name, request order)."""
     return _compile(
-        load_tables(spark, sf_dir),
+        tables,
         "orders",
         ORDERS_STAR_JOINS,
         ORDERS_MEASURES,
@@ -177,15 +175,14 @@ EVENTS_DIMENSIONS = {
 
 
 def compile_event_metrics(
-    spark: SparkSession,
-    sf_dir: str,
+    tables: Mapping[str, DataFrame],
     measures: list[str],
     dimensions: list[str],
     where: str | None = None,
 ) -> DataFrame:
     """``compile_metrics`` over the events star."""
     return _compile(
-        load_tables(spark, sf_dir),
+        tables,
         "events",
         EVENTS_STAR_JOINS,
         EVENTS_MEASURES,

@@ -33,6 +33,9 @@ from event_driven_data_pipeline_for_e_commerce_spark.operators.pinning import ( 
     pin as _pin,
     release_pinned,
 )
+from event_driven_data_pipeline_for_e_commerce_spark.operators.surrogate_keys import (
+    partition_bases,
+)
 
 
 def _ranged_with_bases(
@@ -41,10 +44,9 @@ def _ranged_with_bases(
     partial_expr: Column,
     partitions: int | None,
 ) -> DataFrame:
-    """Range-partition ``df`` by ``order_exprs``, compute the partial
-    aggregate per partition, prefix-sum the partials on the driver
-    (#partitions scalars — the one sanctioned collect), and broadcast
-    the resulting per-partition base offsets back as ``__base``.
+    """Range-partition and pin ``df`` by ``order_exprs``, then attach
+    each partition's ``__base``, the prefix sum of ``partial_expr``
+    over the partitions before it (``surrogate_keys.partition_bases``).
     Returns the pinned frame with ``__pid`` and ``__base`` attached."""
     n = partitions or df.sparkSession.sparkContext.defaultParallelism
     part = _pin(
@@ -52,19 +54,7 @@ def _ranged_with_bases(
         .withColumn("__pid", F.spark_partition_id()),
         critical=True,
     )
-    partials = {
-        r["__pid"]: r["v"]
-        for r in part.groupBy("__pid").agg(partial_expr.alias("v")).collect()
-    }
-    bases, acc = {}, 0
-    for pid in sorted(partials):
-        bases[pid] = acc
-        acc += int(partials[pid] or 0)
-    base_df = part.sparkSession.createDataFrame(
-        [(int(pid), int(base)) for pid, base in bases.items()],
-        "__pid int, __base long",
-    )
-    return part.join(F.broadcast(base_df), "__pid")
+    return partition_bases(part, partial_expr)
 
 
 def running_sum_ranged(

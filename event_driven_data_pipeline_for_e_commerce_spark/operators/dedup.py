@@ -1,4 +1,5 @@
-"""Deduplication operators (SURVEY.md §2.B B8-B10).
+"""Ordered keyed deduplication (SURVEY.md §2.B B10; B8/B9 are plain
+``dropDuplicates``).
 
 The ordered-keyed variant is the semantic trap (B10): pandas
 ``sort_values(k2).drop_duplicates(k1)`` keeps the row with min k2, but
@@ -15,16 +16,6 @@ from collections.abc import Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
-
-
-def dedup_full(df: DataFrame) -> DataFrame:
-    """B8: full-row dedup (ecom_Silver_Layer.ipynb:198-199)."""
-    return df.dropDuplicates()
-
-
-def dedup_keyed(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """B9: keyed dedup, arbitrary survivor (app.py:112,477)."""
-    return df.dropDuplicates(list(keys))
 
 
 def dedup_keyed_ordered(

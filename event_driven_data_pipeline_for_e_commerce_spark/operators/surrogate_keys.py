@@ -16,7 +16,7 @@ Two realizations behind one API:
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 
 from event_driven_data_pipeline_for_e_commerce_spark.operators.pinning import pin
 
@@ -36,6 +36,28 @@ def with_surrogate_key_dense(
     return df.withColumn(sk_col, F.row_number().over(w) + F.lit(offset))
 
 
+def partition_bases(part: DataFrame, partial: Column, offset: int = 0) -> DataFrame:
+    """Attach ``__base`` to ``part``, a pinned frame carrying its
+    ``__pid``: ``offset`` plus the running total of the integral
+    aggregate ``partial`` over the partitions before this one. The
+    per-partition partials are collected in one job (#partitions
+    scalars, not data), prefix-summed on the driver and broadcast back.
+    The caller pins ``part`` before this job so that it and the job
+    reading the bases see the same partition contents."""
+    partials = {
+        r["__pid"]: r["v"]
+        for r in part.groupBy("__pid").agg(partial.alias("v")).collect()
+    }
+    bases, acc = {}, offset
+    for pid in sorted(partials):
+        bases[pid] = acc
+        acc += int(partials[pid] or 0)
+    base_df = part.sparkSession.createDataFrame(
+        [(int(pid), int(base)) for pid, base in bases.items()], "__pid int, __base long"
+    )
+    return part.join(F.broadcast(base_df), "__pid")
+
+
 def with_surrogate_key_scalable(df: DataFrame, sk_col: str, offset: int = 0) -> DataFrame:
     """Dense keys without a global window: sort-partition the data,
     count rows per partition, prefix-sum the counts on the driver
@@ -50,20 +72,9 @@ def with_surrogate_key_scalable(df: DataFrame, sk_col: str, offset: int = 0) -> 
     # (shuffle order, range-boundary sampling) can shift rows between
     # partitions across the two evaluations and corrupt the prefix sums
     part = pin(df.withColumn("__pid", F.spark_partition_id()), critical=True)
-    counts = {
-        r["__pid"]: r["cnt"]
-        for r in part.groupBy("__pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    bases, acc = {}, offset
-    for pid in sorted(counts):
-        bases[pid] = acc
-        acc += counts[pid]
-    base_df = part.sparkSession.createDataFrame(
-        [(int(pid), int(base)) for pid, base in bases.items()], "__pid int, __base long"
-    )
     w = Window.partitionBy("__pid").orderBy(F.monotonically_increasing_id())
     return (
-        part.join(F.broadcast(base_df), "__pid")
+        partition_bases(part, F.count(F.lit(1)), offset)
         .withColumn(sk_col, F.row_number().over(w) + F.col("__base"))
         .drop("__pid", "__base")
     )
@@ -92,20 +103,9 @@ def with_surrogate_key_ranged(
         .withColumn("__pid", F.spark_partition_id()),
         critical=True,
     )
-    counts = {
-        r["__pid"]: r["cnt"]
-        for r in part.groupBy("__pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    bases, acc = {}, offset
-    for pid in sorted(counts):
-        bases[pid] = acc
-        acc += counts[pid]
-    base_df = part.sparkSession.createDataFrame(
-        [(int(pid), int(base)) for pid, base in bases.items()], "__pid int, __base long"
-    )
     w = Window.partitionBy("__pid").orderBy(order_col)
     return (
-        part.join(F.broadcast(base_df), "__pid")
+        partition_bases(part, F.count(F.lit(1)), offset)
         .withColumn(sk_col, F.row_number().over(w) + F.col("__base"))
         .drop("__pid", "__base")
     )

@@ -15,7 +15,6 @@ from pyspark.sql import Window
 
 from ..operators.pinning import pin
 from .corpus import query
-from .tables import load_tables
 
 
 @query(
@@ -52,7 +51,7 @@ from .tables import load_tables
     GROUP BY cohort, j.month_offset, s.cohort_users
     """,
 )
-def q_cohort_retention(spark, sf_dir):
+def q_cohort_retention(spark, t):
     """Cohort retention matrix: users grouped by first-activity month,
     tracked by the share still active k months later — the canonical
     retention mart the reference's README claims and its dashboard
@@ -64,7 +63,6 @@ def q_cohort_retention(spark, sf_dir):
     distinct count is the only second shuffle. No windows, no
     collects.
     """
-    t = load_tables(spark, sf_dir)
     ev = t["events"]
     cohorts = (
         ev.groupBy("user_id")
@@ -138,7 +136,7 @@ def q_cohort_retention(spark, sf_dir):
     GROUP BY r_score, f_score, m_score
     """,
 )
-def q_rfm_segments(spark, sf_dir):
+def q_rfm_segments(spark, t):
     """RFM segmentation: each customer scored 1-4 on Recency /
     Frequency / Monetary against fixed business thresholds, rolled up
     per segment — the engine form of the dashboard's customer-segment
@@ -152,7 +150,6 @@ def q_rfm_segments(spark, sf_dir):
     anchor date is the table's max order date (1-row broadcast
     cross-attach, no collect).
     """
-    t = load_tables(spark, sf_dir)
     maxd = t["orders"].agg(F.max("o_orderdate").alias("anchor"))
     per_cust = (
         t["orders"]
@@ -208,7 +205,7 @@ def q_rfm_segments(spark, sf_dir):
     LIMIT 20
     """,
 )
-def q_basket_part_pairs(spark, sf_dir):
+def q_basket_part_pairs(spark, t):
     """Market-basket co-occurrence: the top part pairs bought together
     in one order (frequent-itemset support counting, the first step of
     association-rule mining over an order log).
@@ -220,7 +217,6 @@ def q_basket_part_pairs(spark, sf_dir):
     pair. A self-join formulation would shuffle the order-part
     relation twice; this shape touches it once.
     """
-    t = load_tables(spark, sf_dir)
     baskets = (
         t["lineitem"]
         .groupBy("l_orderkey")
@@ -251,7 +247,7 @@ def q_basket_part_pairs(spark, sf_dir):
     GROUP BY event_type
     """,
 )
-def q_hll_rollup_contract(spark, sf_dir):
+def q_hll_rollup_contract(spark, t):
     """Mergeable-sketch distinct rollup: per-(event_type, day) HLL
     sketches unioned up to event_type level, with the merged estimate
     scored against the exact distinct count (DataSketches
@@ -264,7 +260,6 @@ def q_hll_rollup_contract(spark, sf_dir):
     the estimate; the contract (relative error within HLL's published
     bound for lgK=12) is the oracle-checked output.
     """
-    t = load_tables(spark, sf_dir)
     daily = (
         t["events"]
         .groupBy("event_type", F.to_date("ts").alias("day"))
@@ -323,7 +318,7 @@ def q_hll_rollup_contract(spark, sf_dir):
     FROM filled
     """,
 )
-def q_daily_revenue_gapfill_ma7(spark, sf_dir):
+def q_daily_revenue_gapfill_ma7(spark, t):
     """Time-series resample: daily revenue for one priority class with
     CALENDAR GAP-FILL (every day between min and max exists, missing
     days at 0.0) and a trailing 7-day moving average — the resample /
@@ -336,7 +331,6 @@ def q_daily_revenue_gapfill_ma7(spark, sf_dir):
     a decade is ~3,650 rows), so the unpartitioned window is bounded
     data by construction, never fact-grain.
     """
-    t = load_tables(spark, sf_dir)
     urgent = t["orders"].filter(F.col("o_orderpriority") == "1-URGENT")
     daily = urgent.groupBy(F.to_date("o_orderdate").alias("day")).agg(
         F.sum("o_totalprice").alias("revenue")
@@ -402,7 +396,7 @@ _PROFILE_COLS = [
         _profile_col_sql(c, num) for c, num in _PROFILE_COLS
     ),
 )
-def q_orders_column_profile(spark, sf_dir):
+def q_orders_column_profile(spark, t):
     """Generic column profiling (operators/profiling.profile_table)
     applied to orders: null counts, cardinality, typed min/max, and
     the dominant value per column — the automated replacement for the
@@ -417,7 +411,6 @@ def q_orders_column_profile(spark, sf_dir):
     """
     from ..operators.profiling import profile_table
 
-    t = load_tables(spark, sf_dir)
     return profile_table(t["orders"], [c for c, _ in _PROFILE_COLS])
 
 
@@ -438,7 +431,7 @@ def q_orders_column_profile(spark, sf_dir):
     LIMIT 100
     """,
 )
-def q_customer_name_fuzzy_pairs(spark, sf_dir):
+def q_customer_name_fuzzy_pairs(spark, t):
     """Blocked fuzzy matching (entity resolution): candidate customer
     pairs whose names are within edit distance 1, generated WITHIN
     prefix blocks — the dedup family between exact hashing and
@@ -451,7 +444,6 @@ def q_customer_name_fuzzy_pairs(spark, sf_dir):
     (block -> compare -> link), with the compare step in native
     codegen (levenshtein is a Catalyst expression).
     """
-    t = load_tables(spark, sf_dir)
     c = t["customer"].select(
         "c_custkey",
         "c_name",
@@ -526,7 +518,7 @@ def _pagerank_oracle() -> str:
 
 
 @query("part_copurchase_pagerank", oracle=_pagerank_oracle())
-def q_part_copurchase_pagerank(spark, sf_dir):
+def q_part_copurchase_pagerank(spark, t):
     """PageRank over the part co-purchase graph (edges = parts bought
     together in an order, both directions): 3 damped power iterations,
     top 25 parts by rank — the iterative-algorithm shape (like the
@@ -553,7 +545,6 @@ def q_part_copurchase_pagerank(spark, sf_dir):
     the 100 TB choice. Contrast copurchase_triangle_census, whose
     wedge-collect re-A/B reproduced at BOTH SFs and stays.
     """
-    t = load_tables(spark, sf_dir)
     op = t["lineitem"].select("l_orderkey", "l_partkey").distinct()
     a = op.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("src"))
     b = op.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("dst"))
@@ -606,13 +597,12 @@ def q_part_copurchase_pagerank(spark, sf_dir):
     GROUP BY c.c_mktsegment
     """,
 )
-def q_segment_event_revenue(spark, sf_dir):
+def q_segment_event_revenue(spark, t):
     """Purchase revenue per customer market segment: the batch twin of
     streaming.streams.segment_revenue_stream (stream-static broadcast
     enrich + aggregate). Events carry user ids that live in the
     customer key space; the dimension broadcasts, the purchase filter
     pushes into the scan, and the rollup is one small shuffle."""
-    t = load_tables(spark, sf_dir)
     return (
         t["events"]
         .filter(F.col("event_type") == "purchase")
@@ -644,14 +634,13 @@ def q_segment_event_revenue(spark, sf_dir):
     FROM daily
     """,
 )
-def q_daily_conversion_rates(spark, sf_dir):
+def q_daily_conversion_rates(spark, t):
     """Daily conversion-rate mart — the reference README's
     gold_conversion_rates (README.md:83) materialized per day: stage
     counts from one conditional-aggregate pass and view->click /
     view->purchase percentages. Map-side day bucketing, one shuffle,
     all three counters in a single aggregation (no per-stage scans);
     NULL (not a crash, not a zero) when a day has no views."""
-    t = load_tables(spark, sf_dir)
     cnt = lambda s: F.sum(F.when(F.col("event_type") == s, 1).otherwise(0))
     daily = (
         t["events"]
@@ -689,7 +678,7 @@ def q_daily_conversion_rates(spark, sf_dir):
     GROUP BY c.c_mktsegment
     """,
 )
-def q_order_value_quantile_bands(spark, sf_dir):
+def q_order_value_quantile_bands(spark, t):
     """Exact multi-quantile bands (p25/p50/p75/p90 of order value) per
     market segment — the G10 exact-median semantics generalized to a
     quantile vector. DISCRETE quantiles (smallest value at or above
@@ -700,7 +689,6 @@ def q_order_value_quantile_bands(spark, sf_dir):
     enriches orders before the rollup. Exact percentiles shuffle group
     values by design — percentile_approx (KLL) is the 100 TB default
     and approx_distinct_contract shows the contract pattern for it."""
-    t = load_tables(spark, sf_dir)
     base = t["orders"].join(
         F.broadcast(t["customer"].select("c_custkey", "c_mktsegment")),
         F.col("o_custkey") == F.col("c_custkey"),
@@ -740,7 +728,7 @@ def q_order_value_quantile_bands(spark, sf_dir):
                               WHERE c.c_custkey = e.user_id))
     """,
 )
-def q_referential_integrity_audit(spark, sf_dir):
+def q_referential_integrity_audit(spark, t):
     """Referential-integrity audit: orphan counts across every FK edge
     of the star schema (fact->dim and fact->fact both directions where
     meaningful) — the automated form of the reference's FK dropna
@@ -748,8 +736,6 @@ def q_referential_integrity_audit(spark, sf_dir):
     silently dropped. Each check is a left_anti join (key columns
     only, dims broadcast) reduced to one counter; the four checks
     union into a tidy audit table."""
-    t = load_tables(spark, sf_dir)
-
     def orphans(name, left, left_key, right, right_key):
         cnt = (
             left.select(left_key)
@@ -801,7 +787,7 @@ def q_referential_integrity_audit(spark, sf_dir):
     GROUP BY c.day
     """,
 )
-def q_weekly_active_users(spark, sf_dir):
+def q_weekly_active_users(spark, t):
     """Trailing 7-day distinct active users per calendar day (WAU) —
     rolling DISTINCT, which no window frame can express (frames
     aggregate values, not sets).
@@ -814,7 +800,6 @@ def q_weekly_active_users(spark, sf_dir):
     window length in time units. The calendar spine re-attaches
     zero-activity days.
     """
-    t = load_tables(spark, sf_dir)
     ev = t["events"]
     act = ev.select("user_id", F.to_date("ts").alias("day")).distinct()
     contrib = act.select(
@@ -866,7 +851,7 @@ def q_weekly_active_users(spark, sf_dir):
       ON x.c_mktsegment = s.c_mktsegment AND x.event_type = st.event_type
     """,
 )
-def q_funnel_by_segment(spark, sf_dir):
+def q_funnel_by_segment(spark, t):
     """The flagship funnel cut by customer market segment — the
     dashboard's per-dimension drill-down (app.py tab filters) done
     properly: one enrich join (customer broadcast), one (segment,
@@ -875,7 +860,6 @@ def q_funnel_by_segment(spark, sf_dir):
     view count. The alignment cross join is |segments| x 4 rows —
     constant-size driver-free scaffolding, exactly like the global
     funnel's stage frame."""
-    t = load_tables(spark, sf_dir)
     stages = spark.createDataFrame(
         [(i + 1, s) for i, s in enumerate(["view", "click", "signup", "purchase"])],
         ["stage_order", "event_type"],
@@ -947,7 +931,7 @@ def q_funnel_by_segment(spark, sf_dir):
     ) t
     """,
 )
-def q_snapshot_diff_reconciliation(spark, sf_dir):
+def q_snapshot_diff_reconciliation(spark, t):
     """Snapshot reconciliation (CDC-style table diff): compare two
     table versions by key + row hash and count deleted / changed /
     unchanged rows — the audit that backs the SCD2 merge and any
@@ -956,8 +940,6 @@ def q_snapshot_diff_reconciliation(spark, sf_dir):
     changed). One full-outer-shaped key join carrying only (key,
     32-char hash); the hash is computed map-side on each snapshot's
     scan, so the diff never moves attribute data."""
-    t = load_tables(spark, sf_dir)
-
     def hashed(df, status_col):
         return df.select(
             F.col("o_orderkey").alias("k"),
@@ -1030,7 +1012,7 @@ def q_snapshot_diff_reconciliation(spark, sf_dir):
     GROUP BY c.c_mktsegment
     """,
 )
-def q_winsorized_order_values(spark, sf_dir):
+def q_winsorized_order_values(spark, t):
     """Winsorization (robust-statistics cleansing): clip order values
     to each segment's [p01, p99] band and report clipped counts plus
     winsorized vs raw sums — the outlier treatment the reference's
@@ -1040,7 +1022,6 @@ def q_winsorized_order_values(spark, sf_dir):
     segment (discrete quantiles — engine-exact data values, no
     interpolation), broadcast back onto the fact rows; the clip is
     map-side LEAST/GREATEST codegen and the rollup is one shuffle."""
-    t = load_tables(spark, sf_dir)
     base = t["orders"].join(
         F.broadcast(t["customer"].select("c_custkey", "c_mktsegment")),
         F.col("o_custkey") == F.col("c_custkey"),
@@ -1088,7 +1069,7 @@ def q_winsorized_order_values(spark, sf_dir):
     LIMIT 25
     """,
 )
-def q_supplier_scorecard(spark, sf_dir):
+def q_supplier_scorecard(spark, t):
     """Supplier scorecard mart: volume, assortment breadth, revenue,
     and on-time-ship rate (<=30 days after order) per supplier — the
     seller-performance dashboard the reference models with dim_sellers
@@ -1097,7 +1078,6 @@ def q_supplier_scorecard(spark, sf_dir):
     supplier/nation broadcast; all four measures including the
     distinct-part count come from a single aggregation pass; top-25 is
     TakeOrderedAndProject."""
-    t = load_tables(spark, sf_dir)
     supp = (
         t["supplier"]
         .join(
@@ -1170,7 +1150,7 @@ def q_supplier_scorecard(spark, sf_dir):
     GROUP BY day
     """,
 )
-def q_cart_abandonment_daily(spark, sf_dir):
+def q_cart_abandonment_daily(spark, t):
     """Cart abandonment per day: 30-minute-gap sessions that contain a
     click but no purchase, as a share of clicked sessions — the
     e-commerce health metric the reference's funnel approximates
@@ -1183,7 +1163,6 @@ def q_cart_abandonment_daily(spark, sf_dir):
     already pins). Session flags are MAX(CASE) inside the same
     aggregation; the daily rollup is a second small shuffle.
     """
-    t = load_tables(spark, sf_dir)
     flag = lambda s: F.max(
         F.when(F.col("event_type") == s, 1).otherwise(0)
     )
@@ -1223,7 +1202,7 @@ def q_cart_abandonment_daily(spark, sf_dir):
     ORDER BY p.p_type
     """,
 )
-def q_discount_quantity_stats(spark, sf_dir):
+def q_discount_quantity_stats(spark, t):
     """Statistical aggregates (the price-elasticity screening pass):
     correlation, sample covariance, stddev, and the regression slope
     of quantity on discount per part type. All five statistics are
@@ -1232,7 +1211,6 @@ def q_discount_quantity_stats(spark, sf_dir):
     plain SUM, no second scan, no window. Part broadcast-enriches the
     fact; 4-decimal rounding sits far above cross-engine float-sum
     noise on these O(1)-magnitude statistics."""
-    t = load_tables(spark, sf_dir)
     return (
         t["lineitem"]
         .select("l_partkey", "l_discount", "l_quantity")

@@ -2,10 +2,13 @@
 query over the driver testdata, paired with an ANSI-SQL oracle DuckDB
 can run on the same parquet.
 
-Contract (``__spark_entry__.py``): each QUERIES[name] takes
-(spark, sf_dir) -> DataFrame; ORACLES[name] is the equivalent SQL.
-Column names/aliases MUST match between the two — the driver sorts
-columns by name before value-hashing.
+Contract (``__spark_entry__.py``): ``QUERIES[name](spark, sf_dir)``
+returns a DataFrame; ORACLES[name] is the equivalent SQL. Column
+names/aliases MUST match between the two — the driver sorts columns by
+name before value-hashing. Builders registered with ``@query`` take
+``(spark, t)``: the registered callable opens the table catalog
+(``tables.load_tables``) once and passes it as ``t``; a builder that
+needs another query's frame calls ``QUERIES[other](spark, t.sf_dir)``.
 
 Determinism rules applied throughout:
 - every top-k / limit has a total-order tie-break on a unique key
@@ -15,7 +18,7 @@ Determinism rules applied throughout:
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Mapping
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -37,10 +40,16 @@ ORACLES: dict[str, str] = {}
 
 
 def query(name: str, oracle: str | None = None):
-    """Register a (spark, sf_dir) -> DataFrame callable and its oracle."""
+    """Register the builder ``fn(spark, t)`` as ``QUERIES[name]``, a
+    ``(spark, sf_dir)`` callable, and its oracle."""
 
     def deco(fn):
-        QUERIES[name] = fn
+        def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+            # looked up per call, not bound here, so a wrapped
+            # ``load_tables`` (perfbench's tracer) sees every query
+            return fn(spark, load_tables(spark, sf_dir))
+
+        QUERIES[name] = build
         if oracle is not None:
             ORACLES[name] = oracle
         return fn
@@ -75,8 +84,7 @@ def query(name: str, oracle: str | None = None):
     ORDER BY s.stage_order
     """,
 )
-def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir)
+def q_funnel(spark: SparkSession, t: Mapping[str, DataFrame]) -> DataFrame:
     return funnel(t["events"], FUNNEL_STAGES)
 
 
@@ -95,9 +103,8 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderpriority
     """,
 )
-def q_filter_status_revenue(spark, sf_dir):
+def q_filter_status_revenue(spark, t):
     """B3 equality filter + G3 group-by sum (app.py:180,253,281)."""
-    t = load_tables(spark, sf_dir)
     return (
         t["orders"]
         .filter(F.col("o_orderstatus") == "F")
@@ -119,9 +126,8 @@ def q_filter_status_revenue(spark, sf_dir):
     GROUP BY l.l_returnflag
     """,
 )
-def q_late_shipments(spark, sf_dir):
+def q_late_shipments(spark, t):
     """B4 cross-column theta filter (late orders, app.py:195-197)."""
-    t = load_tables(spark, sf_dir)
     joined = t["lineitem"].join(
         t["orders"], t["lineitem"].l_orderkey == t["orders"].o_orderkey
     )
@@ -138,10 +144,9 @@ def q_late_shipments(spark, sf_dir):
     SELECT DISTINCT user_id, event_type FROM events
     """,
 )
-def q_dedup_full_rows(spark, sf_dir):
+def q_dedup_full_rows(spark, t):
     """B8 full-row dedup (ecom_Silver_Layer.ipynb:198-199) over a B1
     column-list projection (app.py:111,117)."""
-    t = load_tables(spark, sf_dir)
     return t["events"].select("user_id", "event_type").dropDuplicates()
 
 
@@ -156,11 +161,10 @@ def q_dedup_full_rows(spark, sf_dir):
     ) WHERE rn = 1
     """,
 )
-def q_dedup_keyed_ordered(spark, sf_dir):
+def q_dedup_keyed_ordered(spark, t):
     """B10 ordered keyed dedup — deterministic first-event-per-user
     (the app.py:116 min-installments-per-order semantic); S1 multi-key
     sort (app.py:102) realized as the window order."""
-    t = load_tables(spark, sf_dir)
     out = dedup_keyed_ordered(
         t["events"], ["user_id"], [F.col("ts"), F.col("event_id")]
     )
@@ -175,9 +179,8 @@ def q_dedup_keyed_ordered(spark, sf_dir):
     SELECT o_orderkey, o_orderstatus FROM orders WHERE o_orderstatus = 'NOPE'
     """,
 )
-def q_empty_relation(spark, sf_dir):
+def q_empty_relation(spark, t):
     """B12 typed empty fallback (app.py:253,462 df.iloc[0:0])."""
-    t = load_tables(spark, sf_dir)
     return t["orders"].select("o_orderkey", "o_orderstatus").filter(
         F.col("o_orderstatus") == "NOPE"
     )
@@ -190,11 +193,10 @@ def q_empty_relation(spark, sf_dir):
     FROM customer
     """,
 )
-def q_defensive_default_column(spark, sf_dir):
+def q_defensive_default_column(spark, t):
     """B11 defensive column default (app.py:42-45): add constant column
     when absent from the source schema — B2 computed projection with
     literals (ecom_Gold_Layer.ipynb:63-79)."""
-    t = load_tables(spark, sf_dir)
     df = t["customer"].select("c_custkey", "c_name")
     if "loyalty_tier" not in df.columns:
         df = df.withColumn("loyalty_tier", F.lit("unknown"))
@@ -210,10 +212,9 @@ def q_defensive_default_column(spark, sf_dir):
     GROUP BY source
     """,
 )
-def q_filter_header_rows(spark, sf_dir):
+def q_filter_header_rows(spark, t):
     """B6 not-equal + NOT LIKE filter — the embedded-CSV-header-row
     skip (Scd_Type2.sql:36,124-126)."""
-    t = load_tables(spark, sf_dir)
     return (
         t["documents"]
         .filter((F.col("source") != "source") & ~F.col("text").like("%doc_id%"))
@@ -239,12 +240,11 @@ def q_filter_header_rows(spark, sf_dir):
     FROM j GROUP BY o_orderstatus
     """,
 )
-def q_masked_ship_kpis(spark, sf_dir):
+def q_masked_ship_kpis(spark, t):
     """F23 masked conditional assignment (app.py:135-140) + B5 null
     predicates + F6 fractional-day diff + F25 ratio KPIs
     (app.py:187-198): ship_days only where both dates present, late%
     over the group."""
-    t = load_tables(spark, sf_dir)
     j = t["lineitem"].join(
         t["orders"], t["lineitem"].l_orderkey == t["orders"].o_orderkey
     )
@@ -283,13 +283,12 @@ def q_masked_ship_kpis(spark, sf_dir):
     FROM seg GROUP BY segment
     """,
 )
-def q_deterministic_segments(spark, sf_dir):
+def q_deterministic_segments(spark, t):
     """F24 seeded random columns (app.py:321-324,488-490) realized as
     md5-keyed pseudo-randoms — deterministic across engines AND across
     partitionings (Spark's rand(seed) is partition-dependent, so a
     hash of the key is the reproducible form of the reference's seeded
     rng), + F16-style segment pick via element_at."""
-    t = load_tables(spark, sf_dir)
     h = F.conv(
         F.md5(F.col("c_custkey").cast("string")).substr(1, 8), 16, 10
     ).cast("bigint")
@@ -317,10 +316,9 @@ def q_deterministic_segments(spark, sf_dir):
     FROM orders
     """,
 )
-def q_render_timestamps(spark, sf_dir):
+def q_render_timestamps(spark, t):
     """F10 FORMAT_TIMESTAMP render (Scd_Type2.sql:145) + F8 date
     extraction (ecom_Gold_Layer.ipynb:55,101-102)."""
-    t = load_tables(spark, sf_dir)
     return t["orders"].select(
         "o_orderkey",
         F.date_format("o_orderdate", "yyyy-MM-dd HH:mm").alias("rendered"),
@@ -347,11 +345,10 @@ def q_render_timestamps(spark, sf_dir):
     FROM customer c LEFT JOIN last_ev l ON c.c_custkey = l.user_id
     """,
 )
-def q_orders_last_event(spark, sf_dir):
+def q_orders_last_event(spark, t):
     """J1 left join to per-key event agg + G1/W3 last-event-per-key
     (app.py:100-107) — UD1's lambda "last non-null" aggregate replaced
     by the native ordered-window row_number (no UDAF)."""
-    t = load_tables(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
     last_ev = (
         t["events"]
@@ -379,10 +376,9 @@ def q_orders_last_event(spark, sf_dir):
     GROUP BY r.r_name
     """,
 )
-def q_revenue_by_region(spark, sf_dir):
+def q_revenue_by_region(spark, t):
     """J3 multi-way inner equi-join (ecom_Gold_Layer.ipynb:80-83) with
     broadcast dims (J5) — geography chain customer→nation→region."""
-    t = load_tables(spark, sf_dir)
     geo = (
         t["customer"]
         .join(F.broadcast(t["nation"]), F.col("c_nationkey") == F.col("n_nationkey"))
@@ -406,9 +402,8 @@ def q_revenue_by_region(spark, sf_dir):
     SELECT r.r_name, n.n_name FROM region r CROSS JOIN nation n
     """,
 )
-def q_cross_join_matrix(spark, sf_dir):
+def q_cross_join_matrix(spark, t):
     """J4 deliberate cartesian product (ecom_Gold_Layer.ipynb:81-82)."""
-    t = load_tables(spark, sf_dir)
     return cross_join(t["region"].select("r_name"), t["nation"].select("n_name"))
 
 
@@ -422,10 +417,9 @@ def q_cross_join_matrix(spark, sf_dir):
     GROUP BY p.p_brand
     """,
 )
-def q_brand_performance(spark, sf_dir):
+def q_brand_performance(spark, t):
     """J5 broadcast dim enrich + F22 derived measure (product
     performance mart, README.md:83)."""
-    t = load_tables(spark, sf_dir)
     return (
         t["lineitem"]
         .join(F.broadcast(t["part"].select("p_partkey", "p_brand")),
@@ -447,9 +441,8 @@ def q_brand_performance(spark, sf_dir):
     FROM orders GROUP BY 1
     """,
 )
-def q_date_sk_rollup(spark, sf_dir):
+def q_date_sk_rollup(spark, t):
     """J6/F9 date→yyyymmdd surrogate key (ecom_Gold_Layer.ipynb:53-56)."""
-    t = load_tables(spark, sf_dir)
     return (
         date_key_join(t["orders"], "o_orderdate")
         .groupBy("date_sk")
@@ -470,12 +463,11 @@ def q_date_sk_rollup(spark, sf_dir):
     FROM span, UNNEST(generate_series(lo, hi, INTERVAL 1 DAY)) AS d(g)
     """,
 )
-def q_dim_date_build(spark, sf_dir):
+def q_dim_date_build(spark, t):
     """dim_date builder over the fact's observed date span — the
     generator missing from the reference snapshot (dim_date map used at
     ecom_Gold_Layer.ipynb:53-56; pipelines.medallion.build_dim_date).
     Pure plan: 1-row agg → sequence() explode, no collect."""
-    t = load_tables(spark, sf_dir)
     span = t["orders"].agg(
         F.min(F.to_date("o_orderdate")).alias("lo"),
         F.max(F.to_date("o_orderdate")).alias("hi"),
@@ -496,11 +488,10 @@ def q_dim_date_build(spark, sf_dir):
     GROUP BY l.l_returnflag
     """,
 )
-def q_salted_join_revenue(spark, sf_dir):
+def q_salted_join_revenue(spark, t):
     """Skew-mitigating salted join (SURVEY.md §7.0 scale stance): salt
     fans each hot key over N reducers, small side replicated per salt.
     Salting is result-invariant, so the oracle is the PLAIN join."""
-    t = load_tables(spark, sf_dir)
     joined = salted_join(
         t["lineitem"].withColumnRenamed("l_orderkey", "o_orderkey"),
         t["orders"].filter(F.col("o_orderstatus") == "O").select("o_orderkey"),
@@ -526,11 +517,10 @@ def q_salted_join_revenue(spark, sf_dir):
     GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
     """,
 )
-def q_rollup_revenue(spark, sf_dir):
+def q_rollup_revenue(spark, t):
     """Hierarchical ROLLUP subtotals (status → priority → grand total)
     — free via df.rollup; the reference computed each level as its own
     pandas groupby (SURVEY.md §2.D note)."""
-    t = load_tables(spark, sf_dir)
     return (
         t["orders"]
         .rollup("o_orderstatus", "o_orderpriority")
@@ -549,10 +539,9 @@ def q_rollup_revenue(spark, sf_dir):
     GROUP BY CUBE (o_orderstatus, o_orderpriority)
     """,
 )
-def q_cube_counts(spark, sf_dir):
+def q_cube_counts(spark, t):
     """CUBE over status × priority — every grouping-set combination in
     one pass (df.cube)."""
-    t = load_tables(spark, sf_dir)
     return (
         t["orders"]
         .cube("o_orderstatus", "o_orderpriority")
@@ -568,9 +557,8 @@ def q_cube_counts(spark, sf_dir):
     FROM orders GROUP BY 1
     """,
 )
-def q_monthly_revenue(spark, sf_dir):
+def q_monthly_revenue(spark, t):
     """G3/F4 revenue per month bucket (app.py:280-281)."""
-    t = load_tables(spark, sf_dir)
     return (
         t["orders"]
         .groupBy(month_bucket("o_orderdate").alias("month"))
@@ -586,9 +574,8 @@ def q_monthly_revenue(spark, sf_dir):
     FROM orders GROUP BY 1, 2
     """,
 )
-def q_monthly_revenue_by_status(spark, sf_dir):
+def q_monthly_revenue_by_status(spark, t):
     """G4 multi-key group-by (app.py:347)."""
-    t = load_tables(spark, sf_dir)
     return (
         t["orders"]
         .groupBy(month_bucket("o_orderdate").alias("month"), F.col("o_orderstatus"))
@@ -603,9 +590,8 @@ def q_monthly_revenue_by_status(spark, sf_dir):
     FROM customer GROUP BY c_mktsegment
     """,
 )
-def q_avg_acctbal_by_segment(spark, sf_dir):
+def q_avg_acctbal_by_segment(spark, t):
     """G2 group-by mean (app.py:210-216,434-437)."""
-    t = load_tables(spark, sf_dir)
     return (
         t["customer"]
         .groupBy("c_mktsegment")
@@ -623,9 +609,8 @@ def q_avg_acctbal_by_segment(spark, sf_dir):
     FROM orders
     """,
 )
-def q_global_kpis(spark, sf_dir):
+def q_global_kpis(spark, t):
     """G6 count-distinct + G7 global scalar aggs (app.py:179-183,255,502-507)."""
-    t = load_tables(spark, sf_dir)
     return t["orders"].agg(
         F.count(F.lit(1)).alias("total_orders"),
         F.round(F.sum("o_totalprice"), 2).alias("total_revenue"),
@@ -642,13 +627,12 @@ def q_global_kpis(spark, sf_dir):
     ORDER BY SUM(o_totalprice) DESC, o_custkey LIMIT 1
     """,
 )
-def q_top_customer_by_revenue(spark, sf_dir):
+def q_top_customer_by_revenue(spark, t):
     """G8 argmax over groups (app.py:511-528).
 
     Note the tie-break/rounding subtlety: ordering uses the UNROUNDED
     sum on both sides so engine-side rounding can't flip the winner.
     """
-    t = load_tables(spark, sf_dir)
     return (
         t["orders"]
         .groupBy("o_custkey")
@@ -666,10 +650,9 @@ def q_top_customer_by_revenue(spark, sf_dir):
     GROUP BY event_type ORDER BY cnt DESC, event_type LIMIT 1
     """,
 )
-def q_mode_event_type(spark, sf_dir):
+def q_mode_event_type(spark, t):
     """G9 mode with deterministic tie-break (app.py:374) + S6 head-row
     pick (the limit-1 form of app.py:371)."""
-    t = load_tables(spark, sf_dir)
     return mode(t["events"], "event_type")
 
 
@@ -680,11 +663,10 @@ def q_mode_event_type(spark, sf_dir):
     FROM customer GROUP BY c_nationkey
     """,
 )
-def q_median_acctbal_by_nation(spark, sf_dir):
+def q_median_acctbal_by_nation(spark, t):
     """G10 exact median (the Silver imputation statistic,
     ecom_Silver_Layer.ipynb:214-215) — Spark `median` is exact, matching
     DuckDB; percentile_approx would NOT hash-match."""
-    t = load_tables(spark, sf_dir)
     return (
         t["customer"]
         .groupBy("c_nationkey")
@@ -702,9 +684,8 @@ def q_median_acctbal_by_nation(spark, sf_dir):
     FROM events
     """,
 )
-def q_conditional_counts(spark, sf_dir):
+def q_conditional_counts(spark, t):
     """G11 conditional count / count_if (app.py:188,197-198)."""
-    t = load_tables(spark, sf_dir)
     return t["events"].agg(
         F.count(F.lit(1)).alias("total_events"),
         F.count_if(F.col("event_type") == "purchase").alias("purchase_cnt"),
@@ -722,9 +703,8 @@ def q_conditional_counts(spark, sf_dir):
     GROUP BY o_orderstatus ORDER BY cnt DESC, o_orderstatus
     """,
 )
-def q_status_value_counts(spark, sf_dir):
+def q_status_value_counts(spark, t):
     """G5 frequency count / value_counts (app.py:188,230-240)."""
-    t = load_tables(spark, sf_dir)
     return frequency_count(t["orders"], "o_orderstatus")
 
 
@@ -740,9 +720,8 @@ def q_status_value_counts(spark, sf_dir):
     FROM nation
     """,
 )
-def q_surrogate_keys_dense(spark, sf_dir):
+def q_surrogate_keys_dense(spark, t):
     """W1 row_number + offset surrogate keys (Scd_Type2.sql:33-34)."""
-    t = load_tables(spark, sf_dir)
     return with_surrogate_key_dense(
         t["nation"].select("n_nationkey", "n_name"), "n_nationkey", "nation_sk", 100
     )
@@ -755,10 +734,9 @@ def q_surrogate_keys_dense(spark, sf_dir):
     FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10
     """,
 )
-def q_topk_orders(spark, sf_dir):
+def q_topk_orders(spark, t):
     """S3 top-k largest — plans TakeOrderedAndProject, not a full sort
     (app.py:400,563); S2 single-key sort semantics underneath."""
-    t = load_tables(spark, sf_dir)
     return (
         t["orders"]
         .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
@@ -774,9 +752,8 @@ def q_topk_orders(spark, sf_dir):
     FROM customer ORDER BY c_acctbal ASC, c_custkey LIMIT 10
     """,
 )
-def q_bottomk_customers(spark, sf_dir):
+def q_bottomk_customers(spark, t):
     """S4 top-k smallest (app.py:412)."""
-    t = load_tables(spark, sf_dir)
     return (
         t["customer"]
         .orderBy(F.asc("c_acctbal"), F.asc("c_custkey"))
@@ -791,9 +768,8 @@ def q_bottomk_customers(spark, sf_dir):
     SELECT o_orderkey, o_orderstatus FROM orders ORDER BY o_orderkey LIMIT 5
     """,
 )
-def q_limit_preview(spark, sf_dir):
+def q_limit_preview(spark, t):
     """S5 deterministic limit (ecom_Gold_Layer.ipynb:170)."""
-    t = load_tables(spark, sf_dir)
     return (
         t["orders"].select("o_orderkey", "o_orderstatus").orderBy("o_orderkey").limit(5)
     )
@@ -815,10 +791,9 @@ def q_limit_preview(spark, sf_dir):
     FROM supplier
     """,
 )
-def q_union_entities(spark, sf_dir):
+def q_union_entities(spark, t):
     """U1 union-by-name with NULL alignment for missing columns
     (pd.concat parity, ecom_Bronze_Layer.ipynb:44)."""
-    t = load_tables(spark, sf_dir)
     cust = t["customer"].select(
         F.col("c_custkey").alias("entity_id"),
         F.col("c_name").alias("entity_name"),
@@ -845,10 +820,9 @@ def q_union_entities(spark, sf_dir):
     GROUP BY l.l_returnflag
     """,
 )
-def q_ship_delay_days(spark, sf_dir):
+def q_ship_delay_days(spark, t):
     """F5/F6 pandas-parity day diffs: whole-day truncation AND
     fractional days (ecom_Silver_Layer.ipynb:271; app.py:137-140)."""
-    t = load_tables(spark, sf_dir)
     joined = t["lineitem"].join(
         t["orders"], F.col("l_orderkey") == F.col("o_orderkey")
     )
@@ -870,9 +844,8 @@ def q_ship_delay_days(spark, sf_dir):
     FROM customer
     """,
 )
-def q_row_hash_customers(spark, sf_dir):
+def q_row_hash_customers(spark, t):
     """F12/F13 md5 change-detection row hash (Scd_Type2.sql:25-32)."""
-    t = load_tables(spark, sf_dir)
     return t["customer"].select(
         "c_custkey",
         row_hash(["c_name", "c_nationkey", "c_mktsegment"]).alias("row_hash"),
@@ -888,10 +861,9 @@ def q_row_hash_customers(spark, sf_dir):
     FROM events GROUP BY event_type
     """,
 )
-def q_tolerant_extract_cast(spark, sf_dir):
+def q_tolerant_extract_cast(spark, t):
     """F18 tolerant numeric cast (NULL on junk, app.py:94,123) + F14/F15
     regex extraction."""
-    t = load_tables(spark, sf_dir)
     return t["events"].groupBy("event_type").agg(
         F.sum(F.regexp_extract("props", r"([0-9]+)", 1).cast("long")).alias("k_total"),
         F.count_if(F.col("props").cast("double").isNull()).alias("unparseable_cnt"),
@@ -907,10 +879,9 @@ def q_tolerant_extract_cast(spark, sf_dir):
     FROM events GROUP BY event_type
     """,
 )
-def q_null_fill_policy(spark, sf_dir):
+def q_null_fill_policy(spark, t):
     """F19 constant null-fill (ecom_Silver_Layer.ipynb:211,233): mask a
     column to NULL then fill with the policy default."""
-    t = load_tables(spark, sf_dir)
     masked = t["events"].withColumn(
         "value_masked",
         F.when(F.col("event_type") == "error", F.lit(None)).otherwise(F.col("value")),
@@ -928,9 +899,8 @@ def q_null_fill_policy(spark, sf_dir):
     FROM part
     """,
 )
-def q_display_truncate(spark, sf_dir):
+def q_display_truncate(spark, t):
     """F16 truncate+ellipsis display projection (app.py:536)."""
-    t = load_tables(spark, sf_dir)
     return t["part"].select(
         "p_partkey", truncate_ellipsis("p_name", 10).alias("short_name")
     )
@@ -945,10 +915,9 @@ def q_display_truncate(spark, sf_dir):
     FROM supplier
     """,
 )
-def q_sk_continuation(spark, sf_dir):
+def q_sk_continuation(spark, t):
     """W1 scalar-subquery SK offset (Scd_Type2.sql:33-34): new keys
     continue from the current max of another table."""
-    t = load_tables(spark, sf_dir)
     from ..operators.surrogate_keys import max_key, with_surrogate_key_dense
 
     offset = max_key(t["customer"], "c_custkey")
@@ -971,10 +940,9 @@ def q_sk_continuation(spark, sf_dir):
     GROUP BY 1
     """,
 )
-def q_tumbling_daily_revenue(spark, sf_dir):
+def q_tumbling_daily_revenue(spark, t):
     """ST2 tumbling event-time window (batch replay) — the streaming
     variant is streaming.streams.windowed_revenue with a watermark."""
-    t = load_tables(spark, sf_dir)
     return (
         t["events"]
         .filter(F.col("event_type") == "purchase")
@@ -997,10 +965,9 @@ def q_tumbling_daily_revenue(spark, sf_dir):
     )
     """,
 )
-def q_event_id_dedup(spark, sf_dir):
+def q_event_id_dedup(spark, t):
     """ST5 dedup on event identity under at-least-once replay: the
     stream delivered every event twice; dedup restores exactly-once."""
-    t = load_tables(spark, sf_dir)
     replayed = t["events"].unionAll(t["events"])
     return replayed.dropDuplicates(["event_id"]).agg(
         F.count(F.lit(1)).alias("unique_events")
@@ -1019,14 +986,13 @@ def q_event_id_dedup(spark, sf_dir):
     GROUP BY 1
     """,
 )
-def q_sliding_weekly_revenue(spark, sf_dir):
+def q_sliding_weekly_revenue(spark, t):
     """ST2 extended to an overlapping (sliding) event-time window:
     7-day revenue recomputed every day. Spark assigns each row to its
     window_size/slide = 7 windows map-side — no self-join; the oracle
     materializes the same assignment with generate_series. Epoch
     alignment: slide = 1 day in a UTC session puts window starts on
     date boundaries, matching date_trunc."""
-    t = load_tables(spark, sf_dir)
     return (
         t["events"]
         .filter(F.col("event_type") == "purchase")
@@ -1051,7 +1017,7 @@ def q_sliding_weekly_revenue(spark, sf_dir):
     FROM events p WHERE p.event_type = 'purchase'
     """,
 )
-def q_asof_last_click(spark, sf_dir):
+def q_asof_last_click(spark, t):
     """Backward as-of join (no reference equivalent — the custom
     temporal operator SURVEY §2.C notes is absent): each purchase
     picks the latest strictly-earlier click by the same user.
@@ -1060,7 +1026,7 @@ def q_asof_last_click(spark, sf_dir):
     semantics as a correlated MAX."""
     from ..operators.temporal import asof_join
 
-    e = load_tables(spark, sf_dir)["events"]
+    e = t["events"]
     purchases = e.filter(F.col("event_type") == "purchase").select(
         "event_id",
         "user_id",
@@ -1091,7 +1057,7 @@ def q_asof_last_click(spark, sf_dir):
       AND b.ts > a.ts AND b.ts <= a.ts + INTERVAL 2 HOUR
     """,
 )
-def q_view_click_pairs_2h(spark, sf_dir):
+def q_view_click_pairs_2h(spark, t):
     """Range (band) join — pairs every view with the same user's
     clicks in the following 2 hours. operators/temporal.range_join
     turns the theta predicate into an equi-join on (user_id, 2h time
@@ -1099,7 +1065,7 @@ def q_view_click_pairs_2h(spark, sf_dir):
     plan is a shuffleable hash join, never a per-key cartesian."""
     from ..operators.temporal import range_join
 
-    e = load_tables(spark, sf_dir)["events"]
+    e = t["events"]
     views = e.filter(F.col("event_type") == "view").select(
         F.col("event_id").alias("view_id"),
         "user_id",
@@ -1140,13 +1106,12 @@ def q_view_click_pairs_2h(spark, sf_dir):
     FROM events GROUP BY event_type
     """,
 )
-def q_props_json_stats(spark, sf_dir):
+def q_props_json_stats(spark, t):
     """Semi-structured extraction: the events table's ``props`` column
     is a JSON string (the Kafka-payload shape the reference's
     README.md:27 positions the stream as). ``get_json_object`` is a
     native Catalyst expression — the path extraction runs codegen-side,
     no UDF; aggregates stay integer-exact for hash parity."""
-    t = load_tables(spark, sf_dir)
     k = F.get_json_object("props", "$.k").cast("long")
     return (
         t["events"]
@@ -1170,7 +1135,7 @@ def q_props_json_stats(spark, sf_dir):
     FROM events GROUP BY event_type
     """,
 )
-def q_approx_distinct_contract(spark, sf_dir):
+def q_approx_distinct_contract(spark, t):
     """Sketch aggregates with a testable contract. Approximate results
     can't hash-match an exact oracle, so the query emits the CONTRACT
     instead: |approx − exact| within tolerance, per group, as a
@@ -1179,7 +1144,6 @@ def q_approx_distinct_contract(spark, sf_dir):
     mergeable partial sketches, one narrow shuffle, bounded memory —
     where exact distinct/median shuffle every value; the exact twins
     here exist only to score the sketch."""
-    t = load_tables(spark, sf_dir)
     agg = t["events"].groupBy("event_type").agg(
         F.approx_count_distinct("user_id", rsd=0.05).alias("acd"),
         F.countDistinct("user_id").alias("exact_users"),
@@ -1226,7 +1190,7 @@ def q_approx_distinct_contract(spark, sf_dir):
     WHERE t.event_type = 'purchase'
     """,
 )
-def q_purchase_attribution(spark, sf_dir):
+def q_purchase_attribution(spark, t):
     """ST3 generalized: per-user state machine (views/clicks since the
     previous purchase, emitted on purchase) in its native batch-replay
     form — gaps-and-islands, zero Python. The cross-batch streaming
@@ -1234,7 +1198,6 @@ def q_purchase_attribution(spark, sf_dir):
     (applyInPandasWithState); a pytest proves stream/batch parity."""
     from ..streaming.stateful import purchase_attribution_batch
 
-    t = load_tables(spark, sf_dir)
     return purchase_attribution_batch(t["events"])
 
 
@@ -1308,7 +1271,7 @@ def q_purchase_attribution(spark, sf_dir):
           UNION ALL SELECT * FROM inserts)
     """,
 )
-def q_scd2_merge_orders(spark, sf_dir):
+def q_scd2_merge_orders(spark, t):
     """J7 SCD2 MERGE (Scd_Type2.sql:13-53) on a deterministic scenario:
     initial load at T0 from orders, then a staging batch that mutates
     status (key%3), total (key%5) and adds brand-new keys (key%100).
@@ -1317,7 +1280,6 @@ def q_scd2_merge_orders(spark, sf_dir):
     byte-identical between Spark and the oracle (double→string
     formatting is engine-specific; decimal(18,2)→string is not).
     """
-    t = load_tables(spark, sf_dir)
     from ..operators.scd2 import scd2_init, scd2_merge
 
     base = t["orders"].select(
@@ -1378,10 +1340,9 @@ def q_scd2_merge_orders(spark, sf_dir):
     WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
     """,
 )
-def q_customers_with_orders_semi(spark, sf_dir):
+def q_customers_with_orders_semi(spark, t):
     """Left-semi join (EXISTS): probe side streams, build side holds
     only the key set — no payload duplication, broadcastable by AQE."""
-    t = load_tables(spark, sf_dir)
     return t["customer"].join(
         t["orders"], F.col("c_custkey") == F.col("o_custkey"), "left_semi"
     ).select("c_custkey", "c_name")
@@ -1394,12 +1355,11 @@ def q_customers_with_orders_semi(spark, sf_dir):
     WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
     """,
 )
-def q_customers_without_orders_anti(spark, sf_dir):
+def q_customers_without_orders_anti(spark, t):
     """Left-anti join (NOT EXISTS) — the standalone form of the SCD2
     MERGE's not-matched branch (operators/joins.anti_join)."""
     from ..operators.joins import anti_join
 
-    t = load_tables(spark, sf_dir)
     return anti_join(
         t["customer"],
         t["orders"].select(F.col("o_custkey").alias("c_custkey")),
@@ -1415,8 +1375,7 @@ def q_customers_without_orders_anti(spark, sf_dir):
     SELECT s_nationkey FROM supplier
     """,
 )
-def q_nations_both_sides_intersect(spark, sf_dir):
-    t = load_tables(spark, sf_dir)
+def q_nations_both_sides_intersect(spark, t):
     return t["customer"].select(F.col("c_nationkey").alias("nationkey")).intersect(
         t["supplier"].select(F.col("s_nationkey").alias("nationkey"))
     )
@@ -1430,8 +1389,7 @@ def q_nations_both_sides_intersect(spark, sf_dir):
     SELECT s_nationkey FROM supplier
     """,
 )
-def q_nations_customers_only_except(spark, sf_dir):
-    t = load_tables(spark, sf_dir)
+def q_nations_customers_only_except(spark, t):
     # subtract = EXCEPT DISTINCT (set semantics, matching SQL EXCEPT);
     # exceptAll would be multiset difference and keep keys whose
     # customer multiplicity merely exceeds their supplier multiplicity
@@ -1450,11 +1408,10 @@ def q_nations_customers_only_except(spark, sf_dir):
     FROM orders GROUP BY o_orderpriority
     """,
 )
-def q_priority_status_pivot(spark, sf_dir):
+def q_priority_status_pivot(spark, t):
     """Pivot with an EXPLICIT value list — without it Spark runs an
     extra distinct-collect job to discover columns; pinning the values
     keeps the plan a single pass at any scale."""
-    t = load_tables(spark, sf_dir)
     return (
         t["orders"]
         .groupBy("o_orderpriority")
@@ -1477,10 +1434,9 @@ def q_priority_status_pivot(spark, sf_dir):
     SELECT o_orderstatus, 'avg_price' AS measure, ap AS val FROM a
     """,
 )
-def q_status_measures_unpivot(spark, sf_dir):
+def q_status_measures_unpivot(spark, t):
     """Unpivot/melt (wide→long) — map-side row expansion, no shuffle
     beyond the feeding aggregation."""
-    t = load_tables(spark, sf_dir)
     agg = t["orders"].groupBy("o_orderstatus").agg(
         F.round(F.sum("o_totalprice"), 2).alias("total_price"),
         F.round(F.avg("o_totalprice"), 2).alias("avg_price"),
@@ -1501,11 +1457,10 @@ def q_status_measures_unpivot(spark, sf_dir):
     GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
     """,
 )
-def q_grouping_sets_revenue(spark, sf_dir):
+def q_grouping_sets_revenue(spark, t):
     """Explicit GROUPING SETS (rollup/cube's general form, both already
     in the corpus): one shuffle computes all three groupings;
     grouping_id disambiguates a NULL group value from a subtotal row."""
-    t = load_tables(spark, sf_dir)
     return (
         t["orders"]
         .groupingSets(
@@ -1544,7 +1499,7 @@ def q_grouping_sets_revenue(spark, sf_dir):
     FROM d GROUP BY l_returnflag, l_linestatus
     """,
 )
-def q_pricing_summary(spark, sf_dir):
+def q_pricing_summary(spark, t):
     """TPC-H Q1-shaped pricing summary — the canonical scan-heavy
     aggregate: ~600k-row scan at sf0.1 collapsing to a handful of
     groups, entirely whole-stage-codegen with map-side partial
@@ -1557,7 +1512,6 @@ def q_pricing_summary(spark, sf_dir):
     end. Double SUMs rounded post-hoc would carry order-of-accumulation
     noise across 600k rows and can straddle a rounding boundary
     differently per engine; exact decimal sums are bit-identical."""
-    t = load_tables(spark, sf_dir)
     qty = F.col("l_quantity").cast("decimal(9,2)")
     price = F.col("l_extendedprice").cast("decimal(12,2)")
     disc = F.col("l_discount").cast("decimal(4,2)")
@@ -1596,12 +1550,11 @@ def q_pricing_summary(spark, sf_dir):
     GROUP BY prev_type, event_type
     """,
 )
-def q_user_event_transitions(spark, sf_dir):
+def q_user_event_transitions(spark, t):
     """lead/lag analytics (SURVEY §2.E notes the reference computes its
     funnel with group-bys and has no lag — the engine exposes it): the
     event-type transition matrix per user. One key-shuffle for the
     window, then a partial-aggregated count."""
-    t = load_tables(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return (
         t["events"]
@@ -1630,12 +1583,11 @@ def q_user_event_transitions(spark, sf_dir):
     SELECT * FROM ranked WHERE price_rank <= 3
     """,
 )
-def q_customer_order_ranks(spark, sf_dir):
+def q_customer_order_ranks(spark, t):
     """rank/dense_rank + an explicit ROWS frame (running per-customer
     spend) — the analytic-window family the reference lacks entirely.
     The running sum's frame order is total (date, then key), so the
     left-to-right accumulation is identical in both engines."""
-    t = load_tables(spark, sf_dir)
     wr = Window.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), "o_orderkey"
     )
@@ -1675,13 +1627,12 @@ def q_customer_order_ranks(spark, sf_dir):
                  ORDER BY o_totalprice DESC, o_orderkey)
     """,
 )
-def q_order_value_distribution(spark, sf_dir):
+def q_order_value_distribution(spark, t):
     """Distribution analytics: ntile, percent_rank, cume_dist, and a
     full-frame nth_value, all over one partitioned/ordered window (no
     global-window scale smell — each priority partition sorts
     independently). Ratios are exact small-integer divisions rounded
     identically on both sides."""
-    t = load_tables(spark, sf_dir)
     w = Window.partitionBy("o_orderpriority").orderBy(
         F.col("o_totalprice").desc(), "o_orderkey"
     )
@@ -1706,7 +1657,7 @@ def q_order_value_distribution(spark, sf_dir):
     FROM events GROUP BY user_id
     """,
 )
-def q_user_event_paths(spark, sf_dir):
+def q_user_event_paths(spark, t):
     """Ordered array aggregation (the clickstream 'path' shape).
     collect_list gives NO ordering guarantee under partial aggregation
     — the deterministic form collects (ts, event_id, type) structs,
@@ -1714,7 +1665,6 @@ def q_user_event_paths(spark, sf_dir):
     key shuffle; the oracle is DuckDB's ordered list(). The path is
     RENDERED as a '>'-joined string on both sides so the external
     comparison never has to hash a list-typed cell."""
-    t = load_tables(spark, sf_dir)
     return (
         t["events"]
         .groupBy("user_id")
@@ -1747,11 +1697,10 @@ def q_user_event_paths(spark, sf_dir):
     FROM orders GROUP BY 1
     """,
 )
-def q_order_price_histogram(spark, sf_dir):
+def q_order_price_histogram(spark, t):
     """Fixed-width binning/histogram: the bin id is computed map-side
     so the aggregation partial-combines to |bins| rows per task before
     the shuffle — constant shuffle volume at any scale."""
-    t = load_tables(spark, sf_dir)
     return (
         t["orders"]
         .groupBy(
@@ -1789,7 +1738,7 @@ def q_order_price_histogram(spark, sf_dir):
     ORDER BY d2, p.c_custkey LIMIT 10
     """,
 )
-def q_customer_geo_nearest(spark, sf_dir):
+def q_customer_geo_nearest(spark, t):
     """Geo surface (the reference's dashboard maps median-imputed
     Latitude/Longitude, app.py:483-493; SURVEY §1.2 FLOAT64 row):
     bounding-box filter + k-nearest to a point. Coordinates are
@@ -1799,7 +1748,6 @@ def q_customer_geo_nearest(spark, sf_dir):
     behavior differs across libm implementations. Top-k plans as
     TakeOrderedAndProject after a broadcast nation join — no global
     sort."""
-    t = load_tables(spark, sf_dir)
     h = F.conv(
         F.md5(F.col("c_custkey").cast("string")).substr(1, 8), 16, 10
     ).cast("bigint")
@@ -1834,121 +1782,35 @@ def q_customer_geo_nearest(spark, sf_dir):
     )
 
 
-# LLM-data corpus registrations (same registry, separate module)
+# Import order is registration order: QUERIES and ORACLES keep it, the
+# oracle pin digest (tests/corpus_pin.py) hashes it, and
+# __spark_entry__.window breaks ties by it. Append new modules at the end.
 from . import llm_queries  # noqa: E402,F401
-
-# TPC-H-shaped multi-join analytics (same registry, separate module)
 from . import tpch_queries  # noqa: E402,F401
-
-# analytics marts: cohort/RFM/basket/sketch-rollup (same registry)
 from . import analytics_queries  # noqa: E402,F401
-
-# round-3 additions: corpus statistics, dedup-survivor materialization,
-# retrieval, embedding QA, anomaly/cadence analytics (same registry)
 from . import round3_queries  # noqa: E402,F401
-
-# round-3 additions, batch 2: sketch frequency estimation, running
-# balances, conversion latency, drift monitoring, n-gram novelty
 from . import round3b_queries  # noqa: E402,F401
-
-# round-4 additions: ANN recall contracts, composed pipeline marts
 from . import round4_queries  # noqa: E402,F401
-
-# round-5 additions: window bands, robust-stat audits, calendar
-# profiles, LLM-pipeline quality follow-ons
 from . import round5_queries  # noqa: E402,F401
-
-# round-6-staged additions: composed quality contracts + analytics
 from . import round6_queries  # noqa: E402,F401
-
-# round-6-staged additions, part 2: order-shape/token-budget/hapax/
-# Lorenz/clip-bounds
 from . import round6b_queries  # noqa: E402,F401
-
-# round-6-staged additions, part 3: centroid drift / bigram entropy /
-# cross-source near-dups / sessionization / shard balance / completion
-# mix / reorder affinity
 from . import round6c_queries  # noqa: E402,F401
-
-# round-6-staged additions, part 4: keeper-quality contract / entry
-# conversion / arrival dispersion / dim correlation
 from . import round6d_queries  # noqa: E402,F401
-
-# round-6-staged additions, part 5: price/size frontier / chi-square
-# independence / Theil decomposition / silhouette proxy / Markov
-# next-event accuracy
 from . import round6e_queries  # noqa: E402,F401
-
-# round-6-staged additions, part 6: weighted sampling / containment
-# audit / int8 recall contract / curriculum phases
 from . import round6f_queries  # noqa: E402,F401
-
-# round-6-staged additions, part 7: drift & change-point detection
 from . import round6g_queries  # noqa: E402,F401
-
-# round-7-staged additions: Gopher quality rules / band planner / KM
-# survival / price elasticity / repeat-revenue split / stopword
-# coverage / BPE merges / SemDeDup prune / Hill tail index
 from . import round7_queries  # noqa: E402,F401
 from . import round7b_queries  # noqa: E402,F401
 from . import round8_queries  # noqa: E402,F401
-
-# round-8 window additions: reconciliation / share-mix marts / degree
-# distribution / engagement + sessionization depth / LLM-data text &
-# embedding diagnostics
 from . import round8b_queries  # noqa: E402,F401
-
-# round-9-staged additions (positions 51+ of the round-8 registration
-# order): returned-value shares, entropy/PSI drift, trend slopes,
-# sessionization depth-vs-conversion, casefold dedup gain, PQ norm
-# mass, percentile marts
 from . import round9_queries  # noqa: E402,F401
 from . import round9b_queries  # noqa: E402,F401
-
-# round-10-staged additions (positions 71+ of the round-8 registration
-# order): order sequencing (priority transitions, increasing-value
-# runs, first-vs-last drift), session bounce rates, value-arrival
-# curves, supplier share volatility, line-number position effects,
-# revenue streaks, and the term-burstiness / kNN-reciprocity /
-# JL-distortion audit contracts
 from . import round9c_queries  # noqa: E402,F401
-
-# round-10-staged additions, part 2: Mann-Whitney U on the ranged
-# cumulative operator, RANGE-frame rolling spend peak, session
-# type-pair affinity, supplier shared-part Jaccard, dim energy
-# concentration, Zipf abbreviation curve
 from . import round9d_queries  # noqa: E402,F401
-
-# round-10-staged additions, part 3: MMR diversified retrieval,
-# session duration bands, SimHash bit-balance audit, two-way ANOVA
 from . import round9e_queries  # noqa: E402,F401
-
-# round-9 window additions (positions 44-50): survivor-contracted
-# dedup family agreement, Theil-Sen + Mann-Kendall trend reads,
-# Kruskal-Wallis priority rank test, dedup mixture shift, lag-1
-# order-value autocorrelation, kNN hubness histogram
 from . import round10_queries  # noqa: E402,F401
-
-# round-10-staged additions: runs test, overdispersion, bytes/token,
-# char-ngram entropy curve, session-gap sweep, degree assortativity,
-# weekday habit, quantity-discount MI, k-means k-sweep, Welch t test,
-# sentence-position boilerplate
 from . import round10b_queries  # noqa: E402,F401
-
-# round-10-staged additions, part 2: changepoint split, Laspeyres
-# index, log-rank survival test, quality-dup AUC, KS exponentiality
 from . import round10c_queries  # noqa: E402,F401
-
-# round-10 NEW additions: Spearman, GK gamma, Poisson-bootstrap CI,
-# periodogram, Cramér's V (+ part 2: Markov stationary distribution,
-# triplet margins, modularity, JS divergence, circular stats)
 from . import round11_queries  # noqa: E402,F401
-
-# round-10 NEW additions, part 3: Hurst R/S, Weibull gap fit, two-NN
-# intrinsic dimension, Ljung-Box whiteness
 from . import round11b_queries  # noqa: E402,F401
-
-# round-11 NEW additions: Chao1/Good-Turing vocab estimation, Cohen's
-# kappa detector agreement, Jarque-Bera, blocked Levenshtein pairs,
-# CUPED, permutation entropy, Lin's CCC, Moran's I
 from . import round12_queries  # noqa: E402,F401

@@ -28,7 +28,6 @@ from ..llmdata.text import (
     token_count,
 )
 from .corpus import query
-from .tables import load_tables
 
 # shared MinHash-LSH configuration (chosen against the testdata's
 # near-dup structure: 2-gram shingles separate the ~25 true near-dup
@@ -64,10 +63,9 @@ def _planes_sql_literal(planes: list[list[float]]) -> str:
     GROUP BY md5(text)
     """,
 )
-def q_doc_exact_dedup(spark, sf_dir):
+def q_doc_exact_dedup(spark, t):
     """Exact dedup by content hash under a duplicated corpus (each doc
     replayed once with a shifted id): one keeper per distinct text."""
-    t = load_tables(spark, sf_dir)
     docs = ensure_parallelism(t["documents"].select("doc_id", "text"))
     replayed = docs.unionByName(
         docs.select((F.col("doc_id") + 1000000).alias("doc_id"), "text")
@@ -87,10 +85,9 @@ def q_doc_exact_dedup(spark, sf_dir):
     FROM documents GROUP BY lang
     """,
 )
-def q_doc_token_stats(spark, sf_dir):
+def q_doc_token_stats(spark, t):
     """Token counting per language: whitespace tokens + BPE-ish subword
     proxy (alnum runs + punctuation)."""
-    t = load_tables(spark, sf_dir)
     return (
         ensure_parallelism(t["documents"])
         .groupBy("lang")
@@ -128,10 +125,9 @@ def q_doc_token_stats(spark, sf_dir):
     FROM g
     """,
 )
-def q_doc_quality_scores(spark, sf_dir):
+def q_doc_quality_scores(spark, t):
     """Per-document quality features: length, stopword ratio,
     punctuation ratio, composite score."""
-    t = load_tables(spark, sf_dir)
     feats = quality_features("text")
     return ensure_parallelism(t["documents"]).select(
         "doc_id",
@@ -171,10 +167,9 @@ def q_doc_quality_scores(spark, sf_dir):
     FROM pred GROUP BY lang, predicted_lang
     """,
 )
-def q_doc_language_id(spark, sf_dir):
+def q_doc_language_id(spark, t):
     """Language-ID heuristic (stopword hits, alphabetical tie-break):
     confusion matrix actual × predicted."""
-    t = load_tables(spark, sf_dir)
     return (
         ensure_parallelism(t["documents"])
         .withColumn("predicted_lang", language_guess("text"))
@@ -192,10 +187,9 @@ def q_doc_language_id(spark, sf_dir):
     FROM documents
     """,
 )
-def q_doc_fingerprints(spark, sf_dir):
+def q_doc_fingerprints(spark, t):
     """Document fingerprinting: normalized content hash + 5-token
     prefix fingerprint."""
-    t = load_tables(spark, sf_dir)
     fps = document_fingerprints("text")
     return ensure_parallelism(t["documents"]).select(
         "doc_id", fps["fp_full"].alias("fp_full"), fps["fp_prefix"].alias("fp_prefix")
@@ -226,9 +220,8 @@ def q_doc_fingerprints(spark, sf_dir):
     FROM per_bit GROUP BY doc_id
     """,
 )
-def q_doc_simhash(spark, sf_dir):
+def q_doc_simhash(spark, t):
     """SimHash fingerprint (16-bit, md5-hex-digit bit extraction)."""
-    t = load_tables(spark, sf_dir)
     return simhash(t["documents"], "text", "doc_id", bits=16)
 
 
@@ -286,10 +279,9 @@ _MINHASH_CTES = rf"""toks AS (
     WHERE i.n_common * 1.0 / (sa.n + sb.n - i.n_common) >= {JACCARD_THRESHOLD}
     """,
 )
-def q_doc_minhash_near_dup(spark, sf_dir):
+def q_doc_minhash_near_dup(spark, t):
     """MinHash+LSH near-duplicate detection: shingle → 12-hash MinHash
     signature → 6 bands → candidate equi-join → exact-Jaccard verify."""
-    t = load_tables(spark, sf_dir)
     return minhash_near_duplicates(
         t["documents"], "text", "doc_id",
         n=SHINGLE_N, num_hashes=NUM_HASHES,
@@ -324,7 +316,7 @@ def q_doc_minhash_near_dup(spark, sf_dir):
     FROM reach GROUP BY node
     """,
 )
-def q_doc_dup_clusters(spark, sf_dir):
+def q_doc_dup_clusters(spark, t):
     """Duplicate CLUSTERS, not just pairs: connected components over
     the MinHash near-dup graph (near-dup similarity isn't transitive,
     so chain dedup needs the closure), via iterative min-label
@@ -334,7 +326,6 @@ def q_doc_dup_clusters(spark, sf_dir):
     their own canonical cluster."""
     from ..llmdata.dedup import duplicate_clusters
 
-    t = load_tables(spark, sf_dir)
     docs = ensure_parallelism(t["documents"])
     pairs = minhash_near_duplicates(
         docs, "text", "doc_id",
@@ -366,7 +357,7 @@ def q_doc_dup_clusters(spark, sf_dir):
     FROM inter JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b
     """,
 )
-def q_doc_ngram_jaccard_pairs(spark, sf_dir):
+def q_doc_ngram_jaccard_pairs(spark, t):
     """Plain n-gram Jaccard (3-gram) between consecutive doc pairs —
     the exact-similarity primitive without LSH. Per-doc distinct
     shingle ARRAYS are built map-side and the consecutive-pair join is
@@ -377,7 +368,6 @@ def q_doc_ngram_jaccard_pairs(spark, sf_dir):
     oracle's match-requiring join does."""
     from ..llmdata.dedup import shingle_array
 
-    t = load_tables(spark, sf_dir)
     d = ensure_parallelism(t["documents"]).select(
         "doc_id", shingle_array("text", 3).alias("arr")
     )
@@ -421,10 +411,9 @@ def q_doc_ngram_jaccard_pairs(spark, sf_dir):
     WHERE rn <= 3
     """,
 )
-def q_emb_cosine_topk(spark, sf_dir):
+def q_emb_cosine_topk(spark, t):
     """Brute-force cosine top-k over the embedding column — exact ANN
     baseline (higher-order aggregate/zip_with, no UDF)."""
-    t = load_tables(spark, sf_dir)
     emb = t["embeddings"]
     return brute_force_topk(emb, emb.filter(F.col("vec_id") < 5), k=3)
 
@@ -503,11 +492,10 @@ COSINE_DUP_THRESHOLD = 0.45  # testdata vectors are unclustered (max pair ~0.6)
 
 
 @query("emb_cosine_near_dup", oracle=_cosine_near_dup_oracle(COSINE_DUP_THRESHOLD))
-def q_emb_cosine_near_dup(spark, sf_dir):
+def q_emb_cosine_near_dup(spark, t):
     """Embedding-cosine near-duplicate pairs — LSH-bucketed candidates
     (one equi-join, never O(n²)) + exact-cosine verify ≥ threshold;
     the embedding-space sibling of doc_minhash_near_dup."""
-    t = load_tables(spark, sf_dir)
     planes = hyperplanes(EMB_DIM, N_PLANES, N_TABLES)
     return cosine_near_duplicates(
         t["embeddings"], planes, n_tables=N_TABLES, threshold=COSINE_DUP_THRESHOLD
@@ -568,11 +556,10 @@ def _ivf_oracle() -> str:
 
 
 @query("emb_ivf_topk", oracle=_ivf_oracle())
-def q_emb_ivf_topk(spark, sf_dir):
+def q_emb_ivf_topk(spark, t):
     """IVF approximate top-k — inverted-list partitioning by nearest
     coarse centroid, nprobe multi-probe, exact rerank on candidates
     only (the other classic ANN scale path next to LSH)."""
-    t = load_tables(spark, sf_dir)
     emb = t["embeddings"]
     return ivf_topk(
         emb, emb.filter(F.col("vec_id") < 5),
@@ -581,11 +568,10 @@ def q_emb_ivf_topk(spark, sf_dir):
 
 
 @query("emb_lsh_topk", oracle=_lsh_oracle())
-def q_emb_lsh_topk(spark, sf_dir):
+def q_emb_lsh_topk(spark, t):
     """Random-hyperplane LSH approximate top-k: candidates restricted
     to the query's sign-pattern bucket (the 100 TB scale path; seeded
     hyperplanes shared with the oracle)."""
-    t = load_tables(spark, sf_dir)
     emb = t["embeddings"]
     planes = hyperplanes(EMB_DIM, N_PLANES, N_TABLES)
     return lsh_topk(emb, emb.filter(F.col("vec_id") < 5), planes, k=3, n_tables=N_TABLES)
@@ -606,10 +592,9 @@ def q_emb_lsh_topk(spark, sf_dir):
       ON a.label = n.label
     """,
 )
-def q_emb_label_centroids(spark, sf_dir):
+def q_emb_label_centroids(spark, t):
     """Per-label centroid norms — element-wise vector aggregation via
     posexplode + groupBy (the distributed mean-vector shape)."""
-    t = load_tables(spark, sf_dir)
     e = t["embeddings"].select(
         "label", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -649,13 +634,12 @@ def q_emb_label_centroids(spark, sf_dir):
     FROM sess GROUP BY user_id, sid
     """,
 )
-def q_session_windows(spark, sf_dir):
+def q_session_windows(spark, t):
     """ST6 sessionization via session_window (30-min gap): the README's
     claimed capability realized natively. Oracle reproduces Spark's
     half-open [start, last+gap) semantics with a lag/cumsum rewrite."""
     from ..streaming.streams import sessionize
 
-    t = load_tables(spark, sf_dir)
     return sessionize(t["events"], gap="30 minutes")
 
 
@@ -677,13 +661,12 @@ def q_session_windows(spark, sf_dir):
          UNNEST(generate_series(1, greatest(length(d.text), 1), 150)) AS s(start)
     """,
 )
-def q_doc_chunks(spark, sf_dir):
+def q_doc_chunks(spark, t):
     """Overlapping fixed-width chunking (200-char windows, stride 150
     → 50-char overlap), the context-window prep step for training
     corpora. sequence+posexplode is pure map-side row expansion: no
     shuffle, no Python, and at 100 TB each scan split chunks its own
     documents independently."""
-    t = load_tables(spark, sf_dir)
     return (
         ensure_parallelism(t["documents"])
         .select(
@@ -711,13 +694,12 @@ def q_doc_chunks(spark, sf_dir):
     FROM documents
     """,
 )
-def q_doc_train_split(spark, sf_dir):
+def q_doc_train_split(spark, t):
     """Deterministic hash-based train/eval split (~80/20 via the first
     md5 byte < 0xcc). Unlike randomSplit this is stable across runs,
     engines, partitionings, and re-executions — the property a
     reproducible training pipeline needs — and it's a pure projection:
     no shuffle, no sampling pass."""
-    t = load_tables(spark, sf_dir)
     return ensure_parallelism(t["documents"]).select(
         "doc_id",
         F.when(
@@ -751,14 +733,13 @@ def q_doc_train_split(spark, sf_dir):
     SELECT doc_id, tok, tfidf, rn FROM scored WHERE rn <= 3
     """,
 )
-def q_doc_tfidf_top_terms(spark, sf_dir):
+def q_doc_tfidf_top_terms(spark, t):
     """Per-document top-3 TF-IDF terms. The rational idf form
     tf*(N+1)/(df+1) (no log) keeps the score an identical IEEE double
     in both engines — ln() last-ulp divergence would break hash parity.
     Plan shape at scale: one explode → two partial-agg groupBys (tf,
     df), a broadcastable df join (|vocab| << corpus), and a per-doc
     top-k window; the N scalar rides a 1-row broadcast cross join."""
-    t = load_tables(spark, sf_dir)
     docs = ensure_parallelism(t["documents"])
     toks = (
         docs.filter(F.length(F.trim("text")) > 0)
@@ -795,13 +776,12 @@ def q_doc_tfidf_top_terms(spark, sf_dir):
           < CASE WHEN lang = 'en' THEN '33' ELSE '80' END
     """,
 )
-def q_doc_stratified_sample(spark, sf_dir):
+def q_doc_stratified_sample(spark, t):
     """Stratified sampling with per-stratum fractions (sampleBy's
     deterministic twin): ~20% of English docs, ~50% of everything else,
     selected by the first md5 byte of the id — reproducible across
     runs/engines/partitionings, pure map-side filter, no sampling
     pass."""
-    t = load_tables(spark, sf_dir)
     return ensure_parallelism(t["documents"]).filter(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
         < F.when(F.col("lang") == "en", "33").otherwise("80")
@@ -836,14 +816,13 @@ def q_doc_stratified_sample(spark, sf_dir):
     SELECT doc_id, lang, quality_score FROM r WHERE pr >= 0.25
     """,
 )
-def q_doc_quality_filter(spark, sf_dir):
+def q_doc_quality_filter(spark, t):
     """Quantile quality filtering: drop each language's bottom quartile
     by composite quality score. The threshold is a rank RATIO
     (percent_rank = (rank-1)/(n-1), exact integer division) rather than
     an interpolated quantile VALUE — engines interpolate quantiles
     differently, rank ratios are bit-identical. One window shuffle per
     lang partition; the filter is map-side after it."""
-    t = load_tables(spark, sf_dir)
     feats = quality_features("text")
     scored = ensure_parallelism(t["documents"]).select(
         "doc_id", "lang", feats["quality_score"].alias("quality_score")
@@ -894,7 +873,7 @@ def _media_frame(t):
     GROUP BY media_type
     """,
 )
-def q_media_feature_extract(spark, sf_dir):
+def q_media_feature_extract(spark, t):
     """Multimodal decode plumbing end-to-end: binary payload column ->
     Arrow-batched mapInPandas feature extraction (deterministic fake
     decoder — byte stats + head hash) -> per-media-type rollup.
@@ -906,7 +885,6 @@ def q_media_feature_extract(spark, sf_dir):
     stream through Python as Arrow batches, never row-at-a-time."""
     from ..llmdata.multimodal import decode_image_features
 
-    t = load_tables(spark, sf_dir)
     feats = decode_image_features(
         ensure_parallelism(_media_frame(t)), fake=True
     )
@@ -927,7 +905,7 @@ def q_media_feature_extract(spark, sf_dir):
       AND t.i * 1000 <= d.n_chars * 10
     """,
 )
-def q_video_frame_grid(spark, sf_dir):
+def q_video_frame_grid(spark, t):
     """Video frame-sampling plumbing: per-video timestamp grid via
     native sequence()+explode (llmdata/multimodal.sample_frames) — the
     decode of each sampled frame would slot into the same mapInPandas
@@ -945,7 +923,6 @@ def q_video_frame_grid(spark, sf_dir):
     constant, instead of letting the oracle silently truncate."""
     from ..llmdata.multimodal import sample_frames
 
-    t = load_tables(spark, sf_dir)
     return sample_frames(_media_frame(t), every_ms=1000)
 
 
@@ -973,7 +950,7 @@ def q_video_frame_grid(spark, sf_dir):
     FROM pii
     """,
 )
-def q_doc_pii_redact(spark, sf_dir):
+def q_doc_pii_redact(spark, t):
     """PII redaction pass (llmdata/text.redact_pii): the corpus text is
     synthetic word-salad with no PII, so each doc is first salted with
     a deterministic email + phone (derived from doc_id/source) and the
@@ -982,7 +959,6 @@ def q_doc_pii_redact(spark, sf_dir):
     redaction counts. Map-side only — regexp codegen, no shuffle."""
     from ..llmdata.text import redact_pii
 
-    t = load_tables(spark, sf_dir)
     raw = F.concat(
         F.lit("contact "),
         F.col("source"),
@@ -1024,7 +1000,7 @@ def q_doc_pii_redact(spark, sf_dir):
     FROM cnt GROUP BY doc_id
     """,
 )
-def q_doc_repetition_ratio(spark, sf_dir):
+def q_doc_repetition_ratio(spark, t):
     """Gopher-style repetition signal: fraction of a document's word
     bigrams taken by its single most frequent bigram (high ratio =
     degenerate/repetitive text, a standard pretraining drop rule).
@@ -1036,7 +1012,6 @@ def q_doc_repetition_ratio(spark, sf_dir):
     reuses the same key prefix. The oracle's constant-bound
     ``range(1, 512)`` unfold is guarded by tests/test_oracle_bounds.py
     (fails loudly at 80% of the bound, before silent truncation)."""
-    t = load_tables(spark, sf_dir)
     toks = F.split(F.col("text"), " ")
     bigrams = F.zip_with(
         toks,
@@ -1084,7 +1059,7 @@ def q_doc_repetition_ratio(spark, sf_dir):
     GROUP BY c.doc_id
     """,
 )
-def q_doc_contamination_overlap(spark, sf_dir):
+def q_doc_contamination_overlap(spark, t):
     """Benchmark decontamination probe: for every candidate document,
     the number of distinct 5-gram shingles it shares with a held-out
     benchmark set (here: doc_id < 25 stands in for the eval corpus).
@@ -1098,7 +1073,6 @@ def q_doc_contamination_overlap(spark, sf_dir):
     tests/test_oracle_bounds.py (fails loudly at 80% of the bound)."""
     from ..llmdata.dedup import ngram_shingles
 
-    t = load_tables(spark, sf_dir)
     sh = ngram_shingles(t["documents"], "text", "doc_id", n=5)
     bench = sh.filter(F.col("doc_id") < 25).select("shingle").distinct()
     cand = sh.filter(F.col("doc_id") >= 25)
@@ -1147,7 +1121,7 @@ SEGMENT_TOKENS = 8  # CCNet-style "line" width for segment-level dedup
     GROUP BY s.doc_id
     """,
 )
-def q_doc_segment_dedup(spark, sf_dir):
+def q_doc_segment_dedup(spark, t):
     """CCNet-style segment-level dedup stats: split each document into
     consecutive 8-token segments, hash each segment, and report per
     document how many of its segments also appear in another document
@@ -1159,7 +1133,6 @@ def q_doc_segment_dedup(spark, sf_dir):
     map-side agg) and the per-doc rollup. Segment hashes travel as
     32-char md5 strings, never the text itself.
     """
-    t = load_tables(spark, sf_dir)
     d = ensure_parallelism(t["documents"]).select(
         "doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("ts")
     )
@@ -1213,7 +1186,7 @@ def q_doc_segment_dedup(spark, sf_dir):
     GROUP BY b.doc_id
     """,
 )
-def q_doc_bigram_lm_score(spark, sf_dir):
+def q_doc_bigram_lm_score(spark, t):
     """Perplexity-proxy quality scoring: train a word-bigram language
     model on the corpus itself (P(w2|w1) from global bigram counts)
     and score each document by its mean negative log2 probability —
@@ -1224,7 +1197,6 @@ def q_doc_bigram_lm_score(spark, sf_dir):
     frame (vocabulary-sized, partial-agg'd) and the conditional is a
     broadcast-joined lookup back onto the exploded bigram stream.
     """
-    t = load_tables(spark, sf_dir)
     d = ensure_parallelism(t["documents"]).select(
         "doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("ts")
     )
@@ -1271,14 +1243,13 @@ def q_doc_bigram_lm_score(spark, sf_dir):
     GROUP BY lang
     """,
 )
-def q_doc_clean_normalize(spark, sf_dir):
+def q_doc_clean_normalize(spark, t):
     """Text normalization pass (lowercase, strip non-alphanumerics,
     collapse whitespace) with per-language effect stats — the
     pre-tokenization cleanup stage of a training-data pipeline.
     Pure map-side codegen (regexp_replace chain); the only shuffle is
     the per-language rollup with a two-phase distinct count.
     """
-    t = load_tables(spark, sf_dir)
     norm = F.trim(
         F.regexp_replace(
             F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]", ""),
@@ -1321,14 +1292,13 @@ def q_doc_clean_normalize(spark, sf_dir):
     FROM h GROUP BY vec_hash
     """,
 )
-def q_emb_exact_dedup(spark, sf_dir):
+def q_emb_exact_dedup(spark, t):
     """Exact embedding dedup by quantized-grid hash (3-decimal lattice
     md5) under a replayed corpus — the vector-space twin of
     doc_exact_dedup. Quantizing to an integer lattice BEFORE hashing
     makes the hash byte-stable across engines and storage float
     widths; the shuffle carries 32-char hashes, never vectors.
     """
-    t = load_tables(spark, sf_dir)
     emb = ensure_parallelism(t["embeddings"]).select("vec_id", "embedding")
     replayed = emb.unionByName(
         emb.select((F.col("vec_id") + 1000000).alias("vec_id"), "embedding")
@@ -1378,7 +1348,7 @@ KMEANS_K = 8
     ORDER BY c.cluster_id
     """,
 )
-def q_emb_kmeans_assign(spark, sf_dir):
+def q_emb_kmeans_assign(spark, t):
     """One Lloyd iteration of k-means over the embedding table:
     assign every vector to its nearest of k seed centroids (L2,
     deterministic seed = lowest-id vectors, ties to lowest cluster),
@@ -1393,7 +1363,6 @@ def q_emb_kmeans_assign(spark, sf_dir):
     """
     from ..llmdata.similarity import nearest_seed_l2
 
-    t = load_tables(spark, sf_dir)
     e = ensure_parallelism(t["embeddings"]).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -1443,7 +1412,7 @@ def q_emb_kmeans_assign(spark, sf_dir):
     GROUP BY vec_id
     """,
 )
-def q_emb_int8_quantize(spark, sf_dir):
+def q_emb_int8_quantize(spark, t):
     """Symmetric int8 quantization of the embedding column (per-vector
     absmax scaling) with exact reconstruction error — the vector
     compression step before shipping embeddings to an ANN index or a
@@ -1451,7 +1420,6 @@ def q_emb_int8_quantize(spark, sf_dir):
     the group-by is only the oracle's cross-engine formulation; Spark
     computes the error inside one higher-order fold per row).
     """
-    t = load_tables(spark, sf_dir)
     e = ensure_parallelism(t["embeddings"]).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -1511,7 +1479,7 @@ PACK_CAPACITY = 512  # tokens per training sequence bin
     GROUP BY source, bin_id
     """,
 )
-def q_doc_sequence_pack(spark, sf_dir):
+def q_doc_sequence_pack(spark, t):
     """Training-sequence packing: assign documents (in stable doc_id
     order, shard-local per source) to ~512-token bins by cumulative
     token prefix — the sequence-packing step that turns a document
@@ -1525,7 +1493,6 @@ def q_doc_sequence_pack(spark, sf_dir):
     is exactly how packing runs in production — shard-local, one
     shuffle on source.
     """
-    t = load_tables(spark, sf_dir)
     toks = ensure_parallelism(t["documents"]).select(
         "doc_id",
         "source",
@@ -1584,7 +1551,7 @@ ENCODE_PREFIX = 16  # ids emitted per doc (output-size cap, not a scan cap)
     GROUP BY doc_id
     """,
 )
-def q_doc_vocab_encode(spark, sf_dir):
+def q_doc_vocab_encode(spark, t):
     """Vocabulary build + numericalization: rank the corpus's top-64
     words into a frequency vocabulary (deterministic alphabetical
     tie-break, id 0 = OOV) and encode every document as token ids —
@@ -1599,7 +1566,6 @@ def q_doc_vocab_encode(spark, sf_dir):
     (vocabulary-scale, not corpus-scale), so the unpartitioned window
     is bounded data.
     """
-    t = load_tables(spark, sf_dir)
     tok = (
         ensure_parallelism(t["documents"])
         .select(
@@ -1671,7 +1637,7 @@ def q_doc_vocab_encode(spark, sf_dir):
     GROUP BY doc_id
     """,
 )
-def q_audio_pcm_stats(spark, sf_dir):
+def q_audio_pcm_stats(spark, t):
     """REAL multimodal decode, end to end: the audio rows' binary
     payloads are decoded as 16-bit little-endian PCM inside an
     Arrow-batched mapInPandas (numpy frombuffer — no external media
@@ -1686,7 +1652,6 @@ def q_audio_pcm_stats(spark, sf_dir):
     filtered out, matching the oracle's UNNEST producing no rows."""
     from ..llmdata.multimodal import decode_pcm_features
 
-    t = load_tables(spark, sf_dir)
     audio = ensure_parallelism(
         _media_frame(t).filter(F.col("media_type") == "audio")
     )
@@ -1745,7 +1710,7 @@ def q_audio_pcm_stats(spark, sf_dir):
     WHERE bit_count(xor(fa.simhash, fb.simhash)) <= 2
     """,
 )
-def q_doc_simhash_near_dup(spark, sf_dir):
+def q_doc_simhash_near_dup(spark, t):
     """SimHash Hamming-radius near-dup search: pairs of documents
     whose 32-bit fingerprints differ in at most 2 bits. Pigeonhole
     banding (3 bit-groups for radius 2: any qualifying pair agrees
@@ -1761,7 +1726,6 @@ def q_doc_simhash_near_dup(spark, sf_dir):
     Production systems use 64 for the same reason."""
     from ..llmdata.dedup import simhash_near_duplicates
 
-    t = load_tables(spark, sf_dir)
     return simhash_near_duplicates(
         t["documents"], "text", "doc_id", bits=32, max_hamming=2
     )
@@ -1797,7 +1761,7 @@ MIX_DEFAULT_256 = 26
     FROM d GROUP BY source
     """,
 )
-def q_doc_source_mixing(spark, sf_dir):
+def q_doc_source_mixing(spark, t):
     """Dataset mixing: per-source keep rates (a fixed mixture-weight
     table, the Pile-style recipe) applied with a DETERMINISTIC
     md5-derived uniform — stable across runs, engines, partitionings,
@@ -1805,7 +1769,6 @@ def q_doc_source_mixing(spark, sf_dir):
     the keep decision is a projection, the per-source audit rollup is
     the only shuffle. Upsampling (>1x weights) would repeat the same
     construction with an epoch counter salt in the hash input."""
-    t = load_tables(spark, sf_dir)
     u = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2), 16, 10)
         .cast("long")
@@ -1846,7 +1809,7 @@ def _consensus_oracle() -> str:
 
 
 @query("doc_near_dup_consensus", oracle=_consensus_oracle())
-def q_doc_near_dup_consensus(spark, sf_dir):
+def q_doc_near_dup_consensus(spark, t):
     """Ensemble near-dup: the MinHash text signal and the embedding
     cosine signal fused over aligned doc/vec ids — production dedup
     pipelines ensemble lexical and semantic detectors exactly like
@@ -1858,7 +1821,6 @@ def q_doc_near_dup_consensus(spark, sf_dir):
     from ..llmdata.dedup import minhash_near_duplicates
     from ..llmdata.similarity import cosine_near_duplicates, hyperplanes
 
-    t = load_tables(spark, sf_dir)
     mh = minhash_near_duplicates(
         t["documents"], "text", "doc_id",
         n=SHINGLE_N, num_hashes=NUM_HASHES,

@@ -23,7 +23,6 @@ from ..functions.money import O_CENTS, o_cents
 from ..operators.partitioning import ensure_parallelism
 from ..operators.pinning import pin
 from .corpus import ORACLES, QUERIES, query  # noqa: F401
-from .tables import load_tables
 
 
 # --------------------------------------------------------------------------
@@ -31,7 +30,7 @@ from .tables import load_tables
 # --------------------------------------------------------------------------
 
 @query("doc_dedup_family_agreement_survivors", oracle=None)  # composed below
-def q_doc_dedup_family_agreement_survivors(spark, sf_dir):
+def q_doc_dedup_family_agreement_survivors(spark, t):
     """The scale-safe form of doc_dedup_family_agreement: MinHash-LSH
     vs SimHash pair-set agreement measured over the EXACT-DEDUP
     SURVIVOR corpus (one keeper per distinct text, min doc_id — the
@@ -84,7 +83,6 @@ def q_doc_dedup_family_agreement_survivors(spark, sf_dir):
     )
     from .llm_queries import NUM_HASHES, ROWS_PER_BAND, SHINGLE_N
 
-    t = load_tables(spark, sf_dir)
     docs = t["documents"]
     # keeper selection in ONE aggregation: min doc_id per distinct
     # text, and MIN(text) recovers the text itself (every row in a
@@ -233,7 +231,7 @@ ORACLES["doc_dedup_family_agreement_survivors"] = _survivor_oracle()
             FROM ols) AS ols_slope
     """,
 )
-def q_monthly_revenue_theilsen_trend(spark, sf_dir):
+def q_monthly_revenue_theilsen_trend(spark, t):
     """Theil-Sen robust trend of monthly revenue: the MEDIAN of all
     pairwise month-to-month slopes (cents/month), with the pairwise
     slope IQR as its spread and the OLS slope alongside. A single
@@ -247,7 +245,6 @@ def q_monthly_revenue_theilsen_trend(spark, sf_dir):
     (~84 rows at any SF — the pair join is ~3.5k rows, broadcast);
     OLS moments accumulate in DECIMAL(38,0). Quadratic only in
     months, never in data."""
-    t = load_tables(spark, sf_dir)
     d = F.col("o_orderdate").cast("date")
     m = t["orders"].groupBy(
         (F.year(d) * 12 + F.month(d)).cast("long").alias("idx")
@@ -336,7 +333,7 @@ def q_monthly_revenue_theilsen_trend(spark, sf_dir):
     FROM s, ties, n
     """,
 )
-def q_daily_revenue_mann_kendall(spark, sf_dir):
+def q_daily_revenue_mann_kendall(spark, t):
     """Mann-Kendall trend test on daily revenue: S = the number of
     later-day > earlier-day comparisons minus the reverse, its
     tie-corrected variance, the continuity-corrected z, and Kendall's
@@ -350,7 +347,6 @@ def q_daily_revenue_mann_kendall(spark, sf_dir):
     any SF; the pair join is ~2.9M comparisons of two longs,
     broadcast — bounded by the calendar, not the data). S and the
     tie term are exact integers."""
-    t = load_tables(spark, sf_dir)
     d = t["orders"].groupBy(
         F.col("o_orderdate").cast("date").alias("day")
     ).agg(F.sum(o_cents()).alias("cents"))
@@ -475,7 +471,7 @@ def _kw_oracle() -> str:
 
 
 @query("order_value_priority_kruskal_wallis", oracle=_kw_oracle())
-def q_order_value_priority_kruskal_wallis(spark, sf_dir):
+def q_order_value_priority_kruskal_wallis(spark, t):
     """Kruskal-Wallis H test: do the five order priorities draw their
     order values from the same distribution? The k-sample extension of
     order_value_weekend_mannwhitney (rank-based, no normality
@@ -494,7 +490,6 @@ def q_order_value_priority_kruskal_wallis(spark, sf_dir):
     (float-sum determinism lever)."""
     from ..operators.cumulative import running_sum_ranged
 
-    t = load_tables(spark, sf_dir)
     base = t["orders"].select(
         F.col("o_orderpriority").alias("pri"), o_cents().alias("cents")
     )
@@ -592,7 +587,7 @@ def q_order_value_priority_kruskal_wallis(spark, sf_dir):
     ORDER BY b.source
     """,
 )
-def q_doc_dedup_source_mixture_shift(spark, sf_dir):
+def q_doc_dedup_source_mixture_shift(spark, t):
     """How exact dedup RESHAPES the training mixture: per-source corpus
     share before vs after keeper selection (min doc_id per distinct
     text), the basis-point delta, and each source's PSI contribution.
@@ -606,7 +601,6 @@ def q_doc_dedup_source_mixture_shift(spark, sf_dir):
     name in both engines; no keeper frame, no join back), then two
     bounded source-grain rollups (20 sources) and broadcast totals;
     all shares are ratios of exact BIGINTs."""
-    t = load_tables(spark, sf_dir)
     docs = t["documents"]
     before = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n_before"))
     after = (
@@ -682,7 +676,7 @@ def q_doc_dedup_source_mixture_shift(spark, sf_dir):
     FROM agg
     """,
 )
-def q_customer_order_value_lag1_autocorr(spark, sf_dir):
+def q_customer_order_value_lag1_autocorr(spark, t):
     """Do big orders follow big orders? Pooled Pearson correlation
     between each order's value and the SAME customer's previous order
     value (lag-1 within customer, pooled across customers). Positive r
@@ -696,7 +690,6 @@ def q_customer_order_value_lag1_autocorr(spark, sf_dir):
     aggregate with all five moments in DECIMAL(38,0) (cents-squared
     sums pass 2^63 near sf 3 — the ADVICE-r7 lever applied at
     birth); doubles only in the final 1-row r projection."""
-    t = load_tables(spark, sf_dir)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     seq = t["orders"].select(
         "o_custkey",
@@ -781,7 +774,7 @@ from .round9c_queries import _KNN_SAMPLE_MOD  # noqa: E402
     ORDER BY occurrences
     """,
 )
-def q_emb_knn_hubness_histogram(spark, sf_dir):
+def q_emb_knn_hubness_histogram(spark, t):
     """k-occurrence (hubness) histogram of the k=5 cosine kNN graph on
     the deterministic quarter sample: how many points appear in 0, 1,
     2, ... other points' neighbor lists (capped at 12+). A heavy
@@ -800,7 +793,6 @@ def q_emb_knn_hubness_histogram(spark, sf_dir):
     scan."""
     from ..llmdata.similarity import brute_force_topk
 
-    t = load_tables(spark, sf_dir)
     sample = t["embeddings"].filter(F.col("vec_id") % _KNN_SAMPLE_MOD == 0)
     edges = brute_force_topk(sample, sample, k=5).select(
         "query_id", "neighbor_id"

@@ -28,7 +28,6 @@ from pyspark.sql import Window
 from ..functions.money import L_REV_CENTS, O_CENTS, l_rev_cents, o_cents
 from ..operators.partitioning import ensure_parallelism
 from .corpus import ORACLES, QUERIES, query  # noqa: F401
-from .tables import load_tables
 
 
 # --------------------------------------------------------------------------
@@ -73,7 +72,7 @@ from .tables import load_tables
     FROM agg
     """,
 )
-def q_daily_revenue_runs_test(spark, sf_dir):
+def q_daily_revenue_runs_test(spark, t):
     """Wald-Wolfowitz runs test: is the daily-revenue series RANDOM
     around its median, or does it cluster into above/below streaks?
     Days above the median are 1, below are 0 (median days dropped),
@@ -88,7 +87,6 @@ def q_daily_revenue_runs_test(spark, sf_dir):
     sign LAG chain, and run count all live on the CALENDAR-BOUNDED
     day frame (~2.4k rows at any SF — allowlisted bounded
     unpartitioned window, like daily_revenue_autocorr)."""
-    t = load_tables(spark, sf_dir)
     d = t["orders"].groupBy(
         F.col("o_orderdate").cast("date").alias("day")
     ).agg(F.sum(o_cents()).alias("cents"))
@@ -168,7 +166,7 @@ def q_daily_revenue_runs_test(spark, sf_dir):
     FROM agg
     """,
 )
-def q_order_linecount_dispersion(spark, sf_dir):
+def q_order_linecount_dispersion(spark, t):
     """Poisson overdispersion diagnostic for order depth: the
     variance-to-mean ratio of lines-per-order (VMR = 1 under Poisson
     arrivals) and the Wilson-Hilferty normal approximation of the
@@ -181,7 +179,6 @@ def q_order_linecount_dispersion(spark, sf_dir):
     Scale shape: one order-grain count rollup, one scalar moment
     aggregate with DECIMAL(38,0) sum/sum-of-squares, all quotients in
     a fixed-order 1-row projection."""
-    t = load_tables(spark, sf_dir)
     lc = t["lineitem"].groupBy("l_orderkey").agg(
         F.count(F.lit(1)).alias("c")
     )
@@ -230,7 +227,7 @@ def q_order_linecount_dispersion(spark, sf_dir):
     FROM d GROUP BY lang ORDER BY lang
     """,
 )
-def q_doc_bytes_per_token_by_lang(spark, sf_dir):
+def q_doc_bytes_per_token_by_lang(spark, t):
     """Tokenizer-efficiency read: characters per whitespace token by
     language — the compression-rate number that prices a language's
     context-window cost and flags scripts where whitespace
@@ -242,7 +239,6 @@ def q_doc_bytes_per_token_by_lang(spark, sf_dir):
     Scale shape: one map-side projection, one bounded lang-grain
     rollup; every ratio divides pooled exact BIGINTs (never averaged
     per-row floats — the pooled-ratio determinism lever)."""
-    t = load_tables(spark, sf_dir)
     d = t["documents"].select(
         "lang",
         "n_chars",
@@ -313,7 +309,7 @@ def _entropy_oracle() -> str:
 
 
 @query("doc_char_ngram_entropy_curve", oracle=_entropy_oracle())
-def q_doc_char_ngram_entropy_curve(spark, sf_dir):
+def q_doc_char_ngram_entropy_curve(spark, t):
     """Character-level entropy-rate curve: corpus Shannon entropy of
     n-grams for n = 1..4 and the conditional entropy H_n - H_(n-1) —
     the bits-per-character estimate as context grows. The curve's
@@ -332,7 +328,6 @@ def q_doc_char_ngram_entropy_curve(spark, sf_dir):
     bounded 4-row frame. The oracle's constant-bound ``range(1,
     1024)`` unfold is guarded by tests/test_oracle_bounds.py (fails
     loudly at 80% of the bound, before silent truncation)."""
-    t = load_tables(spark, sf_dir)
     docs = ensure_parallelism(t["documents"]).select(
         F.lower(F.trim(F.col("text"))).alias("nt")
     )
@@ -427,7 +422,7 @@ def _gap_sweep_oracle() -> str:
 
 
 @query("session_gap_threshold_sweep", oracle=_gap_sweep_oracle())
-def q_session_gap_threshold_sweep(spark, sf_dir):
+def q_session_gap_threshold_sweep(spark, t):
     """Sessionization-parameter sensitivity: how many sessions (and
     how many events per session) the corpus yields at 15/30/60-minute
     inactivity gaps. The session count at threshold T is
@@ -442,7 +437,6 @@ def q_session_gap_threshold_sweep(spark, sf_dir):
     per threshold, then a 3-row constant unpivot. Gap comparisons use
     INTERVAL arithmetic on microsecond timestamps (never epoch-second
     casts — the events.ts lesson)."""
-    t = load_tables(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = t["events"].select(
         "user_id", "ts", F.lag("ts").over(w).alias("prev")
@@ -523,7 +517,7 @@ def q_session_gap_threshold_sweep(spark, sf_dir):
     FROM agg
     """,
 )
-def q_supplier_part_degree_assortativity(spark, sf_dir):
+def q_supplier_part_degree_assortativity(spark, t):
     """Degree assortativity of the supplier-part bipartite graph:
     Pearson correlation between a supplier's part-portfolio size and
     the supplier-counts of the parts it carries, over distinct
@@ -536,7 +530,6 @@ def q_supplier_part_degree_assortativity(spark, sf_dir):
     Scale shape: one distinct-edge rollup, two degree rollups, two
     keyed joins at edge grain (AQE broadcasts the smaller degree
     frame), one scalar moment aggregate in DECIMAL(38,0)."""
-    t = load_tables(spark, sf_dir)
     e = t["lineitem"].select(
         F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")
     ).distinct()
@@ -618,7 +611,7 @@ def q_supplier_part_degree_assortativity(spark, sf_dir):
     FROM b GROUP BY band_lo ORDER BY band_lo
     """,
 )
-def q_customer_order_dow_habit_strength(spark, sf_dir):
+def q_customer_order_dow_habit_strength(spark, t):
     """Do customers order on a habitual weekday? For each customer
     with >= 2 orders, the share of their orders falling on their OWN
     most-frequent weekday, pooled within order-count bands (2-3, 4-5,
@@ -635,7 +628,6 @@ def q_customer_order_dow_habit_strength(spark, sf_dir):
     Scale shape: one (customer, dow) rollup, one customer-grain
     max/total rollup sharing the key prefix, one bounded 4-row band
     rollup; the pooled share divides exact BIGINTs."""
-    t = load_tables(spark, sf_dir)
     dow = (
         F.datediff(
             F.col("o_orderdate").cast("date"), F.lit("1970-01-05").cast("date")
@@ -718,7 +710,7 @@ def q_customer_order_dow_habit_strength(spark, sf_dir):
     FROM n, mi, hq, hd
     """,
 )
-def q_quantity_discount_mutual_information(spark, sf_dir):
+def q_quantity_discount_mutual_information(spark, t):
     """Mutual information between line quantity (integer units) and
     discount tier (whole percent): how many bits knowing the discount
     tells you about the quantity. MI = 0 means discounting is
@@ -733,7 +725,6 @@ def q_quantity_discount_mutual_information(spark, sf_dir):
     cell frame; every p*log2 term is integerized per cell
     (ROUND(x*1e9) BIGINT — the inertia lever) so the sums are exact
     integer aggregations."""
-    t = load_tables(spark, sf_dir)
     cells = t["lineitem"].groupBy(
         F.round(F.col("l_quantity")).cast("int").alias("q"),
         F.round(F.col("l_discount") * 100).cast("int").alias("d"),
@@ -843,7 +834,7 @@ def _ksweep_oracle() -> str:
 
 
 @query("emb_kmeans_k_sweep_inertia", oracle=_ksweep_oracle())
-def q_emb_kmeans_k_sweep_inertia(spark, sf_dir):
+def q_emb_kmeans_k_sweep_inertia(spark, t):
     """The elbow curve, properly: total within-cluster inertia and
     worst cluster share for k = 2/4/8/16 deterministic seedings
     (first-k seeds, the emb_kmeans_assign convention) in one query.
@@ -861,7 +852,6 @@ def q_emb_kmeans_k_sweep_inertia(spark, sf_dir):
     emb_kmeans_inertia parity lever)."""
     from ..llmdata.similarity import nearest_seed_l2
 
-    t = load_tables(spark, sf_dir)
     e = ensure_parallelism(t["embeddings"]).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -963,7 +953,7 @@ _LATE_DAYS = 90
     FROM f
     """,
 )
-def q_late_shipment_value_welch_ttest(spark, sf_dir):
+def q_late_shipment_value_welch_ttest(spark, t):
     """Welch two-sample t test: do lines shipped LATE (> 90 days
     after the order date) carry different revenue than on-time lines?
     Unequal-variance t statistic and Welch-Satterthwaite degrees of
@@ -977,7 +967,6 @@ def q_late_shipment_value_welch_ttest(spark, sf_dir):
     groups' n/sum/sum-of-squares into fixed columns (DECIMAL(38,0) —
     cents-squared sums; no per-group float averaging), and a
     fixed-order 1-row projection for t and df."""
-    t = load_tables(spark, sf_dir)
     j = t["lineitem"].join(
         t["orders"],
         t["lineitem"]["l_orderkey"] == t["orders"]["o_orderkey"],
@@ -1097,7 +1086,7 @@ def q_late_shipment_value_welch_ttest(spark, sf_dir):
     FROM h ORDER BY pos_class
     """,
 )
-def q_doc_token_position_entropy(spark, sf_dir):
+def q_doc_token_position_entropy(spark, t):
     """Positional template detector: vocabulary entropy of the first
     10 tokens (head), last 10 (tail), and everything between (body).
     Templated corpora — boilerplate headers, footers, navigation —
@@ -1118,7 +1107,6 @@ def q_doc_token_position_entropy(spark, sf_dir):
     bounded 3-row entropy rollup where each token row contributes an
     exact ROUND(c*log2(c)*1e6) BIGINT (the integerization lever — no
     float merge-order sensitivity)."""
-    t = load_tables(spark, sf_dir)
     toks = (
         ensure_parallelism(t["documents"])
         .filter(F.col("text").isNotNull())

@@ -26,7 +26,6 @@ from ..functions.money import O_CENTS, o_cents
 from ..operators.cumulative import running_sum_ranged
 from ..operators.pinning import pin
 from .corpus import ORACLES, QUERIES, query  # noqa: F401
-from .tables import load_tables
 
 
 # Exact changepoint argmax (ADVICE-r10): the split objective
@@ -117,7 +116,7 @@ _BS_SIG = 12
     FROM best
     """,
 )
-def q_daily_revenue_best_split(spark, sf_dir):
+def q_daily_revenue_best_split(spark, t):
     """Binary-segmentation changepoint: the single day boundary that
     best splits the daily-revenue series into two constant-mean
     segments (maximum between-segment sum of squares), with the
@@ -142,7 +141,6 @@ def q_daily_revenue_best_split(spark, sf_dir):
     engines. The argmax itself is a broadcast anti-join of the
     bounded candidate frame against itself (~2.4k x 2.4k integer
     comparisons, calendar-bounded forever)."""
-    t = load_tables(spark, sf_dir)
     dec = "decimal(38,0)"
     d = t["orders"].groupBy(
         F.col("o_orderdate").cast("date").alias("day")
@@ -263,7 +261,7 @@ def q_daily_revenue_best_split(spark, sf_dir):
     FROM m GROUP BY q ORDER BY quarter_idx
     """,
 )
-def q_part_price_laspeyres_index(spark, sf_dir):
+def q_part_price_laspeyres_index(spark, t):
     """Laspeyres price index by quarter: the cost of the BASE
     quarter's basket (base-quarter quantities at each quarter's
     average part price) relative to its base cost, over parts traded
@@ -277,7 +275,6 @@ def q_part_price_laspeyres_index(spark, sf_dir):
     grain (AQE broadcasts it); each part's basket term is integerized
     (ROUND(price*q0*1e3) BIGINT) so the quarterly index is a ratio of
     exact integer sums — no float merge-order sensitivity."""
-    t = load_tables(spark, sf_dir)
     d = F.col("l_shipdate").cast("date")
     pq = t["lineitem"].groupBy(
         "l_partkey",
@@ -393,7 +390,7 @@ _LR_SEG = "BUILDING"
     FROM terms
     """,
 )
-def q_customer_churn_logrank_by_segment(spark, sf_dir):
+def q_customer_churn_logrank_by_segment(spark, t):
     """Log-rank test: does the 'BUILDING' market segment (_LR_SEG)
     repurchase on a different clock than everyone else? Same censored
     days-to-next-order durations as customer_survival_km, split into
@@ -409,7 +406,6 @@ def q_customer_churn_logrank_by_segment(spark, sf_dir):
     at-risk windows; each day's O-E and variance terms are
     integerized (ROUND(x*1e9) BIGINT) so the final sums are exact
     integer aggregations."""
-    t = load_tables(spark, sf_dir)
     anchor = t["orders"].agg(F.max(F.to_date("o_orderdate")).alias("ad"))
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     seq = (
@@ -510,7 +506,7 @@ def q_customer_churn_logrank_by_segment(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 @query("doc_quality_dup_auc", oracle=None)  # composed below
-def q_doc_quality_dup_auc(spark, sf_dir):
+def q_doc_quality_dup_auc(spark, t):
     """Does the quality score actually SEPARATE template docs from
     unique ones? AUC of quality_score as a classifier of
     prefix-duplicated (32-char-prefix multiplicity >= 2, the
@@ -527,7 +523,6 @@ def q_doc_quality_dup_auc(spark, sf_dir):
     order_value_weekend_mannwhitney machinery pointed at a model
     metric); products pool in DECIMAL(38,0); no per-pair work
     anywhere."""
-    t = load_tables(spark, sf_dir)
     cls = (
         t["documents"]
         .filter(F.col("text").isNotNull() & (F.length("text") >= 32))
@@ -538,7 +533,7 @@ def q_doc_quality_dup_auc(spark, sf_dir):
         "doc_id",
         F.when(F.col("copies") >= 2, 1).otherwise(0).alias("dup"),
     )
-    scores = QUERIES["doc_quality_scores"](spark, sf_dir).select(
+    scores = QUERIES["doc_quality_scores"](spark, t.sf_dir).select(
         "doc_id", "quality_score"
     )
     v = (
@@ -661,7 +656,7 @@ ORACLES["doc_quality_dup_auc"] = f"""
     FROM dev
     """,
 )
-def q_repeat_gap_ks_exponential(spark, sf_dir):
+def q_repeat_gap_ks_exponential(spark, t):
     """Kolmogorov-Smirnov test of the memoryless-repurchase
     hypothesis: are days-between-consecutive-orders exponentially
     distributed (rate fitted from the sample mean)? D is the largest
@@ -677,7 +672,6 @@ def q_repeat_gap_ks_exponential(spark, sf_dir):
     grain rollup, ``running_sum_ranged`` for the empirical CDF (no
     one-task window), exact BIGINT counts and DECIMAL sum for the
     mean; the max deviation is an order-insensitive MAX."""
-    t = load_tables(spark, sf_dir)
     dec = "decimal(38,0)"
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     seq = t["orders"].select(

@@ -28,7 +28,6 @@ from ..functions.money import O_CENTS, o_cents
 from ..operators.partitioning import ensure_parallelism
 from ..operators.pinning import pin
 from .corpus import ORACLES, QUERIES, query  # noqa: F401
-from .tables import load_tables
 
 
 # --------------------------------------------------------------------------
@@ -76,7 +75,7 @@ from .tables import load_tables
     FROM s
     """,
 )
-def q_daily_revenue_ordercount_spearman(spark, sf_dir):
+def q_daily_revenue_ordercount_spearman(spark, t):
     """Spearman rank correlation between a day's revenue and its
     order count — the monotone-association number behind the
     dashboard's twin trend lines (app.py:281-284): Pearson
@@ -90,7 +89,6 @@ def q_daily_revenue_ordercount_spearman(spark, sf_dir):
     Scale shape: ONE day-grain rollup over the fact; ranks, moments,
     and the correlation all run on the CALENDAR-BOUNDED day frame
     (~2.4k rows — allowlisted bounded windows)."""
-    t = load_tables(spark, sf_dir)
     dec = "decimal(38,0)"
     d = t["orders"].groupBy(
         F.col("o_orderdate").cast("date").alias("day")
@@ -165,7 +163,7 @@ def q_daily_revenue_ordercount_spearman(spark, sf_dir):
     FROM pairs
     """,
 )
-def q_order_priority_value_gamma(spark, sf_dir):
+def q_order_priority_value_gamma(spark, t):
     """Goodman-Kruskal gamma between order priority (ordinal 1-5) and
     order-value magnitude band (digit count of cents — the exact
     banding precedent from customer_peak90d_spend_digits): do urgent
@@ -178,7 +176,6 @@ def q_order_priority_value_gamma(spark, sf_dir):
     then a 25x25 broadcast self-join of the cell frame; pair counts
     accumulate in DECIMAL(38,0) (cell products at 100 TB exceed
     BIGINT), one double division at the end."""
-    t = load_tables(spark, sf_dir)
     dec = "decimal(38,0)"
     # pinned: the ~25-row cell frame feeds both sides of the pair
     # join — one fact aggregation, not two
@@ -275,7 +272,7 @@ _POIS_T = (367879, 735759, 919699, 981012, 996340)
     FROM ci
     """,
 )
-def q_orders_poisson_bootstrap_ci(spark, sf_dir):
+def q_orders_poisson_bootstrap_ci(spark, t):
     """95% Poisson-bootstrap confidence interval for the mean order
     value — the uncertainty band the dashboard's headline KPI
     (app.py:165-170 metrics row) shows as a bare point estimate. The
@@ -290,7 +287,6 @@ def q_orders_poisson_bootstrap_ci(spark, sf_dir):
     inside the scan stage), ONE shuffle at replicate grain (64
     groups, weighted sums in DECIMAL(38,0)), and the quantile runs
     on the bounded 64-row replicate frame."""
-    t = load_tables(spark, sf_dir)
     dec = "decimal(38,0)"
     u = (
         (F.col("o_orderkey") % 1000003) * F.lit(2654435761)
@@ -390,7 +386,7 @@ _PERIODS = (7, 14, 30, 91, 365)
     FROM agg ORDER BY period_days
     """,
 )
-def q_daily_revenue_periodogram(spark, sf_dir):
+def q_daily_revenue_periodogram(spark, t):
     """Single-frequency DFT power of the daily-revenue series at the
     calendar periods that matter (week, fortnight, month, quarter,
     year): amplitude_share = 2|X(f)|/sum(x) — how much of total
@@ -406,7 +402,6 @@ def q_daily_revenue_periodogram(spark, sf_dir):
     (ROUND(cents*cos) BIGINT — cents magnitudes make the trig ULP
     harmless) and accumulated in DECIMAL(38,0), so the power is a
     function of exact integer sums."""
-    t = load_tables(spark, sf_dir)
     dec = "decimal(38,0)"
     d = t["orders"].groupBy(
         F.col("o_orderdate").cast("date").alias("day")
@@ -477,7 +472,7 @@ def q_daily_revenue_periodogram(spark, sf_dir):
     FROM n, chi, dims
     """,
 )
-def q_quantity_discount_cramers_v(spark, sf_dir):
+def q_quantity_discount_cramers_v(spark, t):
     """Cramér's V for the (quantity, discount) contingency grid — the
     [0,1]-normalized chi-square effect size that makes the dependence
     quantity_discount_mutual_information measures in bits comparable
@@ -493,7 +488,6 @@ def q_quantity_discount_cramers_v(spark, sf_dir):
     contributes its expected mass, which this data's dense bounded
     grid makes immaterial and IDENTICAL on both engines (same cells,
     same marginals)."""
-    t = load_tables(spark, sf_dir)
     # pinned: the bounded cell frame feeds marginals, total, and the
     # chi sum — ONE fact aggregation instead of four
     cells = pin(
@@ -614,7 +608,7 @@ def _markov_oracle() -> str:
 
 
 @query("event_markov_stationary", oracle=_markov_oracle())
-def q_event_markov_stationary(spark, sf_dir):
+def q_event_markov_stationary(spark, t):
     """Stationary distribution of the user-journey event-type Markov
     chain via 8 unrolled power iterations — where traffic SETTLES if
     the observed transition behavior persists, vs where it currently
@@ -643,7 +637,6 @@ def q_event_markov_stationary(spark, sf_dir):
     key-partitioned by user); everything after runs on the ~k^2-row
     transition frame (k = event types, ~5) — the 8 iterations are
     joins of broadcast 5-row frames, no driver collect."""
-    t = load_tables(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pr = t["events"].select(
         F.col("event_type").alias("src"),
@@ -754,7 +747,7 @@ def q_event_markov_stationary(spark, sf_dir):
     FROM m
     """,
 )
-def q_emb_triplet_margin_stats(spark, sf_dir):
+def q_emb_triplet_margin_stats(spark, t):
     """Metric-learning triplet diagnostics: for deterministic
     (anchor, positive, negative) triplets — anchor = every 4th
     vector, positive = its next same-label neighbor by id, negative =
@@ -776,7 +769,6 @@ def q_emb_triplet_margin_stats(spark, sf_dir):
     joined frame."""
     from ..llmdata.similarity import cosine
 
-    t = load_tables(spark, sf_dir)
     e = ensure_parallelism(t["embeddings"]).select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -873,7 +865,7 @@ def q_emb_triplet_margin_stats(spark, sf_dir):
     FROM terms
     """,
 )
-def q_supplier_graph_nation_modularity(spark, sf_dir):
+def q_supplier_graph_nation_modularity(spark, t):
     """Newman modularity of the NATION partition over the
     shared-part supplier graph (suppliers adjacent when they ship
     the same part): Q = sum_c [m_cc/m - (d_c/2m)^2]. Positive Q =
@@ -889,7 +881,6 @@ def q_supplier_graph_nation_modularity(spark, sf_dir):
     within-community counts are keyed aggregations; the Q terms are
     per-nation doubles from exact integer counts, e9-integerized
     before the final sum."""
-    t = load_tables(spark, sf_dir)
     # pinned: both sides of the part-keyed self-join read ONE
     # materialization of the distinct (supplier, part) frame — one
     # fact scan instead of two
@@ -1009,7 +1000,7 @@ _JS_TERM = (
     FROM terms
     """,
 )
-def q_doc_train_test_js_divergence(spark, sf_dir):
+def q_doc_train_test_js_divergence(spark, t):
     """Jensen-Shannon divergence between the train split's and the
     test split's unigram distributions (doc_id % 10 < 8 — the
     deterministic 80/20 rule of doc_train_split). The SYMMETRIC,
@@ -1026,7 +1017,6 @@ def q_doc_train_test_js_divergence(spark, sf_dir):
     counts, e9-integerized before the final integer sum."""
     from ..llmdata.text import tokens_col
 
-    t = load_tables(spark, sf_dir)
     toks = ensure_parallelism(t["documents"]).select(
         F.when(F.col("doc_id") % 10 < 8, 1).otherwise(0).alias("is_train"),
         F.explode(tokens_col("text")).alias("tok"),
@@ -1095,7 +1085,7 @@ def q_doc_train_test_js_divergence(spark, sf_dir):
     FROM a ORDER BY event_type
     """,
 )
-def q_event_hour_circular_stats(spark, sf_dir):
+def q_event_hour_circular_stats(spark, t):
     """Circular statistics of each event type's time of day: the mean
     DIRECTION (peak hour on the 24h clock) and the resultant length R
     (1 = all events at one instant, 0 = uniform around the clock).
@@ -1112,7 +1102,6 @@ def q_event_hour_circular_stats(spark, sf_dir):
 
     Scale shape: one map-side projection + one (event_type)
     aggregation with map-side combine — nothing else."""
-    t = load_tables(spark, sf_dir)
     theta = (
         F.lit(2.0)
         * 3.141592653589793

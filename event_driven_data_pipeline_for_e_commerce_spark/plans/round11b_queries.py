@@ -28,7 +28,6 @@ from ..functions.money import O_CENTS, o_cents
 from ..operators.partitioning import ensure_parallelism
 from ..operators.pinning import pin
 from .corpus import ORACLES, QUERIES, query  # noqa: F401
-from .tables import load_tables
 
 
 # --------------------------------------------------------------------------
@@ -117,7 +116,7 @@ def _hurst_pivot(col_expr: str) -> str:
     FROM piv
     """,
 )
-def q_daily_revenue_hurst_rs(spark, sf_dir):
+def q_daily_revenue_hurst_rs(spark, t):
     """Rescaled-range Hurst exponent of the daily-revenue series:
     slope of ln(mean R/S) against ln(block size) over block sizes
     8..128. H ~ 0.5 = no long memory; H > 0.5 = persistent streaks
@@ -135,7 +134,6 @@ def q_daily_revenue_hurst_rs(spark, sf_dir):
     unfold, per-block windows (PARTITIONED by block-size and block),
     and the regression all run on the CALENDAR-BOUNDED day frame.
     The only unpartitioned window is the day indexer (allowlisted)."""
-    t = load_tables(spark, sf_dir)
     dec = "decimal(38,0)"
     d = t["orders"].groupBy(
         F.col("o_orderdate").cast("date").alias("day")
@@ -293,7 +291,7 @@ def q_daily_revenue_hurst_rs(spark, sf_dir):
     FROM fit
     """,
 )
-def q_repeat_gap_weibull_fit(spark, sf_dir):
+def q_repeat_gap_weibull_fit(spark, t):
     """Weibull fit of customer repeat-purchase gaps by the standard
     log-log rank regression (grouped Weibull plot: one point per
     distinct gap length at its mean-rank plotting position
@@ -312,7 +310,6 @@ def q_repeat_gap_weibull_fit(spark, sf_dir):
     Scale shape: one key-partitioned LEAD over the fact, one gap
     aggregation, then everything runs on the BOUNDED gap-value grain
     (~2.5k distinct day-gaps; the cumulative window is allowlisted)."""
-    t = load_tables(spark, sf_dir)
     dec = "decimal(38,0)"
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     seq = t["orders"].select(
@@ -427,7 +424,7 @@ _ID2NN_SAMPLE_MOD = 4
     FROM mu
     """,
 )
-def q_emb_intrinsic_dimension_2nn(spark, sf_dir):
+def q_emb_intrinsic_dimension_2nn(spark, t):
     """Two-NN intrinsic-dimension estimate (Facco et al. 2017): for
     each sampled vector, mu = r2/r1 (its two nearest-neighbor
     distances); the manifold dimension MLE is ID = n / sum(ln mu).
@@ -452,7 +449,6 @@ def q_emb_intrinsic_dimension_2nn(spark, sf_dir):
     production path); pair generation is a broadcast nested-loop of
     the bounded sample against itself; the 2-NN rank is partitioned
     by anchor."""
-    t = load_tables(spark, sf_dir)
     # pinned: the bounded sample feeds both join sides and the
     # n_sample output — ONE scan of the embeddings
     s = pin(
@@ -587,7 +583,7 @@ def _lb_num_rows() -> str:
     FROM terms
     """,
 )
-def q_daily_revenue_ljung_box(spark, sf_dir):
+def q_daily_revenue_ljung_box(spark, t):
     """Ljung-Box portmanteau test on the daily-revenue series:
     Q = n(n+2) * sum_k rho_k^2/(n-k) over lags 1..14 — is there ANY
     linear autocorrelation structure left? daily_revenue_autocorr
@@ -604,7 +600,6 @@ def q_daily_revenue_ljung_box(spark, sf_dir):
     Scale shape: ONE day-grain rollup over the fact; the 14 LEAD
     windows, the moment sums, and the statistic all run on the
     CALENDAR-BOUNDED day frame (allowlisted)."""
-    t = load_tables(spark, sf_dir)
     dec = "decimal(38,0)"
     d = t["orders"].groupBy(
         F.col("o_orderdate").cast("date").alias("day")

@@ -40,7 +40,6 @@ from ..llmdata.text import tokens_col
 from ..operators.partitioning import ensure_parallelism
 from ..operators.pinning import pin
 from .corpus import ORACLES, QUERIES, query  # noqa: F401
-from .tables import load_tables
 
 
 # --------------------------------------------------------------------------
@@ -74,7 +73,7 @@ from .tables import load_tables
     FROM tf GROUP BY source ORDER BY source
     """,
 )
-def q_doc_vocab_chao1_richness(spark, sf_dir):
+def q_doc_vocab_chao1_richness(spark, t):
     """Unseen-species vocabulary estimation per source: the
     bias-corrected Chao1 lower bound on TOTAL vocabulary size
     (V + F1*(F1-1)/(2*(F2+1)) from singleton/doubleton counts) and
@@ -93,7 +92,6 @@ def q_doc_vocab_chao1_richness(spark, sf_dir):
     map-side partials (the token text shuffles once), then a
     source-grain rollup — identical to the proven doc_hapax_rate
     plan; no new shuffle class."""
-    t = load_tables(spark, sf_dir)
     tok = ensure_parallelism(t["documents"]).select(
         "source", F.explode(tokens_col("text")).alias("token")
     )
@@ -125,7 +123,7 @@ def q_doc_vocab_chao1_richness(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 @query("doc_dedup_detector_kappa", oracle=None)  # composed below
-def q_doc_dedup_detector_kappa(spark, sf_dir):
+def q_doc_dedup_detector_kappa(spark, t):
     """Chance-corrected agreement between the two near-dup detector
     families at DOC grain: a document is "flagged" by a family when
     it appears in at least one of that family's candidate pairs
@@ -170,7 +168,6 @@ def q_doc_dedup_detector_kappa(spark, sf_dir):
     )
     from .llm_queries import NUM_HASHES, ROWS_PER_BAND, SHINGLE_N
 
-    t = load_tables(spark, sf_dir)
     docs = ensure_parallelism(t["documents"])
     shb = shingle_hash_frame(docs, "text", "doc_id", SHINGLE_N)
     sigs = _minhash_agg_hashed(shb, "doc_id", NUM_HASHES)
@@ -307,7 +304,7 @@ def q_doc_dedup_detector_kappa(spark, sf_dir):
     FROM m
     """,
 )
-def q_daily_revenue_jarque_bera(spark, sf_dir):
+def q_daily_revenue_jarque_bera(spark, t):
     """Jarque-Bera normality test of the daily-revenue distribution:
     sample skewness and excess kurtosis from standardized moments,
     and JB = n/6 * (S^2 + K^2/4) ~ chi2(2) under normality. The
@@ -326,7 +323,6 @@ def q_daily_revenue_jarque_bera(spark, sf_dir):
     Scale shape: ONE day-grain rollup over the fact, one broadcast
     of the 1-row moment frame back over the bounded day frame
     (~2.4k rows), one scalar aggregate."""
-    t = load_tables(spark, sf_dir)
     dec = "decimal(38,0)"
     # pinned: the bounded day frame feeds BOTH the moment rollup and
     # the z projection — ONE fact scan
@@ -417,7 +413,7 @@ _ED_NEAR = 12
     FROM pairs GROUP BY p_brand ORDER BY p_brand
     """,
 )
-def q_part_name_blocked_edit_pairs(spark, sf_dir):
+def q_part_name_blocked_edit_pairs(spark, t):
     """Character-level near-duplicate detection with blocking: part
     names are compared by Levenshtein edit distance ONLY within
     (brand, size) blocks — the classic entity-resolution blocking
@@ -438,7 +434,6 @@ def q_part_name_blocked_edit_pairs(spark, sf_dir):
     brand x size), never all-pairs across the catalog; the rollup is
     a brand-grain hash aggregate with map-side partials. At 100 TB
     you narrow blocks (brand x size x container), not the plan."""
-    t = load_tables(spark, sf_dir)
     p = ensure_parallelism(t["part"]).select(
         "p_partkey", "p_brand", "p_size", "p_name"
     )
@@ -517,7 +512,7 @@ _CUPED_SPLIT = "1996-01-01"
     FROM m
     """,
 )
-def q_customer_spend_cuped(spark, sf_dir):
+def q_customer_spend_cuped(spark, t):
     """CUPED (Controlled-experiment Using Pre-Experiment Data)
     variance-reduction contract: with pre-period customer spend as
     the covariate X and post-period spend as the metric Y
@@ -538,7 +533,6 @@ def q_customer_spend_cuped(spark, sf_dir):
     customer grain (the join key is the aggregation key — a single
     shuffle), then one scalar moment aggregate with map-side
     partials."""
-    t = load_tables(spark, sf_dir)
     dec = "decimal(38,0)"
     split = F.lit(_CUPED_SPLIT).cast("date")
     per_cust = (
@@ -637,7 +631,7 @@ def q_customer_spend_cuped(spark, sf_dir):
     FROM h
     """,
 )
-def q_daily_revenue_permutation_entropy(spark, sf_dir):
+def q_daily_revenue_permutation_entropy(spark, t):
     """Permutation entropy (Bandt-Pompe) of daily revenue at
     embedding dimension 3: every consecutive day-triple is reduced
     to its ordinal pattern (which of the 6 orderings the three
@@ -659,7 +653,6 @@ def q_daily_revenue_permutation_entropy(spark, sf_dir):
     Scale shape: ONE day-grain rollup, a 2-lag LEAD chain over the
     calendar-bounded day frame (allowlisted bounded window), then a
     <=6-row pattern rollup and one scalar fold."""
-    t = load_tables(spark, sf_dir)
     d = t["orders"].groupBy(
         F.col("o_orderdate").cast("date").alias("day")
     ).agg(F.sum(o_cents()).alias("cents"))
@@ -740,7 +733,7 @@ def q_daily_revenue_permutation_entropy(spark, sf_dir):
     FROM m
     """,
 )
-def q_order_total_lineitem_ccc(spark, sf_dir):
+def q_order_total_lineitem_ccc(spark, t):
     """Lin's concordance correlation between the order header total
     and the sum of its line net revenues, at order grain.
     order_total_reconciliation counts exact mismatches; CCC grades
@@ -758,7 +751,6 @@ def q_order_total_lineitem_ccc(spark, sf_dir):
     Scale shape: ONE fact join keyed on the aggregation key
     (orderkey — a single shuffle co-partitions join and group-by),
     then one scalar moment aggregate with map-side partials."""
-    t = load_tables(spark, sf_dir)
     dec = "decimal(38,0)"
     l_rev = F.round(
         F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
@@ -866,7 +858,7 @@ def q_order_total_lineitem_ccc(spark, sf_dir):
     FROM num, den
     """,
 )
-def q_nation_revenue_morans_i(spark, sf_dir):
+def q_nation_revenue_morans_i(spark, t):
     """Moran's I autocorrelation of customer revenue over the
     international trade graph: nations are nodes, edge weights are
     cross-nation lineitem counts (customer nation x supplier
@@ -890,7 +882,6 @@ def q_nation_revenue_morans_i(spark, sf_dir):
     immediately to the <=625-cell nation-pair frame, then broadcast
     joins of the 25-row z frame onto the cell frame — both scalar
     folds run on bounded frames."""
-    t = load_tables(spark, sf_dir)
     dec = "decimal(38,0)"
     # pinned: the 25-row revenue frame feeds the moment rollup AND
     # the z projection — the orders/customer chain scans once

@@ -19,7 +19,6 @@ from pyspark.sql import Window
 from ..operators.partitioning import ensure_parallelism
 from .corpus import query
 from .llm_queries import _MINHASH_CTES, JACCARD_THRESHOLD, NUM_HASHES, ROWS_PER_BAND, SHINGLE_N
-from .tables import load_tables
 
 # Collocation mining config: pairs rarer than this are noise at any
 # corpus size (and the absolute floor keeps output cardinality bounded
@@ -58,7 +57,7 @@ SEARCH_TERMS = ("join", "vector", "stream")
     WHERE b.c_ab >= {PMI_MIN_COUNT}
     """,
 )
-def q_doc_pmi_collocations(spark, sf_dir):
+def q_doc_pmi_collocations(spark, t):
     """Pointwise-mutual-information collocation mining over adjacent
     token pairs — the corpus-statistics pass that finds multiword
     expressions worth tokenizing as units.
@@ -70,7 +69,6 @@ def q_doc_pmi_collocations(spark, sf_dir):
     broadcast by AQE (a vocabulary is millions of rows at web scale;
     the corpus-sized token stream is never joined). The absolute
     min-count floor bounds output to the genuinely frequent pairs."""
-    t = load_tables(spark, sf_dir)
     docs = ensure_parallelism(t["documents"])
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     bigrams = F.when(
@@ -154,7 +152,7 @@ def q_doc_pmi_collocations(spark, sf_dir):
     WHERE c.doc_id = c.cluster_id
     """,
 )
-def q_doc_dedup_survivors(spark, sf_dir):
+def q_doc_dedup_survivors(spark, t):
     """The END of the dedup pipeline: the retained training corpus.
     Near-dup pairs (MinHash-LSH) → connected-component clusters → keep
     each cluster's canonical document, annotated with how many
@@ -169,7 +167,6 @@ def q_doc_dedup_survivors(spark, sf_dir):
     """
     from ..llmdata.dedup import duplicate_clusters, minhash_near_duplicates
 
-    t = load_tables(spark, sf_dir)
     docs = ensure_parallelism(t["documents"])
     pairs = minhash_near_duplicates(
         docs, "text", "doc_id",
@@ -206,13 +203,12 @@ def q_doc_dedup_survivors(spark, sf_dir):
     FROM n GROUP BY lang
     """,
 )
-def q_doc_length_percentiles(spark, sf_dir):
+def q_doc_length_percentiles(spark, t):
     """Exact interpolated token-length percentiles per language — the
     length-distribution QA pass that sets truncation budgets before
     training. Token counts are a map-side projection; `percentile`
     computes all three quantiles in ONE aggregation pass per group
     (shuffle keyed by language, partial-aggregated map-side)."""
-    t = load_tables(spark, sf_dir)
     # space-delimited token contract (tokens = spaces + 1) — the same
     # pure string arithmetic the oracle uses, replacing the former
     # \s+ regex split (round 7: regex-split has no two-engine SQL
@@ -264,7 +260,7 @@ def q_doc_length_percentiles(spark, sf_dir):
     GROUP BY tf.doc_id
     """,
 )
-def q_doc_keyword_search(spark, sf_dir):
+def q_doc_keyword_search(spark, t):
     """Inverted-index keyword retrieval: score every document matching
     an OR-query by TF-IDF (tf × ln(N/df) summed over matched terms) —
     the text sibling of the embedding top-k searches.
@@ -274,7 +270,6 @@ def q_doc_keyword_search(spark, sf_dir):
     slice), df is a terms-sized frame attached by broadcast, and N is
     a 1-row broadcast. The corpus-sized token stream is never joined
     or shuffled beyond the per-(doc, term) count."""
-    t = load_tables(spark, sf_dir)
     docs = ensure_parallelism(t["documents"])
     tok = docs.select(
         "doc_id",
@@ -331,7 +326,7 @@ def q_doc_keyword_search(spark, sf_dir):
     FROM v GROUP BY dim
     """,
 )
-def q_emb_dim_stats(spark, sf_dir):
+def q_emb_dim_stats(spark, t):
     """Per-dimension embedding statistics (mean/std/min/max) — the QA
     pass that catches dead or exploding dimensions before they poison
     an ANN index. posexplode fans each vector into (dim, value) rows;
@@ -339,7 +334,6 @@ def q_emb_dim_stats(spark, sf_dir):
     with map-side partial moments — each map task reduces its vectors
     to 64 partial rows, so the shuffle is executors × dims, not
     corpus-sized."""
-    t = load_tables(spark, sf_dir)
     v = ensure_parallelism(t["embeddings"]).select(
         F.posexplode("embedding").alias("pos", "val")
     )
@@ -374,7 +368,7 @@ def q_emb_dim_stats(spark, sf_dir):
     FROM scored WHERE ABS(z) >= 2
     """,
 )
-def q_event_volume_anomalies(spark, sf_dir):
+def q_event_volume_anomalies(spark, t):
     """Daily event-volume anomaly detection: days whose count deviates
     ≥ 2 sample standard deviations from that event type's mean — the
     ops alert that catches tracking outages and bot floods.
@@ -384,7 +378,6 @@ def q_event_volume_anomalies(spark, sf_dir):
     aggregate, partitioned by type — a window over post-aggregation
     data, never over raw events. Thresholding on the ROUNDED z keeps
     the cross-engine boundary deterministic."""
-    t = load_tables(spark, sf_dir)
     daily = (
         t["events"]
         .groupBy(F.to_date("ts").alias("day"), "event_type")
@@ -426,7 +419,7 @@ def q_event_volume_anomalies(spark, sf_dir):
     GROUP BY c.c_mktsegment
     """,
 )
-def q_repeat_purchase_intervals(spark, sf_dir):
+def q_repeat_purchase_intervals(spark, t):
     """Purchase cadence: the distribution of days between a customer's
     consecutive orders, rolled up per market segment — the input to
     churn-risk ('overdue by k× their cadence') scoring.
@@ -437,7 +430,6 @@ def q_repeat_purchase_intervals(spark, sf_dir):
     predecessors. The segment dimension broadcast-enriches the
     per-interval rows; moments + one interpolated median aggregate in
     a single pass."""
-    t = load_tables(spark, sf_dir)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     gaps = (
         t["orders"]
@@ -486,7 +478,7 @@ def q_repeat_purchase_intervals(spark, sf_dir):
     GROUP BY n.n_name
     """,
 )
-def q_lead_time_trend_by_nation(spark, sf_dir):
+def q_lead_time_trend_by_nation(spark, t):
     """Supplier lead-time trend: per supplier nation, the average
     order→ship fulfillment time and its regression slope against order
     month — 'is this nation's fulfillment getting slower?'. Both
@@ -495,7 +487,6 @@ def q_lead_time_trend_by_nation(spark, sf_dir):
     fact-fact shuffle join on orderkey (both sides pre-projected to
     the join key + 1-2 columns), the broadcast supplier→nation dim,
     and one 25-key aggregate with map-side partials."""
-    t = load_tables(spark, sf_dir)
     dims = F.broadcast(
         t["supplier"]
         .select("s_suppkey", "s_nationkey")
@@ -626,7 +617,7 @@ _PQ_CTES = f"""cb AS (
     FROM best GROUP BY vec_id
     """,
 )
-def q_emb_pq_codes(spark, sf_dir):
+def q_emb_pq_codes(spark, t):
     """Product quantization: each 64-dim vector compresses to 4 bytes
     (one codebook index per 16-dim subspace) plus its reconstruction
     MSE — the memory layout every billion-vector ANN index (IVF-PQ)
@@ -640,7 +631,6 @@ def q_emb_pq_codes(spark, sf_dir):
     (vector, subspace) is a min_by struct aggregate — one shuffle of
     PQ_M short rows per vector, then a map-side pivot back to one row
     per vector. No corpus-sized join anywhere."""
-    t = load_tables(spark, sf_dir)
     emb = ensure_parallelism(t["embeddings"])
     best = _pq_codes(emb)
     code = lambda m: F.max(F.when(F.col("m") == m, F.col("code"))).cast("bigint")
@@ -669,14 +659,13 @@ def q_emb_pq_codes(spark, sf_dir):
     GROUP BY source
     """,
 )
-def q_doc_dedup_rate_by_source(spark, sf_dir):
+def q_doc_dedup_rate_by_source(spark, t):
     """Dedup health mart: per ingestion source, how much of the corpus
     is exact-duplicate text — the first number a crawl-quality review
     asks for, and the gate for deciding which sources need the (more
     expensive) near-dup pass. One groupBy over md5 hashes; the
     count_distinct is a hash-only partial aggregate (text itself never
     shuffles)."""
-    t = load_tables(spark, sf_dir)
     return (
         ensure_parallelism(t["documents"])
         .select("source", F.md5("text").alias("h"))
@@ -725,7 +714,7 @@ def q_doc_dedup_rate_by_source(spark, sf_dir):
     WHERE n_orders >= 3
     """,
 )
-def q_customer_churn_risk(spark, sf_dir):
+def q_customer_churn_risk(spark, t):
     """Cadence-relative churn flags: a customer is at risk when their
     silence exceeds 2× their own median inter-order gap — the
     per-entity-baseline alert pattern (global thresholds misfire on
@@ -737,7 +726,6 @@ def q_customer_churn_risk(spark, sf_dir):
     aggregate; the dataset-max anchor attaches as a 1-row broadcast.
     The 2×-median comparison is exact (integer days vs .0/.5-valued
     medians), so the boolean is cross-engine deterministic."""
-    t = load_tables(spark, sf_dir)
     anchor = t["orders"].agg(F.max("o_orderdate").alias("d"))
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     gaps = t["orders"].select(
@@ -808,7 +796,7 @@ def q_customer_churn_risk(spark, sf_dir):
     FROM m
     """,
 )
-def q_orders_quality_checks(spark, sf_dir):
+def q_orders_quality_checks(spark, t):
     """Declarative data-quality suite over orders — the engine form of
     the reference README's 'automated testing and validation' claim
     (README.md:165, no code in the reference). Six rules (null-checks,
@@ -825,7 +813,6 @@ def q_orders_quality_checks(spark, sf_dir):
         unique,
     )
 
-    t = load_tables(spark, sf_dir)
     rules = [
         not_null("o_orderkey"),
         unique("o_orderkey"),
@@ -858,7 +845,7 @@ def q_orders_quality_checks(spark, sf_dir):
     LIMIT 10
     """,
 )
-def q_lineitem_suppkey_skew(spark, sf_dir):
+def q_lineitem_suppkey_skew(spark, t):
     """Join-key skew diagnostic on the lineitem→supplier key: the 10
     heaviest suppliers with their row share and the global skew factor
     — the pre-flight check that decides between a plain shuffle join,
@@ -867,7 +854,6 @@ def q_lineitem_suppkey_skew(spark, sf_dir):
     frame to a single broadcast row; top-k is TakeOrdered."""
     from ..operators.profiling import skew_profile
 
-    t = load_tables(spark, sf_dir)
     return skew_profile(t["lineitem"], "l_suppkey", top=10)
 
 
@@ -905,7 +891,7 @@ def q_lineitem_suppkey_skew(spark, sf_dir):
     FROM ranked WHERE rn <= {PQ_TOPK}
     """,
 )
-def q_emb_pq_topk(spark, sf_dir):
+def q_emb_pq_topk(spark, t):
     """PQ asymmetric-distance top-k search — the query-time half of
     IVF-PQ, completing emb_pq_codes: each query precomputes a
     (subspace × codebook-entry) squared-distance TABLE against the
@@ -919,7 +905,6 @@ def q_emb_pq_topk(spark, sf_dir):
     shorts per vector, never the raw vectors), scored by one broadcast
     equi-join on (m, code) and a (query, vector)-keyed partial-sum
     aggregate; top-k is a per-query window over candidate grain."""
-    t = load_tables(spark, sf_dir)
     emb = ensure_parallelism(t["embeddings"])
     codes = _pq_codes(emb).select("vec_id", "m", "code")
     qtab = (
@@ -1013,7 +998,7 @@ def q_emb_pq_topk(spark, sf_dir):
     GROUP BY status_at_ship
     """,
 )
-def q_pit_status_at_ship(spark, sf_dir):
+def q_pit_status_at_ship(spark, t):
     """SCD2 CONSUMPTION, point-in-time: which customer status version
     was in force when each line item shipped. The status-change history
     (gaps-and-islands over each customer's orders) plays the versioned
@@ -1026,7 +1011,6 @@ def q_pit_status_at_ship(spark, sf_dir):
     NULL — the honest answer for facts predating the dimension."""
     from ..operators.temporal import asof_join
 
-    t = load_tables(spark, sf_dir)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     versions = (
         t["orders"]
@@ -1102,7 +1086,7 @@ def q_pit_status_at_ship(spark, sf_dir):
                  / NULLIF((SELECT COUNT(*) FROM c), 0), 4) AS click_to_purchase_pct
     """,
 )
-def q_ordered_funnel_conversions(spark, sf_dir):
+def q_ordered_funnel_conversions(spark, t):
     """STRICT-SEQUENCE funnel: a user converts a stage only by doing it
     AFTER the previous stage (first view → first click after that view
     → first purchase after that click). The stage-count funnel
@@ -1115,7 +1099,6 @@ def q_ordered_funnel_conversions(spark, sf_dir):
     probe the (shrinking) qualified-user frames, which AQE broadcasts
     as the funnel narrows. No per-user event arrays, no window over
     raw events, no self-join explosion."""
-    t = load_tables(spark, sf_dir)
     ev = t["events"].select("user_id", "event_type", "ts")
     v = (
         ev.filter(F.col("event_type") == "view")

@@ -18,7 +18,6 @@ from ..operators.sketches import CMS_DEPTH, CMS_WIDTH
 from ..operators.pinning import pin
 from .corpus import query
 from .llm_queries import SHINGLE_N
-from .tables import load_tables
 
 # Count-Min sketch config (mirrors operators.sketches): depth 4 rows
 # x width 64 buckets — 256 counters total regardless of corpus size,
@@ -68,7 +67,7 @@ _CMS_BUCKET_SQL = (
     GROUP BY p.k, p.exact_cnt
     """,
 )
-def q_cms_heavy_hitters(spark, sf_dir):
+def q_cms_heavy_hitters(spark, t):
     """Count-Min sketch frequency estimation, scored against exact
     counts for the top-20 heaviest keys. The sketch is the mergeable
     alternative to exact per-key counts when the keyspace itself is
@@ -87,7 +86,6 @@ def q_cms_heavy_hitters(spark, sf_dir):
     map-side pass itself."""
     from ..operators.sketches import cms_estimate, cms_sketch
 
-    t = load_tables(spark, sf_dir)
     base = t["lineitem"].select(F.col("l_suppkey").alias("k"))
     sketch = cms_sketch(base, "k", CMS_DEPTH, CMS_WIDTH)
     exact = base.groupBy("k").agg(F.count(F.lit(1)).alias("exact_cnt"))
@@ -121,7 +119,7 @@ def q_cms_heavy_hitters(spark, sf_dir):
     FROM daily
     """,
 )
-def q_supplier_ship_cumulative(spark, sf_dir):
+def q_supplier_ship_cumulative(spark, t):
     """Running-balance window: per-supplier cumulative shipped
     quantity by day — the inventory/backlog ledger shape (classic
     cumulative SUM OVER). The supplier filter pushes into the parquet
@@ -132,7 +130,6 @@ def q_supplier_ship_cumulative(spark, sf_dir):
     supplier-day), partitioned by supplier, so no global sort and no
     fact-grain window state. l_quantity is integer-valued, so the
     cumulative double sums are exact and engine-order-independent."""
-    t = load_tables(spark, sf_dir)
     daily = (
         t["lineitem"]
         .filter(F.col("l_suppkey") <= 10)
@@ -176,7 +173,7 @@ def q_supplier_ship_cumulative(spark, sf_dir):
     FROM lat GROUP BY 1
     """,
 )
-def q_conversion_latency_histogram(spark, sf_dir):
+def q_conversion_latency_histogram(spark, t):
     """Time-to-convert distribution: per user, first 'view' to first
     'purchase' latency, bucketed into whole days with the bucket's
     average latency. The funnel's missing time axis (the reference's
@@ -187,7 +184,6 @@ def q_conversion_latency_histogram(spark, sf_dir):
     the user-grain frame. Latency is kept in exact integer
     microseconds end-to-end; the one division happens after the exact
     BIGINT sum, so no cross-engine float-summation-order drift."""
-    t = load_tables(spark, sf_dir)
     per_user = t["events"].groupBy("user_id").agg(
         F.min(
             F.when(F.col("event_type") == "view", F.unix_micros("ts"))
@@ -255,7 +251,7 @@ def q_conversion_latency_histogram(spark, sf_dir):
     GROUP BY m.month
     """,
 )
-def q_priority_mix_drift(spark, sf_dir):
+def q_priority_mix_drift(spark, t):
     """Distribution-drift monitor: per month, the total-variation
     distance between that month's order-priority mix and the global
     mix — the data-quality alarm a pipeline fires when an upstream
@@ -268,7 +264,6 @@ def q_priority_mix_drift(spark, sf_dir):
     summation-order sensitivity at the 6-dp round (counts x totals
     stay under 2^63 through ~1e9-order months; a larger deployment
     would decimal-widen)."""
-    t = load_tables(spark, sf_dir)
     orders = t["orders"]
     monthly = orders.groupBy(
         F.date_trunc("month", "o_orderdate").alias("month"), "o_orderpriority"
@@ -322,7 +317,7 @@ def q_priority_mix_drift(spark, sf_dir):
     GROUP BY s.doc_id
     """,
 )
-def q_doc_ngram_novelty(spark, sf_dir):
+def q_doc_ngram_novelty(spark, t):
     """Cross-corpus n-gram novelty: per document, the share of its
     distinct word-shingles (the MinHash ``SHINGLE_N`` config) that no
     earlier document (by doc_id, the
@@ -337,7 +332,6 @@ def q_doc_ngram_novelty(spark, sf_dir):
     final rounded percentage."""
     from ..llmdata.dedup import ngram_shingles
 
-    t = load_tables(spark, sf_dir)
     sh = ngram_shingles(t["documents"], "text", "doc_id", n=SHINGLE_N)
     firsts = sh.groupBy("shingle").agg(F.min("doc_id").alias("first_doc"))
     return (
@@ -411,7 +405,7 @@ def _zvalue_sql(x: str, y: str) -> str:
     FROM z GROUP BY 1
     """,
 )
-def q_zorder_locality_audit(spark, sf_dir):
+def q_zorder_locality_audit(spark, t):
     """Z-order (Morton-curve) clustering audit: orders keyed by the
     interleaved bits of (custkey mod 256, day-index mod 256), bucketed
     by z-value prefix, reporting each bucket's key-range spans. This
@@ -429,7 +423,6 @@ def q_zorder_locality_audit(spark, sf_dir):
     ``df.repartitionByRange(N, 'zvalue').sortWithinPartitions(...)``
     before the sink — see tests/test_round3b.py for the span-tightness
     property this buys."""
-    t = load_tables(spark, sf_dir)
     keyed = t["orders"].select(
         (F.col("o_custkey") % 256).alias("x"),
         (
@@ -474,7 +467,7 @@ def q_zorder_locality_audit(spark, sf_dir):
     FROM seg GROUP BY user_id HAVING SUM(dt_us) > 0
     """,
 )
-def q_user_value_twap(spark, sf_dir):
+def q_user_value_twap(spark, t):
     """Time-weighted average value per user (TWAP): each event's value
     is weighted by how long it remained the latest state — the correct
     average for irregularly-sampled state series, where the plain AVG
@@ -486,7 +479,6 @@ def q_user_value_twap(spark, sf_dir):
     the whole query is two stages over one shuffle of the events
     fact. Interval lengths are exact integer microseconds; tie-order
     under equal timestamps is pinned by event_id on both engines."""
-    t = load_tables(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ordered = t["events"].select(
         "user_id",
@@ -539,7 +531,7 @@ def q_user_value_twap(spark, sf_dir):
     FROM ranked GROUP BY lang
     """,
 )
-def q_doc_zipf_slope(spark, sf_dir):
+def q_doc_zipf_slope(spark, t):
     """Zipf-law slope per language: the least-squares slope of
     log-frequency vs log-rank over the term distribution. Natural
     text sits near -1; corpora full of boilerplate, code, or spam
@@ -551,7 +543,6 @@ def q_doc_zipf_slope(spark, sf_dir):
     counts, not corpus size), and a single-pass regr_slope moment
     aggregate. Tie-ranking is pinned (count desc, token asc) so both
     engines see identical (rank, count) points."""
-    t = load_tables(spark, sf_dir)
     tok = t["documents"].select(
         "lang",
         F.explode(
@@ -624,7 +615,7 @@ def _pca_iter_ctes(n_iters: int) -> str:
     FROM v{PCA_ITERS + 1} v
     """,
 )
-def q_emb_top_principal_component(spark, sf_dir):
+def q_emb_top_principal_component(spark, t):
     """Top principal component of the embedding corpus by power
     iteration — the whole-corpus QA twin of ``emb_dim_stats``: the
     dominant direction (and its eigenvalue) tells you whether the
@@ -647,7 +638,6 @@ def q_emb_top_principal_component(spark, sf_dir):
 
     from ..operators.partitioning import ensure_parallelism
 
-    t = load_tables(spark, sf_dir)
     emb = ensure_parallelism(t["embeddings"]).select(
         "vec_id",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("e"),
@@ -717,7 +707,7 @@ def q_emb_top_principal_component(spark, sf_dir):
     GROUP BY c.user_id, t.n, t.n_types
     """,
 )
-def q_user_event_entropy(spark, sf_dir):
+def q_user_event_entropy(spark, t):
     """Shannon entropy of each user's event-type distribution — the
     behavioral-diversity feature (bots hammer one event type, entropy
     ~0; engaged users mix types). A standard information-theoretic
@@ -727,7 +717,6 @@ def q_user_event_entropy(spark, sf_dir):
     partitioning (type counts, then totals), and the entropy sum runs
     over at most |event types| terms per user — the 4-term float sum
     is orders of magnitude inside 4dp determinism."""
-    t = load_tables(spark, sf_dir)
     counts = t["events"].groupBy("user_id", "event_type").agg(
         F.count(F.lit(1)).alias("c")
     )
@@ -782,7 +771,7 @@ VOCAB_TOP_N = 200
     GROUP BY a.source, b.source
     """,
 )
-def q_source_vocab_overlap(spark, sf_dir):
+def q_source_vocab_overlap(spark, t):
     """Pairwise vocabulary overlap between corpus sources: Jaccard of
     each source pair's top-200 term sets. Low overlap across supposed
     same-domain sources (or high overlap across supposedly distinct
@@ -794,7 +783,6 @@ def q_source_vocab_overlap(spark, sf_dir):
     join operates on |sources| x 200 rows — a broadcast-sized frame
     no matter how big the corpus. Jaccard needs no per-source size
     lookup because both sets are exactly top-N: |A∪B| = 2N - |A∩B|."""
-    t = load_tables(spark, sf_dir)
     tok = t["documents"].select(
         "source",
         F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias(
@@ -873,7 +861,7 @@ QSKETCH_QUANTILES = (50, 90, 99)
     FROM est e JOIN exact x USING (q)
     """,
 )
-def q_qsketch_price_quantiles(spark, sf_dir):
+def q_qsketch_price_quantiles(spark, t):
     """Histogram-sketch quantile estimation, scored against the exact
     discrete percentile — the third mergeable sketch alongside HLL
     (``hll_rollup_contract``, distinct) and Count-Min
@@ -888,7 +876,6 @@ def q_qsketch_price_quantiles(spark, sf_dir):
     cumulative window runs over the BIN frame, and the estimate probe
     is bins x 3 quantiles. Everything is integer cents — bin edges
     cannot drift between engines."""
-    t = load_tables(spark, sf_dir)
     cents = t["orders"].select(
         F.round(F.col("o_totalprice") * 100).cast("long").alias("pc")
     )
@@ -1004,7 +991,7 @@ MIN_COPURCHASE_SUPPORT = 2
     FROM stats s, tri t
     """,
 )
-def q_copurchase_triangle_census(spark, sf_dir):
+def q_copurchase_triangle_census(spark, t):
     """Triangle census of the part co-purchase graph: triangle count
     and global clustering coefficient (3T / wedges) — the graph-
     cohesion statistic recommendation and fraud pipelines monitor
@@ -1024,7 +1011,6 @@ def q_copurchase_triangle_census(spark, sf_dir):
     quadratic in its degree). Wedge closure is one equi-join back to
     the edge list on the (least, greatest) pair key. Every count is
     an exact integer; the single float division is rounded at 6dp."""
-    t = load_tables(spark, sf_dir)
     baskets = (
         t["lineitem"]
         .groupBy("l_orderkey")
@@ -1131,7 +1117,7 @@ def q_copurchase_triangle_census(spark, sf_dir):
     FROM est e, exact x
     """,
 )
-def q_selfjoin_size_estimate(spark, sf_dir):
+def q_selfjoin_size_estimate(spark, t):
     """Join-size estimation from the Count-Min grid: the self-join
     cardinality of lineitem on l_partkey (= the F2 second frequency
     moment, sum of squared key counts) estimated as the min over hash
@@ -1148,7 +1134,6 @@ def q_selfjoin_size_estimate(spark, sf_dir):
     to score the contract) is one keyed count plus a scalar rollup."""
     from ..operators.sketches import cms_sketch
 
-    t = load_tables(spark, sf_dir)
     base = t["lineitem"].select(F.col("l_partkey").alias("k"))
     sketch = cms_sketch(base, "k", CMS_DEPTH, CMS_WIDTH)
     est = (
@@ -1191,7 +1176,7 @@ def q_selfjoin_size_estimate(spark, sf_dir):
     FROM pairs GROUP BY 1
     """,
 )
-def q_emb_pairwise_sim_histogram(spark, sf_dir):
+def q_emb_pairwise_sim_histogram(spark, t):
     """Embedding-space health histogram: cosine similarity of id-
     consecutive vector pairs, bucketed at 0.05 width. A healthy
     embedding space puts random pairs near 0; a collapsed space (all
@@ -1207,7 +1192,6 @@ def q_emb_pairwise_sim_histogram(spark, sf_dir):
     from ..llmdata.similarity import _as_double, cosine
     from ..operators.partitioning import ensure_parallelism
 
-    t = load_tables(spark, sf_dir)
     e = ensure_parallelism(t["embeddings"]).select(
         "vec_id", _as_double("embedding").alias("v")
     )
@@ -1261,7 +1245,7 @@ def q_emb_pairwise_sim_histogram(spark, sf_dir):
     FROM win
     """,
 )
-def q_monthly_seasonal_index(spark, sf_dir):
+def q_monthly_seasonal_index(spark, t):
     """Seasonal index: each month's revenue as a ratio of its trailing
     12-month average — the deseasonalization input every demand
     forecast starts from (index > 1 = seasonal high).
@@ -1274,7 +1258,6 @@ def q_monthly_seasonal_index(spark, sf_dir):
     DOUBLE average can land exactly on a half-cent (sum/12 = x.505),
     where engines' float summation orders disagree on the rounding —
     integer sums cannot."""
-    t = load_tables(spark, sf_dir)
     monthly = t["orders"].groupBy(
         F.date_trunc("month", "o_orderdate").alias("month")
     ).agg(
@@ -1323,7 +1306,7 @@ def q_monthly_seasonal_index(spark, sf_dir):
     FROM weighted GROUP BY l_suppkey
     """,
 )
-def q_supplier_momentum_ewm(spark, sf_dir):
+def q_supplier_momentum_ewm(spark, t):
     """Recency-weighted supplier activity: exponentially-weighted mean
     of monthly shipped quantity (half-life one month, anchored at the
     corpus's newest month) against the plain mean — ``momentum`` > 1
@@ -1337,7 +1320,6 @@ def q_supplier_momentum_ewm(spark, sf_dir):
     shuffle with map-side combine; the anchor month is a 1-row
     broadcast; the EWM rollup runs over the bounded supplier-month
     frame."""
-    t = load_tables(spark, sf_dir)
     monthly = t["lineitem"].groupBy(
         "l_suppkey",
         (F.year("l_shipdate") * 12 + F.month("l_shipdate")).alias("m"),
@@ -1383,7 +1365,7 @@ def q_supplier_momentum_ewm(spark, sf_dir):
     FROM viewers GROUP BY week
     """,
 )
-def q_weekly_conversion_sla(spark, sf_dir):
+def q_weekly_conversion_sla(spark, t):
     """Time-bounded funnel: of the users whose FIRST view fell in a
     given week, how many purchased within the 7-day SLA window — the
     cohorted, deadline-constrained variant of the flagship funnel
@@ -1395,7 +1377,6 @@ def q_weekly_conversion_sla(spark, sf_dir):
     events shuffle), then a week-grain rollup of the user-grain frame.
     The SLA test is exact integer microseconds; counts are exact; the
     one division is rounded last."""
-    t = load_tables(spark, sf_dir)
     per_user = t["events"].groupBy("user_id").agg(
         F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("fv"),
         F.min(
@@ -1441,7 +1422,7 @@ def q_weekly_conversion_sla(spark, sf_dir):
     GROUP BY 1, 2
     """,
 )
-def q_metric_cube_quarter_segment(spark, sf_dir):
+def q_metric_cube_quarter_segment(spark, t):
     """Semantic-layer request: revenue / order count / AOV / orders-
     per-customer at (quarter x market segment) grain, COMPILED from
     the declarative metric registry (``metrics.py``) rather than
@@ -1455,8 +1436,7 @@ def q_metric_cube_quarter_segment(spark, sf_dir):
     from ..metrics import compile_metrics
 
     return compile_metrics(
-        spark,
-        sf_dir,
+        t,
         ["revenue", "order_cnt", "avg_order_value", "orders_per_customer"],
         ["quarter", "segment"],
     )
@@ -1478,7 +1458,7 @@ def q_metric_cube_quarter_segment(spark, sf_dir):
     GROUP BY 1, 2
     """,
 )
-def q_metric_cube_region_priority(spark, sf_dir):
+def q_metric_cube_region_priority(spark, t):
     """Second semantic-layer request exercising the multi-hop FK path
     (orders -> customer -> nation -> region, all broadcast) plus a
     request-level filter — grains and filters compose without any new
@@ -1486,8 +1466,7 @@ def q_metric_cube_region_priority(spark, sf_dir):
     from ..metrics import compile_metrics
 
     return compile_metrics(
-        spark,
-        sf_dir,
+        t,
         ["order_cnt", "max_order_value", "customer_cnt"],
         ["region", "priority"],
         where="o_orderstatus <> 'F'",
@@ -1508,7 +1487,7 @@ def q_metric_cube_region_priority(spark, sf_dir):
     FROM events GROUP BY 1, 2
     """,
 )
-def q_activity_heatmap(spark, sf_dir):
+def q_activity_heatmap(spark, t):
     """Day-of-week x hour activity heatmap (events, distinct users,
     purchase value) — the load-pattern mart behind capacity planning
     and send-time optimization, and the one dashboard grid the
@@ -1517,7 +1496,6 @@ def q_activity_heatmap(spark, sf_dir):
     Scale shape: one aggregation keyed by a 7x24-bounded grid;
     distinct users adds the expand pass but the output stays 168
     rows at any corpus size."""
-    t = load_tables(spark, sf_dir)
     return (
         t["events"]
         .groupBy(
@@ -1558,15 +1536,14 @@ def q_activity_heatmap(spark, sf_dir):
     GROUP BY 1, 2
     """,
 )
-def q_metric_events_type_segment(spark, sf_dir):
+def q_metric_events_type_segment(spark, t):
     """Semantic-layer request on the SECOND star (events): the same
     compiler serves both fact tables — measure/dimension registries
     are per-star data, not per-star code."""
     from ..metrics import compile_event_metrics
 
     return compile_event_metrics(
-        spark,
-        sf_dir,
+        t,
         ["event_cnt", "active_users", "events_per_user"],
         ["event_type", "segment"],
     )
@@ -1612,7 +1589,7 @@ def q_metric_events_type_segment(spark, sf_dir):
     FROM scored GROUP BY lang, source
     """,
 )
-def q_corpus_quality_report(spark, sf_dir):
+def q_corpus_quality_report(spark, t):
     """The corpus health one-pager: per (language, source) — document
     and exact-duplicate counts, token volume, mean quality score, and
     short-document count. This is the mart a data-curation review
@@ -1630,7 +1607,6 @@ def q_corpus_quality_report(spark, sf_dir):
     identical quantized values on both engines."""
     from ..llmdata.text import quality_features
 
-    t = load_tables(spark, sf_dir)
     from ..operators.partitioning import ensure_parallelism
 
     feats = quality_features("text")
@@ -1698,7 +1674,7 @@ _BENFORD_SQL_CASE = "CAST(CASE digit " + " ".join(
     FROM digits GROUP BY digit
     """,
 )
-def q_benford_first_digit_audit(spark, sf_dir):
+def q_benford_first_digit_audit(spark, t):
     """Benford's-law first-digit audit over order values — the
     classic forensic data-quality screen (fabricated or truncated
     monetary data drifts from the log10(1+1/d) distribution). The
@@ -1709,7 +1685,6 @@ def q_benford_first_digit_audit(spark, sf_dir):
     Scale shape: map-side digit extraction, 9-key rollup, 1-row total
     broadcast. Observed shares are rounded via an integer-basis-point
     intermediate so both engines quantize identically."""
-    t = load_tables(spark, sf_dir)
     digits = t["orders"].select(
         F.substring(
             F.round(F.col("o_totalprice") * 100).cast("long").cast("string"),
@@ -1760,7 +1735,7 @@ def q_benford_first_digit_audit(spark, sf_dir):
     WHERE rk <= 3
     """,
 )
-def q_part_recommendations(spark, sf_dir):
+def q_part_recommendations(spark, t):
     """'Customers also bought': top-3 co-purchased parts per part by
     co-order support (>= 2 orders — the same signal threshold as the
     triangle census) — the item-to-item collaborative-filtering mart
@@ -1770,7 +1745,6 @@ def q_part_recommendations(spark, sf_dir):
     (one fact shuffle, map-side unfold), support rollup, then a rank
     window partitioned by source part over the thresholded
     (signal-sized, not corpus-sized) pair frame."""
-    t = load_tables(spark, sf_dir)
     baskets = (
         t["lineitem"]
         .groupBy("l_orderkey")
@@ -1835,7 +1809,7 @@ def q_part_recommendations(spark, sf_dir):
     FROM classed GROUP BY abc_class
     """,
 )
-def q_customer_pareto_abc(spark, sf_dir):
+def q_customer_pareto_abc(spark, t):
     """Pareto / ABC analysis: customers ranked by lifetime revenue and
     classed A (first 80% of cumulative revenue), B (to 95%), C (tail)
     — the concentration mart behind account-tiering decisions.
@@ -1851,7 +1825,6 @@ def q_customer_pareto_abc(spark, sf_dir):
     (cum * 100 <= total * 80), so no division touches the boundary."""
     from ..operators.cumulative import running_sum_ranged
 
-    t = load_tables(spark, sf_dir)
     per_cust = t["orders"].groupBy("o_custkey").agg(
         F.round(F.sum("o_totalprice") * 100).cast("long").alias("cents")
     )
@@ -1904,7 +1877,7 @@ def q_customer_pareto_abc(spark, sf_dir):
     HAVING COUNT(*) > 1
     """,
 )
-def q_media_exact_dedup(spark, sf_dir):
+def q_media_exact_dedup(spark, t):
     """Exact duplicate detection on BINARY media payloads — the
     multimodal twin of ``doc_exact_dedup``: content-hash the payload
     bytes (no decode needed, so this is a REAL path in any container),
@@ -1917,7 +1890,6 @@ def q_media_exact_dedup(spark, sf_dir):
     carries (type, 32-char hash), never payload bytes."""
     from .llm_queries import _media_frame
 
-    t = load_tables(spark, sf_dir)
     base = _media_frame(t).select(
         "media_id", "media_type", F.md5("payload").alias("payload_hash")
     )
@@ -1944,7 +1916,7 @@ def q_media_exact_dedup(spark, sf_dir):
     "minhash_precision_stats",
     oracle=None,  # set below: needs llm_queries' shared CTE block
 )
-def q_minhash_precision_stats(spark, sf_dir):
+def q_minhash_precision_stats(spark, t):
     """LSH quality contract: of the candidate pairs MinHash banding
     surfaces (any shingle overlap), what share survives the exact
     Jaccard threshold — the measured PRECISION of the band
@@ -1960,7 +1932,6 @@ def q_minhash_precision_stats(spark, sf_dir):
     from ..llmdata.dedup import minhash_near_duplicates
     from .llm_queries import JACCARD_THRESHOLD, NUM_HASHES, ROWS_PER_BAND
 
-    t = load_tables(spark, sf_dir)
     pairs = minhash_near_duplicates(
         t["documents"], "text", "doc_id",
         n=SHINGLE_N, num_hashes=NUM_HASHES,
@@ -2029,7 +2000,7 @@ _ORACLES["minhash_precision_stats"] = rf"""
     HAVING MAX(events_1m) >= 2
     """,
 )
-def q_user_peak_event_rate(spark, sf_dir):
+def q_user_peak_event_rate(spark, t):
     """Bot/abuse screen: each user's PEAK event count inside any
     sliding 60-second window — the rate-limiter statistic (humans
     burst to a handful; scripts sustain hundreds). Only users with a
@@ -2038,7 +2009,6 @@ def q_user_peak_event_rate(spark, sf_dir):
     Scale shape: the RANGE window is keyed by user (never global) over
     integer epoch-seconds, so frame arithmetic is exact; the rollup
     reuses the same user partitioning."""
-    t = load_tables(spark, sf_dir)
     e = t["events"].select(
         "user_id", (F.unix_micros("ts") / 1_000_000).cast("long").alias("sec")
     )
@@ -2077,7 +2047,7 @@ def q_user_peak_event_rate(spark, sf_dir):
     FROM ranked
     """,
 )
-def q_part_revenue_gini(spark, sf_dir):
+def q_part_revenue_gini(spark, t):
     """Gini coefficient of revenue concentration across parts — the
     single-number inequality gauge completing the distribution-audit
     trio (Benford: digit plausibility; Pareto: tier sizes; Gini:
@@ -2095,7 +2065,6 @@ def q_part_revenue_gini(spark, sf_dir):
     first anyway)."""
     from ..operators.cumulative import row_number_ranged
 
-    t = load_tables(spark, sf_dir)
     per_part = t["lineitem"].groupBy("l_partkey").agg(
         F.round(F.sum("l_extendedprice") * 100).cast("long").alias("cents")
     )
@@ -2132,7 +2101,7 @@ def q_part_revenue_gini(spark, sf_dir):
     FROM lagged WHERE prev_cents IS NOT NULL
     """,
 )
-def q_daily_revenue_autocorr(spark, sf_dir):
+def q_daily_revenue_autocorr(spark, t):
     """Lag-1 autocorrelation of daily revenue: the one-number
     mean-reversion/momentum gauge a forecaster checks before picking a
     model family (near 0 = i.i.d. noise — as TPC-H's uniform order
@@ -2140,7 +2109,6 @@ def q_daily_revenue_autocorr(spark, sf_dir):
 
     Scale shape: day-grain pre-aggregation (exact integer cents), a
     bounded-calendar lag window, one moment-aggregate pass (corr)."""
-    t = load_tables(spark, sf_dir)
     daily = t["orders"].groupBy(F.to_date("o_orderdate").alias("day")).agg(
         F.round(F.sum("o_totalprice") * 100).cast("long").alias("cents")
     )
@@ -2189,7 +2157,7 @@ def _fd_oracle_block(table: str, det: str, dep: str) -> str:
         _fd_oracle_block(t, a, b) for t, a, b in _FD_CANDIDATES
     ),
 )
-def q_functional_dependency_audit(spark, sf_dir):
+def q_functional_dependency_audit(spark, t):
     """Functional-dependency profiler: for each candidate determinant
     -> dependent pair, the count of determinant values mapping to
     MORE than one dependent value (0 violations = the FD holds). This
@@ -2200,7 +2168,6 @@ def q_functional_dependency_audit(spark, sf_dir):
     Scale shape: per candidate, one (determinant)-keyed distinct
     count — map-side partial, bounded output; candidates run as a
     union of independent aggregates over pruned two-column scans."""
-    t = load_tables(spark, sf_dir)
     frames = []
     for table, det, dep in _FD_CANDIDATES:
         per_det = t[table].groupBy(det).agg(
@@ -2257,7 +2224,7 @@ def q_functional_dependency_audit(spark, sf_dir):
     FROM labeled GROUP BY entity_id HAVING COUNT(*) > 1
     """,
 )
-def q_customer_entity_clusters(spark, sf_dir):
+def q_customer_entity_clusters(spark, t):
     """End-to-end entity resolution: blocked fuzzy matching
     (``customer_name_fuzzy_pairs``' block -> levenshtein link step)
     COMPOSED with the connected-components operator the doc-dedup
@@ -2273,7 +2240,6 @@ def q_customer_entity_clusters(spark, sf_dir):
     orthogonal operators."""
     from ..llmdata.dedup import duplicate_clusters
 
-    t = load_tables(spark, sf_dir)
     c = t["customer"].select(
         "c_custkey",
         "c_name",
@@ -2360,7 +2326,7 @@ HEAPS_BUCKETS = 20
     FROM cum
     """,
 )
-def q_doc_heaps_law_fit(spark, sf_dir):
+def q_doc_heaps_law_fit(spark, t):
     """Heaps'-law fit: vocabulary size V(N) ~ K * N^beta as token
     count N grows through the ingest order, with beta estimated as
     the log-log regression slope over checkpointed growth points.
@@ -2375,7 +2341,6 @@ def q_doc_heaps_law_fit(spark, sf_dir):
     to a {HEAPS_BUCKETS}-row frame, where the cumulative window and
     the regression moments run. Nothing cumulative ever touches
     corpus-sized data."""
-    t = load_tables(spark, sf_dir)
     docs = t["documents"]
     bounds = docs.agg(
         F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
@@ -2441,7 +2406,7 @@ def q_doc_heaps_law_fit(spark, sf_dir):
     FROM grams GROUP BY doc_id
     """,
 )
-def q_doc_compressibility_proxy(spark, sf_dir):
+def q_doc_compressibility_proxy(spark, t):
     """Compression-ratio proxy: distinct / total character 4-grams per
     document — the dictionary-coder redundancy estimate quality
     filters use (Gopher-style): highly repetitive boilerplate
@@ -2457,7 +2422,6 @@ def q_doc_compressibility_proxy(spark, sf_dir):
     tests/test_oracle_bounds.py (fails loudly at 80% of the bound)."""
     from ..operators.partitioning import ensure_parallelism
 
-    t = load_tables(spark, sf_dir)
     norm_text = F.lower(F.trim(F.col("text")))
     grams = (
         ensure_parallelism(t["documents"])
@@ -2521,7 +2485,7 @@ def _lsh_purity_oracle() -> str:
 
 
 @query("emb_lsh_bucket_label_purity", oracle=None)
-def q_emb_lsh_bucket_label_purity(spark, sf_dir):
+def q_emb_lsh_bucket_label_purity(spark, t):
     """Partition-quality audit for hyperplane LSH: per bucket (table
     0's 4-bit sign pattern), the share of vectors carrying the
     bucket's dominant label. High purity means the hash respects the
@@ -2537,7 +2501,6 @@ def q_emb_lsh_bucket_label_purity(spark, sf_dir):
     from ..operators.partitioning import ensure_parallelism
     from .llm_queries import EMB_DIM, N_PLANES
 
-    t = load_tables(spark, sf_dir)
     emb = ensure_parallelism(t["embeddings"])
     planes = hyperplanes(EMB_DIM, N_PLANES, 1)
     sig = lsh_bucket(emb, planes, n_tables=1).select("vec_id", "bucket")
@@ -2586,7 +2549,7 @@ _ORACLES2["emb_lsh_bucket_label_purity"] = _lsh_purity_oracle()
     FROM lens GROUP BY doc_id
     """,
 )
-def q_doc_sentence_stats(spark, sf_dir):
+def q_doc_sentence_stats(spark, t):
     """Sentence segmentation statistics: count, total/max/mean words
     per sentence, from a punctuation-boundary splitter — the
     readability / degenerate-text signal (wall-of-text docs have one
@@ -2598,7 +2561,6 @@ def q_doc_sentence_stats(spark, sf_dir):
     the exact sum once."""
     from ..operators.partitioning import ensure_parallelism
 
-    t = load_tables(spark, sf_dir)
     sents = (
         ensure_parallelism(t["documents"])
         .select(
@@ -2644,7 +2606,7 @@ def q_doc_sentence_stats(spark, sf_dir):
     GROUP BY r.p_type, t.n_suppliers, t.total_cents
     """,
 )
-def q_part_type_supplier_hhi(spark, sf_dir):
+def q_part_type_supplier_hhi(spark, t):
     """Supplier-concentration risk: the Herfindahl-Hirschman index
     (sum of squared percentage market shares, 0..10000) of supplier
     revenue within each part type — the procurement-risk gauge
@@ -2655,7 +2617,6 @@ def q_part_type_supplier_hhi(spark, sf_dir):
     broadcast part-dim join; totals reduce per type; the squared-share
     sum runs over the bounded supplier-per-type frame in exact integer
     cents with two divisions per term."""
-    t = load_tables(spark, sf_dir)
     rev = (
         t["lineitem"]
         .join(
@@ -2683,7 +2644,7 @@ def q_part_type_supplier_hhi(spark, sf_dir):
 
 
 @query("lsh_candidate_volume_forecast", oracle=None)
-def q_lsh_candidate_volume_forecast(spark, sf_dir):
+def q_lsh_candidate_volume_forecast(spark, t):
     """Pre-flight forecast of the LSH verify-join volume: per band,
     the bucket count, the largest bucket, and the EXACT candidate-pair
     count the band would emit (sum over buckets of c*(c-1)/2) — all
@@ -2701,7 +2662,6 @@ def q_lsh_candidate_volume_forecast(spark, sf_dir):
     from ..operators.partitioning import ensure_parallelism
     from .llm_queries import NUM_HASHES, ROWS_PER_BAND
 
-    t = load_tables(spark, sf_dir)
     docs = ensure_parallelism(t["documents"])
     num_bands = (NUM_HASHES + ROWS_PER_BAND - 1) // ROWS_PER_BAND
     sigs = _minhash_agg_hashed(
@@ -2789,7 +2749,7 @@ _ORACLES3["lsh_candidate_volume_forecast"] = rf"""
     FROM lagged WHERE prev_year_cents IS NOT NULL
     """,
 )
-def q_region_quarter_revenue_yoy(spark, sf_dir):
+def q_region_quarter_revenue_yoy(spark, t):
     """Year-over-year quarterly revenue growth per region — the board
     chart: each quarter against the same quarter last year (LAG 4 on
     the quarter series), so seasonality cancels without modeling it.
@@ -2797,7 +2757,6 @@ def q_region_quarter_revenue_yoy(spark, sf_dir):
     Scale shape: three broadcast dimension hops, quarter-grain
     pre-aggregation in exact integer cents, then a region-partitioned
     LAG over the bounded calendar frame."""
-    t = load_tables(spark, sf_dir)
     q = (
         t["orders"]
         .join(
@@ -2864,7 +2823,7 @@ def q_region_quarter_revenue_yoy(spark, sf_dir):
     FROM f GROUP BY source
     """,
 )
-def q_source_char_class_profile(spark, sf_dir):
+def q_source_char_class_profile(spark, t):
     """Character-class composition per source (alpha / digit / space /
     other shares) — the encoding-corruption and content-type detector:
     mojibake inflates 'other', scraped tables inflate digits, minified
@@ -2876,7 +2835,6 @@ def q_source_char_class_profile(spark, sf_dir):
     divide exact integer sums."""
     from ..operators.partitioning import ensure_parallelism
 
-    t = load_tables(spark, sf_dir)
     txt = F.col("text")
     f = ensure_parallelism(t["documents"]).select(
         "source",
@@ -2922,7 +2880,7 @@ def q_source_char_class_profile(spark, sf_dir):
     FROM n GROUP BY 1
     """,
 )
-def q_emb_norm_histogram(spark, sf_dir):
+def q_emb_norm_histogram(spark, t):
     """Vector-norm histogram (unit-width bins): the third embedding
     QA angle after per-dimension stats and pairwise similarity —
     norm outliers mean un-normalized or exploded vectors that will
@@ -2933,7 +2891,6 @@ def q_emb_norm_histogram(spark, sf_dir):
     from ..llmdata.similarity import _as_double, norm
     from ..operators.partitioning import ensure_parallelism
 
-    t = load_tables(spark, sf_dir)
     n = ensure_parallelism(t["embeddings"]).select(
         norm(_as_double("embedding")).alias("nrm")
     )
@@ -2964,7 +2921,7 @@ def q_emb_norm_histogram(spark, sf_dir):
     FROM hourly
     """,
 )
-def q_hourly_load_percentiles(spark, sf_dir):
+def q_hourly_load_percentiles(spark, t):
     """Capacity-planning load profile: p50/p95/p99/max of per-hour
     event volume — the numbers an ingestion autoscaler and a stream
     provisioning review are actually sized from (mean load is
@@ -2973,7 +2930,6 @@ def q_hourly_load_percentiles(spark, sf_dir):
     Scale shape: hour-grain pre-aggregation (one shuffle, map-side
     combine), then exact discrete percentiles over the bounded
     calendar-hours frame in one pass."""
-    t = load_tables(spark, sf_dir)
     hourly = t["events"].groupBy(
         F.date_trunc("hour", "ts").alias("h")
     ).agg(F.count(F.lit(1)).alias("c"))
@@ -3003,7 +2959,7 @@ def q_hourly_load_percentiles(spark, sf_dir):
     FROM part GROUP BY p_type
     """,
 )
-def q_part_size_price_regression(spark, sf_dir):
+def q_part_size_price_regression(spark, t):
     """Pricing-structure audit: per part type, the fitted price-per-
     size-unit slope and the size-price correlation — near-zero
     correlation means size doesn't drive price in that line (so a
@@ -3013,7 +2969,6 @@ def q_part_size_price_regression(spark, sf_dir):
 
     Scale shape: one groupBy over the part dimension with map-side
     moment partials — no window, no join."""
-    t = load_tables(spark, sf_dir)
     return t["part"].groupBy("p_type").agg(
         F.count(F.lit(1)).alias("n_parts"),
         (F.round(F.regr_slope("p_retailprice", "p_size"), 4) + 0.0).alias(
@@ -3026,7 +2981,7 @@ def q_part_size_price_regression(spark, sf_dir):
 
 
 @query("doc_dedup_threshold_sweep", oracle=None)
-def q_doc_dedup_threshold_sweep(spark, sf_dir):
+def q_doc_dedup_threshold_sweep(spark, t):
     """Dedup-threshold tuning curve: candidate pairs per exact-Jaccard
     decile, with the cumulative pair count a given threshold would
     keep — ONE candidate-verify computation answers every 'how
@@ -3040,7 +2995,6 @@ def q_doc_dedup_threshold_sweep(spark, sf_dir):
     from ..llmdata.dedup import minhash_near_duplicates
     from .llm_queries import NUM_HASHES, ROWS_PER_BAND
 
-    t = load_tables(spark, sf_dir)
     pairs = minhash_near_duplicates(
         t["documents"], "text", "doc_id",
         n=SHINGLE_N, num_hashes=NUM_HASHES,
@@ -3113,7 +3067,7 @@ _ORACLES4["doc_dedup_threshold_sweep"] = rf"""
     FROM per_cust GROUP BY c_mktsegment
     """,
 )
-def q_segment_clv_projection(spark, sf_dir):
+def q_segment_clv_projection(spark, t):
     """One-year customer-lifetime-value projection per market segment:
     AOV x annualized purchase frequency, from per-customer order
     counts, integer-cent revenue, and active-day spans (+1 day per
@@ -3125,7 +3079,6 @@ def q_segment_clv_projection(spark, sf_dir):
     broadcast segment hop, then a bounded segment rollup; AOV is
     exact-integer floor division and the projection multiplies before
     dividing so the integer path stays exact."""
-    t = load_tables(spark, sf_dir)
     per_cust = (
         t["orders"]
         .join(
@@ -3185,7 +3138,7 @@ def q_segment_clv_projection(spark, sf_dir):
     GROUP BY n.n_name
     """,
 )
-def q_nation_order_coverage(spark, sf_dir):
+def q_nation_order_coverage(spark, t):
     """Market-activation coverage: per nation, the share of registered
     customers who have EVER ordered — the dormant-account gauge sales
     coverage reviews start from (low coverage = acquisition without
@@ -3194,7 +3147,6 @@ def q_nation_order_coverage(spark, sf_dir):
     Scale shape: the buyer set is a key-only distinct (no payload);
     customers left-join it on the customer key and roll up to the
     25-nation grid behind a broadcast nation hop."""
-    t = load_tables(spark, sf_dir)
     buyers = t["orders"].select("o_custkey").distinct()
     base = (
         t["customer"]

@@ -16,7 +16,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from .corpus import ORACLES, QUERIES, query
-from .tables import load_tables
 from ..operators.pinning import pin
 
 # PQ search parameters (mirrors round3_queries): queries are
@@ -92,7 +91,7 @@ def _ann_recall_oracle() -> str:
 
 
 @query("emb_ann_recall_contract", oracle=_ann_recall_oracle())
-def q_emb_ann_recall_contract(spark, sf_dir):
+def q_emb_ann_recall_contract(spark, t):
     """Recall@k of every approximate-nearest-neighbor path against its
     exact ground truth — the quality contract CORRECTNESS alone can't
     see: an ANN index can be 'correct' (returns what its algorithm
@@ -126,7 +125,6 @@ def q_emb_ann_recall_contract(spark, sf_dir):
     persist passes; each is consumed once). A standalone A/B
     (docs/AB_RECORDS.md, "pin forms") for the r7 one-pin form
     measured ~3.1s vs ~3.4s for the five-pin form at sf0.1."""
-    t = load_tables(spark, sf_dir)
     from ..llmdata.similarity import _as_double, dot
     from ..operators.partitioning import ensure_parallelism
 
@@ -207,7 +205,7 @@ def q_emb_ann_recall_contract(spark, sf_dir):
         lambda a, b: a.unionByName(b),
         [
             _tag(
-                QUERIES[ann_name](spark, sf_dir).select(
+                QUERIES[ann_name](spark, t.sf_dir).select(
                     "query_id", "neighbor_id"
                 ),
                 method,
@@ -323,7 +321,7 @@ def _ivf_nprobe_sweep_oracle() -> str:
     "emb_ivf_nprobe_sweep",
     oracle=None,  # replaced below (needs the registered truth oracle)
 )
-def q_emb_ivf_nprobe_sweep(spark, sf_dir):
+def q_emb_ivf_nprobe_sweep(spark, t):
     """Recall-vs-nprobe tuning curve for the IVF index — the capacity
     planner's question ("how many lists must I probe for 95% recall?")
     answered in ONE pass: probe RANKS are computed once per
@@ -347,7 +345,6 @@ def q_emb_ivf_nprobe_sweep(spark, sf_dir):
     )
     from ..operators.partitioning import ensure_parallelism
 
-    t = load_tables(spark, sf_dir)
     emb = t["embeddings"]
     cents = ivf_centroids(emb, _IVF_LISTS).withColumn(
         "n_cv", norm(F.col("cv"))
@@ -382,7 +379,7 @@ def q_emb_ivf_nprobe_sweep(spark, sf_dir):
         .withColumn("pr", F.row_number().over(probe_rank_w))
         .select("query_id", "list_id", "pr")
     )
-    truth = QUERIES["emb_cosine_topk"](spark, sf_dir).select(
+    truth = QUERIES["emb_cosine_topk"](spark, t.sf_dir).select(
         "query_id", "neighbor_id"
     )
     hit_rank = truth.join(inv, "neighbor_id").join(
@@ -500,7 +497,7 @@ def _bloom_probe_sql(r: int) -> str:
     FROM verdict v JOIN fact_counts fc ON fc.l_suppkey = v.l_suppkey
     """,
 )
-def q_bloom_prefilter_audit(spark, sf_dir):
+def q_bloom_prefilter_audit(spark, t):
     """Bloom-filter semi-join reduction audit — the runtime-filter
     pattern that keeps a 100 TB fact scan from shuffling rows that a
     selective dimension predicate will discard anyway: the dim side's
@@ -518,7 +515,6 @@ def q_bloom_prefilter_audit(spark, sf_dir):
     rows are counted at supplier grain, so nothing fact-sized ever
     shuffles. md5-position arithmetic matches the oracle digit for
     digit."""
-    t = load_tables(spark, sf_dir)
     dim_keys = (
         t["supplier"]
         .filter(F.col("s_nationkey") < _BLOOM_NATION_MAX)
@@ -639,7 +635,7 @@ def q_bloom_prefilter_audit(spark, sf_dir):
     LIMIT 20
     """,
 )
-def q_basket_association_rules(spark, sf_dir):
+def q_basket_association_rules(spark, t):
     """Association rules over the order log — support, confidence and
     lift for the strongest co-purchase pairs (both rule directions),
     completing basket_part_pairs: support says 'common', confidence
@@ -657,7 +653,6 @@ def q_basket_association_rules(spark, sf_dir):
     the part key at scale). The top-20 cut ranks by exact integer
     support with id tie-breaks, so the boundary never hinges on a
     float."""
-    t = load_tables(spark, sf_dir)
     # three consumers (pair unfold, part supports, basket count) share
     # this order-grain frame — persist so the fact scan + shuffle run
     # once; arrays are bounded by lines-per-order, so the pinned
@@ -760,7 +755,7 @@ def q_basket_association_rules(spark, sf_dir):
     FROM bucketed GROUP BY lateness_bucket
     """,
 )
-def q_event_disorder_profile(spark, sf_dir):
+def q_event_disorder_profile(spark, t):
     """Out-of-orderness profile of the event log — THE input to
     watermark sizing: for each event, its lateness versus the maximum
     event time already seen in its user's ARRIVAL order, bucketed into
@@ -776,7 +771,6 @@ def q_event_disorder_profile(spark, sf_dir):
     Scale shape: the running max is a key-partitioned window (user
     grain, shuffle-parallel — never global); lateness is exact integer
     microseconds; the bucket rollup is a 5-row aggregate."""
-    t = load_tables(spark, sf_dir)
     ev = t["events"].filter(F.col("user_id").isNotNull())
     h = F.md5(F.concat(F.lit("arr:"), F.col("event_id").cast("string")))
     jitter_s = F.conv(F.substring(h, 1, 4), 16, 10).cast("long") % 7200
@@ -850,7 +844,7 @@ def q_event_disorder_profile(spark, sf_dir):
     FROM ranked
     """,
 )
-def q_doc_incremental_dedup(spark, sf_dir):
+def q_doc_incremental_dedup(spark, t):
     """Incremental exact dedup — the form a 100 TB corpus actually
     runs: a NEW crawl batch dedups against the settled corpus's HASH
     INDEX (never its text) plus itself, so each increment's cost is
@@ -862,7 +856,6 @@ def q_doc_incremental_dedup(spark, sf_dir):
     Scale shape: the settled side contributes only distinct md5s (the
     persisted dedup index); the batch side groups and anti-joins on
     the 32-char hash — the shuffle never carries document text."""
-    t = load_tables(spark, sf_dir)
     docs = t["documents"]
     cut = docs.agg((F.max("doc_id") / 2).cast("long").alias("c"))
     hashed = docs.select(
@@ -940,7 +933,7 @@ def q_doc_incremental_dedup(spark, sf_dir):
     FROM credits
     """,
 )
-def q_multi_touch_attribution(spark, sf_dir):
+def q_multi_touch_attribution(spark, t):
     """Linear multi-touch attribution: each purchase's value is split
     equally across the view/click touches in its inter-purchase epoch
     (gaps-and-islands, same epoch tagging as purchase_attribution's
@@ -952,7 +945,6 @@ def q_multi_touch_attribution(spark, sf_dir):
     per-epoch touch counts are one grouped aggregate; credit division
     is exact integer arithmetic in 1e-4 dollars (BIGINT floor-div, so
     no float summation-order digit can differ cross-engine)."""
-    t = load_tables(spark, sf_dir)
     ev = t["events"].filter(F.col("user_id").isNotNull())
     w = (
         Window.partitionBy("user_id")
@@ -1023,7 +1015,7 @@ def q_multi_touch_attribution(spark, sf_dir):
     "minhash_recall_stats",
     oracle=None,  # set below: needs llm_queries' shared CTE block
 )
-def q_minhash_recall_stats(spark, sf_dir):
+def q_minhash_recall_stats(spark, t):
     """LSH quality contract, recall side — the companion to
     minhash_precision_stats: of the TRUE near-duplicate pairs (exact
     Jaccard >= threshold over every pair sharing at least one
@@ -1060,7 +1052,6 @@ def q_minhash_recall_stats(spark, sf_dir):
         SHINGLE_N,
     )
 
-    t = load_tables(spark, sf_dir)
     docs = t["documents"]
     shb = pin(shingle_hash_frame(docs, "text", "doc_id", SHINGLE_N))
     # explicit deterministic truth sample (even doc_id) — see docstring
@@ -1198,7 +1189,7 @@ def _motif_terms(prefix: str) -> str:
     WHERE rn <= {MOTIF_TOPK}
     """,
 )
-def q_revenue_motif_search(spark, sf_dir):
+def q_revenue_motif_search(spark, t):
     """Time-series subsequence similarity search (the EDBT'19
     streaming-similarity family): which historical {MOTIF_W}-day
     revenue windows most resemble the LATEST one, by z-normalized
@@ -1214,7 +1205,6 @@ def q_revenue_motif_search(spark, sf_dir):
     explicit expression order on both engines (no float-SUM
     merge-order sensitivity); top-k is a rank over the day-grain
     distance frame."""
-    t = load_tables(spark, sf_dir)
     daily = t["orders"].groupBy(
         F.to_date("o_orderdate").alias("day")
     ).agg(F.round(F.sum("o_totalprice") * 100).cast("long").alias("cents"))

@@ -18,7 +18,6 @@ from pyspark.sql import Window
 
 from ..functions.money import L_CENTS, O_CENTS, cents
 from .corpus import query
-from .tables import load_tables
 
 
 # --------------------------------------------------------------------------
@@ -47,7 +46,7 @@ from .tables import load_tables
     FROM banded GROUP BY segment, quartile
     """,
 )
-def q_customer_spend_quartile_bands(spark, sf_dir):
+def q_customer_spend_quartile_bands(spark, t):
     """NTILE spend bands per market segment — the windowed
     quartile-banding the reference's customer-value tab approximates
     with pandas qcut (app.py value-segment family).
@@ -57,7 +56,6 @@ def q_customer_spend_quartile_bands(spark, sf_dir):
     sort), total order inside via the (spend, custkey) tie-break so
     NTILE is deterministic on both engines; output is
     segments × 4 rows."""
-    t = load_tables(spark, sf_dir)
     spend = (
         t["customer"]
         .join(t["orders"], F.col("o_custkey") == F.col("c_custkey"))
@@ -103,7 +101,7 @@ def q_customer_spend_quartile_bands(spark, sf_dir):
     FROM a JOIN b ON b.nationkey = a.nationkey
     """,
 )
-def q_nation_revenue_rank_stability(spark, sf_dir):
+def q_nation_revenue_rank_stability(spark, t):
     """League-table stability: each nation's revenue rank in the first
     vs last order year and the absolute shift — the rank-churn measure
     behind 'did the market order change'.
@@ -111,7 +109,6 @@ def q_nation_revenue_rank_stability(spark, sf_dir):
     Scale shape: one groupBy to nation × year grain (bounded), ranks
     windowed PARTITION BY yr, first/last year picked by scalar min/max
     subqueries (broadcast), self-join on the 25-row nation grain."""
-    t = load_tables(spark, sf_dir)
     rev = (
         t["orders"]
         .join(t["customer"], F.col("c_custkey") == F.col("o_custkey"))
@@ -169,7 +166,7 @@ def q_nation_revenue_rank_stability(spark, sf_dir):
     JOIN weekly p ON p.week = w.week - INTERVAL 7 DAY
     """,
 )
-def q_weekly_revenue_wow_delta(spark, sf_dir):
+def q_weekly_revenue_wow_delta(spark, t):
     """Week-over-week revenue delta in basis points — the trend pulse
     of the reference dashboard's revenue tab, computed WITHOUT a
     global-order window: each week equi-joins its predecessor (week -
@@ -181,7 +178,6 @@ def q_weekly_revenue_wow_delta(spark, sf_dir):
     arithmetic at any magnitude — see the oracle comment), also
     immune to the BIGINT overflow a d*10000 integer form would hit
     at extreme deltas."""
-    t = load_tables(spark, sf_dir)
     weekly = (
         t["orders"]
         .groupBy(F.date_trunc("week", "o_orderdate").cast("date").alias("week"))
@@ -235,7 +231,7 @@ def q_weekly_revenue_wow_delta(spark, sf_dir):
     LIMIT 20
     """,
 )
-def q_orders_price_zscore_outliers(spark, sf_dir):
+def q_orders_price_zscore_outliers(spark, t):
     """Per-priority z-score anomaly triage (top-20 by |z|) — the defensive
     anomaly screen of the Silver cleanse family, computed from EXACT
     moment sums: counts and cent-sums are BIGINT, the sum of squares
@@ -246,7 +242,6 @@ def q_orders_price_zscore_outliers(spark, sf_dir):
     Scale shape: one partial-aggregated groupBy to the 5-row priority
     grain, broadcast back over the fact scan — two passes, no window,
     no skew sensitivity."""
-    t = load_tables(spark, sf_dir)
     amt = cents("o_totalprice")
     stats = (
         t["orders"]
@@ -305,7 +300,7 @@ def q_orders_price_zscore_outliers(spark, sf_dir):
     GROUP BY p.p_brand, q.q1, q.q3
     """,
 )
-def q_brand_price_iqr_outliers(spark, sf_dir):
+def q_brand_price_iqr_outliers(spark, t):
     """Tukey-fence (1.5×IQR) price outliers per brand — the robust
     alternative to the z-screen above; exact interpolated quartiles
     (Spark `percentile` == DuckDB `quantile_cont`, NOT the approx
@@ -314,7 +309,6 @@ def q_brand_price_iqr_outliers(spark, sf_dir):
     Scale shape: exact percentile aggregates per brand (partial-merge
     exact order statistics), 25-row grain broadcast back over the
     dimension scan."""
-    t = load_tables(spark, sf_dir)
     q = t["part"].groupBy("p_brand").agg(
         F.percentile("p_retailprice", F.lit(0.25)).alias("q1"),
         F.percentile("p_retailprice", F.lit(0.75)).alias("q3"),
@@ -373,7 +367,7 @@ def q_brand_price_iqr_outliers(spark, sf_dir):
     FROM tot t, within w
     """,
 )
-def q_brand_price_variance_decomposition(spark, sf_dir):
+def q_brand_price_variance_decomposition(spark, t):
     """One-way ANOVA sum-of-squares decomposition of retail price over
     brands (SS_total = SS_within + SS_between) — 'does brand explain
     price'. All moment sums are exact integers (cents in BIGINT,
@@ -384,7 +378,6 @@ def q_brand_price_variance_decomposition(spark, sf_dir):
     Scale shape: one partial-aggregated groupBy to the brand grain,
     then a 25-row re-aggregate — two map-side-combined passes, no
     window, no data motion beyond the brand grain."""
-    t = load_tables(spark, sf_dir)
     amt = cents("p_retailprice")
     c = t["part"].groupBy("p_brand").agg(
         F.count(F.lit(1)).alias("n"),
@@ -435,7 +428,7 @@ def q_brand_price_variance_decomposition(spark, sf_dir):
     FROM d GROUP BY dow
     """,
 )
-def q_orders_weekday_seasonality(spark, sf_dir):
+def q_orders_weekday_seasonality(spark, t):
     """Day-of-week order/revenue profile — weekday 0 = Monday via
     epoch-day arithmetic ((date - 1970-01-05) % 7), the ONLY dow
     encoding both engines agree on (DuckDB dayofweek is Sunday=0,
@@ -444,7 +437,6 @@ def q_orders_weekday_seasonality(spark, sf_dir):
 
     Scale shape: map-side date arithmetic, one combine-heavy groupBy
     to 7 rows, scalar total broadcast into the share division."""
-    t = load_tables(spark, sf_dir)
     d = t["orders"].select(
         (
             F.datediff(F.to_date("o_orderdate"), F.lit("1970-01-05")) % 7
@@ -478,7 +470,7 @@ def q_orders_weekday_seasonality(spark, sf_dir):
     FROM h
     """,
 )
-def q_event_type_share_by_hour(spark, sf_dir):
+def q_event_type_share_by_hour(spark, t):
     """Event-mix profile by hour of day (the load-shape behind the
     reference's activity heatmap): per-hour type shares in integer
     basis points via a PARTITIONED window sum over the 24×|types|
@@ -487,7 +479,6 @@ def q_event_type_share_by_hour(spark, sf_dir):
     Scale shape: one groupBy collapses the stream to ≤ 24×types rows
     before the window ever runs — the window's input is the bounded
     aggregate, never the raw events."""
-    t = load_tables(spark, sf_dir)
     h = (
         t["events"]
         .groupBy(F.hour("ts").alias("hour"), "event_type")
@@ -526,14 +517,13 @@ def q_event_type_share_by_hour(spark, sf_dir):
     FROM q GROUP BY quarter
     """,
 )
-def q_quarter_end_load_share(spark, sf_dir):
+def q_quarter_end_load_share(spark, t):
     """Quarter-end loading: what share of each quarter's orders and
     revenue lands in the final 7 days — the sales-pull-forward audit.
     Quarter boundaries via date_trunc + 3-month interval on both
     engines; shares in integer basis points.
 
     Scale shape: map-side flagging, one groupBy to the quarter grain."""
-    t = load_tables(spark, sf_dir)
     qstart = F.date_trunc("quarter", "o_orderdate").cast("date")
     qend = F.add_months(qstart, 3)
     q = t["orders"].select(
@@ -577,14 +567,13 @@ def q_quarter_end_load_share(spark, sf_dir):
     GROUP BY p.p_brand
     """,
 )
-def q_returned_rate_by_brand(spark, sf_dir):
+def q_returned_rate_by_brand(spark, t):
     """Return rate per brand in integer basis points plus returned
     revenue in exact cents — the product-quality slice of the
     reference's returns analysis (the Q10 family re-cut by dimension).
 
     Scale shape: fact ⋈ broadcast part dimension, one combine-heavy
     groupBy to the brand grain."""
-    t = load_tables(spark, sf_dir)
     ret = F.col("l_returnflag") == "R"
     return (
         t["lineitem"]
@@ -636,7 +625,7 @@ SHINGLE_TOPK = 20
     LIMIT {SHINGLE_TOPK}
     """,
 )
-def q_doc_shingle_df_skew(spark, sf_dir):
+def q_doc_shingle_df_skew(spark, t):
     """Hot-shingle audit: the top-{SHINGLE_TOPK} shingles by document
     frequency and their share of the all-pairs-per-shingle volume —
     LSH's skew hazard quantified (one boilerplate shingle shared by
@@ -650,7 +639,6 @@ def q_doc_shingle_df_skew(spark, sf_dir):
     division."""
     from ..llmdata.dedup import shingle_hash_frame
 
-    t = load_tables(spark, sf_dir)
     shb = shingle_hash_frame(t["documents"], "text", "doc_id", SHINGLE_N)
     df = shb.groupBy("base").agg(F.count(F.lit(1)).alias("df"))
     vol = df.agg(
@@ -671,7 +659,7 @@ def q_doc_shingle_df_skew(spark, sf_dir):
     "doc_dup_cluster_size_histogram",
     oracle=None,  # composed below from the registered dup-clusters oracle
 )
-def q_doc_dup_cluster_size_histogram(spark, sf_dir):
+def q_doc_dup_cluster_size_histogram(spark, t):
     """Cluster-size distribution of the near-duplicate graph — the
     dedup capstone metric ('how much of the corpus sits in 2-doc vs
     50-doc duplicate families') that decides keeper policy and
@@ -680,7 +668,7 @@ def q_doc_dup_cluster_size_histogram(spark, sf_dir):
     Scale shape: composes the registered connected-components query
     (pointer-jumping CC, log-round loop) and adds two bounded
     aggregations on the cluster grain."""
-    clusters = QUERIES["doc_dup_clusters"](spark, sf_dir)
+    clusters = QUERIES["doc_dup_clusters"](spark, t.sf_dir)
     sizes = clusters.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("cluster_size")
     )
@@ -734,7 +722,7 @@ _IVF_BAL_LISTS = 16
     FROM inv GROUP BY list_id
     """,
 )
-def q_emb_ivf_list_balance(spark, sf_dir):
+def q_emb_ivf_list_balance(spark, t):
     """IVF inverted-list balance audit: vectors per list and each
     list's share of the corpus in basis points. Skewed lists are the
     ANN equivalent of a hot shuffle key — one overfull list makes
@@ -752,7 +740,6 @@ def q_emb_ivf_list_balance(spark, sf_dir):
     )
     from ..operators.partitioning import ensure_parallelism
 
-    t = load_tables(spark, sf_dir)
     emb = t["embeddings"]
     # centroids collected driver-side (16 tiny vectors) -> zero-shuffle
     # map-side argmax; the former crossJoin + PARTITION BY vec window
@@ -809,7 +796,7 @@ _KM_K = 8  # mirrors llm_queries.KMEANS_K seeds
     FROM a GROUP BY cluster_id
     """,
 )
-def q_emb_kmeans_inertia(spark, sf_dir):
+def q_emb_kmeans_inertia(spark, t):
     """k-means quality metric: within-cluster sum of squared distances
     (inertia) per cluster for the deterministic seed assignment that
     emb_kmeans_assign audits — the number a mixing pipeline watches to
@@ -827,7 +814,6 @@ def q_emb_kmeans_inertia(spark, sf_dir):
     from ..llmdata.similarity import nearest_seed_l2
     from ..operators.partitioning import ensure_parallelism
 
-    t = load_tables(spark, sf_dir)
     e = ensure_parallelism(t["embeddings"]).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -856,7 +842,7 @@ def q_emb_kmeans_inertia(spark, sf_dir):
     "emb_int8_quant_error_by_label",
     oracle=None,  # composed below from the registered quantize oracle
 )
-def q_emb_int8_quant_error_by_label(spark, sf_dir):
+def q_emb_int8_quant_error_by_label(spark, t):
     """Roll-up of the int8 quantization contract to the label grain:
     which embedding families lose the most precision to absmax
     compression. Errors are integer micro-units (the per-vector
@@ -865,8 +851,7 @@ def q_emb_int8_quant_error_by_label(spark, sf_dir):
 
     Scale shape: composes the map-side quantize pass with a broadcast
     label join and one bounded groupBy."""
-    quant = QUERIES["emb_int8_quantize"](spark, sf_dir)
-    t = load_tables(spark, sf_dir)
+    quant = QUERIES["emb_int8_quantize"](spark, t.sf_dir)
     labels = t["embeddings"].select("vec_id", "label")
     return (
         quant.join(labels, "vec_id")
@@ -921,7 +906,7 @@ PREFIX_TOKENS = 8
     GROUP BY p.source
     """,
 )
-def q_doc_prefix_dup_rate(spark, sf_dir):
+def q_doc_prefix_dup_rate(spark, t):
     """Prefix-duplication audit: share of documents per source whose
     first {PREFIX_TOKENS} tokens collide with another document — the
     boilerplate-header signal (scraped pages sharing a template open
@@ -932,7 +917,6 @@ def q_doc_prefix_dup_rate(spark, sf_dir):
     shuffles); group counts shuffle 32-char hashes; the flag joins
     back on the hash (AQE broadcasts the collided-group side at
     typical skew)."""
-    t = load_tables(spark, sf_dir)
     prefix = F.md5(
         F.concat_ws(
             " ",
@@ -975,7 +959,7 @@ def q_doc_prefix_dup_rate(spark, sf_dir):
     FROM w GROUP BY source
     """,
 )
-def q_doc_vocab_growth_by_source(spark, sf_dir):
+def q_doc_vocab_growth_by_source(spark, t):
     """Type/token ratio per source — the vocabulary-richness slice of
     the Heaps-law fit (doc_heaps_law_fit measures growth over corpus
     size; this measures level per source), the quick screen for
@@ -986,7 +970,6 @@ def q_doc_vocab_growth_by_source(spark, sf_dir):
     token rows beyond the hash grain)."""
     from ..operators.partitioning import ensure_parallelism
 
-    t = load_tables(spark, sf_dir)
     w = (
         ensure_parallelism(t["documents"])
         .filter(F.trim("text") != "")
@@ -1023,7 +1006,7 @@ def q_doc_vocab_growth_by_source(spark, sf_dir):
     FROM replayed GROUP BY 1
     """,
 )
-def q_events_dedup_rate_by_day(spark, sf_dir):
+def q_events_dedup_rate_by_day(spark, t):
     """Daily duplicate-delivery audit under an at-least-once replay
     (every 10th event re-delivered, the deterministic twin of the
     streaming event_id_dedup scenario): how much of each day's volume
@@ -1032,7 +1015,6 @@ def q_events_dedup_rate_by_day(spark, sf_dir):
 
     Scale shape: map-side day bucketing, one partial-distinct
     aggregate per day grain; no joins."""
-    t = load_tables(spark, sf_dir)
     ev = t["events"].select("event_id", "ts")
     replayed = ev.unionAll(ev.filter(F.col("event_id") % 10 == 0))
     return (
@@ -1077,7 +1059,7 @@ COPURCHASE_TOPK = 50
     LIMIT {COPURCHASE_TOPK}
     """,
 )
-def q_copurchase_jaccard_similar_parts(spark, sf_dir):
+def q_copurchase_jaccard_similar_parts(spark, t):
     """Item-item similarity by basket Jaccard (co-baskets over union
     of baskets) — the normalized form of basket_part_pairs' raw
     counts, the classic co-purchase recommender primitive. Integer
@@ -1088,7 +1070,6 @@ def q_copurchase_jaccard_similar_parts(spark, sf_dir):
     self-join (never all part pairs) with the support-{COPURCHASE_MIN_CO}
     HAVING pruning the pair tail; degree frames join on the part
     grain; top-k is TakeOrdered, no global window."""
-    t = load_tables(spark, sf_dir)
     op = t["lineitem"].select("l_orderkey", "l_partkey").distinct()
     deg = op.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n"))
     a = op.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part_a"))
@@ -1145,7 +1126,7 @@ def q_copurchase_jaccard_similar_parts(spark, sf_dir):
     GROUP BY c.c_mktsegment
     """,
 )
-def q_customer_type_concentration(spark, sf_dir):
+def q_customer_type_concentration(spark, t):
     """Basket concentration per customer (HHI over part types, integer
     basis-point shares) rolled up to segment grain — 'do builders buy
     one thing or everything', the assortment-planning cut of the HHI
@@ -1158,7 +1139,6 @@ def q_customer_type_concentration(spark, sf_dir):
 
     Scale shape: fact joins broadcast dims, per-customer shares via a
     window PARTITIONED by customer, two bounded roll-ups."""
-    t = load_tables(spark, sf_dir)
     ct = (
         t["lineitem"]
         .join(t["orders"], F.col("o_orderkey") == F.col("l_orderkey"))
@@ -1211,7 +1191,7 @@ def q_customer_type_concentration(spark, sf_dir):
     FROM d GROUP BY month
     """,
 )
-def q_ship_delay_p95_by_month(spark, sf_dir):
+def q_ship_delay_p95_by_month(spark, t):
     """Fulfillment SLA trend: exact p50/p95 order→ship delay per order
     month — the tail-latency view of ship_delay_days (means hide the
     tail; the p95 is what the SLA pages on). Exact interpolated
@@ -1221,7 +1201,6 @@ def q_ship_delay_p95_by_month(spark, sf_dir):
     Scale shape: fact-fact equi-join on orderkey, exact percentile
     partial-merge per month grain — no window, no sort of the raw
     frame."""
-    t = load_tables(spark, sf_dir)
     d = (
         t["lineitem"]
         .join(t["orders"], F.col("o_orderkey") == F.col("l_orderkey"))
@@ -1258,7 +1237,7 @@ def q_ship_delay_p95_by_month(spark, sf_dir):
     FROM b GROUP BY band
     """,
 )
-def q_discount_band_margin(spark, sf_dir):
+def q_discount_band_margin(spark, t):
     """Discount-band margin roll-up (low < 3%, mid < 7%, high ≥ 7%):
     net revenue and average quantity per band — the pricing question
     ('do deep discounts buy volume?') in the reference's discount
@@ -1266,7 +1245,6 @@ def q_discount_band_margin(spark, sf_dir):
 
     Scale shape: map-side banding, one combine-heavy groupBy to 3
     rows."""
-    t = load_tables(spark, sf_dir)
     band = (
         F.when(F.col("l_discount") < 0.03, "low")
         .when(F.col("l_discount") < 0.07, "mid")
@@ -1311,7 +1289,7 @@ NORM_EXTREME_K = 10
     SELECT * FROM lo UNION ALL SELECT * FROM hi
     """,
 )
-def q_emb_norm_extremes(spark, sf_dir):
+def q_emb_norm_extremes(spark, t):
     """Norm-extreme triage: the {NORM_EXTREME_K} smallest- and
     largest-norm vectors — near-zero norms are dead embeddings
     (failed encodes) and giant norms dominate unnormalized dot
@@ -1323,7 +1301,6 @@ def q_emb_norm_extremes(spark, sf_dir):
     passes (no global window), 2×{NORM_EXTREME_K}-row output."""
     from ..operators.partitioning import ensure_parallelism
 
-    t = load_tables(spark, sf_dir)
     n2 = F.round(
         F.aggregate(
             F.transform(
@@ -1362,7 +1339,7 @@ def q_emb_norm_extremes(spark, sf_dir):
     FROM c
     """,
 )
-def q_doc_lang_source_confusion(spark, sf_dir):
+def q_doc_lang_source_confusion(spark, t):
     """Language × source contingency table with within-source shares —
     the mixing-audit companion to doc_source_mixing (is a source
     monolingual or mixed, which drives per-language routing of the
@@ -1371,7 +1348,6 @@ def q_doc_lang_source_confusion(spark, sf_dir):
 
     Scale shape: one groupBy collapses the corpus before the window
     runs; the window input is the contingency grain, never raw docs."""
-    t = load_tables(spark, sf_dir)
     c = t["documents"].groupBy("source", "lang").agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -1402,7 +1378,7 @@ def q_doc_lang_source_confusion(spark, sf_dir):
     GROUP BY c.c_mktsegment
     """,
 )
-def q_customer_order_span_stats(spark, sf_dir):
+def q_customer_order_span_stats(spark, t):
     """Customer lifetime span (first→last order, in days) rolled up to
     segment grain — the tenure backbone of the cohort/CLV family
     (cohort_retention buckets by first month; this measures the raw
@@ -1410,7 +1386,6 @@ def q_customer_order_span_stats(spark, sf_dir):
 
     Scale shape: one groupBy to customer grain, broadcast-joined
     segment dimension, one bounded roll-up."""
-    t = load_tables(spark, sf_dir)
     s = t["orders"].groupBy(F.col("o_custkey").alias("custkey")).agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.datediff(
@@ -1443,7 +1418,7 @@ def q_customer_order_span_stats(spark, sf_dir):
     GROUP BY 1, 2
     """,
 )
-def q_tax_discount_joint_histogram(spark, sf_dir):
+def q_tax_discount_joint_histogram(spark, t):
     """2-D pricing-lever histogram: line counts and revenue over the
     (tax%, discount%) lattice — the joint distribution the pricing
     simulator needs (marginals alone hide that high tax never
@@ -1452,7 +1427,6 @@ def q_tax_discount_joint_histogram(spark, sf_dir):
 
     Scale shape: map-side bucketing, one combine-heavy groupBy to the
     ≤ 9×11 lattice."""
-    t = load_tables(spark, sf_dir)
     return (
         t["lineitem"]
         .groupBy(

@@ -17,14 +17,13 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from .corpus import ORACLES, QUERIES, query
-from .tables import load_tables
 
 
 @query(
     "emb_label_knn_accuracy",
     oracle=None,  # composed below from the registered cosine-topk oracle
 )
-def q_emb_label_knn_accuracy(spark, sf_dir):
+def q_emb_label_knn_accuracy(spark, t):
     """Embedding-quality contract: 1-nearest-neighbor label accuracy
     over the audited query set — 'do nearby vectors share labels', the
     classification sanity check that catches a broken encoder even
@@ -33,7 +32,7 @@ def q_emb_label_knn_accuracy(spark, sf_dir):
     Scale shape: composes the registered brute-force cosine top-k
     (whose plan is audited by its own query); rank-1 extraction and
     the label joins run on the query-set grain (k rows per query)."""
-    topk = QUERIES["emb_cosine_topk"](spark, sf_dir)
+    topk = QUERIES["emb_cosine_topk"](spark, t.sf_dir)
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("neighbor_id")
     )
@@ -42,7 +41,6 @@ def q_emb_label_knn_accuracy(spark, sf_dir):
         .filter(F.col("rn") == 1)
         .select("query_id", "neighbor_id")
     )
-    t = load_tables(spark, sf_dir)
     labels = t["embeddings"].select("vec_id", "label")
     ql = labels.withColumnRenamed("vec_id", "query_id").withColumnRenamed(
         "label", "q_label"
@@ -84,7 +82,7 @@ ORACLES["emb_label_knn_accuracy"] = f"""
     "doc_perplexity_by_source",
     oracle=None,  # composed below from the registered bigram-LM oracle
 )
-def q_doc_perplexity_by_source(spark, sf_dir):
+def q_doc_perplexity_by_source(spark, t):
     """Language-model fluency roll-up: per-source average bigram
     neg-log2 probability (the perplexity exponent) — which sources
     read like the corpus and which are noise, the data-mixing signal
@@ -93,8 +91,7 @@ def q_doc_perplexity_by_source(spark, sf_dir):
     Parity: each doc's score is rounded by the base query; the rollup
     scales it to integer e4 micro-bits per doc BEFORE the BIGINT sum,
     so source aggregates have no float merge-order sensitivity."""
-    scored = QUERIES["doc_bigram_lm_score"](spark, sf_dir)
-    t = load_tables(spark, sf_dir)
+    scored = QUERIES["doc_bigram_lm_score"](spark, t.sf_dir)
     src = t["documents"].select("doc_id", "source")
     return (
         scored.join(src, "doc_id")
@@ -132,7 +129,7 @@ ORACLES["doc_perplexity_by_source"] = f"""
     "doc_contamination_by_split",
     oracle=None,  # composed below from split + contamination oracles
 )
-def q_doc_contamination_by_split(spark, sf_dir):
+def q_doc_contamination_by_split(spark, t):
     """Train/eval hygiene capstone: contamination rate per split —
     composes the registered deterministic splitter with the registered
     eval-overlap detector to answer the question that actually matters
@@ -141,9 +138,9 @@ def q_doc_contamination_by_split(spark, sf_dir):
     Scale shape: both inputs are registered audited queries; the
     composition is a broadcast-sized join (contaminated docs) plus one
     groupBy on the split grain."""
-    split = QUERIES["doc_train_split"](spark, sf_dir)
+    split = QUERIES["doc_train_split"](spark, t.sf_dir)
     contaminated = (
-        QUERIES["doc_contamination_overlap"](spark, sf_dir)
+        QUERIES["doc_contamination_overlap"](spark, t.sf_dir)
         .select("doc_id")
         .withColumn("is_contaminated", F.lit(1))
     )
@@ -208,7 +205,7 @@ ORACLES["doc_contamination_by_split"] = f"""
     GROUP BY 1, 2
     """,
 )
-def q_customer_value_migration(spark, sf_dir):
+def q_customer_value_migration(spark, t):
     """Value-tier migration matrix: each customer's spend quartile in
     the first half of the order history vs the second — the retention
     question behind RFM ('are my top customers staying on top'),
@@ -217,7 +214,6 @@ def q_customer_value_migration(spark, sf_dir):
     Scale shape: two bounded scalar date aggregates, one groupBy to
     the (customer, half) grain, NTILE windows PARTITIONED by half
     with total-order tie-breaks, and a customer-grain self-join."""
-    t = load_tables(spark, sf_dir)
     b = t["orders"].agg(
         F.min(F.to_date("o_orderdate")).alias("d0"),
         F.max(F.to_date("o_orderdate")).alias("d1"),
@@ -273,14 +269,13 @@ def q_customer_value_migration(spark, sf_dir):
     GROUP BY 1, 2
     """,
 )
-def q_orders_backlog_aging(spark, sf_dir):
+def q_orders_backlog_aging(spark, t):
     """Open-order backlog aging: unshipped ('O') orders bucketed by
     age as of the newest order date, by priority — the fulfillment
     debt report (old high-priority backlog is the fire).
 
     Scale shape: scalar as-of date broadcast, map-side bucketing, one
     groupBy to the priority × bucket grain."""
-    t = load_tables(spark, sf_dir)
     asof = t["orders"].agg(
         F.max(F.to_date("o_orderdate")).alias("d")
     ).collect()[0]["d"]
@@ -338,7 +333,7 @@ def q_orders_backlog_aging(spark, sf_dir):
     LEFT JOIN sell s ON s.nationkey = n.n_nationkey
     """,
 )
-def q_nation_trade_balance(spark, sf_dir):
+def q_nation_trade_balance(spark, t):
     """Per-nation trade balance: revenue supplied (its suppliers'
     lines) minus revenue consumed (its customers' orders) — the
     two-sided dimension rollup TPC-H Q5 hints at but never totals;
@@ -347,7 +342,6 @@ def q_nation_trade_balance(spark, sf_dir):
     Scale shape: two independent fact aggregations (each fact ⋈
     broadcast dim), then a 25-row nation-grain assembly with
     left-join zero-fill."""
-    t = load_tables(spark, sf_dir)
     net_cents = F.round(
         F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
     ).cast("long")
@@ -413,7 +407,7 @@ SLA_DAYS = 30
     GROUP BY 1
     """,
 )
-def q_order_priority_sla_attainment(spark, sf_dir):
+def q_order_priority_sla_attainment(spark, t):
     """SLA attainment: share of orders whose FIRST line ships within
     {SLA_DAYS} days, per priority — the promise-keeping KPI behind the
     late_shipments filter (that query lists the misses; this scores
@@ -421,7 +415,6 @@ def q_order_priority_sla_attainment(spark, sf_dir):
 
     Scale shape: one fact pre-aggregate to order grain (MIN shipdate),
     equi-join back to orders, groupBy to the 5-row priority grain."""
-    t = load_tables(spark, sf_dir)
     firstship = t["lineitem"].groupBy("l_orderkey").agg(
         F.min(F.to_date("l_shipdate")).alias("first_ship")
     )
@@ -447,7 +440,7 @@ def q_order_priority_sla_attainment(spark, sf_dir):
     "emb_pca_reconstruction_error",
     oracle=None,  # composed below from the top-PC oracle's CTE chain
 )
-def q_emb_pca_reconstruction_error(spark, sf_dir):
+def q_emb_pca_reconstruction_error(spark, t):
     """Rank-1 PCA reconstruction error: how much corpus variance the
     top principal component explains — the dimensionality-reduction
     go/no-go metric on top of the registered power-iteration query
@@ -471,7 +464,6 @@ def q_emb_pca_reconstruction_error(spark, sf_dir):
     from ..operators.partitioning import ensure_parallelism
     from ..operators.pinning import pin
 
-    t = load_tables(spark, sf_dir)
     emb = ensure_parallelism(t["embeddings"]).select(
         "vec_id",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("e"),

@@ -25,7 +25,6 @@ from event_driven_data_pipeline_for_e_commerce_spark.operators.partitioning impo
 )
 
 from .corpus import ORACLES, QUERIES, query
-from .tables import load_tables
 
 
 @query(
@@ -41,13 +40,12 @@ from .tables import load_tables
     FROM per_order GROUP BY n_lines
     """,
 )
-def q_order_linecount_histogram(spark, sf_dir):
+def q_order_linecount_histogram(spark, t):
     """Order-shape histogram: how many orders have 1, 2, ... line
     items — the fulfilment-complexity profile (complements
     q13_order_count_distribution, which histograms orders per
     customer). Two hash aggregations, both with map-side partials;
     the second groups on the tiny line-count domain."""
-    t = load_tables(spark, sf_dir)
     per_order = (
         ensure_parallelism(t["lineitem"])
         .groupBy("l_orderkey")
@@ -66,7 +64,7 @@ _TOKEN_BUDGETS = (10_000, 50_000, 100_000, 500_000, 1_000_000)
     "doc_token_budget_curve",
     oracle=None,  # composed below from the registered quality-score oracle
 )
-def q_doc_token_budget_curve(spark, sf_dir):
+def q_doc_token_budget_curve(spark, t):
     """Training-data curation curve: rank documents by quality score
     (best first), accumulate token counts in rank order, and report
     how many documents — and exactly how many tokens — fit under each
@@ -79,7 +77,7 @@ def q_doc_token_budget_curve(spark, sf_dir):
     NOT a single-task ``SUM OVER (ORDER BY ...)`` window; the budget
     fan-out is a broadcast cross join against a 5-row literal frame
     followed by one tiny-domain aggregation."""
-    scored = QUERIES["doc_quality_scores"](spark, sf_dir)
+    scored = QUERIES["doc_quality_scores"](spark, t.sf_dir)
     order_exprs = [F.col("quality_score").desc(), F.col("doc_id").asc()]
     cum = running_sum_ranged(scored, order_exprs, "n_tokens", "cum_tokens")
     budgets = spark.createDataFrame(
@@ -139,7 +137,7 @@ ORACLES["doc_token_budget_curve"] = f"""
     FROM tf GROUP BY source
     """,
 )
-def q_doc_hapax_rate(spark, sf_dir):
+def q_doc_hapax_rate(spark, t):
     """Vocabulary-richness signal: per source, the share of its
     vocabulary that occurs exactly once (hapax legomena). High hapax
     share flags noisy / OCR-damaged / high-entropy sources before
@@ -150,7 +148,6 @@ def q_doc_hapax_rate(spark, sf_dir):
     Scale shape: explode → (source, token) hash aggregate with
     map-side partials, then a second aggregate on the source domain;
     the token text shuffles once, counts only after that."""
-    t = load_tables(spark, sf_dir)
     tok = ensure_parallelism(t["documents"]).select(
         "source", F.explode(tokens_col("text")).alias("token")
     )
@@ -185,7 +182,7 @@ def q_doc_hapax_rate(spark, sf_dir):
     FROM ranked GROUP BY decile
     """,
 )
-def q_supplier_revenue_lorenz(spark, sf_dir):
+def q_supplier_revenue_lorenz(spark, t):
     """Revenue-concentration Lorenz deciles: suppliers sorted by
     discounted revenue, split into ten equal-count bands, revenue per
     band — the distributional view behind part_revenue_gini's single
@@ -195,7 +192,6 @@ def q_supplier_revenue_lorenz(spark, sf_dir):
     (range repartition + per-partition count bases — no single-task
     window); the supplier count is one sanctioned scalar collect; the
     decile aggregate groups on a 10-value domain."""
-    t = load_tables(spark, sf_dir)
     rev = (
         ensure_parallelism(t["lineitem"])
         .groupBy("l_suppkey")
@@ -239,7 +235,7 @@ def q_supplier_revenue_lorenz(spark, sf_dir):
     FROM v GROUP BY dim
     """,
 )
-def q_emb_quantile_clip_bounds(spark, sf_dir):
+def q_emb_quantile_clip_bounds(spark, t):
     """Quantization calibration: per-dimension p1/p50/p99 — the
     clip bounds an int8 quantizer should use instead of min/max
     (emb_dim_stats) when outliers would waste the integer range.
@@ -252,7 +248,6 @@ def q_emb_quantile_clip_bounds(spark, sf_dir):
     quantiles buffer each dim's values in its reducer — fine for a
     64-key domain; a corpus-sized key domain would switch to
     approx_percentile."""
-    t = load_tables(spark, sf_dir)
     v = ensure_parallelism(t["embeddings"]).select(
         F.posexplode("embedding").alias("pos", "val")
     )

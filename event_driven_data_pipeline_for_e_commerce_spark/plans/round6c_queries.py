@@ -36,7 +36,6 @@ from .llm_queries import (
     SHINGLE_N,
 )
 from .llm_queries import KMEANS_K
-from .tables import load_tables
 
 
 @query(
@@ -82,7 +81,7 @@ from .tables import load_tables
     FROM cnt c JOIN dots d USING (cluster_id)
     """,
 )
-def q_emb_centroid_split_drift(spark, sf_dir):
+def q_emb_centroid_split_drift(spark, t):
     """Clustering-stability contract: split the corpus into two
     halves by vec_id parity, assign BOTH halves to the same global
     seed centroids (lowest-id vectors, the emb_kmeans_assign seeds),
@@ -99,7 +98,6 @@ def q_emb_centroid_split_drift(spark, sf_dir):
     """
     from ..llmdata.similarity import nearest_seed_l2
 
-    t = load_tables(spark, sf_dir)
     e = ensure_parallelism(t["embeddings"]).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -175,7 +173,7 @@ def q_emb_centroid_split_drift(spark, sf_dir):
     GROUP BY c.source
     """,
 )
-def q_doc_bigram_cond_entropy(spark, sf_dir):
+def q_doc_bigram_cond_entropy(spark, t):
     """Corpus-diversity metric: per source, the conditional entropy
     H(w2|w1) of its own bigram distribution in bits — low entropy
     flags templated/repetitive sources whose next token is too
@@ -188,7 +186,6 @@ def q_doc_bigram_cond_entropy(spark, sf_dir):
     the vocabulary-sized count frame to its own two marginals — no
     corpus-sized join.
     """
-    t = load_tables(spark, sf_dir)
     d = ensure_parallelism(t["documents"]).select(
         "source", F.split(F.lower(F.trim("text")), r"\s+").alias("ts")
     )
@@ -241,7 +238,7 @@ def q_doc_bigram_cond_entropy(spark, sf_dir):
     GROUP BY 1, 2
     """,
 )
-def q_doc_near_dup_cross_source(spark, sf_dir):
+def q_doc_near_dup_cross_source(spark, t):
     """Dedup provenance matrix: the verified MinHash near-dup pairs
     (doc_minhash_near_dup's exact output, oracle CTEs embedded
     verbatim) cross-tabbed by unordered source pair — which sources
@@ -253,7 +250,6 @@ def q_doc_near_dup_cross_source(spark, sf_dir):
     joins of the tiny pair list against a 2-column doc projection and
     a 20x20-bounded aggregation.
     """
-    t = load_tables(spark, sf_dir)
     pairs = minhash_near_duplicates(
         t["documents"], "text", "doc_id",
         n=SHINGLE_N, num_hashes=NUM_HASHES,
@@ -314,7 +310,7 @@ def q_doc_near_dup_cross_source(spark, sf_dir):
     FROM per
     """,
 )
-def q_session_conversion_stats(spark, sf_dir):
+def q_session_conversion_stats(spark, t):
     """Gap-sessionization conversion roll-up: sessions = runs of a
     user's events with < 30 min between neighbors (the lag-flag +
     running-sum islands form, the batch twin of the streaming
@@ -327,7 +323,6 @@ def q_session_conversion_stats(spark, sf_dir):
     a 1-row scalar agg in exact integers (share in basis points via
     integral division).
     """
-    t = load_tables(spark, sf_dir)
     w_desc = "(PARTITION BY user_id ORDER BY ts, event_id)"
     ev = (
         t["events"]
@@ -387,7 +382,7 @@ def q_session_conversion_stats(spark, sf_dir):
     FROM s GROUP BY shard
     """,
 )
-def q_doc_shard_balance(spark, sf_dir):
+def q_doc_shard_balance(spark, t):
     """Training-shard balance audit: assign every document to one of
     16 output shards by a salted md5 hex digit (the writer-side
     assignment a packed-shard export uses) and report per-shard doc
@@ -400,7 +395,6 @@ def q_doc_shard_balance(spark, sf_dir):
     same expression (`operators.sketches`-style hex-digit arithmetic)
     is reproducible in any engine, so shard membership is portable.
     """
-    t = load_tables(spark, sf_dir)
     s = ensure_parallelism(t["documents"]).select(
         (
             F.expr(
@@ -455,7 +449,7 @@ def q_doc_shard_balance(spark, sf_dir):
     FROM cls GROUP BY o_orderstatus, fill_class
     """,
 )
-def q_order_completion_mix(spark, sf_dir):
+def q_order_completion_mix(spark, t):
     """Fulfilment-shape mix: each order classified by its line-status
     composition (all lines finalized / none / mixed), cross-tabbed
     with the order-header status and revenue-weighted — the
@@ -467,7 +461,6 @@ def q_order_completion_mix(spark, sf_dir):
     on the order key (co-partitioned fact-fact join), one 9-group
     roll-up in exact integer cents.
     """
-    t = load_tables(spark, sf_dir)
     per_order = (
         ensure_parallelism(t["lineitem"])
         .groupBy("l_orderkey")
@@ -531,7 +524,7 @@ def q_order_completion_mix(spark, sf_dir):
     GROUP BY c.c_mktsegment
     """,
 )
-def q_customer_reorder_affinity(spark, sf_dir):
+def q_customer_reorder_affinity(spark, t):
     """Repeat-purchase affinity: for every customer's consecutive
     order pair (by order date), did the later order repeat ANY part
     from the earlier one — the re-order rate per market segment that
@@ -548,7 +541,6 @@ def q_customer_reorder_affinity(spark, sf_dir):
     strictly fewer rows (order-grain arrays, no per-part fan-out, no
     second aggregation).
     """
-    t = load_tables(spark, sf_dir)
     seq = t["orders"].select(
         "o_custkey",
         "o_orderkey",

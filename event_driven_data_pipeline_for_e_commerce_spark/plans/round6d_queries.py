@@ -23,14 +23,13 @@ from event_driven_data_pipeline_for_e_commerce_spark.operators.partitioning impo
 )
 
 from .corpus import ORACLES, QUERIES, query
-from .tables import load_tables
 
 
 @query(
     "doc_dedup_keeper_quality_delta",
     oracle=None,  # composed below from the cluster + quality oracles
 )
-def q_doc_dedup_keeper_quality_delta(spark, sf_dir):
+def q_doc_dedup_keeper_quality_delta(spark, t):
     """Dedup keeper-quality contract: within every non-singleton
     duplicate cluster, compare the canonical survivor's quality score
     against the best NON-kept member — min-doc-id keeper policies are
@@ -43,8 +42,8 @@ def q_doc_dedup_keeper_quality_delta(spark, sf_dir):
     gap uses FLOOR on both engines (DIV truncates negatives).
     Scale shape: both inputs are registered corpus pipelines; this
     adds one cluster-grain aggregation and a 1-row rollup."""
-    clusters = QUERIES["doc_dup_clusters"](spark, sf_dir)
-    quality = QUERIES["doc_quality_scores"](spark, sf_dir).select(
+    clusters = QUERIES["doc_dup_clusters"](spark, t.sf_dir)
+    quality = QUERIES["doc_quality_scores"](spark, t.sf_dir).select(
         "doc_id", (F.round(F.col("quality_score") * 10000)).cast("long").alias("q_e4")
     )
     m = clusters.join(quality, "doc_id")
@@ -151,7 +150,7 @@ ORACLES["doc_dedup_keeper_quality_delta"] = f"""
     GROUP BY r.event_type
     """,
 )
-def q_session_entry_conversion(spark, sf_dir):
+def q_session_entry_conversion(spark, t):
     """Entry-touch conversion: sessions (30-min gap islands, the
     session_conversion_stats machinery) keyed by their FIRST event
     type — does a session that opens with a view convert better than
@@ -162,7 +161,6 @@ def q_session_entry_conversion(spark, sf_dir):
     shuffle reused); entry pick is a rank-1 filter, never a sort of
     the whole stream; the rollup is a 4-group exact-integer aggregate.
     """
-    t = load_tables(spark, sf_dir)
     sess = (
         t["events"]
         .filter(F.col("user_id").isNotNull())
@@ -240,7 +238,7 @@ def q_session_entry_conversion(spark, sf_dir):
     FROM m
     """,
 )
-def q_event_hourly_dispersion(spark, sf_dir):
+def q_event_hourly_dispersion(spark, t):
     """Arrival-process overdispersion screen: per event type, the
     variance-to-mean ratio of hourly arrival counts — 1.0 means
     Poisson (memoryless load, safe to autoscale on averages), >> 1
@@ -251,7 +249,6 @@ def q_event_hourly_dispersion(spark, sf_dir):
     Parity: counts aggregate to exact BIGINT sums (map-side partial);
     the dispersion index is ONE fixed-order float expression over
     those scalars — no float merge-order sensitivity."""
-    t = load_tables(spark, sf_dir)
     buckets = t["events"].groupBy(
         "event_type",
         F.col("ts").cast("date").alias("day"),
@@ -309,7 +306,7 @@ CORR_TOPK = 20
     LIMIT {CORR_TOPK}
     """,
 )
-def q_emb_dim_correlation_pairs(spark, sf_dir):
+def q_emb_dim_correlation_pairs(spark, t):
     """Embedding-dimension redundancy diagnostics: the top-20 most
     correlated dimension pairs by |Pearson r| — highly correlated
     dims mean the embedding wastes capacity and PCA/whitening (the
@@ -322,7 +319,6 @@ def q_emb_dim_correlation_pairs(spark, sf_dir):
     bounded at dims^2/2 rows per vector (dims fixed at 64), then a
     2016-group moment aggregate — corpus-linear, no all-pairs over
     rows."""
-    t = load_tables(spark, sf_dir)
     e = ensure_parallelism(t["embeddings"]).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -393,7 +389,7 @@ LEAD_TIME_TOPK = 20
     LIMIT {LEAD_TIME_TOPK}
     """,
 )
-def q_supplier_lead_time_consistency(spark, sf_dir):
+def q_supplier_lead_time_consistency(spark, t):
     """Supplier reliability triage: the 20 suppliers with the most
     VARIABLE order-to-ship slack — a supplier can have a fine average
     lead time and still wreck planning if its variance is huge (the
@@ -405,7 +401,6 @@ def q_supplier_lead_time_consistency(spark, sf_dir):
     derivations and the rank cut orders by the ROUNDED variance with a
     supplier tie-break. Scale shape: one fact-fact key join, one keyed
     partial-agg, then TakeOrdered 20."""
-    t = load_tables(spark, sf_dir)
     d = (
         ensure_parallelism(t["lineitem"])
         .select("l_orderkey", "l_suppkey", "l_shipdate")
@@ -485,7 +480,7 @@ def q_supplier_lead_time_consistency(spark, sf_dir):
     FROM tot t CROSS JOIN exp_ e
     """,
 )
-def q_same_nation_trade_lift(spark, sf_dir):
+def q_same_nation_trade_lift(spark, t):
     """Home-bias lift: the share of line items where the customer's
     and supplier's nations match, against the share independence
     would predict from the two marginal nation distributions — lift
@@ -497,7 +492,6 @@ def q_same_nation_trade_lift(spark, sf_dir):
     lift are single fixed-order float derivations from those scalars.
     Scale shape: one fact-fact key join plus two broadcast dims; the
     marginals and the 25-row expectation join are nation-grain."""
-    t = load_tables(spark, sf_dir)
     base = (
         ensure_parallelism(t["lineitem"])
         .select("l_orderkey", "l_suppkey")

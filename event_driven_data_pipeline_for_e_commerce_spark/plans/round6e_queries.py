@@ -26,7 +26,6 @@ from event_driven_data_pipeline_for_e_commerce_spark.operators.partitioning impo
 from event_driven_data_pipeline_for_e_commerce_spark.operators.pinning import pin
 
 from .corpus import query
-from .tables import load_tables
 
 
 @query(
@@ -46,7 +45,7 @@ from .tables import load_tables
     )
     """,
 )
-def q_part_size_price_frontier(spark, sf_dir):
+def q_part_size_price_frontier(spark, t):
     """Efficient frontier (2-D skyline) of the part catalog: the sizes
     whose cheapest part is strictly cheaper than every larger size's
     cheapest part — i.e. paying less cannot buy a bigger part. The
@@ -58,7 +57,6 @@ def q_part_size_price_frontier(spark, sf_dir):
     broadcast nested-loop anti-join. No window over the raw table, no
     quadratic part-to-part comparison. At 100 TB only the groupBy
     shuffles, and it shuffles 50 groups."""
-    t = load_tables(spark, sf_dir)
     per_size = t["part"].groupBy("p_size").agg(
         F.count(F.lit(1)).alias("n_parts"),
         F.min(
@@ -124,7 +122,7 @@ _CHI_CELL = (
                   FROM contrib) s
     """,
 )
-def q_event_segment_chisq(spark, sf_dir):
+def q_event_segment_chisq(spark, t):
     """Chi-square independence screen: is behavioral event mix
     independent of customer market segment? Builds the full
     event_type x segment contingency grid (zero cells materialized via
@@ -138,7 +136,6 @@ def q_event_segment_chisq(spark, sf_dir):
     grid) — margins, grid, and the scalar rollup are broadcast-sized.
     No float parallel sum: each cell contribution is one fixed-order
     double expression rounded to e4, then integer-summed."""
-    t = load_tables(spark, sf_dir)
     per_user = (
         t["events"]
         .filter(F.col("user_id").isNotNull())
@@ -243,7 +240,7 @@ def _theil_term(x: str, tot: str, n: str) -> str:
     CROSS JOIN tot
     """,
 )
-def q_nation_revenue_theil(spark, sf_dir):
+def q_nation_revenue_theil(spark, t):
     """Regional Theil-T inequality decomposition of customer-nation
     revenue: per region, how unequally is order revenue spread across
     the region's nations (within-region Theil index), alongside the
@@ -255,7 +252,6 @@ def q_nation_revenue_theil(spark, sf_dir):
     rows. Theil terms are e6-rounded from exact e2-integer revenue in
     one fixed-order expression, then integer-summed — deterministic
     across partition merge orders."""
-    t = load_tables(spark, sf_dir)
     nat = (
         t["orders"]
         .join(
@@ -358,7 +354,7 @@ def q_nation_revenue_theil(spark, sf_dir):
     FROM vec GROUP BY label
     """,
 )
-def q_emb_silhouette_proxy(spark, sf_dir):
+def q_emb_silhouette_proxy(spark, t):
     """Silhouette-style cluster separation proxy per label: average
     squared distance to the OWN label centroid vs the NEAREST other
     centroid, and their ratio — the cheap (O(n*k), not O(n^2))
@@ -375,7 +371,6 @@ def q_emb_silhouette_proxy(spark, sf_dir):
     rounded to 6 decimals in both engines before any distance, so the
     only parallel float reduction (the AVG) is frozen at a grain far
     above its merge-order jitter."""
-    t = load_tables(spark, sf_dir)
     e = ensure_parallelism(
         t["embeddings"].select(
             "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
@@ -479,7 +474,7 @@ def q_emb_silhouette_proxy(spark, sf_dir):
     FROM scored
     """,
 )
-def q_markov_next_event_accuracy(spark, sf_dir):
+def q_markov_next_event_accuracy(spark, t):
     """First-order Markov next-event prediction contract: train a
     transition matrix on every user's event prefix (all consecutive
     pairs except the final transition), predict each user's held-out
@@ -496,7 +491,6 @@ def q_markov_next_event_accuracy(spark, sf_dir):
     pred and base branches both read it); prediction is a broadcast
     join of that grid onto the per-user test rows. Nothing beyond
     the user-keyed window shuffles fact-scale data."""
-    t = load_tables(spark, sf_dir)
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")

@@ -29,7 +29,6 @@ from event_driven_data_pipeline_for_e_commerce_spark.operators.partitioning impo
 from event_driven_data_pipeline_for_e_commerce_spark.operators.pinning import pin
 
 from .corpus import ORACLES, query
-from .tables import load_tables
 
 WEIGHTED_SAMPLE_N = 50
 
@@ -61,7 +60,7 @@ _WS_KEY = (
     LIMIT {WEIGHTED_SAMPLE_N}
     """,
 )
-def q_doc_weighted_sample(spark, sf_dir):
+def q_doc_weighted_sample(spark, t):
     """Deterministic weighted sampling without replacement
     (Efraimidis–Spirakis priority sampling): each document draws a
     seeded uniform u from md5(doc_id) and competes with priority key
@@ -75,7 +74,6 @@ def q_doc_weighted_sample(spark, sf_dir):
     heap merged on the driver, never a global sort, never a window.
     Replays identically on any cluster size: the key depends only on
     doc_id, so the sample is reproducible across runs and engines."""
-    t = load_tables(spark, sf_dir)
     return (
         ensure_parallelism(t["documents"])
         .select("doc_id", "source", "n_chars")
@@ -90,7 +88,7 @@ def q_doc_weighted_sample(spark, sf_dir):
     "doc_containment_pairs",
     oracle=None,  # set below: reuses llm_queries' shared shingle CTEs
 )
-def q_doc_containment_pairs(spark, sf_dir):
+def q_doc_containment_pairs(spark, t):
     """Asymmetric containment dedup audit: document pairs where >= 80%
     of one side's shingles appear in the other (|A∩B|/|A| or
     |A∩B|/|B|) — the quote/subset duplication class that symmetric
@@ -111,7 +109,6 @@ def q_doc_containment_pairs(spark, sf_dir):
     from ..llmdata.dedup import shingle_hash_frame
     from .llm_queries import SHINGLE_N
 
-    t = load_tables(spark, sf_dir)
     shb = pin(
         shingle_hash_frame(t["documents"], "text", "doc_id", SHINGLE_N)
     )
@@ -243,7 +240,7 @@ INT8_Q_MAX = 5  # query set: vec_id < 5 (mirrors emb_cosine_topk)
     FROM hits
     """,
 )
-def q_emb_int8_recall_contract(spark, sf_dir):
+def q_emb_int8_recall_contract(spark, t):
     """Does int8 compression cost retrieval quality? Recall@k of
     brute-force cosine top-k computed over int8-quantized-then-
     reconstructed vectors (the exact arithmetic of
@@ -260,7 +257,6 @@ def q_emb_int8_recall_contract(spark, sf_dir):
     exactly — the only float is one fixed-order recall division."""
     from ..llmdata.similarity import _as_double, brute_force_topk
 
-    t = load_tables(spark, sf_dir)
     e = ensure_parallelism(t["embeddings"]).select(
         "vec_id", _as_double("embedding").alias("v")
     )
@@ -362,7 +358,7 @@ N_CURRICULUM_PHASES = 3
     FROM p GROUP BY phase ORDER BY phase
     """,
 )
-def q_doc_curriculum_phases(spark, sf_dir):
+def q_doc_curriculum_phases(spark, t):
     """Curriculum assignment for training-data ordering: documents
     ranked best-quality-first, then split into three phases of equal
     TOKEN budget (not equal doc count) by the running token total —
@@ -382,7 +378,6 @@ def q_doc_curriculum_phases(spark, sf_dir):
     float."""
     from ..llmdata.text import quality_features
 
-    t = load_tables(spark, sf_dir)
     feats = quality_features("text")
     q = ensure_parallelism(t["documents"]).select(
         "doc_id",
@@ -465,7 +460,7 @@ _KL_TERM = (
     ORDER BY t.source
     """,
 )
-def q_doc_source_kl_divergence(spark, sf_dir):
+def q_doc_source_kl_divergence(spark, t):
     """Distribution drift per source: KL(P_source || P_corpus) over
     unigram token distributions — the standard 'how far is this
     source's language from the training mix' screen that decides
@@ -483,7 +478,6 @@ def q_doc_source_kl_divergence(spark, sf_dir):
     output."""
     from ..llmdata.text import tokens_col
 
-    t = load_tables(spark, sf_dir)
     toks = (
         ensure_parallelism(t["documents"])
         .select("source", F.explode(tokens_col("text")).alias("tok"))
@@ -560,7 +554,7 @@ BACKLOG_TOPN = 20
     LIMIT {BACKLOG_TOPN}
     """,
 )
-def q_supplier_backlog_peak(spark, sf_dir):
+def q_supplier_backlog_peak(spark, t):
     """Interval-concurrency sweep-line: each supplier's PEAK number of
     simultaneously open lineitems (order placed, not yet shipped) and
     the day it was first reached — the capacity-planning number
@@ -576,7 +570,6 @@ def q_supplier_backlog_peak(spark, sf_dir):
     single-task global window). The top-20 cut ranks a supplier-grain
     frame. Half-open [order, ship) semantics: a lineitem shipping the
     same day it was opened never counts toward the peak."""
-    t = load_tables(spark, sf_dir)
     from pyspark.sql import Window
 
     # both event branches (+1 opens, -1 ships) read this frame — pin
@@ -650,7 +643,7 @@ def q_supplier_backlog_peak(spark, sf_dir):
     FROM c GROUP BY brand ORDER BY brand
     """,
 )
-def q_brand_weighted_median_price(spark, sf_dir):
+def q_brand_weighted_median_price(spark, t):
     """Exact QUANTITY-WEIGHTED median unit price per brand — the
     'price of the median unit sold', which differs from the plain
     line median whenever cheap lines carry big quantities (the number
@@ -667,7 +660,6 @@ def q_brand_weighted_median_price(spark, sf_dir):
     price."""
     from pyspark.sql import Window
 
-    t = load_tables(spark, sf_dir)
     lp = (
         t["lineitem"]
         .join(
@@ -757,7 +749,7 @@ _AB_ARM = (
     FROM wide
     """,
 )
-def q_ab_test_conversion_lift(spark, sf_dir):
+def q_ab_test_conversion_lift(spark, t):
     """Two-proportion A/B readout: users deterministically split into
     arms by md5 parity (the hash-based assignment every replayable
     experiment framework uses — stable across runs, engines, and
@@ -770,7 +762,6 @@ def q_ab_test_conversion_lift(spark, sf_dir):
     pivot arithmetic. Counts are exact integers end-to-end; the z
     statistic is ONE fixed-order double expression e4-rounded at the
     very end."""
-    t = load_tables(spark, sf_dir)
     u = (
         t["events"]
         .filter(F.col("user_id").isNotNull())
@@ -835,7 +826,7 @@ PATH_TOPN = 10
     LIMIT {PATH_TOPN}
     """,
 )
-def q_purchase_path_topk(spark, sf_dir):
+def q_purchase_path_topk(spark, t):
     """Top conversion paths: the most common 3-step event sequences
     ending in a purchase (the two events immediately preceding it,
     '(start)' when history is shorter) — the path-analysis surface
@@ -851,7 +842,6 @@ def q_purchase_path_topk(spark, sf_dir):
     path tie-break."""
     from pyspark.sql import Window
 
-    t = load_tables(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = (
         t["events"]
@@ -928,7 +918,7 @@ _WN_HASH = (
     LIMIT {WINNOW_TOPN}
     """,
 )
-def q_doc_winnow_fingerprint_matches(spark, sf_dir):
+def q_doc_winnow_fingerprint_matches(spark, t):
     """Winnowing (MOSS) copy detection: the top document pairs by
     shared WINNOWED fingerprints — char-grain, so it catches verbatim
     passage reuse across token boundaries that word-shingle MinHash
@@ -946,7 +936,6 @@ def q_doc_winnow_fingerprint_matches(spark, sf_dir):
     integers; the top-20 cut tie-breaks on ids."""
     from ..llmdata.dedup import winnow_fingerprint_frame
 
-    t = load_tables(spark, sf_dir)
     fps = pin(
         winnow_fingerprint_frame(
             t["documents"], "text", "doc_id", k=WINNOW_K, w=WINNOW_W

@@ -21,7 +21,6 @@ from event_driven_data_pipeline_for_e_commerce_spark.operators.cumulative import
 from event_driven_data_pipeline_for_e_commerce_spark.operators.pinning import pin
 
 from .corpus import query
-from .tables import load_tables
 
 
 @query(
@@ -55,7 +54,7 @@ from .tables import load_tables
     LIMIT 1
     """,
 )
-def q_daily_revenue_cusum_drift(spark, sf_dir):
+def q_daily_revenue_cusum_drift(spark, t):
     """CUSUM change-point detection on the daily revenue series: the
     running sum of deviations from the global daily mean peaks (in
     absolute value) exactly where the level shifts — the classic
@@ -73,7 +72,6 @@ def q_daily_revenue_cusum_drift(spark, sf_dir):
     exact BIGINT: the mean uses truncating integer division and the
     CUSUM is a sum of integer deviations, so both engines walk the
     identical series."""
-    t = load_tables(spark, sf_dir)
     # two consumers (scalar mean, deviation frame) — pin so the fact
     # scan + day rollup run once
     daily = pin(
@@ -161,7 +159,7 @@ _PSI_TERM = (
     ORDER BY c.event_type
     """,
 )
-def q_event_type_psi_drift(spark, sf_dir):
+def q_event_type_psi_drift(spark, t):
     """Population Stability Index of the event-type mix between the
     first and second half of the event history — the standard "has my
     input distribution shifted" monitor (PSI < 0.1 stable, > 0.25
@@ -176,7 +174,6 @@ def q_event_type_psi_drift(spark, sf_dir):
     e6-rounded. Categories absent from either half are excluded
     (their PSI is undefined; the row counts make the exclusion
     visible)."""
-    t = load_tables(spark, sf_dir)
     b = t["events"].agg(
         F.min(F.to_date("ts")).alias("d0"),
         F.max(F.to_date("ts")).alias("d1"),
@@ -270,7 +267,7 @@ STL_HALF = 14  # centered moving-average half-width (29-day trend)
     ORDER BY r.month
     """,
 )
-def q_daily_revenue_stl_decomposition(spark, sf_dir):
+def q_daily_revenue_stl_decomposition(spark, t):
     """STL-lite seasonal decomposition of daily revenue: a centered
     29-day moving average is the trend, per-calendar-month means of
     the detrended series are the seasonal factors, and the residual
@@ -289,7 +286,6 @@ def q_daily_revenue_stl_decomposition(spark, sf_dir):
     fixed-order FLOOR both engines evaluate identically."""
     from pyspark.sql import Window
 
-    t = load_tables(spark, sf_dir)
     daily = (
         t["orders"]
         .groupBy(F.to_date("o_orderdate").alias("d"))

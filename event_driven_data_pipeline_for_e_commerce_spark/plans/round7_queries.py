@@ -35,7 +35,6 @@ from event_driven_data_pipeline_for_e_commerce_spark.operators.pinning import pi
 
 from ..functions.money import O_CENTS
 from .corpus import query
-from .tables import load_tables
 
 
 # --------------------------------------------------------------------------
@@ -79,7 +78,7 @@ from .tables import load_tables
     FROM r GROUP BY source
     """,
 )
-def q_doc_gopher_quality_flags(spark, sf_dir):
+def q_doc_gopher_quality_flags(spark, t):
     """Gopher-style (Rae et al. 2021) rule screening per source: mean
     word length in [3, 10], word count in [5, 5000], terminal
     punctuation, capitalized start. Token counts use the
@@ -93,7 +92,6 @@ def q_doc_gopher_quality_flags(spark, sf_dir):
     arrays) followed by one source-grain rollup — the cheapest
     possible quality gate at 100 TB; ecom_Silver_Layer.ipynb:191-289
     is the hand-rolled reference equivalent."""
-    t = load_tables(spark, sf_dir)
     s = F.trim(F.col("text"))
     d = (
         t["documents"]
@@ -163,7 +161,7 @@ _BAND_CONFIGS = [(32, 2), (16, 4), (8, 8), (4, 16)]  # bands x rows = 64
     FROM cfg, s
     """,
 )
-def q_doc_minhash_band_planner(spark, sf_dir):
+def q_doc_minhash_band_planner(spark, t):
     """The LSH banding S-curve planner: candidate probability
     P = 1 - (1 - s^r)^b for every (bands, rows) split of a 64-hash
     MinHash signature at Jaccard similarities 0.1..0.9 — the table an
@@ -249,7 +247,7 @@ def q_doc_minhash_band_planner(spark, sf_dir):
     LIMIT 30
     """,
 )
-def q_customer_survival_km(spark, sf_dir):
+def q_customer_survival_km(spark, t):
     """Kaplan-Meier survival of the days-to-next-order duration with
     right-censoring: each consecutive-order gap is an event, each
     customer's last order is censored at the table anchor date — the
@@ -263,7 +261,6 @@ def q_customer_survival_km(spark, sf_dir):
     windows (at-risk depletion, log-survival sum) sort a few thousand
     rows, the same bounded-calendar class as daily_revenue_autocorr
     (tests/test_plans.py allowlist)."""
-    t = load_tables(spark, sf_dir)
     anchor = t["orders"].agg(
         F.max(F.to_date("o_orderdate")).alias("ad")
     )
@@ -340,7 +337,7 @@ def q_customer_survival_km(spark, sf_dir):
     GROUP BY p.p_brand
     """,
 )
-def q_brand_price_elasticity(spark, sf_dir):
+def q_brand_price_elasticity(spark, t):
     """Price elasticity of demand per brand: OLS slope of
     ln(quantity) on ln(unit price) over order lines (elasticity < 0 =
     normal demand response), with the fit's R² — the pricing mart the
@@ -351,7 +348,6 @@ def q_brand_price_elasticity(spark, sf_dir):
     ONE partial-aggregated regr_slope/regr_r2 rollup (Spark's regr_*
     are mergeable moment aggregates — sum/sum-of-squares partials), no
     window, no second pass."""
-    t = load_tables(spark, sf_dir)
     ln_q = F.log(F.col("l_quantity"))
     ln_p = F.log(F.col("l_extendedprice") / F.col("l_quantity"))
     return (
@@ -396,7 +392,7 @@ def q_brand_price_elasticity(spark, sf_dir):
     FROM q GROUP BY yq
     """,
 )
-def q_repeat_customer_share_by_quarter(spark, sf_dir):
+def q_repeat_customer_share_by_quarter(spark, t):
     """New-vs-repeat revenue decomposition per quarter: an order is
     'repeat' once its customer's first order lies in an earlier
     quarter — the acquisition-vs-retention split behind every
@@ -406,7 +402,6 @@ def q_repeat_customer_share_by_quarter(spark, sf_dir):
     Scale shape: the firsts frame is customer-grain; both sides hash
     on o_custkey so the join reuses one partitioning, then a bounded
     quarter-grain rollup."""
-    t = load_tables(spark, sf_dir)
     firsts = t["orders"].groupBy("o_custkey").agg(
         F.min("o_orderdate").alias("f")
     )
@@ -459,7 +454,7 @@ _STOPWORDS = [
     FROM tok GROUP BY source
     """,
 )
-def q_doc_stopword_coverage_by_source(spark, sf_dir):
+def q_doc_stopword_coverage_by_source(spark, t):
     """Stopword coverage per source — the classic natural-language
     screen (C4/Gopher both use it): real prose carries a stable share
     of function words; machine-generated or non-linguistic text does
@@ -472,7 +467,6 @@ def q_doc_stopword_coverage_by_source(spark, sf_dir):
     pre-aggregated per partition."""
     from ..llmdata.text import tokens_col
 
-    t = load_tables(spark, sf_dir)
     tok = (
         ensure_parallelism(t["documents"])
         .filter(F.col("text").isNotNull())
@@ -511,7 +505,7 @@ def q_doc_stopword_coverage_by_source(spark, sf_dir):
     LIMIT 20
     """,
 )
-def q_doc_bpe_pair_merges(spark, sf_dir):
+def q_doc_bpe_pair_merges(spark, t):
     """The first BPE merge decision, distributed: frequency of every
     adjacent character pair inside whitespace tokens, top 20 — the
     per-iteration primitive of byte-pair-encoding tokenizer training
@@ -525,7 +519,6 @@ def q_doc_bpe_pair_merges(spark, sf_dir):
     global sort."""
     from ..llmdata.text import tokens_col
 
-    t = load_tables(spark, sf_dir)
     tok = (
         ensure_parallelism(t["documents"])
         .filter(F.col("text").isNotNull())
@@ -610,7 +603,7 @@ _SEMDEDUP_MAX_CLUSTER = 1000
     ORDER BY a2.cluster_id
     """,
 )
-def q_emb_semdedup_prune(spark, sf_dir):
+def q_emb_semdedup_prune(spark, t):
     """SemDeDup (Abbas et al. 2023) semantic dedup: k-means-bucket the
     embeddings (deterministic lowest-id seeds, map-side argmin
     assignment), compute pairwise cosine ONLY within each cluster, and
@@ -639,7 +632,6 @@ def q_emb_semdedup_prune(spark, sf_dir):
     from ..llmdata.dedup import semdedup_prune
     from ..llmdata.similarity import nearest_seed_l2
 
-    t = load_tables(spark, sf_dir)
     e = ensure_parallelism(t["embeddings"]).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -703,7 +695,7 @@ _HILL_K = 100
     GROUP BY xk.kth
     """,
 )
-def q_events_hill_tail_index(spark, sf_dir):
+def q_events_hill_tail_index(spark, t):
     """Hill estimator of the user-activity tail exponent over the top
     100 users by event count: alpha = 1 / mean(ln(x_i / x_k)) — the
     heavy-tail diagnostic that quantifies whether the user_id key
@@ -713,7 +705,6 @@ def q_events_hill_tail_index(spark, sf_dir):
     Scale shape: one map-combined groupBy to user grain, a TakeOrdered
     top-100 (never a global sort), then scalar arithmetic on the
     bounded 100-row frame."""
-    t = load_tables(spark, sf_dir)
     cnt = pin(
         t["events"]
         .groupBy("user_id")
@@ -772,7 +763,7 @@ def _coverage_oracle() -> str:
 
 
 @query("doc_vocab_coverage_curve", oracle=_coverage_oracle())
-def q_doc_vocab_coverage_curve(spark, sf_dir):
+def q_doc_vocab_coverage_curve(spark, t):
     """Token-mass coverage of the top-N vocabulary types for N in
     {10, 100, 1k, 10k} — the curve that sizes a tokenizer vocabulary
     (where it flattens, extra types stop paying for themselves);
@@ -788,7 +779,6 @@ def q_doc_vocab_coverage_curve(spark, sf_dir):
 
     from ..llmdata.text import tokens_col
 
-    t = load_tables(spark, sf_dir)
     freq = pin(
         ensure_parallelism(t["documents"])
         .filter(F.col("text").isNotNull())
@@ -856,7 +846,7 @@ _MARGIN_K = 8
     ORDER BY cluster_id
     """,
 )
-def q_emb_assignment_margin(spark, sf_dir):
+def q_emb_assignment_margin(spark, t):
     """Assignment-confidence margin per cluster: cosine(top centroid)
     minus cosine(second centroid) for every vector — low margins mark
     boundary vectors (the ones active-learning / re-clustering passes
@@ -870,7 +860,6 @@ def q_emb_assignment_margin(spark, sf_dir):
     shuffle); the only exchange is the bounded cluster-grain rollup."""
     from ..llmdata.similarity import top_seeds_cosine
 
-    t = load_tables(spark, sf_dir)
     e = ensure_parallelism(t["embeddings"]).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )

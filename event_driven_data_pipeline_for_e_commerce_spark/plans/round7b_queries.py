@@ -24,7 +24,6 @@ from event_driven_data_pipeline_for_e_commerce_spark.operators.pinning import pi
 
 from ..functions.money import O_CENTS, cents
 from .corpus import ORACLES, QUERIES, query
-from .tables import load_tables
 
 
 # --------------------------------------------------------------------------
@@ -60,7 +59,7 @@ from .tables import load_tables
     ORDER BY n.n_name
     """,
 )
-def q_nation_balance_spend_corr(spark, sf_dir):
+def q_nation_balance_spend_corr(spark, t):
     """Does account balance predict lifetime spend? Pearson correlation
     per nation — the segmentation sanity check behind the reference's
     customer-value tab (does the 'wealth' column carry signal, or is
@@ -72,7 +71,6 @@ def q_nation_balance_spend_corr(spark, sf_dir):
     broadcast nation dim join, then a 25-row nation-grain aggregate —
     corr is a single-pass co-moment partial aggregate, no window, no
     self-join."""
-    t = load_tables(spark, sf_dir)
     spend = (
         t["orders"]
         .groupBy("o_custkey")
@@ -142,7 +140,7 @@ def q_nation_balance_spend_corr(spark, sf_dir):
     ORDER BY segment
     """,
 )
-def q_customer_winback_stats(spark, sf_dir):
+def q_customer_winback_stats(spark, t):
     """Winback mart: a customer 'lapses' after 90+ days without
     ordering; every order that ends such a gap is a winback. Counts
     and gap-length stats per market segment — the re-engagement KPI
@@ -153,7 +151,6 @@ def q_customer_winback_stats(spark, sf_dir):
     customer — co-partitioned, no global sort), day-grain integer gap
     arithmetic via the CAST(date - date AS BIGINT) lever, then a
     5-row segment rollup behind a broadcast customer-dim join."""
-    t = load_tables(spark, sf_dir)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     gaps = t["orders"].select(
         "o_custkey",
@@ -209,7 +206,7 @@ def q_customer_winback_stats(spark, sf_dir):
     ORDER BY p_type, price_rank
     """,
 )
-def q_part_brand_price_ladder(spark, sf_dir):
+def q_part_brand_price_ladder(spark, t):
     """Premium ladder: within each part type, rank brands by median
     retail price and keep the top 3 — the assortment-pricing view of
     the reference's brand tab (app.py:404-470 ranks brands globally;
@@ -218,7 +215,6 @@ def q_part_brand_price_ladder(spark, sf_dir):
     Scale shape: one (type, brand)-grain rollup (exact median per
     bounded group), then a window over the BOUNDED brand-grain frame
     partitioned by type — the corpus-size-independent ladder shape."""
-    t = load_tables(spark, sf_dir)
     m = (
         t["part"]
         .groupBy("p_type", "p_brand")
@@ -266,7 +262,7 @@ def q_part_brand_price_ladder(spark, sf_dir):
     ORDER BY priority
     """,
 )
-def q_order_linecount_value_regression(spark, sf_dir):
+def q_order_linecount_value_regression(spark, t):
     """How much order value does each additional line item add, per
     priority class — OLS slope + fit quality via the verified
     regr_slope/regr_r2 levers. Complements order_linecount_histogram
@@ -275,7 +271,6 @@ def q_order_linecount_value_regression(spark, sf_dir):
     Scale shape: one map-combined order-grain line count, an equi-join
     on the order key (both sides keyed — co-partitioned shuffle), and
     a 5-row priority rollup of single-pass co-moment aggregates."""
-    t = load_tables(spark, sf_dir)
     lc = (
         t["lineitem"]
         .groupBy("l_orderkey")
@@ -319,7 +314,7 @@ def q_order_linecount_value_regression(spark, sf_dir):
     FROM d GROUP BY yq ORDER BY yq
     """,
 )
-def q_month_end_revenue_share(spark, sf_dir):
+def q_month_end_revenue_share(spark, t):
     """End-of-month loading: share of each quarter's revenue booked in
     the last 3 days of a month — the 'quota-stuffing' fiscal audit
     (sibling of quarter_end_load_share at month grain). `last_day` is
@@ -328,7 +323,6 @@ def q_month_end_revenue_share(spark, sf_dir):
 
     Scale shape: pure map-side flagging (no calendar join — last_day
     is per-row), one bounded quarter-grain rollup in integer cents."""
-    t = load_tables(spark, sf_dir)
     od = F.col("o_orderdate").cast("date")
     d = t["orders"].select(
         (F.year("o_orderdate") * 10 + F.quarter("o_orderdate")).alias("yq"),
@@ -372,7 +366,7 @@ def q_month_end_revenue_share(spark, sf_dir):
     FROM j GROUP BY sourcing ORDER BY sourcing
     """,
 )
-def q_multi_supplier_parts_premium(spark, sf_dir):
+def q_multi_supplier_parts_premium(spark, t):
     """Sourcing-competition pricing: do parts shipped by multiple
     suppliers price differently from single-sourced parts? The
     assortment-risk counterpart of q16's supplier-part counts, with
@@ -382,7 +376,6 @@ def q_multi_supplier_parts_premium(spark, sf_dir):
     Scale shape: one part-grain count-distinct over lineitem (hash
     partial aggregate; only keys shuffle), an equi-join to the part
     dim, and a 2-row bucket rollup."""
-    t = load_tables(spark, sf_dir)
     ns = (
         t["lineitem"]
         .groupBy("l_partkey")
@@ -429,7 +422,7 @@ def q_multi_supplier_parts_premium(spark, sf_dir):
     ORDER BY p_brand
     """,
 )
-def q_lineitem_quantity_mode_by_brand(spark, sf_dir):
+def q_lineitem_quantity_mode_by_brand(spark, t):
     """Most common order quantity per brand with its share — the
     pack-size signal (a dominant mode means the brand sells in a
     standard lot; a flat mode share means ad-hoc quantities). The G9
@@ -440,7 +433,6 @@ def q_lineitem_quantity_mode_by_brand(spark, sf_dir):
     Scale shape: one (brand, qty)-grain map-combined rollup (the only
     fact shuffle — the broadcast part dim attaches brand map-side),
     then the ranking window runs on the bounded brand×qty frame."""
-    t = load_tables(spark, sf_dir)
     c = (
         t["lineitem"]
         .join(
@@ -489,7 +481,7 @@ def q_lineitem_quantity_mode_by_brand(spark, sf_dir):
     FROM m GROUP BY ym ORDER BY ym
     """,
 )
-def q_return_rate_monthly_trend(spark, sf_dir):
+def q_return_rate_monthly_trend(spark, t):
     """Returned-revenue share by ship month — the time-axis twin of
     returned_rate_by_brand: a rising curve means a quality or
     fulfilment regression somewhere upstream, regardless of which
@@ -497,7 +489,6 @@ def q_return_rate_monthly_trend(spark, sf_dir):
 
     Scale shape: map-side month bucketing + flagging, one bounded
     month-grain rollup in exact integer cents — no window, no join."""
-    t = load_tables(spark, sf_dir)
     m = t["lineitem"].select(
         (F.year("l_shipdate") * 100 + F.month("l_shipdate")).alias("ym"),
         F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents"),
@@ -553,7 +544,7 @@ def q_return_rate_monthly_trend(spark, sf_dir):
     ORDER BY segment
     """,
 )
-def q_customer_spend_half_life(spark, sf_dir):
+def q_customer_spend_half_life(spark, t):
     """Spend half-life: days from a customer's first order until their
     cumulative spend crosses 50% of lifetime spend — front-loaded
     customers (half-life ~0) monetize early; long half-lives mark
@@ -564,7 +555,6 @@ def q_customer_spend_half_life(spark, sf_dir):
     (one shuffle keyed by customer serves all three windows), exact
     integer-cents threshold arithmetic, day-grain CAST(date - date)
     lever, then a 5-row segment rollup behind a dim join."""
-    t = load_tables(spark, sf_dir)
     wp = Window.partitionBy("o_custkey")
     wr = wp.orderBy("o_orderdate", "o_orderkey").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -649,7 +639,7 @@ def q_customer_spend_half_life(spark, sf_dir):
     GROUP BY 1 ORDER BY regime
     """,
 )
-def q_daily_revenue_volatility_regimes(spark, sf_dir):
+def q_daily_revenue_volatility_regimes(spark, t):
     """Volatility regimes: 30-day rolling standard deviation of daily
     revenue, classified into low/mid/high terciles — the risk-regime
     view the autocorrelation/CUSUM/STL family lacks (those track
@@ -671,7 +661,6 @@ def q_daily_revenue_volatility_regimes(spark, sf_dir):
     justification as daily_revenue_stl_decomposition); the tercile
     cutoffs are one scalar aggregate broadcast back over the day
     frame."""
-    t = load_tables(spark, sf_dir)
     daily = (
         t["orders"]
         .groupBy(F.col("o_orderdate").cast("date").alias("day"))
@@ -751,7 +740,7 @@ def q_daily_revenue_volatility_regimes(spark, sf_dir):
     FROM m GROUP BY source ORDER BY source
     """,
 )
-def q_doc_punct_density_quantiles(spark, sf_dir):
+def q_doc_punct_density_quantiles(spark, t):
     """Punctuation density per source (marks per 100 characters) with
     exact quantiles — the Gopher-family signal doc_gopher_quality_flags
     thresholds but never distributes: machine-generated or boilerplate
@@ -761,7 +750,6 @@ def q_doc_punct_density_quantiles(spark, sf_dir):
 
     Scale shape: map-side string arithmetic per document, one bounded
     source-grain rollup with single-pass exact percentiles."""
-    t = load_tables(spark, sf_dir)
     s = F.trim(F.col("text"))
     d = (
         ensure_parallelism(t["documents"])
@@ -806,7 +794,7 @@ def q_doc_punct_density_quantiles(spark, sf_dir):
     FROM b GROUP BY band ORDER BY band
     """,
 )
-def q_doc_dup_rate_vs_length_band(spark, sf_dir):
+def q_doc_dup_rate_vs_length_band(spark, t):
     """Exact-duplicate rate by document length band (256-char bands,
     capped at band 7) — short snippets duplicate far more than long
     articles, and this curve decides whether the dedup pipeline should
@@ -815,7 +803,6 @@ def q_doc_dup_rate_vs_length_band(spark, sf_dir):
 
     Scale shape: md5 map-side, one bounded band-grain hash-only
     rollup — text never shuffles."""
-    t = load_tables(spark, sf_dir)
     b = ensure_parallelism(t["documents"]).select(
         F.least(
             F.floor(F.col("n_chars") / 256.0).cast("bigint"), F.lit(7)
@@ -859,7 +846,7 @@ _TRUNC_LENS = [128, 256, 512, 1024, 2048]
     GROUP BY cfg.max_len ORDER BY max_len
     """,
 )
-def q_doc_truncation_loss_curve(spark, sf_dir):
+def q_doc_truncation_loss_curve(spark, t):
     """Context-length planning curve: for each candidate max sequence
     length, the share of corpus tokens LOST if every document is
     hard-truncated there, plus how many documents get cut — the
@@ -869,7 +856,6 @@ def q_doc_truncation_loss_curve(spark, sf_dir):
 
     Scale shape: one map-side token count per document, broadcast
     5-row config cross join, bounded 5-row rollup."""
-    t = load_tables(spark, sf_dir)
     st = F.trim(F.col("text"))
     tok = (
         ensure_parallelism(t["documents"])
@@ -935,7 +921,7 @@ _WM_DELAYS_MIN = [0, 1, 5, 15, 60]
     ORDER BY delay_min
     """,
 )
-def q_events_watermark_drop_sweep(spark, sf_dir):
+def q_events_watermark_drop_sweep(spark, t):
     """Watermark-delay planning sweep: for each candidate watermark
     delay, how many events a Structured Streaming job would DROP as
     too-late — an event is late when its event time plus the delay
@@ -958,7 +944,6 @@ def q_events_watermark_drop_sweep(spark, sf_dir):
     identical interval arithmetic, one literal per delay)."""
     from ..operators.cumulative import running_max_ranged
 
-    t = load_tables(spark, sf_dir)
     # (event_id, ts) is a TOTAL order over the projected columns
     # (ADVICE r7): event_id alone is not unique in events, and a
     # strictly-preceding ROWS frame is order-dependent under ties —
@@ -1010,7 +995,7 @@ def q_events_watermark_drop_sweep(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 @query("doc_word_len_histogram", oracle=None)  # oracle attached below
-def q_doc_word_len_histogram(spark, sf_dir):
+def q_doc_word_len_histogram(spark, t):
     """Word-length histogram per language (lengths capped at 15) — the
     character-level companion of doc_length_percentiles: a language
     whose word-length mass shifts between crawls signals tokenizer or
@@ -1019,7 +1004,6 @@ def q_doc_word_len_histogram(spark, sf_dir):
     Scale shape: split + explode map-side, one bounded
     (lang, word_len) rollup — the explode multiplies rows but never
     shuffles text (only the integer length survives the projection)."""
-    t = load_tables(spark, sf_dir)
     toks = (
         ensure_parallelism(t["documents"])
         .filter(F.col("text").isNotNull())
@@ -1058,7 +1042,7 @@ ORACLES["doc_word_len_histogram"] = r"""
 
 
 @query("doc_dedup_family_agreement", oracle=None)  # composed below
-def q_doc_dedup_family_agreement(spark, sf_dir):
+def q_doc_dedup_family_agreement(spark, t):
     """Cross-family dedup agreement: the MinHash-LSH banded candidate
     pair set vs the SimHash Hamming<=2 near-dup pair set — high overlap
     validates both detectors; a large one-sided residue tells you
@@ -1104,7 +1088,6 @@ def q_doc_dedup_family_agreement(spark, sf_dir):
     from ..operators.pinning import pin
     from .llm_queries import NUM_HASHES, ROWS_PER_BAND, SHINGLE_N
 
-    t = load_tables(spark, sf_dir)
     docs = t["documents"]
     shb = shingle_hash_frame(docs, "text", "doc_id", SHINGLE_N)
     sigs = _minhash_agg_hashed(shb, "doc_id", NUM_HASHES)
@@ -1195,7 +1178,7 @@ ORACLES["doc_dedup_family_agreement"] = rf"""
 
 
 @query("emb_pq_subspace_distortion", oracle=None)  # composed below
-def q_emb_pq_subspace_distortion(spark, sf_dir):
+def q_emb_pq_subspace_distortion(spark, t):
     """Per-subspace product-quantization distortion: average and worst
     reconstruction error for each of the PQ_M subquantizers, plus how
     many codebook entries each actually uses — a subspace with high
@@ -1207,7 +1190,6 @@ def q_emb_pq_subspace_distortion(spark, sf_dir):
     bounded PQ_M-row rollup."""
     from .round3_queries import _pq_codes
 
-    t = load_tables(spark, sf_dir)
     emb = ensure_parallelism(t["embeddings"])
     best = _pq_codes(emb)
     return (
@@ -1259,7 +1241,7 @@ _GINI_K = 8
     FROM g
     """,
 )
-def q_emb_cluster_size_gini(spark, sf_dir):
+def q_emb_cluster_size_gini(spark, t):
     """Cluster-balance Gini over the k-means assignment: 0 = perfectly
     even partitions, ->1 = one cluster owns the corpus. The
     single-number skew gate for IVF/SemDeDup bucket sizing
@@ -1273,7 +1255,6 @@ def q_emb_cluster_size_gini(spark, sf_dir):
     no pairwise differences)."""
     from ..llmdata.similarity import nearest_seed_l2
 
-    t = load_tables(spark, sf_dir)
     e = ensure_parallelism(t["embeddings"]).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -1351,7 +1332,7 @@ _RANKAGREE_NQ = 5
     ORDER BY query_id
     """,
 )
-def q_emb_l2_vs_cosine_rank_agreement(spark, sf_dir):
+def q_emb_l2_vs_cosine_rank_agreement(spark, t):
     """Metric-choice audit: per query, the overlap between the cosine
     top-k and the squared-L2 top-k neighbor sets — on normalized
     embeddings the two rankings coincide, so low overlap here is the
@@ -1365,7 +1346,6 @@ def q_emb_l2_vs_cosine_rank_agreement(spark, sf_dir):
     query set is bounded — the audit-scale contract."""
     from ..llmdata.similarity import _as_double, dot
 
-    t = load_tables(spark, sf_dir)
     e = ensure_parallelism(t["embeddings"]).select(
         "vec_id", _as_double("embedding").alias("v")
     )
@@ -1442,7 +1422,7 @@ def q_emb_l2_vs_cosine_rank_agreement(spark, sf_dir):
     FROM ssb, ssw, gm
     """,
 )
-def q_emb_norm_vs_label_anova(spark, sf_dir):
+def q_emb_norm_vs_label_anova(spark, t):
     """One-way ANOVA of vector norms across labels: F-ratio and
     eta-squared for 'does the label explain norm variance?' — norms
     that differ systematically by class break the normalize-then-IVF
@@ -1455,7 +1435,6 @@ def q_emb_norm_vs_label_anova(spark, sf_dir):
     pairwise work."""
     from ..llmdata.similarity import _as_double, dot
 
-    t = load_tables(spark, sf_dir)
     v = _as_double("embedding")
     n = ensure_parallelism(t["embeddings"]).select(
         "label", F.sqrt(dot(v, v)).alias("nrm")

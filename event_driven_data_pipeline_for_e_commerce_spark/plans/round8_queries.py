@@ -23,7 +23,6 @@ from event_driven_data_pipeline_for_e_commerce_spark.operators.pinning import pi
 
 from ..functions.money import O_CENTS
 from .corpus import ORACLES, QUERIES, query
-from .tables import load_tables
 
 
 @query(
@@ -59,7 +58,7 @@ from .tables import load_tables
     LIMIT 20
     """,
 )
-def q_part_price_dispersion_topk(spark, sf_dir):
+def q_part_price_dispersion_topk(spark, t):
     """Unit-price dispersion per part: the 20 parts whose realized
     unit price (extended price / quantity) varies most across line
     items — the price-integrity audit behind discount leakage and
@@ -71,7 +70,6 @@ def q_part_price_dispersion_topk(spark, sf_dir):
     Scale shape: one map-combined part-grain min/max rollup in exact
     integers (one shuffle), then a TakeOrdered top-20 — never a
     global sort."""
-    t = load_tables(spark, sf_dir)
     u = t["lineitem"].filter(F.col("l_quantity") > 0).select(
         "l_partkey",
         F.floor(
@@ -126,7 +124,7 @@ def q_part_price_dispersion_topk(spark, sf_dir):
     FROM r GROUP BY yq ORDER BY yq
     """,
 )
-def q_quarterly_top_customer_share(spark, sf_dir):
+def q_quarterly_top_customer_share(spark, t):
     """Revenue-concentration trend: the share of each quarter's
     revenue carried by its top-10 customers — rising concentration is
     account risk (customer_pareto_abc gives the static curve; this
@@ -135,8 +133,6 @@ def q_quarterly_top_customer_share(spark, sf_dir):
     Scale shape: one (quarter, customer)-grain rollup, then the rank
     and share windows run keyed BY QUARTER (shuffle-parallel across
     quarters, never a global sort), and a bounded quarter rollup."""
-    t = load_tables(spark, sf_dir)
-
     def _c(col):
         return F.round(F.col(col) * 100).cast("bigint")
 
@@ -208,7 +204,7 @@ def q_quarterly_top_customer_share(spark, sf_dir):
     FROM j GROUP BY segment ORDER BY segment
     """,
 )
-def q_order_gap_burstiness(spark, sf_dir):
+def q_order_gap_burstiness(spark, t):
     """Ordering burstiness: the coefficient of variation of each
     customer's inter-order gaps (CV ≈ 1 is Poisson-like, CV >> 1 is
     bursty), distributed per segment — the regularity signal that
@@ -219,7 +215,6 @@ def q_order_gap_burstiness(spark, sf_dir):
     Scale shape: customer-partitioned LAG + per-customer moment
     rollup (both keyed by customer — one shuffle), then a 5-row
     segment rollup with single-pass exact percentiles."""
-    t = load_tables(spark, sf_dir)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     g = t["orders"].select(
         "o_custkey",
@@ -276,7 +271,7 @@ def q_order_gap_burstiness(spark, sf_dir):
     ORDER BY p_brand
     """,
 )
-def q_brand_seasonal_amplitude(spark, sf_dir):
+def q_brand_seasonal_amplitude(spark, t):
     """Seasonal amplitude per brand: (peak month − trough month) over
     the mean monthly revenue, on calendar-month totals — the inventory
     planning number (monthly_seasonal_index gives the corpus-wide
@@ -285,7 +280,6 @@ def q_brand_seasonal_amplitude(spark, sf_dir):
     Scale shape: broadcast part dim attaches brand map-side, one
     (brand, month)-grain rollup in integer cents, bounded brand
     rollup."""
-    t = load_tables(spark, sf_dir)
     m = (
         t["lineitem"]
         .join(
@@ -330,7 +324,7 @@ def q_brand_seasonal_amplitude(spark, sf_dir):
     FROM c GROUP BY LEAST(n, 5) ORDER BY copies
     """,
 )
-def q_events_duplicate_profile(spark, sf_dir):
+def q_events_duplicate_profile(spark, t):
     """Duplicate-multiplicity histogram of the event stream: how many
     event ids arrive once, twice, ... (capped at 5+) and what row
     share each class carries — the sizing input for ST5's
@@ -341,7 +335,6 @@ def q_events_duplicate_profile(spark, sf_dir):
     Scale shape: one hash-only id-grain count (ids shuffle, payloads
     don't), a bounded multiplicity rollup, and one scalar total
     broadcast back for the share."""
-    t = load_tables(spark, sf_dir)
     c = t["events"].groupBy("event_id").agg(F.count(F.lit(1)).alias("n"))
     c = pin(c)
     total = c.agg(F.sum("n").alias("t"))
@@ -392,7 +385,7 @@ def q_events_duplicate_profile(spark, sf_dir):
     ORDER BY f.first_band, l.life_band
     """,
 )
-def q_order_value_band_migration(spark, sf_dir):
+def q_order_value_band_migration(spark, t):
     """First-order-value band vs lifetime-average band (bands of
     $100k, capped at 4): the migration matrix that answers whether a
     customer's first basket predicts their long-run basket — the
@@ -404,8 +397,6 @@ def q_order_value_band_migration(spark, sf_dir):
     customer-grain rollup (same key — one shuffle serves both), then
     a bounded 5×5 matrix rollup. Band arithmetic uses the
     non-negative FLOOR-division lever end-to-end."""
-    t = load_tables(spark, sf_dir)
-
     def _c(col):
         return F.round(F.col(col) * 100).cast("bigint")
 
@@ -457,7 +448,7 @@ def q_order_value_band_migration(spark, sf_dir):
     ORDER BY source, cluster_size
     """,
 )
-def q_doc_prefix_cluster_sizes(spark, sf_dir):
+def q_doc_prefix_cluster_sizes(spark, t):
     """Boilerplate template detection: cluster documents by their
     first 32 characters (hashed) and histogram the cluster sizes per
     source (capped at 4+) — a source whose mass sits in big prefix
@@ -467,7 +458,6 @@ def q_doc_prefix_cluster_sizes(spark, sf_dir):
 
     Scale shape: md5 of a 32-char prefix map-side (text never
     shuffles), two bounded hash-grain rollups."""
-    t = load_tables(spark, sf_dir)
     p = (
         ensure_parallelism(t["documents"])
         .filter(F.col("text").isNotNull() & (F.length("text") >= 32))
@@ -520,7 +510,7 @@ def q_doc_prefix_cluster_sizes(spark, sf_dir):
     ORDER BY rb.region, rb.p_brand
     """,
 )
-def q_region_brand_affinity_lift(spark, sf_dir):
+def q_region_brand_affinity_lift(spark, t):
     """Region-brand affinity: a brand's revenue share WITHIN a region
     divided by its global share — lift > 1 marks regional taste the
     assortment should exploit (same_nation_trade_lift scores the
@@ -530,7 +520,6 @@ def q_region_brand_affinity_lift(spark, sf_dir):
     (lineitem shuffles once for the orders join), one (region,
     brand)-grain rollup, then the marginals are bounded frames
     broadcast back — no second fact pass."""
-    t = load_tables(spark, sf_dir)
     sales = (
         t["lineitem"]
         .join(
@@ -586,7 +575,7 @@ def q_region_brand_affinity_lift(spark, sf_dir):
 
 
 @query("doc_sentence_dedup_rate", oracle=None)  # attached below
-def q_doc_sentence_dedup_rate(spark, sf_dir):
+def q_doc_sentence_dedup_rate(spark, t):
     """Sentence-grain exact dedup rate per source: split documents at
     '. ' boundaries, hash each sentence (>= 20 chars), and measure how
     much of the sentence mass is repeated — the boilerplate metric at
@@ -597,7 +586,6 @@ def q_doc_sentence_dedup_rate(spark, sf_dir):
     Scale shape: split + explode map-side; only (source, md5) pairs
     shuffle into one bounded source-grain rollup — sentence text
     never moves."""
-    t = load_tables(spark, sf_dir)
     sents = (
         ensure_parallelism(t["documents"])
         .filter(F.col("text").isNotNull())
@@ -641,7 +629,7 @@ ORACLES["doc_sentence_dedup_rate"] = """
 
 
 @query("emb_pq_rank_displacement", oracle=None)  # attached below
-def q_emb_pq_rank_displacement(spark, sf_dir):
+def q_emb_pq_rank_displacement(spark, t):
     """PQ rank-displacement diagnostic: where do the PQ top-k's
     neighbors actually sit in the EXACT squared-L2 ranking — recall@k
     (emb_ann_recall_contract) says how many truth hits survive; this
@@ -656,7 +644,6 @@ def q_emb_pq_rank_displacement(spark, sf_dir):
     from ..llmdata.similarity import _as_double, dot
     from .round3_queries import PQ_Q_HI, PQ_Q_LO
 
-    t = load_tables(spark, sf_dir)
     e = ensure_parallelism(t["embeddings"]).select(
         "vec_id", _as_double("embedding").alias("v")
     )
@@ -679,7 +666,7 @@ def q_emb_pq_rank_displacement(spark, sf_dir):
         "neighbor_id",
         F.row_number().over(w).cast("long").alias("exact_rank"),
     )
-    pq = QUERIES["emb_pq_topk"](spark, sf_dir).select(
+    pq = QUERIES["emb_pq_topk"](spark, t.sf_dir).select(
         "query_id", "neighbor_id"
     )
     return (
@@ -791,7 +778,7 @@ _KCORE_MIN_CO = 2
     ) ORDER BY round
     """,
 )
-def q_copurchase_kcore_peel3(spark, sf_dir):
+def q_copurchase_kcore_peel3(spark, t):
     """Three peeling rounds toward the k-core (k=3) of the co-purchase
     graph (edges = part pairs co-purchased in >= 2 orders): each round
     drops nodes with degree < k and re-induces the edge set — the
@@ -809,7 +796,6 @@ def q_copurchase_kcore_peel3(spark, sf_dir):
     peel is a bounded part-grain degree rollup + two
     semi-join-like inner joins on the pinned edge frame — a FIXED 3
     iterations, never an unbounded fixpoint driver loop."""
-    t = load_tables(spark, sf_dir)
     baskets = (
         t["lineitem"]
         .groupBy("l_orderkey")
@@ -892,7 +878,7 @@ def q_copurchase_kcore_peel3(spark, sf_dir):
     FROM m ORDER BY nation
     """,
 )
-def q_nation_revenue_forecast_linreg(spark, sf_dir):
+def q_nation_revenue_forecast_linreg(spark, t):
     """Per-nation next-quarter revenue forecast from an OLS trend over
     the quarterly series (intercept recovered as ybar - slope*xbar, so
     only the verified regr_slope/regr_r2 levers appear) — the
@@ -902,8 +888,6 @@ def q_nation_revenue_forecast_linreg(spark, sf_dir):
     Scale shape: one (nation, quarter)-grain rollup behind broadcast
     dims, then a 25-row nation rollup of single-pass co-moment
     aggregates."""
-    t = load_tables(spark, sf_dir)
-
     def _c(col):
         return F.round(F.col(col) * 100).cast("bigint")
 
@@ -986,7 +970,7 @@ def _letter_entropy_oracle() -> str:
 
 
 @query("doc_letter_entropy_by_source", oracle=_letter_entropy_oracle())
-def q_doc_letter_entropy_by_source(spark, sf_dir):
+def q_doc_letter_entropy_by_source(spark, t):
     """Letter-unigram entropy per source (nats, over a-z only) — the
     cheapest language/encoding fingerprint there is: natural prose
     sits near its language's letter entropy, while base64 blobs,
@@ -998,7 +982,6 @@ def q_doc_letter_entropy_by_source(spark, sf_dir):
     Scale shape: 26 map-side counters per document folded into one
     source-grain partial aggregate — a single shuffle of 26 longs per
     source; the entropy arithmetic runs on the bounded source frame."""
-    t = load_tables(spark, sf_dir)
     s = F.lower(F.col("text"))
     d = (
         ensure_parallelism(t["documents"])
@@ -1062,7 +1045,7 @@ def q_doc_letter_entropy_by_source(spark, sf_dir):
     CROSS JOIN tot
     """,
 )
-def q_order_priority_dow_chisq(spark, sf_dir):
+def q_order_priority_dow_chisq(spark, t):
     """Chi-square independence test of order priority vs day-of-week
     (portable Monday-epoch dow encoding) — a significant statistic
     means priority mix shifts across the week and staffing/SLA models
@@ -1071,7 +1054,6 @@ def q_order_priority_dow_chisq(spark, sf_dir):
     Scale shape: one (priority, dow)-grain map-combined rollup (35
     cells), marginals and the statistic on the bounded cell frame
     with broadcast joins."""
-    t = load_tables(spark, sf_dir)
     o = t["orders"].select(
         F.col("o_orderpriority").alias("priority"),
         (
@@ -1109,7 +1091,7 @@ _IVF_COST_MAXPROBE = 4
 
 
 @query("emb_ivf_probe_cost_curve", oracle=None)  # attached below
-def q_emb_ivf_probe_cost_curve(spark, sf_dir):
+def q_emb_ivf_probe_cost_curve(spark, t):
     """Cost half of the IVF tuning picture: candidate vectors SCANNED
     per query at each nprobe (the recall half is
     emb_ivf_nprobe_sweep) — together they give the recall-vs-cost
@@ -1128,7 +1110,6 @@ def q_emb_ivf_probe_cost_curve(spark, sf_dir):
         norm,
     )
 
-    t = load_tables(spark, sf_dir)
     emb = t["embeddings"]
     cents = ivf_centroids(emb, _IVF_COST_LISTS).withColumn(
         "n_cv", norm(F.col("cv"))
@@ -1249,7 +1230,7 @@ ORACLES["emb_ivf_probe_cost_curve"] = f"""
 
 
 @query("doc_quality_vs_dup_class", oracle=None)  # composed below
-def q_doc_quality_vs_dup_class(spark, sf_dir):
+def q_doc_quality_vs_dup_class(spark, t):
     """Quality-by-boilerplate cross audit: bucket documents by their
     32-char-PREFIX duplication multiplicity (1 copy, 2, 3+ — the
     template-cluster key of doc_prefix_cluster_sizes) and report the
@@ -1264,7 +1245,6 @@ def q_doc_quality_vs_dup_class(spark, sf_dir):
     Scale shape: prefix-hash class counts shuffle hashes only; the
     quality frame joins back on doc_id; the rollup is a 3-row bucket
     frame."""
-    t = load_tables(spark, sf_dir)
     cls = (
         ensure_parallelism(t["documents"])
         .filter(F.col("text").isNotNull() & (F.length("text") >= 32))
@@ -1275,7 +1255,7 @@ def q_doc_quality_vs_dup_class(spark, sf_dir):
         "doc_id",
         F.least(F.col("copies"), F.lit(3)).cast("long").alias("dup_class"),
     )
-    scores = QUERIES["doc_quality_scores"](spark, sf_dir).select(
+    scores = QUERIES["doc_quality_scores"](spark, t.sf_dir).select(
         "doc_id", "quality_score"
     )
     return (

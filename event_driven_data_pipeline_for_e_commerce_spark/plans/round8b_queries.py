@@ -23,7 +23,6 @@ from event_driven_data_pipeline_for_e_commerce_spark.operators.partitioning impo
 
 from ..functions.money import O_CENTS, cents
 from .corpus import ORACLES, QUERIES, query
-from .tables import load_tables
 
 
 # --------------------------------------------------------------------------
@@ -58,7 +57,7 @@ from .tables import load_tables
     FROM j GROUP BY status ORDER BY status
     """,
 )
-def q_order_total_reconciliation(spark, sf_dir):
+def q_order_total_reconciliation(spark, t):
     """Header-vs-lines value reconciliation: does o_totalprice equal
     the sum of its line items' discounted, taxed extended prices?
     The value-level sibling of referential_integrity_audit (which
@@ -70,7 +69,6 @@ def q_order_total_reconciliation(spark, sf_dir):
     Scale shape: one order-grain map-combined rollup of lineitem (one
     shuffle on the join key, reused by the join), then a bounded
     status-grain rollup in exact integers."""
-    t = load_tables(spark, sf_dir)
     line = (
         t["lineitem"]
         .select(
@@ -131,7 +129,7 @@ def q_order_total_reconciliation(spark, sf_dir):
     FROM r ORDER BY brand, yr
     """,
 )
-def q_brand_revenue_share_trend(spark, sf_dir):
+def q_brand_revenue_share_trend(spark, t):
     """Brand revenue share within each ship year — the market-share
     trend view of the reference's brand tab (brand_performance is a
     lifetime rollup; q8_market_share tracks one nation): a brand
@@ -142,7 +140,6 @@ def q_brand_revenue_share_trend(spark, sf_dir):
     (brand, year) map-combined rollup, then a share window on the
     BOUNDED (brand x year) grain — ~25 brands x 7 years, never a
     fact-grain window."""
-    t = load_tables(spark, sf_dir)
     r = (
         t["lineitem"]
         .join(
@@ -217,7 +214,7 @@ _DECILE_PS = [i / 10.0 for i in range(1, 10)]
     GROUP BY b.decile ORDER BY decile
     """,
 )
-def q_acctbal_decile_profile(spark, sf_dir):
+def q_acctbal_decile_profile(spark, t):
     """Account-balance deciles with spend attribution: how much order
     revenue each balance decile generates — the wealth-vs-activity
     view behind credit-risk segmentation (nation_balance_spend_corr
@@ -227,7 +224,6 @@ def q_acctbal_decile_profile(spark, sf_dir):
     percentiles) broadcast back over the customer scan — never an
     NTILE window over the full table (an unpartitioned sort); the
     spend side is a customer-grain rollup joined at customer grain."""
-    t = load_tables(spark, sf_dir)
     c = t["customer"].select(
         "c_custkey", cents("c_acctbal").alias("bal_cents")
     )
@@ -288,7 +284,7 @@ def q_acctbal_decile_profile(spark, sf_dir):
     FROM j GROUP BY priority ORDER BY priority
     """,
 )
-def q_late_revenue_at_risk(spark, sf_dir):
+def q_late_revenue_at_risk(spark, t):
     """Revenue-weighted lateness by order priority: late_shipments
     counts late lines; this weighs them by money — the number an SLA
     negotiation actually argues about (a 2% late-line rate that
@@ -297,7 +293,6 @@ def q_late_revenue_at_risk(spark, sf_dir):
     Scale shape: fact-fact equi-join on the order key (both sides
     shuffle once on it), map-side cents/lateness projection, bounded
     5-row priority rollup in exact integers."""
-    t = load_tables(spark, sf_dir)
     j = (
         t["lineitem"]
         .join(t["orders"], F.col("l_orderkey") == F.col("o_orderkey"))
@@ -355,7 +350,7 @@ def q_late_revenue_at_risk(spark, sf_dir):
     FROM r ORDER BY nation, segment
     """,
 )
-def q_segment_nation_mix_share(spark, sf_dir):
+def q_segment_nation_mix_share(spark, t):
     """Market-segment mix per nation with the modal segment flagged —
     the geographic composition table under the reference's customer
     tab (event_segment_chisq tests independence; this shows the
@@ -364,7 +359,6 @@ def q_segment_nation_mix_share(spark, sf_dir):
     Scale shape: broadcast nation dim, one (nation, segment)
     map-combined rollup, then share/modal windows on the BOUNDED
     125-row grain."""
-    t = load_tables(spark, sf_dir)
     m = (
         t["customer"]
         .join(
@@ -424,7 +418,7 @@ def q_segment_nation_mix_share(spark, sf_dir):
     FROM d GROUP BY 1 ORDER BY log2_band
     """,
 )
-def q_trade_degree_distribution(spark, sf_dir):
+def q_trade_degree_distribution(spark, t):
     """Supplier reach distribution: distinct customers served per
     supplier, bucketed into log2 degree bands — the bipartite-graph
     degree histogram that sizes skew before any supplier-grain join
@@ -434,7 +428,6 @@ def q_trade_degree_distribution(spark, sf_dir):
     Scale shape: fact-fact equi-join on the order key, distinct on
     the BARE (suppkey, custkey) edge (text/values never move), one
     supplier-grain count, then a bounded ~15-band rollup."""
-    t = load_tables(spark, sf_dir)
     e = (
         t["lineitem"]
         .select("l_suppkey", "l_orderkey")
@@ -493,7 +486,7 @@ def q_trade_degree_distribution(spark, sf_dir):
     FROM b GROUP BY 1 ORDER BY span_band
     """,
 )
-def q_order_ship_span_histogram(spark, sf_dir):
+def q_order_ship_span_histogram(spark, t):
     """Fulfilment span per multi-line order: days between the first
     and last line shipment — the split-shipment profile behind
     warehouse consolidation decisions (ship_delay_days measures
@@ -503,7 +496,6 @@ def q_order_ship_span_histogram(spark, sf_dir):
     day-diff via the portable CAST(date - date AS BIGINT) lever, then
     a bounded 5-band rollup with a truncated-average (exact integer)
     mean."""
-    t = load_tables(spark, sf_dir)
     s = (
         t["lineitem"]
         .groupBy("l_orderkey")
@@ -566,7 +558,7 @@ def q_order_ship_span_histogram(spark, sf_dir):
     ORDER BY nation
     """,
 )
-def q_nation_actor_census(spark, sf_dir):
+def q_nation_actor_census(spark, t):
     """Per-nation actor census: customer and supplier head-counts with
     their account-balance mass, stitched on the nation dim — the
     supply/demand imbalance table (nation_trade_balance tracks traded
@@ -575,7 +567,6 @@ def q_nation_actor_census(spark, sf_dir):
     Scale shape: two independent map-combined nation-grain rollups
     (25 rows each) broadcast-joined onto the nation dim — no
     fact-fact join at all."""
-    t = load_tables(spark, sf_dir)
     c = t["customer"].groupBy(F.col("c_nationkey").alias("nk")).agg(
         F.count(F.lit(1)).alias("n_customers"),
         F.sum(cents("c_acctbal")).alias("cust_bal_cents"),
@@ -627,7 +618,7 @@ def q_nation_actor_census(spark, sf_dir):
     GROUP BY event_type ORDER BY event_type
     """,
 )
-def q_event_value_percentiles_by_type(spark, sf_dir):
+def q_event_value_percentiles_by_type(spark, t):
     """Value distribution per event type: exact quartiles and the p95
     tail — the monetization profile behind the funnel counts
     (segment_event_revenue sums value; this shows its shape, so a
@@ -636,7 +627,6 @@ def q_event_value_percentiles_by_type(spark, sf_dir):
     Scale shape: one type-grain rollup with single-pass exact
     percentiles (5 groups) — rank-based aggregates, deterministic
     across engines."""
-    t = load_tables(spark, sf_dir)
     e = t["events"].filter(F.col("value").isNotNull())
     return (
         e.groupBy("event_type")
@@ -677,7 +667,7 @@ def q_event_value_percentiles_by_type(spark, sf_dir):
     FROM per_user GROUP BY 1 ORDER BY sessions_band
     """,
 )
-def q_sessions_per_user_histogram(spark, sf_dir):
+def q_sessions_per_user_histogram(spark, t):
     """Sessions-per-user histogram under 30-minute gap sessionization
     (bands capped at 10+) — the engagement-frequency distribution the
     per-session conversion KPI (session_conversion_stats) averages
@@ -688,7 +678,6 @@ def q_sessions_per_user_histogram(spark, sf_dir):
     (single key shuffle), session counts are a user-grain SUM of the
     flags (no island window needed — only counts survive), then a
     bounded 10-band rollup."""
-    t = load_tables(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ev = (
         t["events"]
@@ -743,7 +732,7 @@ def q_sessions_per_user_histogram(spark, sf_dir):
     GROUP BY event_type ORDER BY event_type
     """,
 )
-def q_event_interarrival_by_type(spark, sf_dir):
+def q_event_interarrival_by_type(spark, t):
     """Inter-arrival gaps within each user's per-type event stream
     (seconds): the cadence fingerprint that separates organic clicks
     from scripted ones and sizes streaming state-retention windows
@@ -755,7 +744,6 @@ def q_event_interarrival_by_type(spark, sf_dir):
     Scale shape: one (user, type)-partitioned lag window (single key
     shuffle), then a bounded 5-type rollup with exact truncated means
     and rank-based percentiles."""
-    t = load_tables(spark, sf_dir)
     w = Window.partitionBy("user_id", "event_type").orderBy(
         "ts", "event_id"
     )
@@ -808,7 +796,7 @@ def q_event_interarrival_by_type(spark, sf_dir):
     ORDER BY dau.day
     """,
 )
-def q_user_stickiness_dau_wau(spark, sf_dir):
+def q_user_stickiness_dau_wau(spark, t):
     """DAU/WAU stickiness per day: daily actives over trailing-7-day
     actives — the engagement-quality ratio product reviews live on
     (weekly_active_users tracks WAU level; the ratio is what moves
@@ -818,7 +806,6 @@ def q_user_stickiness_dau_wau(spark, sf_dir):
     distinct frame first (one shuffle); the trailing window is a
     broadcast range join of the ~day-count calendar against that
     frame (never a fact-grain window), then day-grain rollups."""
-    t = load_tables(spark, sf_dir)
     du = (
         t["events"]
         .filter(F.col("user_id").isNotNull())
@@ -876,7 +863,7 @@ def q_user_stickiness_dau_wau(spark, sf_dir):
     GROUP BY m.event_type ORDER BY m.event_type
     """,
 )
-def q_event_minute_spike_audit(spark, sf_dir):
+def q_event_minute_spike_audit(spark, t):
     """Minute-grain load-spike audit per event type: minutes whose
     event count exceeds the type's mean + 3 sigma — the batch twin of
     a streaming anomaly monitor and the sizing input for rate limits
@@ -886,7 +873,6 @@ def q_event_minute_spike_audit(spark, sf_dir):
     Scale shape: the fact collapses to the BOUNDED (type, minute)
     grain first (calendar-bounded rows), per-type moments are a 5-row
     broadcast joined back over that grain, then a bounded rollup."""
-    t = load_tables(spark, sf_dir)
     m = t["events"].groupBy(
         "event_type",
         F.substring(F.col("ts").cast("string"), 1, 16).alias("minute"),
@@ -922,7 +908,7 @@ def q_event_minute_spike_audit(spark, sf_dir):
     FROM events GROUP BY 1 ORDER BY hour_of_day
     """,
 )
-def q_error_share_by_hour(spark, sf_dir):
+def q_error_share_by_hour(spark, t):
     """Error share by hour of day (24 rows): when in the day the
     platform degrades — a diurnal error concentration separates
     load-correlated failures from deploy-correlated ones
@@ -930,7 +916,6 @@ def q_error_share_by_hour(spark, sf_dir):
 
     Scale shape: map-side hour extraction + conditional count, one
     bounded 24-row rollup — pure map-combine, single shuffle."""
-    t = load_tables(spark, sf_dir)
     err = F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
     return (
         t["events"]
@@ -970,7 +955,7 @@ def q_error_share_by_hour(spark, sf_dir):
     FROM d GROUP BY source ORDER BY source
     """,
 )
-def q_doc_line_stats_by_source(spark, sf_dir):
+def q_doc_line_stats_by_source(spark, t):
     """Line structure per source: newline-delimited line counts and
     mean line width — the layout fingerprint that separates prose
     crawls from tables/code dumps before any tokenizer runs
@@ -981,7 +966,6 @@ def q_doc_line_stats_by_source(spark, sf_dir):
     Scale shape: map-side string arithmetic per document (text never
     shuffles — only integer counts), one bounded source-grain rollup
     with exact truncated means."""
-    t = load_tables(spark, sf_dir)
     d = (
         ensure_parallelism(t["documents"])
         .filter(F.col("text").isNotNull() & (F.length("text") > 0))
@@ -1036,7 +1020,7 @@ def q_doc_line_stats_by_source(spark, sf_dir):
     FROM d GROUP BY lang ORDER BY lang
     """,
 )
-def q_doc_digit_density_by_lang(spark, sf_dir):
+def q_doc_digit_density_by_lang(spark, t):
     """Digit density per language: share of characters that are
     digits, plus docs that are >10% digits — the numeric-boilerplate
     signal (price lists, log dumps, sports tables) that Gopher-style
@@ -1046,7 +1030,6 @@ def q_doc_digit_density_by_lang(spark, sf_dir):
 
     Scale shape: map-side string arithmetic, one bounded lang-grain
     rollup — text never shuffles, only integer counts."""
-    t = load_tables(spark, sf_dir)
     s = F.col("text")
     for ch in "0123456789":
         s = F.replace(s, F.lit(ch))
@@ -1111,7 +1094,7 @@ _PAD_LENGTHS = [128, 256, 512, 1024]
     FROM w GROUP BY max_len ORDER BY max_len
     """,
 )
-def q_doc_padding_waste_curve(spark, sf_dir):
+def q_doc_padding_waste_curve(spark, t):
     """Padding-waste curve: for each candidate sequence length, the
     share of a padded-batch token budget wasted when every document is
     chunked to ceil(tokens/L) sequences of length L — the number that
@@ -1123,7 +1106,6 @@ def q_doc_padding_waste_curve(spark, sf_dir):
     Scale shape: map-side token counting, a broadcast 4-row config
     cross join, one bounded rollup in exact integers (ceil via the
     non-negative FLOOR-division lever)."""
-    t = load_tables(spark, sf_dir)
     s = F.trim(F.col("text"))
     d = (
         ensure_parallelism(t["documents"])
@@ -1180,7 +1162,7 @@ def q_doc_padding_waste_curve(spark, sf_dir):
     FROM documents
     """,
 )
-def q_doc_id_continuity_audit(spark, sf_dir):
+def q_doc_id_continuity_audit(spark, t):
     """Document-id continuity audit: duplicates, range gaps, and null
     keys in one scalar row — the ingest-completeness gate a sharded
     crawl loader runs before any dedup (a gap means a lost shard;
@@ -1189,7 +1171,6 @@ def q_doc_id_continuity_audit(spark, sf_dir):
 
     Scale shape: ONE map-combined scalar aggregate over the bare id
     column — no joins, no windows, column-pruned scan."""
-    t = load_tables(spark, sf_dir)
     d = t["documents"]
     return d.agg(
         F.min("doc_id").cast("long").alias("min_id"),
@@ -1239,7 +1220,7 @@ def q_doc_id_continuity_audit(spark, sf_dir):
     FROM g GROUP BY source ORDER BY source
     """,
 )
-def q_doc_token_mass_gini_by_source(spark, sf_dir):
+def q_doc_token_mass_gini_by_source(spark, t):
     """Token-mass inequality per source (Gini over per-document token
     counts): a source whose token mass concentrates in a few huge
     documents needs chunk-grain sampling, not doc-grain — the
@@ -1249,7 +1230,6 @@ def q_doc_token_mass_gini_by_source(spark, sf_dir):
     Scale shape: map-side token counts, source-partitioned rank
     windows (one key shuffle serves all three), then a bounded
     source-grain rollup."""
-    t = load_tables(spark, sf_dir)
     s = F.trim(F.col("text"))
     d = (
         ensure_parallelism(t["documents"])
@@ -1289,7 +1269,7 @@ def q_doc_token_mass_gini_by_source(spark, sf_dir):
 
 
 @query("doc_boilerplate_sentences", oracle=None)  # attached below
-def q_doc_boilerplate_sentences(spark, sf_dir):
+def q_doc_boilerplate_sentences(spark, t):
     """Top-20 most repeated sentences across the corpus (by md5, so
     sentence text never shuffles): the boilerplate hit-list a crawl
     cleaner strips first — doc_sentence_dedup_rate says HOW MUCH
@@ -1302,7 +1282,6 @@ def q_doc_boilerplate_sentences(spark, sf_dir):
     Scale shape: split + explode map-side; only (md5, source, length)
     shuffle into a hash-grain rollup; TakeOrdered top-20 — never a
     global sort, never sentence text on the wire."""
-    t = load_tables(spark, sf_dir)
     sents = (
         ensure_parallelism(t["documents"])
         .filter(F.col("text").isNotNull())
@@ -1369,7 +1348,7 @@ ORACLES["doc_boilerplate_sentences"] = """
 # --------------------------------------------------------------------------
 
 @query("emb_pq_code_entropy", oracle=None)  # attached below
-def q_emb_pq_code_entropy(spark, sf_dir):
+def q_emb_pq_code_entropy(spark, t):
     """Per-subspace PQ code-usage entropy (bits) and top-code share:
     a subspace whose codes collapse onto a few entries wastes its
     byte of the PQ budget — emb_pq_subspace_distortion localizes
@@ -1383,7 +1362,6 @@ def q_emb_pq_code_entropy(spark, sf_dir):
     at most PQ_K=16 terms per subspace."""
     from .round3_queries import _pq_codes
 
-    t = load_tables(spark, sf_dir)
     emb = ensure_parallelism(t["embeddings"])
     cc = _pq_codes(emb).groupBy("m", "code").agg(
         F.count(F.lit(1)).alias("n")
@@ -1457,7 +1435,7 @@ _RES_LISTS = 16
     GROUP BY list_id ORDER BY list_id
     """,
 )
-def q_emb_ivf_residual_norms(spark, sf_dir):
+def q_emb_ivf_residual_norms(spark, t):
     """Per-list IVF residual energy: average distance from each
     vector to its assigned (L2) centroid, normalized by vector norm —
     the signal that picks between flat-IVF and IVF-PQ-with-residual
@@ -1470,7 +1448,6 @@ def q_emb_ivf_residual_norms(spark, sf_dir):
     d2 (no second pass), then one bounded list-grain rollup."""
     from ..llmdata.similarity import _as_double, dot, nearest_seed_l2
 
-    t = load_tables(spark, sf_dir)
     e = ensure_parallelism(t["embeddings"]).select(
         "vec_id", _as_double("embedding").alias("v")
     )
@@ -1500,7 +1477,7 @@ def q_emb_ivf_residual_norms(spark, sf_dir):
 
 
 @query("emb_knn_label_confusion", oracle=None)  # composed below
-def q_emb_knn_label_confusion(spark, sf_dir):
+def q_emb_knn_label_confusion(spark, t):
     """1-NN label confusion pairs over the audited query set: which
     label pairs the embedding space actually confuses —
     emb_label_knn_accuracy reports one number; this names the
@@ -1510,7 +1487,7 @@ def q_emb_knn_label_confusion(spark, sf_dir):
     Scale shape: composes the registered brute-force cosine top-k;
     rank-1 extraction and both label joins run at query-set grain;
     final rollup is bounded by label-pair cardinality."""
-    topk = QUERIES["emb_cosine_topk"](spark, sf_dir)
+    topk = QUERIES["emb_cosine_topk"](spark, t.sf_dir)
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("neighbor_id")
     )
@@ -1519,7 +1496,6 @@ def q_emb_knn_label_confusion(spark, sf_dir):
         .filter(F.col("rn") == 1)
         .select("query_id", "neighbor_id")
     )
-    t = load_tables(spark, sf_dir)
     labels = t["embeddings"].select("vec_id", "label")
     ql = labels.withColumnRenamed("vec_id", "query_id").withColumnRenamed(
         "label", "true_label"
@@ -1591,7 +1567,7 @@ _EMB_DIMS = 64
     ORDER BY label_a, label_b
     """,
 )
-def q_emb_label_centroid_separation(spark, sf_dir):
+def q_emb_label_centroid_separation(spark, t):
     """Pairwise cosine between label centroids (45 pairs for 10
     labels): the class-separability matrix — two centroids with
     cosine near 1 mean the labels are not linearly separable in this
@@ -1602,7 +1578,6 @@ def q_emb_label_centroid_separation(spark, sf_dir):
     (label x dimension) component frame in one shuffle (posexplode is
     map-side); the pair join, dots, and norms all run on that
     640-row frame."""
-    t = load_tables(spark, sf_dir)
     comp = (
         ensure_parallelism(t["embeddings"])
         .select(
@@ -1679,7 +1654,7 @@ def q_emb_label_centroid_separation(spark, sf_dir):
     FROM comps GROUP BY label ORDER BY label
     """,
 )
-def q_emb_int8_saturation_audit(spark, sf_dir):
+def q_emb_int8_saturation_audit(spark, t):
     """Int8 saturation audit per label under the registered absmax
     quantization scheme: components landing on the +/-127 rail (and
     the >=120 near-rail band) — a label whose mass piles on the rail
@@ -1689,7 +1664,6 @@ def q_emb_int8_saturation_audit(spark, sf_dir):
     Scale shape: entirely map-side per vector (one fold computes the
     rail counts per row — no component explosion leaves the task),
     then a bounded label-grain rollup of small integers."""
-    t = load_tables(spark, sf_dir)
     e = ensure_parallelism(t["embeddings"]).select(
         "label", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -1754,7 +1728,7 @@ def q_emb_int8_saturation_audit(spark, sf_dir):
     FROM g WHERE pn IS NOT NULL ORDER BY yr
     """,
 )
-def q_revenue_growth_decomposition(spark, sf_dir):
+def q_revenue_growth_decomposition(spark, t):
     """YoY revenue growth decomposed into volume x average-value
     factors (revenue_ratio = volume_ratio * value_ratio): did revenue
     grow because more orders came in or because orders got bigger —
@@ -1763,7 +1737,6 @@ def q_revenue_growth_decomposition(spark, sf_dir):
 
     Scale shape: one year-grain map-combined rollup (exact integer
     cents), then lag arithmetic on the BOUNDED ~7-row year frame."""
-    t = load_tables(spark, sf_dir)
     y = t["orders"].groupBy(F.year("o_orderdate").alias("yr")).agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.sum(cents("o_totalprice")).alias("cents"),
@@ -1813,7 +1786,7 @@ def q_revenue_growth_decomposition(spark, sf_dir):
     FROM j GROUP BY nation ORDER BY nation
     """,
 )
-def q_high_value_order_share_by_nation(spark, sf_dir):
+def q_high_value_order_share_by_nation(spark, t):
     """Share of orders above the GLOBAL p90 order value, per nation:
     does premium demand concentrate geographically — the
     market-prioritization cut behind regional account coverage
@@ -1823,7 +1796,6 @@ def q_high_value_order_share_by_nation(spark, sf_dir):
     Scale shape: the p90 cutoff is ONE scalar percentile broadcast
     into the fact scan; customer and nation dims broadcast-join; one
     bounded 25-row nation rollup."""
-    t = load_tables(spark, sf_dir)
     o = t["orders"].select(
         "o_custkey", cents("o_totalprice").alias("cents")
     )
@@ -1888,7 +1860,7 @@ def q_high_value_order_share_by_nation(spark, sf_dir):
     FROM g, tot t ORDER BY finish
     """,
 )
-def q_part_type_finish_premium(spark, sf_dir):
+def q_part_type_finish_premium(spark, t):
     """Price premium by finish class (the first token of p_type, e.g.
     STANDARD/SMALL/ECONOMY...): does the finish command a premium over
     the catalog average — the attribute-level pricing read under
@@ -1899,7 +1871,6 @@ def q_part_type_finish_premium(spark, sf_dir):
 
     Scale shape: map-side token extraction, one bounded finish-grain
     rollup, global baseline as a broadcast 1-row scalar."""
-    t = load_tables(spark, sf_dir)
     pos = F.instr(F.col("p_type"), " ")
     p = t["part"].select(
         F.when(pos > 0, F.col("p_type").substr(F.lit(1), pos - 1))
@@ -1953,7 +1924,7 @@ def q_part_type_finish_premium(spark, sf_dir):
     FROM c
     """,
 )
-def q_customer_name_key_consistency(spark, sf_dir):
+def q_customer_name_key_consistency(spark, t):
     """Name-embedded-key consistency audit: 'Customer#000000042'-style
     names carry the key redundantly — parse the suffix and verify it
     round-trips to c_custkey (functional_dependency_audit tests
@@ -1963,7 +1934,6 @@ def q_customer_name_key_consistency(spark, sf_dir):
 
     Scale shape: ONE map-combined scalar aggregate — instr/substr
     string arithmetic per row, no joins, no windows."""
-    t = load_tables(spark, sf_dir)
     h = F.instr(F.col("c_name"), "#")
     c = t["customer"].select(
         "c_custkey",
@@ -2020,7 +1990,7 @@ def q_customer_name_key_consistency(spark, sf_dir):
     ORDER BY type_a, type_b
     """,
 )
-def q_event_type_user_overlap(spark, sf_dir):
+def q_event_type_user_overlap(spark, t):
     """User-base overlap between event types (pairwise Jaccard over
     distinct user sets): which behaviors share an audience — a low
     view/purchase overlap is a funnel leak, a high error/purchase
@@ -2031,7 +2001,6 @@ def q_event_type_user_overlap(spark, sf_dir):
     distinct frame first; the pair join is keyed by user over 5-row
     type fan-out (output bounded by 10 type pairs); sizes broadcast
     back."""
-    t = load_tables(spark, sf_dir)
     tu = (
         t["events"]
         .filter(F.col("user_id").isNotNull())

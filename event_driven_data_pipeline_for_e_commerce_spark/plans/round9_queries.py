@@ -21,7 +21,6 @@ from event_driven_data_pipeline_for_e_commerce_spark.operators.partitioning impo
 
 from ..functions.money import O_CENTS, cents
 from .corpus import ORACLES, QUERIES, query  # noqa: F401
-from .tables import load_tables
 
 
 @query(
@@ -44,14 +43,13 @@ from .tables import load_tables
     FROM j GROUP BY brand ORDER BY brand
     """,
 )
-def q_brand_return_value_share(spark, sf_dir):
+def q_brand_return_value_share(spark, t):
     """Returned-REVENUE share per brand: returned_rate_by_brand counts
     returned lines; this weighs them by discounted value — the margin
     leak a category manager actually reconciles against refunds.
 
     Scale shape: broadcast part dim into the fact scan, one bounded
     brand-grain rollup in exact integer cents."""
-    t = load_tables(spark, sf_dir)
     j = (
         t["lineitem"]
         .join(
@@ -104,7 +102,7 @@ def q_brand_return_value_share(spark, sf_dir):
     GROUP BY m.nation ORDER BY m.nation
     """,
 )
-def q_nation_order_priority_entropy(spark, sf_dir):
+def q_nation_order_priority_entropy(spark, t):
     """Order-priority mix entropy per nation: a nation whose priority
     mix collapses (low entropy) is dominated by one urgency class —
     the geographic companion of priority_mix_drift (which tracks time;
@@ -113,7 +111,6 @@ def q_nation_order_priority_entropy(spark, sf_dir):
     Scale shape: two broadcast dim joins into the fact scan, the
     bounded (nation x priority) rollup, entropy summed over at most 5
     terms per nation."""
-    t = load_tables(spark, sf_dir)
     m = (
         t["orders"]
         .join(
@@ -170,7 +167,7 @@ def q_nation_order_priority_entropy(spark, sf_dir):
     FROM o GROUP BY segment ORDER BY segment
     """,
 )
-def q_weekend_order_share_by_segment(spark, sf_dir):
+def q_weekend_order_share_by_segment(spark, t):
     """Weekend order share per market segment (count AND value): the
     day-of-week demand mix behind staffing and promo windows —
     orders_weekday_seasonality shows the global curve; this splits
@@ -180,7 +177,6 @@ def q_weekend_order_share_by_segment(spark, sf_dir):
 
     Scale shape: broadcast customer dim, map-side weekday arithmetic,
     one bounded 5-row segment rollup."""
-    t = load_tables(spark, sf_dir)
     wk = F.when(
         F.datediff(
             F.col("o_orderdate").cast("date"),
@@ -234,7 +230,7 @@ def q_weekend_order_share_by_segment(spark, sf_dir):
     FROM o GROUP BY segment ORDER BY segment
     """,
 )
-def q_segment_value_trend_slope(spark, sf_dir):
+def q_segment_value_trend_slope(spark, t):
     """Order-value time trend per segment (OLS slope of order cents
     over days since 1992-01-01): is average ticket size drifting, and
     for whom — the regression twin of revenue_growth_decomposition's
@@ -244,7 +240,6 @@ def q_segment_value_trend_slope(spark, sf_dir):
     Scale shape: broadcast customer dim, map-side day-index
     arithmetic (the portable CAST(date - DATE AS BIGINT) lever), one
     bounded 5-row segment rollup of regression moments."""
-    t = load_tables(spark, sf_dir)
     o = (
         t["orders"]
         .join(
@@ -294,7 +289,7 @@ def q_segment_value_trend_slope(spark, sf_dir):
     GROUP BY m.l_returnflag ORDER BY m.l_returnflag
     """,
 )
-def q_lineitem_quantity_entropy_by_returnflag(spark, sf_dir):
+def q_lineitem_quantity_entropy_by_returnflag(spark, t):
     """Quantity-distribution entropy per return flag: a uniform
     1..50 quantity mix has log2(50) ~ 5.64 bits — a returned-goods
     flag whose entropy drops is concentrating on specific order sizes
@@ -304,7 +299,6 @@ def q_lineitem_quantity_entropy_by_returnflag(spark, sf_dir):
     Scale shape: the fact collapses to the bounded (flag x quantity)
     grain first (<= 150 rows), marginals broadcast back, entropy over
     at most 50 terms per flag."""
-    t = load_tables(spark, sf_dir)
     m = t["lineitem"].groupBy(
         "l_returnflag",
         F.col("l_quantity").cast("long").alias("qty"),
@@ -353,7 +347,7 @@ def q_lineitem_quantity_entropy_by_returnflag(spark, sf_dir):
     GROUP BY c.bal_class ORDER BY c.bal_class
     """,
 )
-def q_customer_balance_sign_mix(spark, sf_dir):
+def q_customer_balance_sign_mix(spark, t):
     """Balance-class mix (negative / low / high) with order activity
     and never-ordered counts: do indebted accounts still transact —
     the credit-exposure cut that acctbal_decile_profile's even deciles
@@ -361,7 +355,6 @@ def q_customer_balance_sign_mix(spark, sf_dir):
 
     Scale shape: customer-grain spend rollup left-joined at customer
     grain, then a bounded 3-class rollup in exact integers."""
-    t = load_tables(spark, sf_dir)
     c = t["customer"].select(
         "c_custkey",
         F.when(F.col("c_acctbal") < 0, "a_negative")
@@ -412,7 +405,7 @@ def q_customer_balance_sign_mix(spark, sf_dir):
     FROM p GROUP BY p_brand ORDER BY p_brand
     """,
 )
-def q_part_name_word_count_stats(spark, sf_dir):
+def q_part_name_word_count_stats(spark, t):
     """Part-name verbosity per brand (space-arithmetic word counts):
     catalog naming-convention drift — a brand whose name length
     distribution shifts broke its feed format, the dim-table cousin
@@ -420,7 +413,6 @@ def q_part_name_word_count_stats(spark, sf_dir):
 
     Scale shape: map-side string arithmetic over the part dim, one
     bounded brand-grain rollup with exact truncated means."""
-    t = load_tables(spark, sf_dir)
     s = F.trim(F.col("p_name"))
     p = (
         t["part"]
@@ -487,7 +479,7 @@ _DEPTH_KS = [1, 2, 3, 5, 8]
     GROUP BY cfg.k ORDER BY min_depth
     """,
 )
-def q_session_depth_conversion_curve(spark, sf_dir):
+def q_session_depth_conversion_curve(spark, t):
     """Conversion rate as a function of session depth: among sessions
     with at least k events, how many contain a purchase — the
     engagement-to-revenue curve that tells a product team whether
@@ -498,7 +490,6 @@ def q_session_depth_conversion_curve(spark, sf_dir):
     user_id (one key shuffle), session rollup at (user, session)
     grain, then a broadcast 5-row threshold join over the bounded
     session-count frame."""
-    t = load_tables(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ws = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     ev = (
@@ -573,7 +564,7 @@ def q_session_depth_conversion_curve(spark, sf_dir):
     FROM m GROUP BY source ORDER BY source
     """,
 )
-def q_doc_source_length_psi(spark, sf_dir):
+def q_doc_source_length_psi(spark, t):
     """Length-distribution drift per source (PSI of the 4-band length
     mix vs the corpus marginal, Laplace-smoothed): a source whose
     length profile diverges from the corpus is the first suspect when
@@ -583,7 +574,6 @@ def q_doc_source_length_psi(spark, sf_dir):
     Scale shape: the corpus collapses to (source, band) counts;
     marginals and the 4-row band frame broadcast back; PSI is a
     4-term sum per source."""
-    t = load_tables(spark, sf_dir)
     d = (
         ensure_parallelism(t["documents"])
         .filter(F.col("n_chars").isNotNull())
@@ -659,7 +649,7 @@ def q_doc_source_length_psi(spark, sf_dir):
     GROUP BY source ORDER BY source
     """,
 )
-def q_doc_casefold_dup_gain(spark, sf_dir):
+def q_doc_casefold_dup_gain(spark, t):
     """Casefold dedup gain per source: extra duplicate groups found
     when hashing lowercased text — the cheapest canonicalization step
     a dedup pipeline can add, and this measures exactly what it would
@@ -668,7 +658,6 @@ def q_doc_casefold_dup_gain(spark, sf_dir):
 
     Scale shape: two hash-only distinct aggregates per source — text
     never shuffles, only md5 values."""
-    t = load_tables(spark, sf_dir)
     return (
         ensure_parallelism(t["documents"])
         .filter(F.col("text").isNotNull())
@@ -707,7 +696,7 @@ def q_doc_casefold_dup_gain(spark, sf_dir):
     FROM g, tot t ORDER BY g.m
     """,
 )
-def q_emb_subvector_norm_share(spark, sf_dir):
+def q_emb_subvector_norm_share(spark, t):
     """Squared-norm mass per PQ subspace (the 4 x 16-dim slices): a
     subspace carrying most of the energy dominates every ADC distance
     — the capacity-allocation companion of emb_pq_subspace_distortion
@@ -718,7 +707,6 @@ def q_emb_subvector_norm_share(spark, sf_dir):
     per vector — no component explosion), one bounded 4-row rollup."""
     from ..llmdata.similarity import _as_double
 
-    t = load_tables(spark, sf_dir)
     e = ensure_parallelism(t["embeddings"]).select(
         _as_double("embedding").alias("v")
     )
@@ -780,7 +768,7 @@ def q_emb_subvector_norm_share(spark, sf_dir):
     FROM s GROUP BY nation ORDER BY nation
     """,
 )
-def q_supplier_acctbal_quartiles_by_nation(spark, sf_dir):
+def q_supplier_acctbal_quartiles_by_nation(spark, t):
     """Supplier account-balance quartiles per nation: the
     supplier-side financial-health profile (nation_actor_census sums
     the balances; quartiles expose whether a nation's supplier base is
@@ -788,7 +776,6 @@ def q_supplier_acctbal_quartiles_by_nation(spark, sf_dir):
 
     Scale shape: broadcast nation dim, one bounded 25-row nation
     rollup with single-pass exact percentiles over integer cents."""
-    t = load_tables(spark, sf_dir)
     s = t["supplier"].join(
         F.broadcast(t["nation"].select("n_nationkey", "n_name")),
         F.col("n_nationkey") == F.col("s_nationkey"),
@@ -831,7 +818,7 @@ def q_supplier_acctbal_quartiles_by_nation(spark, sf_dir):
     FROM o GROUP BY priority ORDER BY priority
     """,
 )
-def q_order_priority_value_quantiles(spark, sf_dir):
+def q_order_priority_value_quantiles(spark, t):
     """Order-value quantiles per priority class: do urgent orders
     carry more money — the distributional check behind
     late_revenue_at_risk's exposure numbers (if URGENT p90 dwarfs the
@@ -839,7 +826,6 @@ def q_order_priority_value_quantiles(spark, sf_dir):
 
     Scale shape: one bounded 5-row priority rollup with single-pass
     exact percentiles over integer cents."""
-    t = load_tables(spark, sf_dir)
     o = t["orders"].select(
         F.col("o_orderpriority").alias("priority"),
         cents("o_totalprice").alias("cents"),
@@ -880,7 +866,7 @@ def q_order_priority_value_quantiles(spark, sf_dir):
     FROM u GROUP BY n_types ORDER BY n_types
     """,
 )
-def q_user_event_type_diversity(spark, sf_dir):
+def q_user_event_type_diversity(spark, t):
     """Behavioral-diversity histogram: users by how many distinct
     event types they emit (1..5) with their event volume — a user
     base stuck at 1-2 types uses one feature; user_event_entropy
@@ -888,7 +874,6 @@ def q_user_event_type_diversity(spark, sf_dir):
 
     Scale shape: one user-grain distinct-count rollup, then a bounded
     5-row diversity rollup with exact truncated means."""
-    t = load_tables(spark, sf_dir)
     u = (
         t["events"]
         .filter(F.col("user_id").isNotNull())

@@ -14,7 +14,6 @@ from pyspark.sql import Window
 
 from ..functions.money import O_CENTS, cents
 from .corpus import ORACLES, QUERIES, query  # noqa: F401
-from .tables import load_tables
 
 
 @query(
@@ -30,7 +29,7 @@ from .tables import load_tables
     FROM d GROUP BY n_brands ORDER BY n_brands
     """,
 )
-def q_supplier_brand_reach(spark, sf_dir):
+def q_supplier_brand_reach(spark, t):
     """Brand-reach histogram: suppliers by how many distinct brands
     they ship — a generalist/specialist split of the supply base
     (trade_degree_distribution counts customers reached; this counts
@@ -39,7 +38,6 @@ def q_supplier_brand_reach(spark, sf_dir):
     Scale shape: broadcast part dim into the fact scan, distinct on
     the BARE (suppkey, brand) edge, one supplier-grain count, then a
     bounded <=25-row histogram rollup."""
-    t = load_tables(spark, sf_dir)
     e = (
         t["lineitem"]
         .select("l_suppkey", "l_partkey")
@@ -88,7 +86,7 @@ def q_supplier_brand_reach(spark, sf_dir):
     FROM j GROUP BY segment ORDER BY segment
     """,
 )
-def q_customer_order_value_cv(spark, sf_dir):
+def q_customer_order_value_cv(spark, t):
     """Order-value coefficient of variation per customer (>= 3
     orders), rolled to segment grain: erratic spenders (high CV) are
     promotion-driven, steady ones are subscription-shaped — the
@@ -97,7 +95,6 @@ def q_customer_order_value_cv(spark, sf_dir):
     Scale shape: one customer-grain moment rollup (count/avg/stddev
     in a single pass), broadcast segment dim join at customer grain,
     bounded 5-row segment rollup with a rank-based median."""
-    t = load_tables(spark, sf_dir)
     per = (
         t["orders"]
         .select("o_custkey", cents("o_totalprice").alias("cents"))
@@ -146,7 +143,7 @@ def q_customer_order_value_cv(spark, sf_dir):
     FROM e GROUP BY weekday ORDER BY weekday
     """,
 )
-def q_events_value_by_weekday(spark, sf_dir):
+def q_events_value_by_weekday(spark, t):
     """Event volume and purchase value by weekday (0 = Monday via the
     portable Monday-epoch lever): the weekly demand rhythm of the
     event stream — orders_weekday_seasonality covers the order feed;
@@ -155,7 +152,6 @@ def q_events_value_by_weekday(spark, sf_dir):
 
     Scale shape: map-side weekday arithmetic, one bounded 7-row
     rollup."""
-    t = load_tables(spark, sf_dir)
     wd = F.datediff(
         F.col("ts").cast("date"), F.lit("1970-01-05").cast("date")
     ).cast("long") % 7
@@ -205,7 +201,7 @@ def q_events_value_by_weekday(spark, sf_dir):
     FROM j GROUP BY priority ORDER BY priority
     """,
 )
-def q_order_linecount_by_priority(spark, sf_dir):
+def q_order_linecount_by_priority(spark, t):
     """Basket width by order priority: do urgent orders carry fewer
     lines (expedite-one-thing) or more (stock-up) —
     order_linecount_histogram shows the global shape; the priority
@@ -214,7 +210,6 @@ def q_order_linecount_by_priority(spark, sf_dir):
 
     Scale shape: order-grain line-count rollup (one shuffle on the
     join key, reused by the join), bounded 5-row priority rollup."""
-    t = load_tables(spark, sf_dir)
     lc = t["lineitem"].groupBy("l_orderkey").agg(
         F.count(F.lit(1)).alias("n_lines")
     )
@@ -267,7 +262,7 @@ def q_order_linecount_by_priority(spark, sf_dir):
     ORDER BY nation
     """,
 )
-def q_nation_revenue_cagr(spark, sf_dir):
+def q_nation_revenue_cagr(spark, t):
     """Compound annual growth rate of revenue per nation (first
     corpus year to last): the one-number growth ranking behind
     regional investment cases — region_quarter_revenue_yoy gives
@@ -276,7 +271,6 @@ def q_nation_revenue_cagr(spark, sf_dir):
     Scale shape: two broadcast dim joins, a bounded (nation x year)
     rollup, the year span as a broadcast 1-row scalar, and POWER
     (portable, correctly-rounded) on the bounded nation frame."""
-    t = load_tables(spark, sf_dir)
     y = (
         t["orders"]
         .join(
@@ -340,7 +334,7 @@ def q_nation_revenue_cagr(spark, sf_dir):
     FROM lagged WHERE n24 IS NOT NULL
     """,
 )
-def q_events_hourly_autocorr24(spark, sf_dir):
+def q_events_hourly_autocorr24(spark, t):
     """Diurnality strength: lag-24 autocorrelation of hourly event
     counts — near 1 means a hard daily cycle (schedule capacity by
     hour), near 0 means demand is flat or bursty
@@ -351,7 +345,6 @@ def q_events_hourly_autocorr24(spark, sf_dir):
     grain first; the lag window runs unpartitioned ONLY over that
     bounded hour series (allowlisted), and the correlation is one
     scalar aggregate."""
-    t = load_tables(spark, sf_dir)
     h = t["events"].groupBy(
         F.substring(F.col("ts").cast("string"), 1, 13).alias("hr")
     ).agg(F.count(F.lit(1)).alias("n"))

@@ -25,7 +25,6 @@ from pyspark.sql import Window
 from ..functions.money import L_REV_CENTS, O_CENTS, l_rev_cents, o_cents
 from ..operators.partitioning import ensure_parallelism
 from .corpus import ORACLES, QUERIES, query  # noqa: F401
-from .tables import load_tables
 
 
 # --------------------------------------------------------------------------
@@ -54,7 +53,7 @@ from .tables import load_tables
     FROM m ORDER BY prev_priority, next_priority
     """,
 )
-def q_order_priority_escalation_matrix(spark, sf_dir):
+def q_order_priority_escalation_matrix(spark, t):
     """Consecutive-order priority transition matrix per customer: do
     urgent orders beget urgent orders? The categorical-lag twin of
     user_event_transitions, on the ORDER sequence instead of the event
@@ -64,7 +63,6 @@ def q_order_priority_escalation_matrix(spark, sf_dir):
     Scale shape: one window shuffle keyed by o_custkey (ties broken by
     o_orderkey for a total order), then a bounded <=25-cell matrix
     rollup; the row-share window runs over that bounded matrix."""
-    t = load_tables(spark, sf_dir)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     seq = t["orders"].select(
         F.col("o_orderpriority").alias("next_priority"),
@@ -121,7 +119,7 @@ def q_order_priority_escalation_matrix(spark, sf_dir):
     FROM best GROUP BY max_run ORDER BY max_run_len
     """,
 )
-def q_order_value_increasing_runs(spark, sf_dir):
+def q_order_value_increasing_runs(spark, t):
     """Gaps-and-islands run-length encoding on the per-customer order
     sequence: the longest streak of strictly increasing order values
     each customer ever posted, rolled into a histogram. Escalating
@@ -132,7 +130,6 @@ def q_order_value_increasing_runs(spark, sf_dir):
     (one shuffle, Spark reuses the exchange), runs/best are keyed
     rollups at customer grain, and the output is a bounded <=20-row
     histogram. Exact cents comparisons — no float ordering."""
-    t = load_tables(spark, sf_dir)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     seq = t["orders"].select(
         "o_custkey",
@@ -196,7 +193,7 @@ def q_order_value_increasing_runs(spark, sf_dir):
     FROM per GROUP BY hour(entry_ts) ORDER BY entry_hour
     """,
 )
-def q_session_bounce_rate_by_hour(spark, sf_dir):
+def q_session_bounce_rate_by_hour(spark, t):
     """Single-event-session (bounce) rate by session entry hour — the
     diurnal quality view of sessionization: session_windows builds the
     sessions, sessions_per_user_histogram counts them, this says WHEN
@@ -208,7 +205,6 @@ def q_session_bounce_rate_by_hour(spark, sf_dir):
     partitioning -> one shuffle), a keyed (user, sid) rollup, then a
     bounded 24-row hour rollup. Ties on ts are totally ordered by
     event_id on both engines."""
-    t = load_tables(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # timestamp-minus-timestamp is a microsecond-exact day-time
     # interval in both engines — never truncate to whole seconds here
@@ -273,7 +269,7 @@ def q_session_bounce_rate_by_hour(spark, sf_dir):
     FROM per CROSS JOIN tot ORDER BY quartile
     """,
 )
-def q_user_value_quartile_concentration(spark, sf_dir):
+def q_user_value_quartile_concentration(spark, t):
     """Where in a user's event sequence does monetary value arrive?
     Pool each eligible user's (>= 4 events, positive value) lifetime
     into sequence quartiles via per-user NTILE and report each
@@ -285,7 +281,6 @@ def q_user_value_quartile_concentration(spark, sf_dir):
     Scale shape: NTILE partitions by user_id (one shuffle), the
     quartile rollup is 4 rows, and the total attaches as a broadcast
     1-row scalar anchor — no unpartitioned window anywhere."""
-    t = load_tables(spark, sf_dir)
     e = t["events"].select(
         "user_id",
         "event_id",
@@ -351,7 +346,7 @@ def q_user_value_quartile_concentration(spark, sf_dir):
     GROUP BY n.n_name ORDER BY nation
     """,
 )
-def q_supplier_quarter_share_volatility(spark, sf_dir):
+def q_supplier_quarter_share_volatility(spark, t):
     """Quarter-over-quarter volatility of each supplier's share of
     total shipped revenue (basis points), rolled to nation grain:
     steady-share suppliers are structural capacity, volatile ones are
@@ -362,7 +357,6 @@ def q_supplier_quarter_share_volatility(spark, sf_dir):
     ~30-row quarter-total frame joined back (broadcastable), a
     supplier-grain moment rollup, then broadcast supplier/nation dims
     into a 25-row nation rollup."""
-    t = load_tables(spark, sf_dir)
     r = t["lineitem"].select(
         "l_suppkey",
         (F.year("l_shipdate") * 10 + F.quarter("l_shipdate")).alias("yq"),
@@ -425,7 +419,7 @@ def q_supplier_quarter_share_volatility(spark, sf_dir):
     FROM agg CROSS JOIN tot ORDER BY linenumber
     """,
 )
-def q_lineitem_linenumber_profile(spark, sf_dir):
+def q_lineitem_linenumber_profile(spark, t):
     """Position-in-order effects: price, revenue share, and quantity by
     l_linenumber (the 1..7 slot a line occupies inside its order). A
     declining price curve across slots means lead items anchor the
@@ -435,7 +429,6 @@ def q_lineitem_linenumber_profile(spark, sf_dir):
     Scale shape: single map-side projection to exact cents, one
     bounded <=7-group rollup, and a broadcast 1-row total anchor; every
     ratio is a deterministic BIGINT division."""
-    t = load_tables(spark, sf_dir)
     lines = t["lineitem"].select(
         "l_linenumber",
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("price_cents"),
@@ -502,7 +495,7 @@ def q_lineitem_linenumber_profile(spark, sf_dir):
     FROM runs GROUP BY above ORDER BY above
     """,
 )
-def q_daily_revenue_median_streaks(spark, sf_dir):
+def q_daily_revenue_median_streaks(spark, t):
     """Hot/cold streaks: consecutive-calendar-day runs of daily revenue
     above vs below the all-time daily median. Long above-median runs
     are campaign persistence; long below-median runs are the droughts
@@ -514,7 +507,6 @@ def q_daily_revenue_median_streaks(spark, sf_dir):
     as a 1-row broadcast anchor over that bounded frame, islands
     window PARTITIONed BY the above-flag (never unpartitioned), 2-row
     output."""
-    t = load_tables(spark, sf_dir)
     d = (
         t["orders"]
         .groupBy(F.col("o_orderdate").cast("date").alias("day"))
@@ -581,7 +573,7 @@ def q_daily_revenue_median_streaks(spark, sf_dir):
     FROM j GROUP BY segment ORDER BY segment
     """,
 )
-def q_customer_first_last_value_shift(spark, sf_dir):
+def q_customer_first_last_value_shift(spark, t):
     """First-vs-last order value drift per repeat customer, rolled to
     segment: are relationships deepening (last > first) or decaying?
     customer_value_migration tracks banded year-over-year moves; this
@@ -592,7 +584,6 @@ def q_customer_first_last_value_shift(spark, sf_dir):
     (ascending and descending row_number reuse the same exchange; the
     count is frame-free), a customer-grain pivot rollup, broadcast
     segment dim, 5-row output."""
-    t = load_tables(spark, sf_dir)
     base = t["orders"].select(
         "o_custkey", "o_orderdate", "o_orderkey", o_cents().alias("cents")
     )
@@ -675,7 +666,7 @@ def q_customer_first_last_value_shift(spark, sf_dir):
     FROM st ORDER BY df DESC, word LIMIT 20
     """,
 )
-def q_doc_term_burstiness_topk(spark, sf_dir):
+def q_doc_term_burstiness_topk(spark, t):
     """Term burstiness (variance-to-mean ratio of per-document counts)
     for the 20 highest-document-frequency terms: bursty terms (VMR >>
     1) clump in few documents — topical signal; Poisson-like terms
@@ -688,7 +679,6 @@ def q_doc_term_burstiness_topk(spark, sf_dir):
     word-grain moment rollup, and the top-20 cut plans as
     TakeOrderedAndProject on (df DESC, word) — no vocab-frame window,
     no unbounded sort."""
-    t = load_tables(spark, sf_dir)
     w = (
         ensure_parallelism(t["documents"])
         .filter(F.trim("text") != "")
@@ -761,7 +751,7 @@ _RP_SAMPLE_MOD = 10
     FROM m
     """,
 )
-def q_emb_knn_reciprocity(spark, sf_dir):
+def q_emb_knn_reciprocity(spark, t):
     """kNN-graph reciprocity on a deterministic quarter sample
     (vec_id % 4 = 0, k = 5, cosine): the fraction of directed
     nearest-neighbor edges whose reverse edge also exists. Low
@@ -778,7 +768,6 @@ def q_emb_knn_reciprocity(spark, sf_dir):
     production path."""
     from ..llmdata.similarity import brute_force_topk
 
-    t = load_tables(spark, sf_dir)
     sample = t["embeddings"].filter(F.col("vec_id") % _KNN_SAMPLE_MOD == 0)
     edges = brute_force_topk(sample, sample, k=5).select(
         "query_id", "neighbor_id"
@@ -861,7 +850,7 @@ def _rp_oracle() -> str:
 
 
 @query("emb_random_projection_distortion", oracle=_rp_oracle())
-def q_emb_random_projection_distortion(spark, sf_dir):
+def q_emb_random_projection_distortion(spark, t):
     """Johnson-Lindenstrauss distortion audit for a seedless +/-1
     random projection (64 -> 8 dims, md5-derived signs): the ratio
     ||R(a-b)||^2 / (k * ||a-b||^2) over all pairs of a deterministic
@@ -877,7 +866,6 @@ def q_emb_random_projection_distortion(spark, sf_dir):
     within-sample pairs (quadratic in the tenth sample; the module
     constant ``_RP_SAMPLE_MOD`` is the 100 TB knob shared by engine
     and oracle, like emb_knn_reciprocity's ``_KNN_SAMPLE_MOD``)."""
-    t = load_tables(spark, sf_dir)
     s = t["embeddings"].filter(F.col("vec_id") % _RP_SAMPLE_MOD == 0).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )

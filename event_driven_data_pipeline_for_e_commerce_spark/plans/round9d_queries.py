@@ -19,7 +19,6 @@ from pyspark.sql import Window
 from ..functions.money import O_CENTS, o_cents
 from ..operators.partitioning import ensure_parallelism
 from .corpus import ORACLES, QUERIES, query  # noqa: F401
-from .tables import load_tables
 
 
 @query(
@@ -75,7 +74,7 @@ from .tables import load_tables
     FROM agg
     """,
 )
-def q_order_value_weekend_mannwhitney(spark, sf_dir):
+def q_order_value_weekend_mannwhitney(spark, t):
     """Exact Mann-Whitney U test: do weekend orders have a different
     value DISTRIBUTION than weekday orders (not just a different
     mean)? Reports the doubled U statistic (2U counts each tie once —
@@ -94,7 +93,6 @@ def q_order_value_weekend_mannwhitney(spark, sf_dir):
     1-row z/effect projection."""
     from ..operators.cumulative import running_sum_ranged
 
-    t = load_tables(spark, sf_dir)
     dow = (
         F.datediff(
             F.col("o_orderdate").cast("date"), F.lit("1970-01-05").cast("date")
@@ -166,7 +164,7 @@ def q_order_value_weekend_mannwhitney(spark, sf_dir):
     FROM p GROUP BY length(CAST(peak AS STRING)) ORDER BY peak_digits
     """,
 )
-def q_customer_peak90d_spend_digits(spark, sf_dir):
+def q_customer_peak90d_spend_digits(spark, t):
     """Peak trailing-90-day spend per customer (the burst a credit/
     inventory planner sizes for), banded by decimal digit count: a
     RANGE-frame rolling window — each customer-day sums every order
@@ -178,7 +176,6 @@ def q_customer_peak90d_spend_digits(spark, sf_dir):
     Scale shape: fact collapses to customer-day grain first; the
     RANGE window partitions by o_custkey (one shuffle, executor-
     parallel); peak and band rollups are keyed; output <= 10 rows."""
-    t = load_tables(spark, sf_dir)
     cd = (
         t["orders"]
         .groupBy(
@@ -257,7 +254,7 @@ def q_customer_peak90d_spend_digits(spark, sf_dir):
     ORDER BY type_a, type_b
     """,
 )
-def q_session_event_type_affinity(spark, sf_dir):
+def q_session_event_type_affinity(spark, t):
     """Event-type co-occurrence WITHIN a session (30-min gap): support
     and lift for each unordered type pair. basket_association_rules
     mines part co-purchase inside orders; this is its behavioral twin
@@ -277,7 +274,6 @@ def q_session_event_type_affinity(spark, sf_dir):
     type-count and 1-row session-count anchors; <= 10 output rows."""
     from ..operators.pinning import pin
 
-    t = load_tables(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.col("ts") - F.lag("ts").over(w)
     flags = t["events"].select(
@@ -364,7 +360,7 @@ def q_session_event_type_affinity(spark, sf_dir):
     ORDER BY jaccard DESC, s1, s2 LIMIT 20
     """,
 )
-def q_supplier_shared_part_jaccard_topk(spark, sf_dir):
+def q_supplier_shared_part_jaccard_topk(spark, t):
     """Supplier substitutability: Jaccard overlap of the part sets two
     suppliers ship, top 20 pairs — near-identical catalogs mean a
     procurement team can consolidate or dual-source.
@@ -376,7 +372,6 @@ def q_supplier_shared_part_jaccard_topk(spark, sf_dir):
     part is a bounded fanout — the banded-join discipline of the dedup
     family, never supplier x supplier), keyed degree joins, and the
     top-20 cut plans as TakeOrderedAndProject."""
-    t = load_tables(spark, sf_dir)
     e = (
         t["lineitem"]
         .select(F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("sk"))
@@ -445,7 +440,7 @@ def q_supplier_shared_part_jaccard_topk(spark, sf_dir):
     ORDER BY threshold_pct
     """,
 )
-def q_emb_dim_energy_concentration(spark, sf_dir):
+def q_emb_dim_energy_concentration(spark, t):
     """Variance-energy concentration across embedding dimensions: the
     number of (axis-aligned) dimensions needed to cover 50/80/90% of
     total per-dim variance. A tight count says the embedding is
@@ -458,7 +453,6 @@ def q_emb_dim_energy_concentration(spark, sf_dir):
     rollup, then every window/join runs over the FIXED 64-row dim
     frame (allowlisted bounded grain) with broadcast 1-row/3-row
     anchors; output is 3 rows."""
-    t = load_tables(spark, sf_dir)
     s = ensure_parallelism(t["embeddings"]).select(
         F.posexplode(F.col("embedding").cast("array<double>")).alias(
             "dim", "x"
@@ -522,7 +516,7 @@ def q_emb_dim_energy_concentration(spark, sf_dir):
     FROM b GROUP BY tf_digits ORDER BY tf_digits
     """,
 )
-def q_doc_zipf_abbreviation_curve(spark, sf_dir):
+def q_doc_zipf_abbreviation_curve(spark, t):
     """Zipf's law of abbreviation: frequent words are short. Terms
     banded by frequency magnitude (decimal digits of total term
     frequency — exact integer band edges) against their mean word
@@ -534,7 +528,6 @@ def q_doc_zipf_abbreviation_curve(spark, sf_dir):
     Scale shape: tokens explode map-side, one term-grain rollup
     (hash shuffle of bare words), then a bounded <=8-band rollup —
     exact BIGINT arithmetic end to end."""
-    t = load_tables(spark, sf_dir)
     w = (
         ensure_parallelism(t["documents"])
         .filter(F.trim("text") != "")

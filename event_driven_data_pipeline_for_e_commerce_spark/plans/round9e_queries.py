@@ -19,7 +19,6 @@ from pyspark.sql import Window
 
 from ..functions.money import O_CENTS
 from .corpus import ORACLES, QUERIES, query  # noqa: F401
-from .tables import load_tables
 
 _LAMBDA = 0.7
 
@@ -89,7 +88,7 @@ _LAMBDA = 0.7
     SELECT qid, CAST(3 AS BIGINT), s3, ROUND(sc3, 6) FROM p3
     """,
 )
-def q_emb_mmr_diversified_topk(spark, sf_dir):
+def q_emb_mmr_diversified_topk(spark, t):
     """Maximal Marginal Relevance retrieval (lambda = 0.7, k = 3):
     greedy diversified top-k where each pick maximizes
     lambda * sim(query, d) - (1 - lambda) * max sim(d, already picked).
@@ -107,7 +106,6 @@ def q_emb_mmr_diversified_topk(spark, sf_dir):
     from ..operators.partitioning import ensure_parallelism
     from ..operators.pinning import pin
 
-    t = load_tables(spark, sf_dir)
     e = ensure_parallelism(
         t["embeddings"].select(
             "vec_id", F.col("embedding").cast("array<double>").alias("v")
@@ -248,7 +246,7 @@ def q_emb_mmr_diversified_topk(spark, sf_dir):
     ORDER BY j.entry_type, j.duration_band
     """,
 )
-def q_session_duration_bands_by_entry_type(spark, sf_dir):
+def q_session_duration_bands_by_entry_type(spark, t):
     """Session duration distribution conditioned on HOW the session
     started (entry event type): view-entry sessions that stretch past
     15 minutes behave differently from purchase-entry ones. Duration
@@ -260,7 +258,6 @@ def q_session_duration_bands_by_entry_type(spark, sf_dir):
     all partition by user (sid windows by user+sid), session rollup is
     keyed, and the type-total joins back at the bounded <=5-type
     grain; output <= 25 rows."""
-    t = load_tables(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.col("ts") - F.lag("ts").over(w)
     flags = t["events"].select(
@@ -353,7 +350,7 @@ def q_session_duration_bands_by_entry_type(spark, sf_dir):
     FROM f ORDER BY bit
     """,
 )
-def q_doc_simhash_bit_balance(spark, sf_dir):
+def q_doc_simhash_bit_balance(spark, t):
     """Per-bit balance of the 16-bit SimHash fingerprints: each bit
     should split the corpus ~50/50; a skewed bit carries less than one
     bit of discriminating power, silently inflating the collision rate
@@ -370,7 +367,6 @@ def q_doc_simhash_bit_balance(spark, sf_dir):
     — equality holds exactly because the fingerprint bit IS s > 0."""
     from ..llmdata.dedup import simhash
 
-    t = load_tables(spark, sf_dir)
     sh = simhash(t["documents"], "text", "doc_id", bits=16)
     bits = sh.select(
         F.posexplode(
@@ -453,7 +449,7 @@ def q_doc_simhash_bit_balance(spark, sf_dir):
     FROM parts
     """,
 )
-def q_order_value_priority_weekend_anova2(spark, sf_dir):
+def q_order_value_priority_weekend_anova2(spark, t):
     """Two-way ANOVA of order value on priority (5 levels) x weekend
     (2 levels) with interaction: F statistics for both main effects
     and the cells remainder, plus the cells eta-squared. Answers "does
@@ -475,7 +471,6 @@ def q_order_value_priority_weekend_anova2(spark, sf_dir):
     ADVICE-r7 lesson); every quotient is computed from those 10 exact
     cells in scalar projections. No row-order float accumulation
     anywhere."""
-    t = load_tables(spark, sf_dir)
     dec = "decimal(38,0)"
     dow = (
         F.datediff(
@@ -588,7 +583,7 @@ def q_order_value_priority_weekend_anova2(spark, sf_dir):
     ORDER BY first_order_digits
     """,
 )
-def q_customer_first_order_size_cohorts(spark, sf_dir):
+def q_customer_first_order_size_cohorts(spark, t):
     """Does the SIZE of a customer's first order predict their future?
     Cohorts by first-order value magnitude (decimal digits — exact
     integer band edges, the peak90d banding discipline) against repeat
@@ -599,7 +594,6 @@ def q_customer_first_order_size_cohorts(spark, sf_dir):
     Scale shape: one o_custkey window (first-order pick) sharing its
     partitioning with the per-customer rollup, then a bounded <=10-row
     digit-band rollup; every ratio divides exact BIGINTs."""
-    t = load_tables(spark, sf_dir)
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     seq = t["orders"].select(
         "o_custkey",
@@ -665,7 +659,7 @@ def q_customer_first_order_size_cohorts(spark, sf_dir):
     ORDER BY span_years_band
     """,
 )
-def q_part_active_span_revenue_rate(spark, sf_dir):
+def q_part_active_span_revenue_rate(spark, t):
     """Catalog lifecycle: each part's active shipping span (first to
     last shipdate) banded in years, with the band's pooled revenue
     velocity (cents per active day). Short-span parts with high
@@ -677,7 +671,6 @@ def q_part_active_span_revenue_rate(spark, sf_dir):
     then a bounded <=8-row year-band rollup; the velocity is a pooled
     exact-BIGINT ratio (never an order-dependent float sum of per-part
     rates)."""
-    t = load_tables(spark, sf_dir)
     pr = t["lineitem"].groupBy("l_partkey").agg(
         F.min(F.col("l_shipdate").cast("date")).alias("d0"),
         F.max(F.col("l_shipdate").cast("date")).alias("d1"),

@@ -41,8 +41,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # columns stored as TIMESTAMP(NANOS) in the driver parquet
 NANO_TS_COLUMNS = {"ts"}
 
@@ -87,6 +85,11 @@ class _Catalog(Mapping[str, DataFrame]):
     def __init__(self, spark: SparkSession, sf_dir: str) -> None:
         self._spark = spark
         self._dir = os.path.realpath(sf_dir)
+
+    @property
+    def sf_dir(self) -> str:
+        """The resolved directory the tables are read from."""
+        return self._dir
 
     def _path(self, name: str) -> str:
         return os.path.join(self._dir, f"{name}.parquet")

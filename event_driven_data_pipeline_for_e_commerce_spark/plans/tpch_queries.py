@@ -33,7 +33,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from .corpus import query
-from .tables import load_tables
 
 
 def _ts(lit: str):
@@ -58,7 +57,7 @@ def _ts(lit: str):
     LIMIT 10
     """,
 )
-def q_q3_shipping_priority(spark, sf_dir):
+def q_q3_shipping_priority(spark, t):
     """TPC-H Q3 shape: segment-filtered customers x date-filtered orders
     x shipped-later lineitems, grouped per order, top-10 by revenue.
 
@@ -68,7 +67,6 @@ def q_q3_shipping_priority(spark, sf_dir):
     filter pushes into the scan; the final group-by key equals the
     orders-lineitem join key so AQE keeps the partitioning.
     """
-    t = load_tables(spark, sf_dir)
     cust = t["customer"].filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
     orders = (
         t["orders"]
@@ -102,7 +100,7 @@ def q_q3_shipping_priority(spark, sf_dir):
     GROUP BY o.o_orderpriority
     """,
 )
-def q_q4_priority_semi_exists(spark, sf_dir):
+def q_q4_priority_semi_exists(spark, t):
     """TPC-H Q4 shape: EXISTS over the fact table as a left-semi join
     with a cross-column residual predicate (shipped >60 days after
     order), counted per priority.
@@ -113,7 +111,6 @@ def q_q4_priority_semi_exists(spark, sf_dir):
     semi join and the residual stays in the join condition — no
     fan-out, no dedup pass.
     """
-    t = load_tables(spark, sf_dir)
     orders = t["orders"].filter(
         (F.col("o_orderdate") >= _ts("1996-01-01"))
         & (F.col("o_orderdate") < _ts("1997-01-01"))
@@ -147,7 +144,7 @@ def q_q4_priority_semi_exists(spark, sf_dir):
     ORDER BY revenue DESC, n.n_name
     """,
 )
-def q_q5_local_supplier_volume(spark, sf_dir):
+def q_q5_local_supplier_volume(spark, t):
     """TPC-H Q5 shape: six-way join with a cyclic condition (customer
     and supplier must share a nation) — the hardest join-ordering case
     in the dashboard's geography chain (corpus ``revenue_by_region``).
@@ -158,7 +155,6 @@ def q_q5_local_supplier_volume(spark, sf_dir):
     ``orderkey``; the cyclic nation-equality is enforced as a residual
     equi-condition on the supplier join.
     """
-    t = load_tables(spark, sf_dir)
     asia_nations = (
         t["nation"]
         .join(
@@ -226,7 +222,7 @@ def q_q5_local_supplier_volume(spark, sf_dir):
     ORDER BY cust_nation, supp_nation, ship_year
     """,
 )
-def q_q7_nation_trade_volume(spark, sf_dir):
+def q_q7_nation_trade_volume(spark, t):
     """TPC-H Q7 shape: cross-border trade volume between nation pairs
     per ship year — the cross-entity flavor of the dashboard's monthly
     revenue-by-state mart (app.py:345-347).
@@ -237,7 +233,6 @@ def q_q7_nation_trade_volume(spark, sf_dir):
     below either; one shuffle for orders x lineitem, one for the
     final group-by.
     """
-    t = load_tables(spark, sf_dir)
     trade_nations = ["NATION_1", "NATION_2", "NATION_3", "NATION_4", "NATION_5"]
     nations = t["nation"].filter(F.col("n_name").isin(*trade_nations))
     cust = (
@@ -297,7 +292,7 @@ def q_q7_nation_trade_volume(spark, sf_dir):
     ORDER BY order_year
     """,
 )
-def q_q8_market_share(spark, sf_dir):
+def q_q8_market_share(spark, t):
     """TPC-H Q8 shape: one nation's share of a region's import volume
     per year — a conditional-aggregate ratio (G11 ``sum(when)`` over
     the J3 geography chain), the engine form of the dashboard's
@@ -308,7 +303,6 @@ def q_q8_market_share(spark, sf_dir):
     the aggregate, so both numerator and denominator come out of one
     pass (no self-join).
     """
-    t = load_tables(spark, sf_dir)
     europe_cust = (
         t["customer"]
         .join(
@@ -367,7 +361,7 @@ def q_q8_market_share(spark, sf_dir):
       )
     """,
 )
-def q_q17_small_quantity_revenue(spark, sf_dir):
+def q_q17_small_quantity_revenue(spark, t):
     """TPC-H Q17 shape: correlated scalar subquery (per-part average
     quantity threshold), decorrelated Spark-side into a partial
     aggregate + broadcast join.
@@ -380,7 +374,6 @@ def q_q17_small_quantity_revenue(spark, sf_dir):
     pre-aggregated map-side (partial avg) before its shuffle, which is
     exactly what Catalyst plans for the groupBy.
     """
-    t = load_tables(spark, sf_dir)
     brand_parts = (
         t["part"].filter(F.col("p_brand") == "Brand#4").select("p_partkey")
     )
@@ -417,7 +410,7 @@ def q_q17_small_quantity_revenue(spark, sf_dir):
     GROUP BY c.c_mktsegment
     """,
 )
-def q_q22_prospective_customers(spark, sf_dir):
+def q_q22_prospective_customers(spark, t):
     """TPC-H Q22 shape: global scalar-subquery threshold (average
     positive balance) combined with NOT EXISTS (lapsed customers —
     no order since 2000), grouped per market segment.
@@ -428,7 +421,6 @@ def q_q22_prospective_customers(spark, sf_dir):
     The NOT EXISTS maps to ``left_anti`` against the bare ``o_custkey``
     column (column-pruned scan of orders, shuffle on the key only).
     """
-    t = load_tables(spark, sf_dir)
     avg_bal = (
         t["customer"]
         .filter(F.col("c_acctbal") > 0)
@@ -468,7 +460,7 @@ def q_q22_prospective_customers(spark, sf_dir):
            AND l.l_quantity BETWEEN 20 AND 50)
     """,
 )
-def q_q19_disjunctive_predicates(spark, sf_dir):
+def q_q19_disjunctive_predicates(spark, t):
     """TPC-H Q19 shape: OR-of-ANDs predicate spanning both join sides.
 
     The part side of each disjunct (brand + size band) is pushed into
@@ -478,7 +470,6 @@ def q_q19_disjunctive_predicates(spark, sf_dir):
     (PushedFilters on the part scan), which is the scan-reduction that
     matters at 100 TB — the disjunction itself is cheap codegen.
     """
-    t = load_tables(spark, sf_dir)
     part = t["part"].select("p_partkey", "p_brand", "p_size")
     li = t["lineitem"].select(
         "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
@@ -535,14 +526,13 @@ def q_q19_disjunctive_predicates(spark, sf_dir):
       AND l_quantity < 24
     """,
 )
-def q_q6_forecast_revenue(spark, sf_dir):
+def q_q6_forecast_revenue(spark, t):
     """TPC-H Q6 shape: pure scan-filter-aggregate, zero joins — the
     predicate-pushdown benchmark.  All three filters push into the
     parquet scan (PushedFilters on l_shipdate/l_discount/l_quantity);
     the aggregate is a single partial+final pass with no shuffle of
     row data (only 1-row partials).
     """
-    t = load_tables(spark, sf_dir)
     return (
         t["lineitem"]
         .filter(
@@ -576,14 +566,13 @@ def q_q6_forecast_revenue(spark, sf_dir):
     LIMIT 20
     """,
 )
-def q_q10_returned_items(spark, sf_dir):
+def q_q10_returned_items(spark, t):
     """TPC-H Q10 shape: lost-revenue ranking of customers who returned
     goods in a half-year window.  Customer (with its nation name pre-
     attached, both broadcast) enriches the order side before the one
     fact-fact shuffle; the returnflag filter pushes into the lineitem
     scan; top-20 is TakeOrderedAndProject.
     """
-    t = load_tables(spark, sf_dir)
     cust = (
         t["customer"]
         .join(
@@ -640,7 +629,7 @@ def q_q10_returned_items(spark, sf_dir):
     ORDER BY custdist DESC, c_count DESC
     """,
 )
-def q_q13_order_count_distribution(spark, sf_dir):
+def q_q13_order_count_distribution(spark, t):
     """TPC-H Q13 shape: customer order-count histogram through an
     outer join with a join-side residual predicate (priority filter
     must live in the ON clause, not WHERE — moving it would drop the
@@ -649,7 +638,6 @@ def q_q13_order_count_distribution(spark, sf_dir):
     Double aggregation: the first groups on the join key (reuses the
     join shuffle under AQE), the second is a tiny histogram shuffle.
     """
-    t = load_tables(spark, sf_dir)
     orders = t["orders"].filter(F.col("o_orderpriority") != "4-NOT SPECIFIED")
     per_cust = (
         t["customer"]
@@ -680,14 +668,13 @@ def q_q13_order_count_distribution(spark, sf_dir):
       AND l.l_shipdate < TIMESTAMP '1997-10-01'
     """,
 )
-def q_q14_promo_revenue_share(spark, sf_dir):
+def q_q14_promo_revenue_share(spark, t):
     """TPC-H Q14 shape: promotion revenue share in one month — a
     conditional-aggregate ratio over a broadcast part join.  Numerator
     and denominator come out of a single aggregation pass; the month
     filter pushes into the lineitem scan so the join probes ~1/80 of
     the fact table.
     """
-    t = load_tables(spark, sf_dir)
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         t["lineitem"]
@@ -728,7 +715,7 @@ def q_q14_promo_revenue_share(spark, sf_dir):
     ORDER BY s.s_suppkey
     """,
 )
-def q_q15_top_supplier(spark, sf_dir):
+def q_q15_top_supplier(spark, t):
     """TPC-H Q15 shape: top supplier by quarterly revenue via a scalar
     subquery over an aggregated view (ties kept, unlike a bare top-1).
 
@@ -737,7 +724,6 @@ def q_q15_top_supplier(spark, sf_dir):
     single DAG.  Revenue is rounded BEFORE the max/equality so the
     tie comparison is on stable 2-decimal values in both engines.
     """
-    t = load_tables(spark, sf_dir)
     revenue = (
         t["lineitem"]
         .filter(
@@ -777,14 +763,13 @@ def q_q15_top_supplier(spark, sf_dir):
     ORDER BY supplier_cnt DESC, p.p_brand, p.p_size
     """,
 )
-def q_q16_supplier_part_counts(spark, sf_dir):
+def q_q16_supplier_part_counts(spark, t):
     """TPC-H Q16 shape: how many distinct suppliers ship each
     brand/size combination (lineitem's (partkey, suppkey) pairs stand
     in for partsupp).  The part filters — two exclusions and a size
     IN-list — all push into the broadcast build side; COUNT(DISTINCT)
     expands to the standard two-phase distinct aggregate.
     """
-    t = load_tables(spark, sf_dir)
     part = t["part"].filter(
         (F.col("p_type") != "PROMO")
         & (F.col("p_brand") != "Brand#1")
@@ -827,7 +812,7 @@ def q_q16_supplier_part_counts(spark, sf_dir):
     ORDER BY p.p_partkey, s.s_name
     """,
 )
-def q_q2_min_cost_supplier(spark, sf_dir):
+def q_q2_min_cost_supplier(spark, t):
     """TPC-H Q2 shape: cheapest supplier per part (correlated-min
     subquery), decorrelated into a per-part min window over the
     observed (part, supplier) unit prices — lineitem stands in for
@@ -838,7 +823,6 @@ def q_q2_min_cost_supplier(spark, sf_dir):
     Unit costs are rounded to 2 decimals before the min/equality so
     the tie comparison is engine-stable.
     """
-    t = load_tables(spark, sf_dir)
     part = t["part"].filter(
         F.col("p_size").between(10, 20) & (F.col("p_type") == "STANDARD")
     )
@@ -891,7 +875,7 @@ def q_q2_min_cost_supplier(spark, sf_dir):
     ORDER BY nation, o_year DESC
     """,
 )
-def q_q9_product_type_profit(spark, sf_dir):
+def q_q9_product_type_profit(spark, t):
     """TPC-H Q9 shape: profit by supplier nation and order year for
     parts matching a name pattern.  Supply cost is proxied as 10% of
     the part's retail price (the slim schema has no partsupp.supplycost).
@@ -900,7 +884,6 @@ def q_q9_product_type_profit(spark, sf_dir):
     fact-fact shuffle is lineitem x orders on orderkey; the final
     (nation, year) group-by is a small second shuffle.
     """
-    t = load_tables(spark, sf_dir)
     part = t["part"].filter(F.col("p_name").like("%red%")).select(
         "p_partkey", "p_retailprice"
     )
@@ -952,7 +935,7 @@ def q_q9_product_type_profit(spark, sf_dir):
     ORDER BY value_cents DESC, l_partkey
     """,
 )
-def q_q11_important_parts(spark, sf_dir):
+def q_q11_important_parts(spark, t):
     """TPC-H Q11 shape: parts representing more than 0.1% of the
     tracked nations' shipped value (global scalar-subquery threshold
     over a grouped aggregate).
@@ -963,7 +946,6 @@ def q_q11_important_parts(spark, sf_dir):
     boundary would be float-order-dependent.  The per-part frame is
     tiny; its total is a 1-row broadcast cross-attach.
     """
-    t = load_tables(spark, sf_dir)
     supp = (
         t["supplier"]
         .join(
@@ -1015,7 +997,7 @@ def q_q11_important_parts(spark, sf_dir):
     ORDER BY ship_class
     """,
 )
-def q_q12_priority_shipping(spark, sf_dir):
+def q_q12_priority_shipping(spark, t):
     """TPC-H Q12 shape: late-shipment counts split by order priority
     class (l_linestatus stands in for l_shipmode; ship-vs-order date
     gap stands in for the commit/receipt lateness chain).
@@ -1024,7 +1006,6 @@ def q_q12_priority_shipping(spark, sf_dir):
     lateness predicate rides the join as a residual; both CASE counts
     come from one aggregation pass.
     """
-    t = load_tables(spark, sf_dir)
     li = t["lineitem"].filter(
         (F.col("l_shipdate") >= _ts("1997-01-01"))
         & (F.col("l_shipdate") < _ts("1998-01-01"))
@@ -1063,7 +1044,7 @@ def q_q12_priority_shipping(spark, sf_dir):
     LIMIT 20
     """,
 )
-def q_q18_large_volume_customers(spark, sf_dir):
+def q_q18_large_volume_customers(spark, t):
     """TPC-H Q18 shape: large-volume orders (IN over a grouped HAVING
     subquery) with their customers, top-20 by order value.
 
@@ -1072,7 +1053,6 @@ def q_q18_large_volume_customers(spark, sf_dir):
     detail join that follows, so AQE lines the exchanges up.  Customer
     broadcast; top-20 is TakeOrderedAndProject.
     """
-    t = load_tables(spark, sf_dir)
     big_orders = (
         t["lineitem"]
         .groupBy("l_orderkey")
@@ -1127,7 +1107,7 @@ def q_q18_large_volume_customers(spark, sf_dir):
     ORDER BY s.s_name
     """,
 )
-def q_q20_excess_shipments(spark, sf_dir):
+def q_q20_excess_shipments(spark, t):
     """TPC-H Q20 shape: suppliers who moved an outsized volume of one
     part class in a year (IN over a filtered, grouped HAVING subquery
     — availqty stands are replaced by shipped-quantity thresholds).
@@ -1136,7 +1116,6 @@ def q_q20_excess_shipments(spark, sf_dir):
     the result is a handful of keys applied to supplier as a
     broadcast left-semi join; nation broadcast-enriches the survivors.
     """
-    t = load_tables(spark, sf_dir)
     heavy = (
         t["lineitem"]
         .join(
@@ -1195,7 +1174,7 @@ def q_q20_excess_shipments(spark, sf_dir):
     LIMIT 20
     """,
 )
-def q_q21_waiting_suppliers(spark, sf_dir):
+def q_q21_waiting_suppliers(spark, t):
     """TPC-H Q21 shape: suppliers who single-handedly held up
     finished multi-supplier orders — the EXISTS (another supplier on
     the order) + NOT EXISTS (another LATE supplier on the order)
@@ -1210,7 +1189,6 @@ def q_q21_waiting_suppliers(spark, sf_dir):
     so collect_set state is O(1) per order. 'Late' is shipped >30 days
     after the order date (no receipt/commit dates in the slim schema).
     """
-    t = load_tables(spark, sf_dir)
     li_o = (
         t["lineitem"]
         .select("l_orderkey", "l_suppkey", "l_shipdate")

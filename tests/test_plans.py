@@ -17,10 +17,13 @@ strings come from the optimized physical plan via
 
 from __future__ import annotations
 
+import ast
 import re
+from pathlib import Path
 
 import pytest
 
+from event_driven_data_pipeline_for_e_commerce_spark.plans import corpus
 from event_driven_data_pipeline_for_e_commerce_spark.plans.corpus import ORACLES, QUERIES
 
 from .corpus_pin import ORACLE_SHA256, PLAN_SHA256, oracle_digest, plan_digest
@@ -114,6 +117,31 @@ def test_corpus_plan_pin(corpus_plans):
     and a diff of the dumps names the query that moved."""
     simple = {name: s for name, (s, _) in corpus_plans.items()}
     assert plan_digest(simple) == PLAN_SHA256
+
+
+def test_builders_receive_the_catalog():
+    """Source guard, no Spark: ``@query`` opens the tables, so no plan
+    module but ``corpus.py`` (and ``tables.py``, which defines it)
+    names ``load_tables``, and every builder takes ``(spark, t)``."""
+    builders = 0
+    for path in sorted(Path(corpus.__file__).parent.glob("*.py")):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        if path.name not in ("corpus.py", "tables.py"):
+            names = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+            names |= {n.attr for n in ast.walk(tree) if isinstance(n, ast.Attribute)}
+            names |= {n.name for n in ast.walk(tree) if isinstance(n, ast.alias)}
+            assert "load_tables" not in names, path.name
+        for fn in ast.walk(tree):
+            if isinstance(fn, ast.FunctionDef) and any(
+                isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query"
+                for d in fn.decorator_list
+            ):
+                builders += 1
+                a = fn.args
+                sig = [x.arg for x in a.posonlyargs + a.args]
+                extra = a.vararg or a.kwarg or a.kwonlyargs or a.defaults
+                assert sig == ["spark", "t"] and not extra, f"{path.name}:{fn.name}"
+    assert builders == len(QUERIES)
 
 
 def test_no_python_eval_in_public_corpus(corpus_plans):

@@ -401,11 +401,12 @@ def test_metric_layer_matches_handwritten_monthly_revenue(spark, sf_dir):
     """The compiled (month, revenue) request must equal the
     handwritten monthly_revenue corpus query row-for-row."""
     from event_driven_data_pipeline_for_e_commerce_spark.metrics import compile_metrics
+    from event_driven_data_pipeline_for_e_commerce_spark.plans.tables import load_tables
 
     compiled = {
         (r.month, r.revenue)
         for r in compile_metrics(
-            spark, sf_dir, ["revenue"], ["month"]
+            load_tables(spark, sf_dir), ["revenue"], ["month"]
         ).collect()
     }
     hand = {
@@ -419,9 +420,10 @@ def test_metric_layer_single_aggregation_pass(spark, sf_dir):
     HashAggregate nodes = partial + final; distinct adds its expand
     pass but never a second scan) with every dimension hop broadcast."""
     from event_driven_data_pipeline_for_e_commerce_spark.metrics import compile_metrics
+    from event_driven_data_pipeline_for_e_commerce_spark.plans.tables import load_tables
 
     df = compile_metrics(
-        spark, sf_dir, ["revenue", "order_cnt", "avg_order_value"],
+        load_tables(spark, sf_dir), ["revenue", "order_cnt", "avg_order_value"],
         ["quarter", "segment"],
     )
     plan = df._jdf.queryExecution().simpleString()
@@ -431,13 +433,15 @@ def test_metric_layer_single_aggregation_pass(spark, sf_dir):
 
 def test_metric_layer_unknown_names_raise(spark, sf_dir):
     from event_driven_data_pipeline_for_e_commerce_spark.metrics import compile_metrics
+    from event_driven_data_pipeline_for_e_commerce_spark.plans.tables import load_tables
 
     import pytest as _pytest
 
+    t = load_tables(spark, sf_dir)
     with _pytest.raises(KeyError):
-        compile_metrics(spark, sf_dir, ["nope"], ["month"])
+        compile_metrics(t, ["nope"], ["month"])
     with _pytest.raises(KeyError):
-        compile_metrics(spark, sf_dir, ["revenue"], ["nope"])
+        compile_metrics(t, ["revenue"], ["nope"])
 
 
 def test_inverted_index_matches_inline_search(spark, sf_dir, tmp_path):

@@ -1,7 +1,8 @@
 """Session-semantics armor: every public entry point must behave
 identically on a DRIVER-PROVIDED session with hostile settings (ANSI
 mode on, non-UTC timezone) — ``apply_session_semantics`` (called from
-``load_tables``) resets them."""
+``load_tables``, which ``@query`` runs for every registered query)
+resets them."""
 
 from __future__ import annotations
 
@@ -23,10 +24,19 @@ def hostile(spark):
         spark.conf.set(k, v)
 
 
-def test_hostile_session_is_reset_by_entry_points(hostile, sf_dir):
-    # tolerant_extract_cast casts junk strings -> NULL; under ANSI that
-    # raises, so a correct non-empty result proves the reset happened
-    rows = QUERIES["tolerant_extract_cast"](hostile, sf_dir).collect()
+@pytest.mark.parametrize(
+    "name",
+    [
+        # casts junk strings -> NULL; under ANSI that raises, so a
+        # correct non-empty result proves the reset happened
+        "tolerant_extract_cast",
+        # reads no table: the reset must not depend on the builder
+        # opening one
+        "doc_minhash_band_planner",
+    ],
+)
+def test_hostile_session_is_reset_by_entry_points(hostile, sf_dir, name):
+    rows = QUERIES[name](hostile, sf_dir).collect()
     assert len(rows) > 0
     assert hostile.conf.get("spark.sql.ansi.enabled") == "false"
     assert hostile.conf.get("spark.sql.session.timeZone") == "UTC"
