@@ -29,13 +29,26 @@ from collections.abc import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from event_driven_data_pipeline_for_e_commerce_spark.operators.pinning import (  # noqa: F401
-    pin as _pin,
-    release_pinned,
-)
+from event_driven_data_pipeline_for_e_commerce_spark.operators.pinning import pin
 from event_driven_data_pipeline_for_e_commerce_spark.operators.surrogate_keys import (
     partition_bases,
 )
+
+
+def _range_pinned(
+    df: DataFrame, order_exprs: Sequence[Column], partitions: int | None
+) -> DataFrame:
+    """Range-partition ``df`` by ``order_exprs``, tag each row with its
+    ``__pid`` and pin it. The pin is critical: ``repartitionByRange``
+    re-samples its boundaries per evaluation, so without it the
+    partials job and the window job could disagree on which partition
+    a row lives in and every base would be wrong."""
+    n = partitions or df.sparkSession.sparkContext.defaultParallelism
+    return pin(
+        df.repartitionByRange(n, *order_exprs)
+        .withColumn("__pid", F.spark_partition_id()),
+        critical=True,
+    )
 
 
 def _ranged_with_bases(
@@ -43,18 +56,14 @@ def _ranged_with_bases(
     order_exprs: Sequence[Column],
     partial_expr: Column,
     partitions: int | None,
+    offset: int = 0,
 ) -> DataFrame:
     """Range-partition and pin ``df`` by ``order_exprs``, then attach
-    each partition's ``__base``, the prefix sum of ``partial_expr``
-    over the partitions before it (``surrogate_keys.partition_bases``).
-    Returns the pinned frame with ``__pid`` and ``__base`` attached."""
-    n = partitions or df.sparkSession.sparkContext.defaultParallelism
-    part = _pin(
-        df.repartitionByRange(n, *order_exprs)
-        .withColumn("__pid", F.spark_partition_id()),
-        critical=True,
-    )
-    return partition_bases(part, partial_expr)
+    each partition's ``__base``: ``offset`` plus the prefix sum of
+    ``partial_expr`` over the partitions before it
+    (``surrogate_keys.partition_bases``). Returns the pinned frame with
+    ``__pid`` and ``__base`` attached."""
+    return partition_bases(_range_pinned(df, order_exprs, partitions), partial_expr, offset)
 
 
 def running_sum_ranged(
@@ -87,13 +96,15 @@ def row_number_ranged(
     order_exprs: Sequence[Column],
     out_col: str,
     partitions: int | None = None,
+    offset: int = 0,
 ) -> DataFrame:
-    """``ROW_NUMBER() OVER (ORDER BY order_exprs)`` with the global
-    sort spread across all executors — the multi-column generalization
-    of ``surrogate_keys.with_surrogate_key_ranged``. The ordering
-    should be total for deterministic ranks."""
+    """``ROW_NUMBER() OVER (ORDER BY order_exprs) + offset`` with the
+    global sort spread across all executors — the multi-column
+    generalization of ``surrogate_keys.with_surrogate_key_ranged``,
+    which calls it with one order column. The ordering should be total
+    for deterministic ranks."""
     based = _ranged_with_bases(
-        df, order_exprs, F.count(F.lit(1)), partitions
+        df, order_exprs, F.count(F.lit(1)), partitions, offset
     )
     w = Window.partitionBy("__pid").orderBy(*order_exprs)
     return based.withColumn(
@@ -124,12 +135,7 @@ def running_max_ranged(
     frame that excludes the current row is order-dependent under
     ties, so a non-total ordering makes the result depend on the
     physical tie order (ADVICE r7)."""
-    n = partitions or df.sparkSession.sparkContext.defaultParallelism
-    part = _pin(
-        df.repartitionByRange(n, *order_exprs)
-        .withColumn("__pid", F.spark_partition_id()),
-        critical=True,
-    )
+    part = _range_pinned(df, order_exprs, partitions)
     partials = {
         r["__pid"]: r["v"]
         for r in part.groupBy("__pid")

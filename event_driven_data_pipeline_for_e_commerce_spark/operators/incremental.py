@@ -124,23 +124,20 @@ def ingest_increment(
     source: DataFrame,
     mart_dir: str,
     ts_col: str,
-    writer=None,
-) -> int:
+) -> tuple[int, DataFrame]:
     """Append-only incremental ingest: take only source rows strictly
     newer than the mart's high-water mark and append them. Returns the
-    number of rows ingested. Idempotent under re-runs on unchanged
-    sources (the second run ingests 0); the strictly-greater filter
-    assumes event times are monotone-complete below the HWM — the
-    standard append-only log contract. ``writer``, when provided, is
-    called as ``writer(fresh)`` in place of the default parquet
-    append (alternate sinks, tests)."""
+    number of rows ingested and the fresh rows themselves, so a caller
+    that folds them further (the CDC sink) reuses the same filtered
+    frame — pin ``source`` first if it is read more than once.
+    Idempotent under re-runs on unchanged sources (the second run
+    ingests 0); the strictly-greater filter assumes event times are
+    monotone-complete below the HWM — the standard append-only log
+    contract."""
     spark = source.sparkSession
     hwm = high_water_mark(mart_dir, spark, ts_col)
     fresh = source if hwm is None else source.filter(F.col(ts_col) > hwm)
     n = fresh.count()
     if n:
-        if writer is not None:
-            writer(fresh)
-        else:
-            fresh.write.mode("append").parquet(mart_dir)
-    return n
+        fresh.write.mode("append").parquet(mart_dir)
+    return n, fresh

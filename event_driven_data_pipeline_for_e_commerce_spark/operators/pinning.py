@@ -35,9 +35,15 @@ Pins come in two kinds (ADVICE r5):
 
 ``release_pinned`` drops everything tracked (both kinds) — the
 between-batches hook for harnesses that want a clean cache.
+``pin_scope`` is the scoped form for a step that materializes its own
+result (a sink's fold-and-write, a Silver table's write): on exit it
+unpins the frames pinned inside the block and nothing else.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
@@ -90,3 +96,18 @@ def release_pinned(blocking: bool = False) -> int:
     while _PINNED_CRITICAL:
         _PINNED_CRITICAL.pop().unpersist(blocking)
     return n
+
+
+@contextmanager
+def pin_scope() -> Iterator[None]:
+    """Unpin, on exit, every frame pinned inside the block (both
+    kinds); frames pinned before it stay tracked. Wrap a step whose
+    result is written out inside the block — nothing read after the
+    block may depend on the released caches."""
+    outer = [*_PINNED, *_PINNED_CRITICAL]
+    try:
+        yield
+    finally:
+        kept = {id(df) for df in outer}
+        for df in [df for df in (*_PINNED, *_PINNED_CRITICAL) if id(df) not in kept]:
+            unpin(df)

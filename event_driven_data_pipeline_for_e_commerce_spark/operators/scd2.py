@@ -37,7 +37,7 @@ from pyspark.sql import Column, DataFrame
 
 from ..functions.strings import row_hash
 from .pinning import pin
-from .surrogate_keys import with_surrogate_key_ranged
+from .surrogate_keys import max_key, with_surrogate_key_ranged
 
 OPEN_END_TS = "9999-12-31 23:59:59"
 
@@ -123,12 +123,10 @@ def scd2_merge(
         F.col("__s_hash").alias("row_hash"),
     )
 
-    max_sk_row = target.agg(F.max(sk_col).alias("m")).collect()[0]
-    max_sk = int(max_sk_row["m"]) if max_sk_row["m"] is not None else 0
-    # dense continuation from max_sk, range-partitioned — no global
+    # dense continuation from max(sk), range-partitioned — no global
     # window even when the staging batch itself is huge
     inserts = (
-        with_surrogate_key_ranged(inserts_src, key, sk_col, offset=max_sk)
+        with_surrogate_key_ranged(inserts_src, key, sk_col, offset=max_key(target, sk_col))
         .withColumn("valid_from", load_ts.cast("timestamp"))
         .withColumn("valid_to", F.lit(OPEN_END_TS).cast("timestamp"))
         .withColumn("is_current", F.lit(True))

@@ -92,23 +92,11 @@ def with_surrogate_key_ranged(
     ``with_surrogate_key_dense`` for unique keys, with sort and rank
     shuffle-parallel across all executors — the form SCD2 init/insert
     batches route through (``Scd_Type2.sql:33-34`` parity at any
-    scale)."""
-    n = partitions or df.sparkSession.sparkContext.defaultParallelism
-    # persist pins the sampled range boundaries: repartitionByRange
-    # re-samples per evaluation, so without it the counts job and the
-    # key-assignment job could disagree on which partition a key lives
-    # in — the per-partition bases would then be offset wrong
-    part = pin(
-        df.repartitionByRange(n, F.col(order_col))
-        .withColumn("__pid", F.spark_partition_id()),
-        critical=True,
-    )
-    w = Window.partitionBy("__pid").orderBy(order_col)
-    return (
-        partition_bases(part, F.count(F.lit(1)), offset)
-        .withColumn(sk_col, F.row_number().over(w) + F.col("__base"))
-        .drop("__pid", "__base")
-    )
+    scale). It is the one-column case of
+    ``cumulative.row_number_ranged``."""
+    from .cumulative import row_number_ranged
+
+    return row_number_ranged(df, [F.col(order_col)], sk_col, partitions, offset)
 
 
 def max_key(df: DataFrame, sk_col: str, default: int = 0) -> int:

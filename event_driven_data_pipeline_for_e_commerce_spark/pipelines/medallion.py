@@ -39,6 +39,7 @@ from ..functions.datetimes import date_sk
 from ..operators.cleansing import REFERENCE_POLICIES, CleansePolicy, cleanse
 from ..operators.dedup import dedup_keyed_ordered
 from ..operators.joins import enrich
+from ..operators.pinning import pin_scope
 from ..operators.surrogate_keys import with_surrogate_key_scalable
 from ..sources.io import read_csv_dir, write_table
 
@@ -71,21 +72,27 @@ def silver_build(
     poisoning the others (caller decides whether to continue).
     """
     policies = policies or REFERENCE_POLICIES
-    names = [r["source_table"] for r in bronze.select("source_table").distinct().collect()]
+    cols = [c for c in bronze.columns if c != "source_table"]
+    # bronze unions headers across files: one pass counts every
+    # column's non-NULLs per source, so each source keeps only its own
+    # columns (the entirely-NULL ones belong to sibling tables)
+    non_null_counts = bronze.groupBy("source_table").agg(
+        *[F.count(c).alias(c) for c in cols]
+    ).collect()
     out: dict[str, DataFrame] = {}
-    for name in sorted(names):
-        src = bronze.filter(F.col("source_table") == name).drop("source_table")
-        # bronze unions headers across files: drop the columns that are
-        # entirely NULL for this source (they belong to sibling tables)
-        non_null_counts = src.agg(
-            *[F.count(c).alias(c) for c in src.columns]
-        ).collect()[0]
-        src = src.select(*[c for c in src.columns if non_null_counts[c] > 0])
+    for counts in sorted(non_null_counts, key=lambda r: r["source_table"]):
+        name = counts["source_table"]
+        src = bronze.filter(F.col("source_table") == name).select(
+            *[c for c in cols if counts[c] > 0]
+        )
         policy = policies.get(name, policies.get("default") or CleansePolicy())
         cleaned = cleanse(src, policy)
         sk_col = f"{name.removeprefix('raw_').removesuffix('s')}_sk"
-        cleaned = with_surrogate_key_scalable(cleaned, sk_col)
-        write_table(cleaned, os.path.join(out_dir, name))
+        with pin_scope():
+            write_table(
+                with_surrogate_key_scalable(cleaned, sk_col),
+                os.path.join(out_dir, name),
+            )
         out[name] = spark.read.parquet(os.path.join(out_dir, name))
     return out
 

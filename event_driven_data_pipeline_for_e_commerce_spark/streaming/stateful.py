@@ -17,9 +17,12 @@ Scale design:
 - state is keyed by ``user_id`` → partitioned across executors by the
   one groupBy shuffle; each micro-batch touches only keys present in
   the batch.
-- state size is O(live users) × 16 bytes — bounded further by a
-  processing-time timeout that evicts idle users (``hasTimedOut``
-  branch), the same discipline as a watermark on windowed state.
+- state size is O(live users) × 16 bytes — bounded further by an
+  event-time timeout that evicts idle users (``hasTimedOut`` branch),
+  the same discipline as a watermark on windowed state. Event time,
+  not processing time, is what lets a ``Trigger.AvailableNow`` replay
+  finish: once the last batch's watermark has fired the due timeouts,
+  no further batch is scheduled.
 - rows cross into Python as Arrow batches (``applyInPandasWithState``),
   not row-at-a-time; the per-row loop below runs over an in-memory
   pandas chunk. This is the sanctioned slow path: custom state
@@ -72,8 +75,11 @@ def purchase_attribution_stream(
 
     Emits one row per purchase with the view/click counts accumulated
     for that user since their previous purchase. Counters survive
-    across micro-batches in GroupState; idle users are evicted after
-    ``idle_timeout`` processing time.
+    across micro-batches in GroupState; a user is evicted once the
+    event-time watermark passes their last event by
+    ``idle_timeout_ms``. The watermark trails the latest event time by
+    the same ``idle_timeout_ms``, so events later than that are dropped
+    as late.
     """
 
     def fn(
@@ -93,6 +99,9 @@ def purchase_attribution_stream(
         # boundary out of order (ties broken by event_id)
         chunks = list(pdfs)
         batch = pd.concat(chunks) if len(chunks) > 1 else chunks[0] if chunks else None
+        # idle is measured from the user's last event; the watermark
+        # floor keeps the timeout valid when a batch holds only old rows
+        last_ms = state.getCurrentWatermarkMs()
         if batch is not None:
             for r in batch.sort_values(["ts", "event_id"]).itertuples():
                 if r.event_type == "view":
@@ -102,17 +111,23 @@ def purchase_attribution_stream(
                 elif r.event_type == "purchase":
                     rows.append((key[0], r.ts, r.value, views, clicks))
                     views, clicks = 0, 0
+            last_ms = max(last_ms, int(batch["ts_ms"].max()))
         state.update((views, clicks))
-        state.setTimeoutDuration(idle_timeout_ms)
+        state.setTimeoutTimestamp(last_ms + idle_timeout_ms)
         if rows:
             yield pd.DataFrame(rows, columns=_OUT_COLS)
 
-    return events.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=ATTRIBUTION_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    return (
+        events.withWatermark("ts", f"{idle_timeout_ms} milliseconds")
+        .withColumn("ts_ms", F.unix_millis("ts"))
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            fn,
+            outputStructType=ATTRIBUTION_SCHEMA,
+            stateStructType=STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        )
     )
 
 

@@ -14,11 +14,18 @@ state closes ``gap`` after the last event.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.types import StructType
+
+from ..operators.incremental import ingest_increment, merge_rollup, rollup_batch
+from ..operators.pinning import pin, pin_scope
+from ..operators.scd2 import scd2_init, scd2_merge, scd2_write
+from ..operators.sketches import cms_merge, cms_sketch
+from ..operators.snapshots import list_versions, read_snapshot, write_snapshot
 
 
 def read_event_stream(
@@ -205,6 +212,61 @@ def cart_abandonment_rollup(sessions: DataFrame) -> DataFrame:
     )
 
 
+def _prior(spark: SparkSession, path: str) -> DataFrame | None:
+    """The table a sink folds into, or ``None`` before its first write."""
+    return spark.read.parquet(path) if os.path.exists(path) else None
+
+
+def _swap_sink(
+    target_path: str,
+    fold: Callable[[DataFrame | None, DataFrame], DataFrame],
+) -> Callable[[DataFrame, int], None]:
+    """The one fold-and-swap path of the Parquet-state sinks: skip an
+    empty micro-batch, read the prior table (``None`` on first sight)
+    and write ``fold(prior, batch)`` with the ``scd2_write`` atomic
+    snapshot swap, so readers never see a half-folded table. The fold
+    stays lazy: ``scd2_write`` materializes it into a temp dir
+    (reading the old snapshot) before the swap, and the frames it
+    pinned are released once it is written. Exactly-once against
+    replays comes from the checkpointed source offsets."""
+
+    def apply(batch: DataFrame, batch_id: int) -> None:
+        if batch.isEmpty():
+            return
+        prior = _prior(batch.sparkSession, target_path)
+        with pin_scope():
+            scd2_write(fold(prior, batch), target_path)
+
+    return apply
+
+
+def _scd2_step(
+    prior: DataFrame | None,
+    increment: DataFrame,
+    key: str,
+    tracked_cols: list[str],
+    ts_col: str,
+    sk_col: str,
+) -> DataFrame:
+    """The SCD2 fold both SCD2 sinks share. The increment collapses to
+    its latest row per business key (a micro-batch may carry several
+    updates of one key; SCD2 stages the final state per batch, like
+    the reference's per-load staging table); ``load_ts`` is its max
+    event time, so a replayed batch is hash-idempotent; then
+    ``scd2_init`` on first sight, ``scd2_merge`` into ``prior``
+    otherwise."""
+    w = Window.partitionBy(key).orderBy(F.desc(ts_col))
+    latest = (
+        increment.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .select(key, *tracked_cols)
+    )
+    load_ts = F.lit(str(increment.agg(F.max(ts_col)).collect()[0][0]))
+    if prior is None:
+        return scd2_init(latest, key, tracked_cols, load_ts, sk_col=sk_col)
+    return scd2_merge(prior, latest, key, tracked_cols, load_ts, sk_col=sk_col)
+
+
 def scd2_foreach_batch(
     target_path: str,
     key: str,
@@ -213,34 +275,14 @@ def scd2_foreach_batch(
 ) -> Callable[[DataFrame, int], None]:
     """ST3/ST4: incremental SCD2 maintenance from a stream —
     ``writeStream.foreachBatch(scd2_foreach_batch(...))``. Each
-    micro-batch merges into the Parquet dimension via the atomic
-    snapshot swap; ``load_ts`` is the batch's max event time, so replays
-    of the same batch are idempotent (hash equality short-circuits)."""
-    from ..operators.scd2 import scd2_init, scd2_merge, scd2_write
-
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        import os
-
-        spark = batch.sparkSession
-        if batch.isEmpty():
-            return
-        load_ts = batch.agg(F.max("ts").alias("m")).collect()[0]["m"]
-        staged = batch
-        if os.path.exists(target_path):
-            target = spark.read.parquet(target_path)
-            # safe to stay lazy: scd2_write materializes into a temp dir
-            # (reading the old snapshot) before the atomic swap
-            merged = scd2_merge(
-                target, staged, key, tracked_cols, F.lit(str(load_ts)), sk_col=sk_col
-            )
-        else:
-            merged = scd2_init(
-                staged.select(key, *tracked_cols).dropDuplicates([key]),
-                key, tracked_cols, F.lit(str(load_ts)), sk_col=sk_col,
-            )
-        scd2_write(merged, target_path)
-
-    return apply
+    micro-batch's latest row per key merges into the Parquet dimension
+    via the atomic snapshot swap; ``load_ts`` is the batch's max event
+    time (``ts``), so replays of the same batch are idempotent (hash
+    equality short-circuits)."""
+    return _swap_sink(
+        target_path,
+        lambda dim, batch: _scd2_step(dim, batch, key, tracked_cols, "ts", sk_col),
+    )
 
 
 def rollup_foreach_batch(
@@ -256,25 +298,12 @@ def rollup_foreach_batch(
     the checkpointed source offsets, the same contract as the SCD2
     foreachBatch. The write is the atomic snapshot swap, so readers
     never see a half-merged mart."""
-    from ..operators.incremental import merge_rollup, rollup_batch
-    from ..operators.scd2 import scd2_write
-
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        import os
-
-        spark = batch.sparkSession
-        if batch.isEmpty():
-            return
-        delta = rollup_batch(batch, keys, measures)
-        mart = (
-            spark.read.parquet(target_path)
-            if os.path.exists(target_path)
-            else None
-        )
-        merged = merge_rollup(mart, delta, keys, measures)
-        scd2_write(merged, target_path)
-
-    return apply
+    return _swap_sink(
+        target_path,
+        lambda mart, batch: merge_rollup(
+            mart, rollup_batch(batch, keys, measures), keys, measures
+        ),
+    )
 
 
 def cms_foreach_batch(
@@ -290,24 +319,9 @@ def cms_foreach_batch(
     against the parquet grid at any time without stopping the stream.
     Exactly-once vs replays comes from the checkpointed source
     offsets; the write is the atomic snapshot swap."""
-    from ..operators.scd2 import scd2_write
-    from ..operators.sketches import cms_merge, cms_sketch
-
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        import os
-
-        spark = batch.sparkSession
-        if batch.isEmpty():
-            return
-        delta = cms_sketch(batch, key_col)
-        prior = (
-            spark.read.parquet(target_path)
-            if os.path.exists(target_path)
-            else None
-        )
-        scd2_write(cms_merge(prior, delta), target_path)
-
-    return apply
+    return _swap_sink(
+        target_path, lambda grid, batch: cms_merge(grid, cms_sketch(batch, key_col))
+    )
 
 
 def peak_rate_stream(
@@ -342,37 +356,25 @@ def first_touch_foreach_batch(
     is exactly how a 100 TB pipeline keeps lifetime-scoped state out
     of stream memory. MIN merges are idempotent per value and
     exactly-once vs replays via checkpointed offsets."""
-    from ..operators.incremental import merge_rollup, rollup_batch
-    from ..operators.scd2 import scd2_write
-
-    keys = ["user_id"]
-    measures = {
-        "first_view_us": ("min", "view_us"),
-        "first_purchase_us": ("min", "purchase_us"),
-    }
+    rollup = rollup_foreach_batch(
+        target_path,
+        ["user_id"],
+        {
+            "first_view_us": ("min", "view_us"),
+            "first_purchase_us": ("min", "purchase_us"),
+        },
+    )
 
     def apply(batch: DataFrame, batch_id: int) -> None:
-        import os
-
-        spark = batch.sparkSession
-        if batch.isEmpty():
-            return
-        proj = batch.select(
-            "user_id",
-            F.when(
-                F.col("event_type") == "view", F.unix_micros("ts")
-            ).alias("view_us"),
-            F.when(
-                F.col("event_type") == "purchase", F.unix_micros("ts")
-            ).alias("purchase_us"),
+        touch_us = lambda kind: F.when(F.col("event_type") == kind, F.unix_micros("ts"))
+        rollup(
+            batch.select(
+                "user_id",
+                touch_us("view").alias("view_us"),
+                touch_us("purchase").alias("purchase_us"),
+            ),
+            batch_id,
         )
-        delta = rollup_batch(proj, keys, measures)
-        mart = (
-            spark.read.parquet(target_path)
-            if os.path.exists(target_path)
-            else None
-        )
-        scd2_write(merge_rollup(mart, delta, keys, measures), target_path)
 
     return apply
 
@@ -433,92 +435,47 @@ def cdc_dimension_foreach_batch(
     and ``operators.scd2.scd2_merge``), now one CDC-to-dimension
     pipeline under ``foreachBatch``:
 
-    1. **Ingest**: the micro-batch is HWM-filtered against the staging
-       mart (rows at-or-below the stored ``max(ts)`` are settled
-       history — re-deliveries drop here) and the fresh rows append to
-       staging. The append and the downstream merge share ONE
-       DataFrame via ``ingest_increment``'s writer override, so the
-       filter runs once.
-    2. **Collapse**: the fresh increment reduces to its latest row per
-       business key (key-partitioned window — CDC batches may carry
-       several updates of one key; SCD2 stages the final state per
-       batch, matching the reference's per-load staging table).
-    3. **Merge**: ``scd2_merge`` (or ``scd2_init`` on first sight)
-       folds the staged slice into the Parquet dimension via the
-       atomic snapshot swap; ``load_ts`` = the increment's max event
-       time, so replays are hash-idempotent even if the HWM filter
-       were bypassed.
+    1. **Ingest**: the micro-batch is pinned once, so every later step
+       reads the cached batch, not the source files.
+       ``ingest_increment`` HWM-filters it against the staging mart
+       (rows at-or-below the stored ``max(ts)`` are settled history —
+       re-deliveries drop here), appends the fresh rows to staging and
+       returns them with their count; a count of 0 ends the batch.
+    2. **Fold**: the SCD2 step shared with ``scd2_foreach_batch``
+       (latest row per key, ``load_ts`` = max event time, so replays
+       are hash-idempotent even if the HWM filter were bypassed,
+       ``scd2_merge`` or ``scd2_init`` on first sight) replaces the
+       Parquet dimension via the atomic snapshot swap; the batch's pins
+       are released once it is written.
 
     Scale shape: HWM is one aggregated scalar; staging append touches
     only fresh rows; the collapse window is key-partitioned; the merge
     is one equi-join on the business key (staging side is batch-sized
     — AQE broadcasts it against a big dimension). Exactly-once comes
     from checkpointed source offsets AND the HWM guard (belt and
-    braces: a replayed batch ingests 0 and the merge never runs)."""
-    from ..operators.incremental import ingest_increment
-    from ..operators.scd2 import scd2_init, scd2_merge, scd2_write
+    braces: a replayed batch ingests 0 and the merge never runs).
+
+    ``versioned=True`` routes the dimension through the snapshot table
+    format (``operators.snapshots``): every micro-batch commit becomes
+    an immutable, time-travelable version — 'what did this dimension
+    look like after batch N / at time T' — at the same cost per write
+    as the plain atomic swap."""
 
     def apply(batch: DataFrame, batch_id: int) -> None:
-        import os
-
-        from pyspark.sql import Window
-
         spark = batch.sparkSession
-        if batch.isEmpty():
-            return
-        captured: list[DataFrame] = []
-
-        def stage(fresh: DataFrame) -> None:
-            fresh.write.mode("append").parquet(staging_dir)
-            captured.append(fresh)
-
-        n = ingest_increment(batch, staging_dir, ts_col, writer=stage)
-        if not n:
-            return
-        fresh = captured[0]
-        w = Window.partitionBy(key).orderBy(F.desc(ts_col))
-        latest = (
-            fresh.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select(key, *tracked_cols, ts_col)
-        )
-        load_ts = latest.agg(F.max(ts_col).alias("m")).collect()[0]["m"]
-        # versioned=True routes the dimension through the snapshot
-        # table format (operators.snapshots): every micro-batch commit
-        # becomes an immutable, time-travelable version — 'what did
-        # this dimension look like after batch N / at time T' with the
-        # same cost per write as the plain atomic swap
-        if versioned:
-            from ..operators.snapshots import (
-                list_versions,
-                read_snapshot,
-                write_snapshot,
-            )
-
-            target = (
-                read_snapshot(spark, dim_dir)
-                if os.path.exists(dim_dir) and list_versions(dim_dir)
-                else None
-            )
-        else:
-            target = (
-                spark.read.parquet(dim_dir)
-                if os.path.exists(dim_dir)
-                else None
-            )
-        if target is not None:
-            merged = scd2_merge(
-                target, latest, key, tracked_cols,
-                F.lit(str(load_ts)), sk_col=sk_col,
-            )
-        else:
-            merged = scd2_init(
-                latest.select(key, *tracked_cols),
-                key, tracked_cols, F.lit(str(load_ts)), sk_col=sk_col,
-            )
-        if versioned:
-            write_snapshot(merged, dim_dir)
-        else:
-            scd2_write(merged, dim_dir)
+        with pin_scope():
+            n, fresh = ingest_increment(pin(batch), staging_dir, ts_col)
+            if not n:
+                return
+            if versioned:
+                dim = (
+                    read_snapshot(spark, dim_dir)
+                    if os.path.exists(dim_dir) and list_versions(dim_dir)
+                    else None
+                )
+            else:
+                dim = _prior(spark, dim_dir)
+            merged = _scd2_step(dim, fresh, key, tracked_cols, ts_col, sk_col)
+            (write_snapshot if versioned else scd2_write)(merged, dim_dir)
 
     return apply

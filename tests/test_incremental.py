@@ -114,32 +114,15 @@ def test_high_water_mark_ingest_idempotent(spark, sf_dir, tmp_path):
     ).collect()[0][0]
     mart = str(tmp_path / "events_mart")
 
-    n1 = ingest_increment(events.filter(F.col("ts") <= cutoff), mart, "ts")
-    n2 = ingest_increment(events, mart, "ts")
+    n1, fresh1 = ingest_increment(events.filter(F.col("ts") <= cutoff), mart, "ts")
+    n2, fresh2 = ingest_increment(events, mart, "ts")
     assert n1 + n2 == events.count()
+    # the returned frames are the rows that were appended
+    assert fresh2.filter(F.col("ts") <= cutoff).count() == 0
+    assert fresh1.count() + fresh2.count() == events.count()
     assert spark.read.parquet(mart).count() == events.count()
     # replay: nothing new
-    assert ingest_increment(events, mart, "ts") == 0
+    assert ingest_increment(events, mart, "ts")[0] == 0
     assert high_water_mark(mart, spark, "ts") == events.agg(
         F.max("ts")
     ).collect()[0][0]
-
-
-def test_ingest_increment_writer_override_used(spark, sf_dir, tmp_path):
-    """The `writer` parameter must actually replace the default parquet
-    append (r3 ADVICE: it was accepted but ignored)."""
-    import pyspark.sql.functions as F
-
-    from event_driven_data_pipeline_for_e_commerce_spark.operators.incremental import (
-        ingest_increment,
-    )
-    from event_driven_data_pipeline_for_e_commerce_spark.plans.tables import load_tables
-
-    events = load_tables(spark, sf_dir)["events"].select("event_id", "ts")
-    mart = str(tmp_path / "mart_writer")
-    captured = []
-    n = ingest_increment(events, mart, "ts", writer=lambda df: captured.append(df.count()))
-    assert n > 0 and captured == [n]
-    import os
-
-    assert not os.path.exists(mart)  # default sink must NOT have fired

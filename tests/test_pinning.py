@@ -65,3 +65,18 @@ def test_unpin_releases_one_frame_from_either_registry(spark):
     assert perf.storageLevel.useMemory is True
     assert pinning.unpin(crit) is False  # already released
     assert release_pinned() == 1
+
+
+def test_pin_scope_releases_only_inner_pins(spark):
+    release_pinned()
+    outer = pin(spark.range(3))
+    with pinning.pin_scope():
+        perf = pin(spark.range(4))
+        crit = pin(spark.range(5), critical=True)
+        assert perf.count() == 4 and crit.count() == 5
+    assert len(pinning._PINNED) == 1 and pinning._PINNED[0] is outer
+    assert pinning._PINNED_CRITICAL == []
+    assert perf.storageLevel.useMemory is False
+    assert crit.storageLevel.useMemory is False
+    assert outer.storageLevel.useMemory is True
+    release_pinned()

@@ -169,9 +169,13 @@ def test_foreach_batch_scd2(spark, tmp_path):
     tgt = str(tmp_path / "scd2_dim")
     os.makedirs(src)
 
+    # o3 changes twice inside the first batch: the initial load keeps
+    # only its latest row
     b1 = spark.createDataFrame(
         [(1, "o1", "created", "2024-01-01 00:00:00"),
-         (2, "o2", "created", "2024-01-01 00:00:00")],
+         (2, "o2", "created", "2024-01-01 00:00:00"),
+         (3, "o3", "created", "2024-01-01 00:00:00"),
+         (4, "o3", "shipped", "2024-01-01 06:00:00")],
         "ts_id long, order_id string, status string, ts string",
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     b1.write.mode("overwrite").parquet(src)
@@ -188,11 +192,13 @@ def test_foreach_batch_scd2(spark, tmp_path):
     )
     q.awaitTermination(300)
     dim1 = spark.read.parquet(tgt)
-    assert dim1.count() == 2 and dim1.filter("is_current").count() == 2
+    assert dim1.count() == 3 and dim1.filter("is_current").count() == 3
+    assert [r["status"] for r in dim1.filter("order_id = 'o3'").collect()] == ["shipped"]
 
-    # second batch mutates o1
+    # second batch mutates o1 twice: only its latest state is staged
     spark.createDataFrame(
-        [(3, "o1", "delivered", "2024-02-01 00:00:00")],
+        [(5, "o1", "shipped", "2024-01-15 00:00:00"),
+         (6, "o1", "delivered", "2024-02-01 00:00:00")],
         "ts_id long, order_id string, status string, ts string",
     ).withColumn("ts", F.col("ts").cast("timestamp")).write.mode("append").parquet(src)
     q = (
@@ -206,9 +212,14 @@ def test_foreach_batch_scd2(spark, tmp_path):
     )
     q.awaitTermination(300)
     dim2 = spark.read.parquet(tgt)
-    o1 = {(r["status"], r["is_current"]) for r in dim2.filter("order_id = 'o1'").collect()}
-    assert o1 == {("created", False), ("delivered", True)}
-    assert dim2.filter("is_current").count() == 2
+    o1 = sorted(
+        (r["status"], r["is_current"], r["order_sk"])
+        for r in dim2.filter("order_id = 'o1'").collect()
+    )
+    # one expired version and one current version, the latter keyed
+    # after the first load's three keys
+    assert o1 == [("created", False, 1), ("delivered", True, 4)]
+    assert dim2.filter("is_current").count() == 3
 
 
 def test_stream_stream_range_join_matches_batch(spark, sf_dir, event_source, tmp_path):
@@ -400,6 +411,56 @@ def test_cdc_dimension_pipeline_replay_equals_rebuild(spark, sf_dir, tmp_path):
         for r in spark.read.parquet(dim).collect()
     )
     assert after == before
+
+
+def test_cdc_sink_releases_its_pins(spark, tmp_path):
+    """Every pin a CDC micro-batch takes (the batch itself, the SCD2
+    join, the range-partitioned key assignment) is released once the
+    batch's dimension is written: both pin registries end the stream
+    as they began it."""
+    import time
+
+    from event_driven_data_pipeline_for_e_commerce_spark.operators import pinning
+    from event_driven_data_pipeline_for_e_commerce_spark.streaming.streams import (
+        cdc_dimension_foreach_batch,
+    )
+
+    src = str(tmp_path / "cdc_pin_src")
+    for day, statuses in enumerate((["created"] * 3, ["paid", "created", "created"],
+                                    ["shipped", "paid", "created"], ["delivered", "paid", "paid"]),
+                                   start=1):
+        spark.createDataFrame(
+            [(f"o{i}", s, f"2024-01-0{day} 0{i}:00:00") for i, s in enumerate(statuses)],
+            "order_id string, status string, ts string",
+        ).withColumn("ts", F.col("ts").cast("timestamp")).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+        time.sleep(1.1)  # distinct file mtimes => one file per batch, in order
+    schema = spark.read.parquet(src).schema
+    pinning.release_pinned()  # start empty: the stream's pins must not evict older ones
+    before = (len(pinning._PINNED), len(pinning._PINNED_CRITICAL))
+    q = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+        .writeStream.foreachBatch(
+            cdc_dimension_foreach_batch(
+                str(tmp_path / "staging_pin"), str(tmp_path / "dim_pin"), "order_id", ["status"]
+            )
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt_pin"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        assert q.awaitTermination(300), "CDC stream still active after 300 s"
+    finally:
+        q.stop()
+    assert (len(pinning._PINNED), len(pinning._PINNED_CRITICAL)) == before
+    dim = spark.read.parquet(str(tmp_path / "dim_pin"))
+    assert dim.count() == 8  # 3 first loads + 5 changes
+    current = {r["order_id"]: r["status"] for r in dim.filter("is_current").collect()}
+    assert current == {"o0": "delivered", "o1": "paid", "o2": "paid"}
 
 
 def test_cdc_dimension_versioned_time_travel(spark, sf_dir, tmp_path):
