@@ -27,9 +27,9 @@ sys.path.insert(0, REPO)
 # Headline set: one per operator family (SURVEY.md §2), weighted toward
 # the shuffling/joining queries that dominate cost at scale.
 #
-# Timing note: queries that pin() loop/shared frames (e.g.
-# part_copurchase_pagerank, doc_curriculum_phases, scd2_merge_orders)
-# materialize those pins at CONSTRUCTION time — i.e. before t0 — so
+# Timing note: queries that pin() loop/shared frames and count them
+# while building (e.g. part_copurchase_pagerank) materialize those
+# pins at CONSTRUCTION time — i.e. before t0 — so
 # their timed number measures the post-pin execution (warm reads of
 # the pinned frames). That matches how a production pipeline would run
 # them; release_pinned() at each query boundary keeps one query's pins
@@ -100,7 +100,8 @@ HEADLINE = [
     "emb_pq_rank_displacement",
     # round-10-staged representatives: the pinned 3-step greedy MMR
     # (new retrieval family) and the ranged-cumulative Mann-Whitney
-    # (running_sum_ranged at value grain — the fact-scale consumer of
+    # (running_sum_ranged at value grain, bucketed by the value itself
+    # with an in-plan prefix — the fact-scale consumer of
     # operators/cumulative.py)
     "emb_mmr_diversified_topk",
     "order_value_weekend_mannwhitney",
@@ -187,7 +188,8 @@ def main() -> None:
 
     def run(name: str) -> tuple[float, float]:
         # query boundary: pins from the previous query (FIFO and
-        # non-evictable critical pins alike) must not serve this one
+        # the quarantine readers' critical pins alike) must not serve
+        # this one
         release_pinned()
         # Construction is timed SEPARATELY (VERDICT-r11 task 2a): a
         # few queries force pin materialization at construction time

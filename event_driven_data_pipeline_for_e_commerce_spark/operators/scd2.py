@@ -23,9 +23,10 @@ broadcasts a small staging batch); history rows are passed through
 untouched (no shuffle — union is free). SK assignment (both the
 initial load and insert continuation) routes through
 ``with_surrogate_key_ranged`` — dense-by-key exactly like the
-reference's ``ROW_NUMBER() OVER (ORDER BY key)`` but range-partitioned
-and ranked per partition, so there is NO global single-task window
-anywhere in the batch path.
+reference's ``ROW_NUMBER() OVER (ORDER BY key)`` but bucketed by key
+value and ranked per bucket, so there is NO global single-task window
+anywhere in the batch path. The insert offset is the target's
+``MAX(sk)`` as a scalar subquery, so building a merge runs no job.
 """
 
 from __future__ import annotations
@@ -37,7 +38,7 @@ from pyspark.sql import Column, DataFrame
 
 from ..functions.strings import row_hash
 from .pinning import pin
-from .surrogate_keys import max_key, with_surrogate_key_ranged
+from .surrogate_keys import with_surrogate_key_ranged
 
 OPEN_END_TS = "9999-12-31 23:59:59"
 
@@ -54,7 +55,7 @@ def scd2_init(
 ) -> DataFrame:
     """Initial SCD2 load: every row current, SKs dense by key order.
 
-    SK assignment routes through the range-partitioned form — identical
+    SK assignment routes through the value-bucketed form — identical
     dense-by-key values to ``ROW_NUMBER() OVER (ORDER BY key)``
     (Scd_Type2.sql:33-34) with no global single-task window, so the
     init scales to arbitrarily large dimensions."""
@@ -123,10 +124,12 @@ def scd2_merge(
         F.col("__s_hash").alias("row_hash"),
     )
 
-    # dense continuation from max(sk), range-partitioned — no global
-    # window even when the staging batch itself is huge
+    # dense continuation from max(sk) (sql:34, a scalar subquery in
+    # the same plan), value-bucketed — no global window even when the
+    # staging batch itself is huge
+    offset = F.coalesce(target.agg(F.max(sk_col)).scalar(), F.lit(0))
     inserts = (
-        with_surrogate_key_ranged(inserts_src, key, sk_col, offset=max_key(target, sk_col))
+        with_surrogate_key_ranged(inserts_src, key, sk_col, offset=offset)
         .withColumn("valid_from", load_ts.cast("timestamp"))
         .withColumn("valid_to", F.lit(OPEN_END_TS).cast("timestamp"))
         .withColumn("is_current", F.lit(True))

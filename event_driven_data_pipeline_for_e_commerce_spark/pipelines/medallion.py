@@ -21,9 +21,11 @@ Layer semantics (reference citations):
   FK equi-joins are (SURVEY.md §7.3); ``operators.joins.cross_join``
   keeps the capability as its own tested operator.
 
-Scale notes: dims are broadcast (small by construction), the fact
-surrogate key uses the per-partition-offset variant (no global-window
-funnel), and all writes go through ``sources.io.write_table`` which
+Scale notes: dims are broadcast (small by construction), the Silver
+and fact surrogate keys use the hash-bucketed variant (no global-window
+funnel, no driver collect, no pin: a row's key is a function of the
+frame's content, so building a layer runs no job and leaves nothing
+cached), and all writes go through ``sources.io.write_table`` which
 supports ``partitionBy`` + within-partition clustering.
 """
 

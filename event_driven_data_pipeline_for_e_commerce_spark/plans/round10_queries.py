@@ -482,8 +482,8 @@ def q_order_value_priority_kruskal_wallis(spark, t):
 
     Scale shape: rank sums are computed WITHOUT a global sort of the
     fact — one value-grain rollup carrying per-priority conditional
-    counts, then ``running_sum_ranged`` (range-repartitioned prefix
-    sum, never a single-task window) supplies each distinct value's
+    counts, then ``running_sum_ranged`` (value-bucketed prefix sum,
+    never a single-task window) supplies each distinct value's
     rank offset; 2x rank-sums stay exact in DECIMAL(38,0) (half-rank
     ties doubled away, the mannwhitney lever) and the five R_j^2/n_j
     terms are added in ONE fixed expression order on both engines
@@ -500,7 +500,7 @@ def q_order_value_priority_kruskal_wallis(spark, t):
         ],
         F.count(F.lit(1)).alias("tv"),
     )
-    c = running_sum_ranged(v, [F.asc("cents")], "tv", "cum_incl").select(
+    c = running_sum_ranged(v, [("cents", True)], "tv", "cum_incl").select(
         "*", (F.col("cum_incl") - F.col("tv")).alias("before")
     )
     dec = "decimal(38,0)"

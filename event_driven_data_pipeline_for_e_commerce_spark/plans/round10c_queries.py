@@ -545,7 +545,7 @@ def q_doc_quality_dup_auc(spark, t):
         )
     )
     c = running_sum_ranged(
-        v, [F.asc("quality_score")], "a", "ca_incl"
+        v, [("quality_score", True)], "a", "ca_incl"
     ).select("a", "b", (F.col("ca_incl") - F.col("a")).alias("ca_excl"))
     dec = "decimal(38,0)"
     agg = c.agg(
@@ -686,7 +686,7 @@ def q_repeat_gap_ks_exponential(spark, t):
         F.sum(F.col("t").cast(dec)).alias("s"),
     )
     v = gaps.groupBy("t").agg(F.count(F.lit(1)).alias("c"))
-    cum = running_sum_ranged(v, [F.asc("t")], "c", "cinc")
+    cum = running_sum_ranged(v, [("t", True)], "c", "cinc")
     fexp = 1 - F.exp(
         -F.col("t").cast("double")
         * F.col("n")

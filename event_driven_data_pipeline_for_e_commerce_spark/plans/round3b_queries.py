@@ -1815,10 +1815,9 @@ def q_customer_pareto_abc(spark, t):
     — the concentration mart behind account-tiering decisions.
 
     Scale shape: the fact aggregates to CUSTOMER grain first; the
-    cumulative revenue then comes from ``running_sum_ranged`` — a
-    range-repartition on (cents DESC, custkey), per-partition partial
-    sums prefix-summed driver-side (#partitions scalars), and a
-    PARTITION BY __pid window — so the global cumulative sum is
+    cumulative revenue then comes from ``running_sum_ranged`` — rows
+    bucketed by their cents (DESC), per-bucket partial sums
+    prefix-summed in the plan, and a PARTITION BY __pid window — so the global cumulative sum is
     shuffle-parallel across all executors with NO single-task window,
     safe even at 1e9-customer dimension scale. Classification
     thresholds compare exact integer cents cross-multiplied
@@ -1831,7 +1830,7 @@ def q_customer_pareto_abc(spark, t):
     total = per_cust.agg(F.sum("cents").alias("total_cents"))
     ranked = running_sum_ranged(
         per_cust,
-        [F.desc("cents"), F.asc("o_custkey")],
+        [("cents", False), ("o_custkey", True)],
         "cents",
         "cum_cents",
     ).crossJoin(F.broadcast(total))
@@ -2055,9 +2054,9 @@ def q_part_revenue_gini(spark, t):
     G = 2*sum(i*x_i)/(n*sum(x)) - (n+1)/n over ascending x.
 
     Scale shape: fact aggregates to PART grain first; the global rank
-    comes from ``row_number_ranged`` — range-repartition on
-    (cents, partkey), per-partition counts prefix-summed driver-side,
-    PARTITION BY __pid window — so ranking is shuffle-parallel with NO
+    comes from ``row_number_ranged`` — rows bucketed by their cents,
+    per-bucket counts prefix-summed in the plan, PARTITION BY __pid
+    window — so ranking is shuffle-parallel with NO
     single-task window even at 100M+-part dimension scale. Ranks and
     cents are exact integers; sum(i*cents) stays inside BIGINT
     (rank < 1e8, cents < 1e13 would overflow — parts x mean keeps the
@@ -2069,7 +2068,7 @@ def q_part_revenue_gini(spark, t):
         F.round(F.sum("l_extendedprice") * 100).cast("long").alias("cents")
     )
     ranked = row_number_ranged(
-        per_part, [F.asc("cents"), F.asc("l_partkey")], "i"
+        per_part, [("cents", True), ("l_partkey", True)], "i"
     ).select("cents", "i")
     return ranked.agg(
         F.count(F.lit(1)).alias("n_parts"),

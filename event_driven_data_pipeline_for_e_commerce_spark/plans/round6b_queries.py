@@ -73,13 +73,13 @@ def q_doc_token_budget_curve(spark, t):
     that reach?'.
 
     Scale shape: the global quality ordering runs through
-    ``running_sum_ranged`` (range-repartition + per-partition bases),
+    ``running_sum_ranged`` (value buckets + per-bucket bases),
     NOT a single-task ``SUM OVER (ORDER BY ...)`` window; the budget
     fan-out is a broadcast cross join against a 5-row literal frame
     followed by one tiny-domain aggregation."""
     scored = QUERIES["doc_quality_scores"](spark, t.sf_dir)
-    order_exprs = [F.col("quality_score").desc(), F.col("doc_id").asc()]
-    cum = running_sum_ranged(scored, order_exprs, "n_tokens", "cum_tokens")
+    order = [("quality_score", False), ("doc_id", True)]
+    cum = running_sum_ranged(scored, order, "n_tokens", "cum_tokens")
     budgets = spark.createDataFrame(
         [(b,) for b in _TOKEN_BUDGETS], "budget long"
     )
@@ -189,7 +189,7 @@ def q_supplier_revenue_lorenz(spark, t):
     coefficient ('the top decile books X% of revenue').
 
     Scale shape: the global rank comes from ``row_number_ranged``
-    (range repartition + per-partition count bases — no single-task
+    (value buckets + per-bucket count bases — no single-task
     window); the supplier count is one sanctioned scalar collect; the
     decile aggregate groups on a 10-value domain."""
     rev = (
@@ -204,7 +204,7 @@ def q_supplier_revenue_lorenz(spark, t):
         )
     )
     ranked = row_number_ranged(
-        rev, [F.col("rev_cents").asc(), F.col("l_suppkey").asc()], "rn"
+        rev, [("rev_cents", True), ("l_suppkey", True)], "rn"
     )
     n = ranked.count()  # sanctioned scalar: one number for the decile math
     return (

@@ -368,9 +368,9 @@ def q_doc_curriculum_phases(spark, t):
     from.
 
     Scale shape: the globally-ordered running token sum goes through
-    ``running_sum_ranged`` — range-repartition on (quality desc, id) +
-    per-partition partials + a PARTITION BY __pid window — so the
-    global order costs one range exchange, never a single-task
+    ``running_sum_ranged`` — rows bucketed by quality (desc) +
+    per-bucket partials + a PARTITION BY __pid window — so the
+    global order costs one bucket exchange, never a single-task
     window (the repo-wide unpartitioned-window guard stays clean).
     Quality scores are e4-quantized BEFORE ranking and summing, so
     ordering and the phase averages are exact-integer on both
@@ -388,7 +388,7 @@ def q_doc_curriculum_phases(spark, t):
     )
     c = running_sum_ranged(
         q,
-        [F.col("qs_e4").desc(), F.col("doc_id").asc()],
+        [("qs_e4", False), ("doc_id", True)],
         "n_tokens",
         "cum",
     )

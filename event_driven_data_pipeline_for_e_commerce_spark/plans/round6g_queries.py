@@ -66,7 +66,7 @@ def q_daily_revenue_cusum_drift(spark, t):
     Scale shape: the fact collapses to day grain with map-side
     combine first; the mean is one scalar aggregate broadcast back;
     the globally-ordered cumulative goes through
-    ``running_sum_ranged`` (range exchange + partitioned window —
+    ``running_sum_ranged`` (bucket exchange + partitioned window —
     never a single-task window even though the day series is
     calendar-bounded); the argmax is a heap top-1. All arithmetic is
     exact BIGINT: the mean uses truncating integer division and the
@@ -94,7 +94,7 @@ def q_daily_revenue_cusum_drift(spark, t):
         "mean_e2",
         (F.col("rev_e2") - F.col("mean_e2")).alias("dev_e2"),
     )
-    c = running_sum_ranged(dev, [F.col("d").asc()], "dev_e2", "cusum_e2")
+    c = running_sum_ranged(dev, [("d", True)], "dev_e2", "cusum_e2")
     return (
         c.select(
             "n_days",

@@ -886,7 +886,7 @@ def q_doc_truncation_loss_curve(spark, t):
 
 
 # --------------------------------------------------------------------------
-# Streaming-adjacent: watermark drop sweep (two-pass global running max)
+# Streaming-adjacent: watermark drop sweep (bucketed global running max)
 # --------------------------------------------------------------------------
 
 _WM_DELAYS_MIN = [0, 1, 5, 15, 60]
@@ -931,9 +931,9 @@ def q_events_watermark_drop_sweep(spark, t):
     event_disorder_profile (which measures disorder, not loss).
 
     Scale shape: the global running max runs through
-    operators.cumulative.running_max_ranged — range-repartition by
-    event_id, per-partition max, driver prefix-max over #partitions
-    scalars, partition-local strictly-preceding window — never a
+    operators.cumulative.running_max_ranged — rows bucketed by
+    event_id, per-bucket max, an in-plan prefix max over the buckets,
+    bucket-local strictly-preceding window — never a
     single-task unpartitioned sort. The sweep itself is ONE pass (r11,
     guide §2.3 "aggregate before you shuffle"): instead of the former
     broadcast 5-row config cross join (which re-expanded the event
@@ -952,7 +952,7 @@ def q_events_watermark_drop_sweep(spark, t):
     # no longer depends on an undocumented duplicate-rows invariant.
     wm = running_max_ranged(
         t["events"].select("event_id", "ts"),
-        [F.col("event_id"), F.col("ts")],
+        [("event_id", True), ("ts", True)],
         "ts",
         "prev_max",
         inclusive=False,

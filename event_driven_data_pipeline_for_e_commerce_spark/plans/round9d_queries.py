@@ -85,8 +85,8 @@ def q_order_value_weekend_mannwhitney(spark, t):
 
     Scale shape: the pairwise count Sum_v a(v) * #{weekday below v}
     is computed from a VALUE-GRAIN rollup (one shuffle) plus
-    ``running_sum_ranged`` — range-repartition on cents, per-partition
-    partials prefix-summed driver-side, PARTITION BY __pid window — so
+    ``running_sum_ranged`` — rows bucketed by cents, per-bucket
+    partials prefix-summed in the plan, PARTITION BY __pid window — so
     the global cumulative never funnels through one task. All products
     accumulate in DECIMAL(38,0) (exact far past 2^63; the ADVICE-r7
     volatility lesson applied at birth); doubles only in the final
@@ -106,7 +106,7 @@ def q_order_value_weekend_mannwhitney(spark, t):
     v = base.groupBy("cents").agg(
         F.sum("wk").alias("a"), F.sum(F.lit(1) - F.col("wk")).alias("b")
     )
-    c = running_sum_ranged(v, [F.asc("cents")], "b", "cb_incl").select(
+    c = running_sum_ranged(v, [("cents", True)], "b", "cb_incl").select(
         "a", "b", (F.col("cb_incl") - F.col("b")).alias("cb_excl")
     )
     dec = "decimal(38,0)"

@@ -251,17 +251,18 @@ def _scd2_step(
     """The SCD2 fold both SCD2 sinks share. The increment collapses to
     its latest row per business key (a micro-batch may carry several
     updates of one key; SCD2 stages the final state per batch, like
-    the reference's per-load staging table); ``load_ts`` is its max
-    event time, so a replayed batch is hash-idempotent; then
-    ``scd2_init`` on first sight, ``scd2_merge`` into ``prior``
-    otherwise."""
-    w = Window.partitionBy(key).orderBy(F.desc(ts_col))
+    the reference's per-load staging table; rows tied on the event time
+    break by their tracked values, so the pick does not depend on row
+    order); ``load_ts`` is its max event time, a scalar subquery, so a
+    replayed batch is hash-idempotent; then ``scd2_init`` on first
+    sight, ``scd2_merge`` into ``prior`` otherwise."""
+    w = Window.partitionBy(key).orderBy(F.desc(ts_col), *[F.desc(c) for c in tracked_cols])
     latest = (
         increment.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .select(key, *tracked_cols)
     )
-    load_ts = F.lit(str(increment.agg(F.max(ts_col)).collect()[0][0]))
+    load_ts = increment.agg(F.max(ts_col)).scalar()
     if prior is None:
         return scd2_init(latest, key, tracked_cols, load_ts, sk_col=sk_col)
     return scd2_merge(prior, latest, key, tracked_cols, load_ts, sk_col=sk_col)

@@ -10,6 +10,7 @@ import datetime as dt
 import pyspark.sql.functions as F
 import pytest
 
+from event_driven_data_pipeline_for_e_commerce_spark.operators import pinning
 from event_driven_data_pipeline_for_e_commerce_spark.operators.cleansing import (
     CleansePolicy,
     DateDurationConfig,
@@ -21,6 +22,7 @@ from event_driven_data_pipeline_for_e_commerce_spark.pipelines import (
     fact_order_lifecycle,
     silver_build,
 )
+from event_driven_data_pipeline_for_e_commerce_spark.sources.io import write_table
 
 ORDERS = [
     # order_id, customer_id, status, purchase(dd-MM-yyyy HH:mm), delivered
@@ -82,8 +84,7 @@ def _csv(path, header, rows):
             fh.write(",".join("" if v is None else str(v) for v in r) + "\n")
 
 
-@pytest.fixture(scope="module")
-def pipeline_out(spark, tmp_path_factory):
+def _bronze_silver(spark, tmp_path_factory):
     raw = tmp_path_factory.mktemp("raw")
     out = tmp_path_factory.mktemp("warehouse")
     _csv(raw / "raw_orders.csv",
@@ -123,6 +124,11 @@ def pipeline_out(spark, tmp_path_factory):
     }
     silver = silver_build(spark, bronze, str(out / "silver"), policies)
     return bronze, silver
+
+
+@pytest.fixture(scope="module")
+def pipeline_out(spark, tmp_path_factory):
+    return _bronze_silver(spark, tmp_path_factory)
 
 
 def test_bronze_landing(pipeline_out):
@@ -202,3 +208,25 @@ def test_gold_lifecycle_and_dim_date(pipeline_out, spark):
     rows = dd.orderBy("full_date").collect()
     assert rows[0]["full_date"] == dt.date(2025, 3, 1) and rows[0]["date_sk"] == 20250301
     assert rows[-1]["date_sk"] == 20250310
+
+
+def test_pipeline_leaves_the_pin_registries_as_found(spark, tmp_path_factory):
+    """Bronze→Silver→Gold with the Gold write in a ``pin_scope``: the
+    fact's keys need no pin, so nothing built outside the scope stays
+    cached once the write is done."""
+    before = [[id(df) for df in r] for r in (pinning._PINNED, pinning._PINNED_CRITICAL)]
+    _, silver = _bronze_silver(spark, tmp_path_factory)
+    fact = fact_order_items(
+        silver["raw_order_items"],
+        dim_order=silver["raw_orders"],
+        dim_customer=silver["raw_customers"],
+        dim_payments=silver["raw_payments"],
+        dim_products=silver["raw_products"],
+        dim_sellers=silver["raw_sellers"],
+    )
+    gold = str(tmp_path_factory.mktemp("gold"))
+    with pinning.pin_scope():
+        write_table(fact, gold)
+    assert spark.read.parquet(gold).count() == 3
+    after = [[id(df) for df in r] for r in (pinning._PINNED, pinning._PINNED_CRITICAL)]
+    assert after == before

@@ -4,6 +4,9 @@ the one-cached-frame-per-query leak across a 200+ query batch session
 
 from __future__ import annotations
 
+import sys
+import threading
+
 import pyspark.sql.functions as F
 
 from event_driven_data_pipeline_for_e_commerce_spark.operators import pinning
@@ -41,9 +44,8 @@ def test_release_pinned_unpersists_everything(spark):
 
 
 def test_critical_pins_survive_fifo_pressure(spark):
-    """Correctness-critical pins (two-pass consistency: surrogate
-    keys, cumulative offsets, CSV quarantine) must never be evicted
-    by later performance pins (ADVICE r5)."""
+    """Correctness-critical pins (the quarantine readers' one parsed
+    scan) must never be evicted by later performance pins (ADVICE r5)."""
     release_pinned()
     crit = pin(spark.range(7).withColumn("x", F.lit(-1)), critical=True)
     # flood the FIFO well past the cap
@@ -80,3 +82,73 @@ def test_pin_scope_releases_only_inner_pins(spark):
     assert crit.storageLevel.useMemory is False
     assert outer.storageLevel.useMemory is True
     release_pinned()
+
+
+def test_pin_scope_leaves_other_threads_pins(spark):
+    """A streaming sink's scope runs on its own thread: closing it must
+    not release a frame another thread pinned while it was open."""
+    release_pinned()
+    scope_open, other_pinned = threading.Event(), threading.Event()
+    theirs = []
+
+    def other() -> None:
+        assert scope_open.wait(30)
+        theirs.append(pin(spark.range(6)))
+        other_pinned.set()
+
+    thread = threading.Thread(target=other)
+    thread.start()
+    with pinning.pin_scope():
+        mine = pin(spark.range(7))
+        scope_open.set()
+        assert other_pinned.wait(30)
+    thread.join(30)
+    assert pinning._PINNED == theirs
+    assert theirs[0].storageLevel.useMemory is True
+    assert mine.storageLevel.useMemory is False
+    release_pinned()
+
+
+class _Frame:
+    """Stands in for a DataFrame: the registry only persists and
+    unpersists what it tracks, so the race below runs without Spark."""
+
+    def persist(self, _level):
+        return self
+
+    def unpersist(self, _blocking=False):
+        return self
+
+
+def test_concurrent_scopes_release_exactly_their_pins():
+    """More threads than cores, each opening scopes and pinning inside
+    them while the others do the same: once all are done, both
+    registries are empty. A lost update in either registry leaves a
+    frame behind."""
+    release_pinned()
+    start = threading.Barrier(8)
+    errors: list[Exception] = []
+
+    def work() -> None:
+        try:
+            start.wait(30)
+            for _ in range(2000):
+                with pinning.pin_scope():
+                    pin(_Frame(), critical=True)
+                    pin(_Frame())
+        except Exception as e:  # noqa: BLE001 — reported by the assert below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert pinning._PINNED == [] and pinning._PINNED_CRITICAL == []

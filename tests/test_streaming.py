@@ -222,6 +222,26 @@ def test_foreach_batch_scd2(spark, tmp_path):
     assert dim2.filter("is_current").count() == 3
 
 
+def test_scd2_sink_breaks_same_ts_ties_by_value(spark, tmp_path):
+    """Two updates of one key at one event time: which one is staged
+    must not depend on the micro-batch's row order."""
+    rows = [
+        ("o1", "shipped", "2024-01-01 00:00:00"),
+        ("o1", "cancelled", "2024-01-01 00:00:00"),
+        ("o2", "created", "2024-01-01 00:00:00"),
+    ]
+    kept = []
+    for i, batch_rows in enumerate((rows, rows[::-1])):
+        tgt = str(tmp_path / f"dim{i}")
+        batch = spark.createDataFrame(
+            batch_rows, "order_id string, status string, ts string"
+        ).withColumn("ts", F.col("ts").cast("timestamp"))
+        scd2_foreach_batch(tgt, "order_id", ["status"], sk_col="order_sk")(batch, 0)
+        kept.append(sorted((r.order_id, r.status, r.order_sk) for r in spark.read.parquet(tgt).collect()))
+    assert kept[0] == kept[1]
+    assert [k for k, _, _ in kept[0]] == ["o1", "o2"]
+
+
 def test_stream_stream_range_join_matches_batch(spark, sf_dir, event_source, tmp_path):
     """The watermarked stream-stream band join replayed to completion
     must equal the batch range_join corpus query."""
