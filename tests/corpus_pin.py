@@ -30,7 +30,7 @@ from event_driven_data_pipeline_for_e_commerce_spark.plans.corpus import ORACLES
 from event_driven_data_pipeline_for_e_commerce_spark.session import get_spark
 
 ORACLE_SHA256 = "d350e4e6f1408266ec2fa11d38e772769953ca691aa154f397a2f6fbd5957888"
-PLAN_SHA256 = "0eec5e8836748dc08a6757d9bf3e5157d7a0d8a5ff294dd4c07aa621c2968567"
+PLAN_SHA256 = "a0336a38a75a06505fbbfa335061042d6b6c9ab6189a7d5262b302d1b5f49943"
 
 _OPERATOR = re.compile(r"^[\s:|+\-]*(?:\*\(\d+\)\s+)?([A-Za-z]\w*)")
 
